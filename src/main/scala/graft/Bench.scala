@@ -80,12 +80,18 @@ object Bench {
       // billed to THIS one (round-7 bug: elapsed was computed after the
       // finally block, inflating every line by scrub+GC cost).
       (System.nanoTime() - t0) / 1e9
-    } finally {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
+    } finally scrub(spark)
+  }
+
+  /** Drop every cached table and persisted RDD block (localCheckpoint
+    * blocks included), then run a full GC — settles one run's debt before
+    * the next run is timed. Shared with [[graft.tools.AB]].
+    */
+  private[graft] def scrub(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    System.gc()
   }
 
   /** Child mode: warmup + N timed runs of ONE query in this fresh JVM;

@@ -94,7 +94,7 @@ object Sessions {
     // the nanos-era behavior above and the DuckDB oracle's naive
     // timestamp semantics.
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    // Probe seam: SPARK_GRAFT_CONF="k=v;k2=v2" applies conf overrides
+    // A/B seam: SPARK_GRAFT_CONF="k=v;k2=v2" applies conf overrides
     // LAST, so an A/B conf bisect runs through the exact entrypoints
     // (Bench/Verify child JVMs) that produce the artifacts — the r8
     // bloom A/B was run through a hand-overridden session whose OTHER
@@ -170,6 +170,22 @@ object Sessions {
     applyEnvConf(clusterEnvelope.foldLeft(withDefaults(b)) {
       case (bb, (k, v)) => bb.config(k, v)
     })
+
+  /** Runs `body` with each conf key set to its value, then restores every
+    * key in a `finally` — to its previous value, or back to unset if the
+    * session had not set it — so a gate that arms a conf for its own plan
+    * leaves the shared session as it found it, also when `body` throws.
+    */
+  def withConf[A](spark: SparkSession)(kvs: (String, String)*)(body: => A): A = {
+    val set = spark.conf.getAll
+    val prev = kvs.map { case (k, _) => k -> set.get(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.reverse.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   def local(
       cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),

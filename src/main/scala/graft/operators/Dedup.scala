@@ -77,7 +77,9 @@ object Dedup {
     // index" step and may spill, which is fine.
     val sh = shingleSet(df, idCol, textCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cnt = sh.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
+    // Per-doc set sizes for the two branches whose candidates do not
+    // carry them (the default branch scores from carried sizes).
+    def cnt = sh.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
     // The lossy df cut (if any) applies to candidate generation only;
     // scoring always uses the UNFILTERED sets.
     val candInput =
@@ -258,9 +260,9 @@ object Dedup {
     * free (`first` over a constant-per-group column), and callers score
     * with [[scorePairsCarried]] instead of re-aggregating a per-doc count
     * table from the exploded shingle set and joining it on twice
-    * (measured r15, CntCarryProbe: 3.60 → 2.66 s median at sf0.1 on the
-    * x2_jaccard_pairs shape, equal-or-better at sf1 — one fewer
-    * corpus-sized aggregation pass plus two fewer joins).
+    * (measured r15, OPTIMIZATION_r15.md §1.4: 3.60 → 2.66 s median at
+    * sf0.1 on the x2_jaccard_pairs shape, equal-or-better at sf1 — one
+    * fewer corpus-sized aggregation pass plus two fewer joins).
     */
   private def sharedShingleIntersections(sh: DataFrame, idCol: String,
       lengthFilter: Option[Double] = None): DataFrame = {

@@ -23,33 +23,25 @@ object Graph {
     */
   private val frontierBroadcastMaxRows = 1L << 22
 
-  /** PageRank in PURE INTEGER arithmetic: ranks are longs in units of
-    * `1/scale`, every step is integer division (`div`) and integer
-    * multiply-add, so the result is bit-identical in any engine and under
-    * any partitioning — double-precision PageRank cannot gate exactly
-    * because partial-sum order perturbs the low bits.
-    *
-    * Per iteration, with damping fixed at 0.85 = 17/20:
-    * {{{ rank'(v) = (3*scale) div 20  +  (17 * sum over in-edges u→v of
-    *                (rank(u) div outdeg(u))) div 20 }}}
-    * Dangling mass and div-truncation remainders are dropped (documented
-    * deviation from the stochastic formulation — ranks are a stable
-    * *ordering* signal, not probabilities; the oracle replays the identical
-    * recurrence).
-    *
-    * Scale posture: each iteration is one equijoin of the edge list with
-    * the (node-sized) rank table plus one aggregation — both hash-shuffles
-    * on node id; the edge list (with outdeg attached) is computed once and
-    * persisted across iterations. Nothing on the driver but the loop
-    * counter. Overflow headroom: 17 * Σ contrib < 17 * n * scale must stay
-    * under 2^63 — the default scale=1e9 is safe past 5×10^8 nodes.
-    *
-    * @param edges directed (src, dst) long columns; pass both directions
-    *              for an undirected graph
-    * @param iters fixed iteration count (callers wanting convergence-test
-    *              semantics wrap this the way resolveClusters does)
-    * @return (id, rank) for every node appearing in `edges`
+  /** The pin-and-release block shared by the frontier loops: `body` gets a
+    * `pin` that persists a DataFrame at MEMORY_AND_DISK and remembers it,
+    * and returns the loop state; that state is materialized eagerly
+    * through FreshCheckpoint, and then EVERY block the call pinned —
+    * including the data-sized edge list — is released, in a `finally` so
+    * an exception cannot leak them into the BlockManager for the session
+    * (the resolveClusters leak discipline: leaked storage measurably
+    * starves later memory-sensitive stages). One live checkpoint (the
+    * result itself, node-sized) remains.
     */
+  private def pinnedLoop(body: (DataFrame => DataFrame) => DataFrame)
+      : DataFrame = {
+    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val retained = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try org.apache.spark.sql.graft.FreshCheckpoint(
+      body { d => retained += d.persist(lvl); d })
+    finally retained.foreach(_.unpersist(blocking = false))
+  }
+
   /** Multi-source BFS: minimum hop distance from any seed node, bounded at
     * `maxHops`. Classic frontier expansion — per round, one equijoin of the
     * edge list with the (shrinking) frontier plus an anti join against the
@@ -71,16 +63,14 @@ object Graph {
     * @return (id, hop) — minimum hops from the nearest seed; nodes
     *         unreached within `maxHops` are absent
     */
-  def bfsHops(edges: DataFrame, sources: DataFrame, maxHops: Int): DataFrame = {
+  def bfsHops(edges: DataFrame, sources: DataFrame, maxHops: Int)
+      : DataFrame = pinnedLoop { pin =>
     require(maxHops >= 0, "maxHops must be >= 0")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // Loop-invariant operand: persisted (the caller's edge derivation —
     // often a co-purchase self-join — must not re-run per hop) and
     // PRE-PARTITIONED on src, the per-hop join key, so the cached
     // partitioning satisfies the edge-side Exchange in every round and
     // only the frontier shuffles.
-    val retained = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(d: DataFrame): DataFrame = { retained += d.persist(lvl); d }
     val e = pin(edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
       .repartition(col("src")))
@@ -119,15 +109,7 @@ object Graph {
       distRows += frontierRows
       h += 1
     }
-    // Materialize the (id, hop) result eagerly, then release EVERY block
-    // this call pinned — including the data-sized edge list — instead of
-    // leaking them into the BlockManager for the session (the
-    // resolveClusters leak discipline: leaked storage measurably starves
-    // later memory-sensitive stages). One live checkpoint (the result
-    // itself, node-sized) remains.
-    val out = org.apache.spark.sql.graft.FreshCheckpoint(dist)
-    retained.foreach(_.unpersist(blocking = false))
-    out
+    dist
   }
 
   /** Landmark hop distances: [[bfsHops]] run per landmark IN ONE SWEEP —
@@ -148,14 +130,11 @@ object Graph {
     *         unreached (id, lm) pairs absent
     */
   def landmarkHops(edges: DataFrame, landmarks: DataFrame,
-                   maxHops: Int): DataFrame = {
+                   maxHops: Int): DataFrame = pinnedLoop { pin =>
     require(maxHops >= 0, "maxHops must be >= 0")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // Same loop-invariant discipline as bfsHops: one edge shuffle total,
     // and the same exit discipline — eager result checkpoint, every
     // pinned block (edge list included) released before returning.
-    val retained = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(d: DataFrame): DataFrame = { retained += d.persist(lvl); d }
     val e = pin(edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
       .repartition(col("src")))
@@ -187,9 +166,7 @@ object Graph {
       distRows += frontierRows
       h += 1
     }
-    val out = org.apache.spark.sql.graft.FreshCheckpoint(dist)
-    retained.foreach(_.unpersist(blocking = false))
-    out
+    dist
   }
 
   /** Bounded-radius closeness centrality against a landmark set: per
@@ -239,13 +216,10 @@ object Graph {
     * @return (id, dist) — nodes unreached within `rounds` are absent
     */
   def ssspRounds(edges: DataFrame, sources: DataFrame,
-                 rounds: Int): DataFrame = {
+                 rounds: Int): DataFrame = pinnedLoop { pin =>
     require(rounds >= 0, "rounds must be >= 0")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // Same loop-invariant discipline as bfsHops: one edge shuffle total,
     // eager result checkpoint, all pinned blocks released on exit.
-    val retained = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(d: DataFrame): DataFrame = { retained += d.persist(lvl); d }
     val e = pin(edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
       .repartition(col("src")))
@@ -277,9 +251,7 @@ object Graph {
       frontierRows = improved.count()
       r += 1
     }
-    val out = org.apache.spark.sql.graft.FreshCheckpoint(dist)
-    retained.foreach(_.unpersist(blocking = false))
-    out
+    dist
   }
 
   /** Hash-driven "random" walks — the DeepWalk/node2vec corpus primitive,

@@ -288,7 +288,8 @@ object Similarity {
     * greatest + first-match CASE chain re-evaluated the k-way best in
     * every branch (subexpression elimination does not cross `when`
     * boundaries) and generated a method too large for HotSpot to JIT:
-    * ~400x slower for the same answer (Probe, k=8, dim=64).
+    * ~400x slower for the same answer (k=8, dim=64; PLANS.md round-5
+    * vector-expression investigation).
     */
   private def cellExpr(vec: Column, cents: Array[(Long, Seq[Double])]): Column =
     element_at(typedLit(cents.map(_._1).toSeq),

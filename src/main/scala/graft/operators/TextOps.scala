@@ -966,7 +966,7 @@ object TextOps {
     // below the scoring join to the raw scan, so the threshold branch
     // scores only the sampled fraction, while a persist forces a
     // full-corpus materialization to serve that fractional read. The
-    // r15 interleaved re-probe (DsirPersistProbe, VERDICT r14 #8 — the
+    // r15 interleaved re-probe (`AB dsir_persist`, VERDICT r14 #8 — the
     // old sequential sf1 numbers 5.85 vs 4.15 did not survive it) finds
     // the persist EQUAL-OR-SLIGHTLY-FASTER at bench scales (sf0.1
     // medians 3.20 vs 3.07, sf1 6.58 vs 5.93) because the local sample

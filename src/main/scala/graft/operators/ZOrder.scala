@@ -70,14 +70,4 @@ object ZOrder {
     }
     d
   }
-
-  /** [[cluster]] with a Hilbert layout instead of Morton. */
-  def clusterHilbert(df: DataFrame, xCol: String, yCol: String,
-                     bits: Int, files: Int): DataFrame = {
-    val m = 1L << bits
-    df.withColumn("__h", hilbertIndex(col(xCol) % m, col(yCol) % m, bits))
-      .repartitionByRange(files, col("__h"))
-      .sortWithinPartitions("__h")
-      .drop("__h")
-  }
 }

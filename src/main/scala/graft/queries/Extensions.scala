@@ -597,7 +597,7 @@ object Extensions extends QueryModule {
         // k=16 / 4 bands (r=4): the s-curve at the 0.8 threshold gives a
         // per-pair surface probability of 1-(1-0.8^4)^4 ≈ 0.88 at s=0.8
         // exactly, higher above it. Measured xxhash64 recall
-        // (MinhashRecallProbe, PLANS r14): 1.0 at sf0.001/0.01, 0.9961
+        // (PLANS.md round 14, item 2): 1.0 at sf0.001/0.01, 0.9961
         // at sf0.1, 0.9995 at sf1 — bound 0.75 leaves the s-curve's
         // worst-case headroom under any data drift.
         minhashVerdictGate(s, dir, k = 16, bands = 4, minRecall = 0.75)
@@ -2988,7 +2988,7 @@ object Extensions extends QueryModule {
       // exchanges via ReuseExchange, which the tagged union (with its
       // multi-distinct Expand under the single aggregate) defeats, so
       // every branch recomputed its chain prefix. Evidence:
-      // tools/CurationCombineProbe + OPTIMIZATION_r15.md.
+      // OPTIMIZATION_r15.md §2.1.
       def stage(df: DataFrame, name: String): DataFrame =
         df.groupBy("lang").agg(count(lit(1)).as(name))
       val finAgg = split.groupBy("lang").agg(

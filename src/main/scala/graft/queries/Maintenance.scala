@@ -943,7 +943,7 @@ object Maintenance extends QueryModule {
     // expression actually lands in the scan's partition filters. (The
     // dim filter must be an attribute=literal comparison: a bare boolean
     // column is simplified before PartitionPruning runs and then fails
-    // its isLikelySelective test — found with tools/DppProbe.)
+    // its isLikelySelective test — PLANS.md round 4, s11_dpp.)
     QueryDef("s11_dpp", Some("""
       SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS cnt,
              CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
@@ -1172,24 +1172,22 @@ object Maintenance extends QueryModule {
     // parquet footer statistics — at 100 TB the scan reads row-group
     // metadata, not data. Needs the DSv2 parquet path + the pushdown
     // conf, both armed only for this gate (eager localCheckpoint inside
-    // the try, the r10 discipline); `MaintenanceSpec` asserts the plan
-    // carries PushedAggregation and no data columns in ReadSchema.
+    // the withConf scope, the r10 discipline); `MaintenanceSpec` asserts
+    // the plan carries PushedAggregation and no data columns in
+    // ReadSchema.
     QueryDef("s12_agg_pushdown", Some("""
       SELECT CAST(count(*) AS BIGINT) AS n,
              CAST(min(l_orderkey) AS BIGINT) AS min_k,
              CAST(max(l_orderkey) AS BIGINT) AS max_k
       FROM lineitem ORDER BY n""")) { (s, dir) =>
-      s.conf.set("spark.sql.sources.useV1SourceList", "")
-      s.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-      try {
+      graft.Sessions.withConf(s)(
+          "spark.sql.sources.useV1SourceList" -> "",
+          "spark.sql.parquet.aggregatePushdown" -> "true") {
         s.read.parquet(s"${dir.stripSuffix("/")}/lineitem.parquet")
           .agg(count(lit(1)).as("n"),
             min("l_orderkey").as("min_k"), max("l_orderkey").as("max_k"))
           .orderBy("n")
           .localCheckpoint(true)
-      } finally {
-        s.conf.unset("spark.sql.parquet.aggregatePushdown")
-        s.conf.unset("spark.sql.sources.useV1SourceList")
       }
     }
   )

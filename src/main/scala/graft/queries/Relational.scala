@@ -1009,18 +1009,19 @@ object Relational extends QueryModule {
         .createOrReplaceTempView("graft_r10_p")
       // Arm the rule only for this gate: materialize eagerly while the
       // conf is set (localCheckpoint runs the bucketized plan; the
-      // caller's later write just scans the checkpoint), then unset in
-      // finally so no later query in the shared gate/bench session runs
-      // re-planned — the no-equi-conjunct guard preserves semantics, but
-      // a silently armed optimizer rule perturbs timings and plan-shape
-      // assertions. Bench/Verify unpersist checkpoint blocks per query.
-      s.conf.set("spark.graft.rangeJoin.bucket", "1800000")
-      try {
+      // caller's later write just scans the checkpoint), then restore the
+      // caller's value so no later query in the shared gate/bench session
+      // runs re-planned — the no-equi-conjunct guard preserves semantics,
+      // but a silently armed optimizer rule perturbs timings and
+      // plan-shape assertions. Bench/Verify unpersist checkpoint blocks
+      // per query.
+      graft.Sessions.withConf(s)(
+          "spark.graft.rangeJoin.bucket" -> "1800000") {
         s.sql("""
           SELECT pid, count(*) AS n_clicks, min(cid) AS min_cid
           FROM graft_r10_p JOIN graft_r10_c ON ms >= s AND ms <= e
           GROUP BY pid ORDER BY pid""").localCheckpoint(true)
-      } finally s.conf.unset("spark.graft.rangeJoin.bucket")
+      }
     },
 
     // Recursive CTE on the SQL surface (WITH RECURSIVE, new in Spark 4):

@@ -56,9 +56,9 @@ object StreamingGates extends QueryModule {
     *    RocksDB adds per-batch store-open cost and wins nothing at test
     *    state sizes — see OPTIMIZATION_r15.md).
     *
-    * The shuffle-partition override is restored after termination so the
-    * BATCH work around the stream (staging writes, final reads) keeps the
-    * session's planning envelope.
+    * Both overrides are restored after termination so the BATCH work
+    * around the stream (staging writes, final reads) and every later query
+    * keep the session's planning envelope.
     */
   private def runStream(s: SparkSession)(
       start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
@@ -70,14 +70,10 @@ object StreamingGates extends QueryModule {
           "state.RocksDBStateStoreProvider"
         case other => other
       }
-    val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-    sp.foreach(v => s.conf.set("spark.sql.shuffle.partitions", v))
-    prov.foreach(v =>
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", v))
-    try {
+    graft.Sessions.withConf(s)(
+        sp.map("spark.sql.shuffle.partitions" -> _).toSeq ++
+          prov.map("spark.sql.streaming.stateStore.providerClass" -> _): _*) {
       start.awaitTermination()
-    } finally {
-      sp.foreach(_ => s.conf.set("spark.sql.shuffle.partitions", prevSp))
     }
   }
 

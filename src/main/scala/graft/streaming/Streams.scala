@@ -43,11 +43,6 @@ object Streams {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  /** File-source stream over a directory of document files. */
-  def readDocStream(spark: SparkSession, dir: String,
-                    format: String = "parquet"): DataFrame =
-    spark.readStream.schema(documentsSchema).format(format).load(dir)
-
   /** Stateless streaming corpus curation: quality-filter incoming
     * documents (minimum token count) and drop anything whose content
     * digest already exists in the STATIC ingested-corpus digest set — the

@@ -15,7 +15,7 @@ import org.apache.spark.storage.StorageLevel
   * stats estimator MULTIPLIES the two sides' `sizeInBytes`, so the stat
   * SQUARES every round: after k rounds it is a 2^k-bit BigInteger, and
   * every stats consultation during planning runs Toom-Cook
-  * multiplications on megabit numbers. Probe-measured on the sf1 DBSCAN
+  * multiplications on megabit numbers. Measured on the sf1 DBSCAN
   * gate: the per-round checkpoint job grew 0.5 s → 78 s by round 21
   * (the join itself stayed ~0.5 s) purely from driver-side
   * BigInteger.multiply, with stats bit-length 95 → 2,331,205 over 14

@@ -45,4 +45,34 @@ class SessionsSpec extends AnyFunSuite {
     assert(opts.get("spark.sql.session.timeZone").contains("UTC"))
     assert(opts.get("spark.sql.adaptive.enabled").contains("true"))
   }
+
+  test("withConf restores a changed key and unsets a previously unset one") {
+    val s = SparkSpec.session
+    val changed = "spark.sql.shuffle.partitions"
+    val unset = "graft.spec.withConf"
+    val before = s.conf.get(changed)
+    val seen = Sessions.withConf(s)(changed -> "7", unset -> "on") {
+      (s.conf.get(changed), s.conf.getOption(unset))
+    }
+    assert(seen == ("7", Some("on")))
+    assert(s.conf.get(changed) == before)
+    assert(s.conf.getOption(unset).isEmpty)
+  }
+
+  test("withConf restores both kinds of key when the body throws") {
+    val s = SparkSpec.session
+    val changed = "spark.sql.shuffle.partitions"
+    // a registered conf left unset: it must come back unset, not pinned
+    // to its default value
+    val unset = "spark.sql.parquet.aggregatePushdown"
+    val before = s.conf.get(changed)
+    assert(!s.conf.getAll.contains(unset))
+    intercept[IllegalStateException] {
+      Sessions.withConf(s)(changed -> "7", unset -> "true") {
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(s.conf.get(changed) == before)
+    assert(!s.conf.getAll.contains(unset))
+  }
 }

@@ -124,7 +124,7 @@ class ZoneIOSpec extends SparkSpec {
       .write.mode("overwrite").partitionBy("part").parquet(fact)
     // attribute = literal, NOT a bare boolean column: `b = true` is
     // simplified to `b` before PartitionPruning and fails its
-    // isLikelySelective test (tools/DppProbe)
+    // isLikelySelective test (PLANS.md round 4, s11_dpp)
     Seq(("p0", "hot"), ("p1", "hot"), ("p2", "cold"), ("p3", "cold"))
       .toDF("p", "tier").write.mode("overwrite").parquet(dimP)
     val joined = spark.read.parquet(fact)

@@ -266,4 +266,23 @@ class StreamsSpec extends SparkSpec {
       assert(v0 == 2L)
     } finally q.stop()
   }
+
+  test("ev3_stream_window under a RocksDB state store leaves providerClass as it found it") {
+    val prov = "spark.sql.streaming.stateStore.providerClass"
+    val before = spark.conf.getOption(prov)
+    spark.conf.set("graft.stream.stateStore", "rocksdb")
+    try {
+      val n = graft.SparkEntry.queries("ev3_stream_window")(
+        spark, new java.io.File(sf("events")).getParent).count()
+      assert(n > 0)
+      assert(spark.conf.getOption(prov) == before,
+        "runStream must restore the state-store provider it set")
+    } finally {
+      spark.conf.unset("graft.stream.stateStore")
+      before match {
+        case Some(v) => spark.conf.set(prov, v)
+        case None => spark.conf.unset(prov)
+      }
+    }
+  }
 }
