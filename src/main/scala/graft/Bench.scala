@@ -30,10 +30,6 @@ import org.apache.spark.sql.SparkSession
   * — a reproduced slow number is real and stands). The discarded attempt
   * is recorded under `refork` with its reason, so a single load spike
   * can't enter the headline total unchallenged.
-  *
-  * `SPARK_GRAFT_BENCH_INPROC=1` keeps the old single-JVM path for quick
-  * local iteration; the artifact then says "isolation":"in-process" so
-  * the two modes can never be confused in a round comparison.
   */
 object Bench {
 
@@ -50,19 +46,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     if (args.length >= 2 && args(0) == "--child") childMain(args(1))
     else parentMain()
-  }
-
-  private def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.withDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.warehouse.dir", Scratch.warehouse)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
   }
 
   /** One run of one query, with post-run state scrub (operators may
@@ -99,7 +82,7 @@ object Bench {
     */
   private def childMain(name: String): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = buildSession()
+    val spark = Sessions.local(app = "graft-bench")
     try {
       once(spark, sfDir, name) // warmup, untimed
       val runs = (1 to childRuns).map(_ => once(spark, sfDir, name))
@@ -323,31 +306,15 @@ object Bench {
       case None => SparkEntry.benchNames
     }
     val names = (headline ++ extra).distinct.sorted
-    val inProc = sys.env.get("SPARK_GRAFT_BENCH_INPROC").contains("1")
     // Attempts replaced by a re-fork (name → (reason, the runs that were
     // NOT used)); serialized into the artifact for transparency.
     val discardedRuns =
       scala.collection.mutable.Map.empty[String, (String, Seq[Double])]
     val sfLabel = sfDir.split('/').last
-    val prev = if (inProc) Map.empty[String, Double]
-               else loadPrevMedians(sfLabel)
+    val prev = loadPrevMedians(sfLabel)
 
     val measured: Seq[(String, Option[Seq[Double]])] =
-      if (inProc) {
-        val spark = buildSession()
-        val r = names.map { n =>
-          System.err.println(s"[bench] running $n (in-process)")
-          n -> (try {
-            once(spark, sfDir, n) // per-query warmup
-            Some((1 to childRuns).map(_ => once(spark, sfDir, n)))
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] $n failed: ${e.getMessage}")
-            None
-          })
-        }
-        spark.stop()
-        r
-      } else names.map { n =>
+      names.map { n =>
         System.err.println(s"[bench] forking $n")
         val first = forkOne(n)
         // Two re-fork triggers (one retry max, discarded attempt kept in
@@ -396,7 +363,7 @@ object Bench {
     val total = measured.flatMap(_._2).map(median).sum
     val failed = measured.collect { case (k, None) => "\"" + k + "\"" }
     val failedJson = failed.mkString("[", ",", "]")
-    val isolation = if (inProc) "in-process" else "jvm"
+    val isolation = "jvm"
     val refork = discardedRuns.toSeq.sortBy(_._1)
       .map { case (k, (reason, rs)) =>
         "\"" + k + "\":{\"median\":" + f"${median(rs)}%.3f" +

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import scala.util.chaining._
 
 /** SparkSession factory carrying the reference's execution-config envelope
   * (reference: k8s/submit/etl-on-gcp-vinicius-campos.py:67-88) adapted for
@@ -94,40 +93,6 @@ object Sessions {
     // the nanos-era behavior above and the DuckDB oracle's naive
     // timestamp semantics.
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    // A/B seam: SPARK_GRAFT_CONF="k=v;k2=v2" applies conf overrides
-    // LAST, so an A/B conf bisect runs through the exact entrypoints
-    // (Bench/Verify child JVMs) that produce the artifacts — the r8
-    // bloom A/B was run through a hand-overridden session whose OTHER
-    // confs could differ, which is precisely the ambiguity the r9
-    // verdict flagged in its residual-gap adjudication. Empty/unset =
-    // no effect; never set by the driver. Also re-applied at the end of
-    // [[local]] and [[cluster]], whose own .config calls run after this
-    // one (review r10: an override of e.g. shuffle.partitions would
-    // otherwise be silently re-clobbered and the A/B would measure
-    // nothing).
-    .pipe(applyEnvConf)
-
-  /** JVM-global scope caveat: the seam reads the process environment, so
-    * EVERY session built in this JVM (e.g. a spec's [[local]] while Bench
-    * runs) inherits the same overrides — fine for the single-session
-    * artifact flows it exists for, not a per-session knob. Malformed
-    * entries with an empty key ("=v") are dropped rather than setting an
-    * empty-string conf key, and every override actually applied is echoed
-    * to stderr so an artifact produced under a lingering probe env var
-    * records that it ran with a non-default conf (ADVICE r10).
-    */
-  private def applyEnvConf(b: SparkSession.Builder): SparkSession.Builder =
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains("="))
-      .foldLeft(b) { (bb, kv) =>
-        // Trim around '=' too: "k = v" must set key "k", not "k ".
-        val Array(k, v) = kv.split("=", 2).map(_.trim)
-        if (k.isEmpty) bb
-        else {
-          System.err.println(s"[graft] SPARK_GRAFT_CONF override: $k=$v")
-          bb.config(k, v)
-        }
-      }
 
   /** The reference knobs that only make sense with real executors
     * (etl-on-gcp-vinicius-campos.py:74-83): dynamic allocation + external
@@ -163,13 +128,11 @@ object Sessions {
     "spark.sql.adaptive.coalescePartitions.minPartitionNum" -> "1",
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "10")
 
-  /** Cluster profile: `withDefaults` + [[clusterEnvelope]]; the env
-    * probe seam is re-applied last so it wins over the envelope too.
-    */
+  /** Cluster profile: `withDefaults` + [[clusterEnvelope]]. */
   def cluster(b: SparkSession.Builder): SparkSession.Builder =
-    applyEnvConf(clusterEnvelope.foldLeft(withDefaults(b)) {
+    clusterEnvelope.foldLeft(withDefaults(b)) {
       case (bb, (k, v)) => bb.config(k, v)
-    })
+    }
 
   /** Runs `body` with each conf key set to its value, then restores every
     * key in a `finally` — to its previous value, or back to unset if the
@@ -190,11 +153,11 @@ object Sessions {
   def local(
       cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
       app: String = "graft"): SparkSession = {
-    val s = applyEnvConf(withDefaults(
+    val s = withDefaults(
       SparkSession.builder().master(s"local[$cores]").appName(app))
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Scratch.warehouse))
+      .config("spark.sql.warehouse.dir", Scratch.warehouse)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -455,20 +455,16 @@ object Dedup {
   def minHashLsh(
       df: DataFrame, idCol: String, textCol: String,
       n: Int, k: Int, bands: Int, threshold: Double,
-      portable: Boolean = false, materialize: Boolean = true): DataFrame = {
+      portable: Boolean = false): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
     val r = k / bands
     // Feeds signature aggregation AND the verify joins — materialize once.
-    val sh0 = shingleSet(df, idCol, textCol, n)
-    val sh = if (materialize)
-      sh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else sh0
-    val bandDf = bandHashTable(sh, idCol, k, bands, portable)
-    val bandMat = if (materialize)
-      // both sides of the candidate self-join — without this the signature
-      // aggregation re-runs once per union branch per side
-      bandDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else bandDf
+    val sh = shingleSet(df, idCol, textCol, n)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // Both sides of the candidate self-join — without this the signature
+    // aggregation re-runs once per union branch per side.
+    val bandMat = bandHashTable(sh, idCol, k, bands, portable)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cand = bandMat.as("x")
       .join(bandMat.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&

@@ -824,6 +824,11 @@ object Graph {
           .as("pa"))
   }
 
+  /** Share of the survivors a k-truss round may remove and still take
+    * the delta path (see [[kTrussPeel]]); above it the round re-enumerates.
+    */
+  private val trussDeltaShare = 0.125
+
   /** K-TRUSS peeling — the edge-level cohesion filter one notch
     * stronger than [[kCorePeel]]'s node degrees: keep an edge only if
     * it closes at least k−2 triangles with surviving edges, iterated
@@ -869,7 +874,7 @@ object Graph {
     * unconditionally and regressed the sf0.1 10-truss 9.0 → 27.1 s
     * isolated-median. So each round branches on |R| (free: the
     * FreshCheckpoint forcing count already produced it) against the
-    * survivor count — removals above `deltaFrac` of survivors fall
+    * survivor count — removals above `trussDeltaShare` of survivors fall
     * back to re-enumerating the (now smaller) survivor set. When the
     * delta path does run, R is explicitly broadcast below a row bound:
     * FreshCheckpoint tables plan with DEFAULT stats, so without the
@@ -896,11 +901,9 @@ object Graph {
     *         PREVIOUS round's survivors, the value the final filter
     *         tested
     */
-  def kTrussPeel(edges: DataFrame, k: Long, rounds: Int,
-                 deltaFrac: Double = 0.125): DataFrame = {
+  def kTrussPeel(edges: DataFrame, k: Long, rounds: Int): DataFrame = {
     require(k >= 3, "truss needs k >= 3")
     require(rounds >= 1, "needs at least one round")
-    require(deltaFrac >= 0.0 && deltaFrac <= 1.0, "deltaFrac in [0,1]")
     import org.apache.spark.sql.graft.FreshCheckpoint
     import org.apache.spark.sql.graft.FreshCheckpoint.Pinned
     def fresh(d: DataFrame): Pinned = FreshCheckpoint.pinned(d)
@@ -977,9 +980,7 @@ object Graph {
     // join, so the support counts are exact regardless of fpp.
     def supportOf(e: DataFrame, eRows: Long): DataFrame = {
       import org.apache.spark.sql.graft.BloomOps
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
+      import graft.pipeline.AsyncJob
       // The Bloom sketch and the wedge-pivot degree sums are two small
       // independent aggregates over the same pinned edge set; run
       // sequentially they were two back-to-back driver jobs of almost
@@ -987,7 +988,8 @@ object Graph {
       // from two threads lets the scheduler overlap their stages (guide
       // §2.6 — actions are only sequential because the driver calls them
       // sequentially), so the pre-enumeration latency is max, not sum.
-      val sketchF = Future {
+      // AsyncJob runs them under this thread's job group and pool.
+      val sketchF = AsyncJob.submit {
         e.agg(BloomOps.bloomAgg(struct(col("s"), col("t")),
             math.max(eRows, 1L), 0.01).as("bf"))
           .head().getAs[Array[Byte]]("bf")
@@ -996,14 +998,14 @@ object Graph {
         .unionByName(
           e.select(col("t").as("id"), lit(0L).as("o"), lit(1L).as("i")))
         .groupBy("id").agg(sum("o").as("dout"), sum("i").as("din"))
-      val wF = Future {
+      val wF = AsyncJob.submit {
         dd.agg(
           sum((col("din") * col("dout")).cast("decimal(38,0)")).as("wio"),
           sum((col("dout") * (col("dout") - 1)).cast("decimal(38,0)"))
             .as("woo")).head()
       }
-      val sketch = Await.result(sketchF, Duration.Inf)
-      val w = Await.result(wF, Duration.Inf)
+      val sketch = sketchF.await()
+      val w = wF.await()
       def dec(i: Int): BigInt = Option(w.getDecimal(i))
         .map(d => BigInt(d.toBigInteger)).getOrElse(BigInt(0))
       val sourcePivot = dec(1) < dec(0)
@@ -1044,7 +1046,7 @@ object Graph {
         release(remP)
         fixed = true
       } else {
-        val nextP = if (remP.rows > deltaFrac * supP.rows) {
+        val nextP = if (remP.rows > trussDeltaShare * supP.rows) {
           // Removals dominate: one survivor-driven re-enumeration over
           // the (smaller) survivor set beats three removal-driven
           // chains that would each walk near-full wedge sets.

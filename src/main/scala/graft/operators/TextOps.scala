@@ -1137,41 +1137,24 @@ object TextOps {
     *
     * Output: (groupCol, bucket, n_docs, sum_bigrams, min_p, max_p) — the
     * [[lmScoreBuckets]] report shape, comparable side by side.
+    *
+    * The scored table is persisted MEMORY_AND_DISK and left for the
+    * caller's scrub of persistent RDDs (the [[Dedup.minHashLsh]]
+    * contract): the returned report is lazy, so the persist cannot be
+    * dropped inside this function.
     */
   def lmScoreBucketsThreshold(df: DataFrame, idCol: String, textCol: String,
                               groupCol: String, buckets: Int = 3,
-                              sampleHexCeil: String = "80",
-                              materialize: Boolean = true): DataFrame =
-    lmScoreBucketsThresholdManaged(df, idCol, textCol, groupCol, buckets,
-      sampleHexCeil, materialize)._1
-
-  /** [[lmScoreBucketsThreshold]] with the persist lifecycle surfaced at
-    * the API (ADVICE r10): the second element unpersists the scored
-    * table once the returned report has been consumed. The unmanaged
-    * overload leaks one MEMORY_AND_DISK table per call by design —
-    * Bench/Verify scrub persistent RDDs between gates (the minHashLsh
-    * contract) — so any OTHER long-lived-session caller should use this
-    * form (or pass materialize=false) instead of relying on that scrub.
-    */
-  def lmScoreBucketsThresholdManaged(df: DataFrame, idCol: String,
-                                     textCol: String, groupCol: String,
-                                     buckets: Int = 3,
-                                     sampleHexCeil: String = "80",
-                                     materialize: Boolean = true)
-      : (DataFrame, () => Unit) = {
+                              sampleHexCeil: String = "80"): DataFrame = {
     require(buckets >= 2, "buckets must be >= 2")
     import org.apache.spark.sql.expressions.Window
     // Score once, select twice: the cut estimation AND the bucketing
     // pass both consume the scored table; unpersisted, each re-runs the
     // LM model build + corpus scoring join (measured 8.1 -> 4.3-5.3 s at
-    // sf1, PLANS.md round-10). The returned report is lazy, so the
-    // persist cannot be dropped inside this function — the handle below
-    // hands the unpersist to the caller.
-    val scored0 = bigramLmScore(df, idCol, textCol)
+    // sf1, PLANS.md round-10).
+    val scored = bigramLmScore(df, idCol, textCol)
       .join(df.select(col(idCol), col(groupCol)), idCol)
-    val scored = if (materialize)
-      scored0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else scored0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val samp = scored.filter(Sample.bernoulliPortable(idCol, sampleHexCeil))
       .withColumn("rn", row_number().over(
         Window.partitionBy(groupCol).orderBy(desc("avg_p"), col(idCol))))
@@ -1191,10 +1174,9 @@ object TextOps {
         (1 until buckets).foldLeft(lit(1L)) { (acc, b) =>
           acc + when(col("avg_p") < col(s"__c$b"), 1L).otherwise(0L)
         })
-    val report = bucketed.groupBy(groupCol, "bucket")
+    bucketed.groupBy(groupCol, "bucket")
       .agg(count(lit(1)).as("n_docs"),
         sum("n_bigrams").as("sum_bigrams"),
         min("avg_p").as("min_p"), max("avg_p").as("max_p"))
-    (report, () => { if (materialize) scored.unpersist(); () })
   }
 }

@@ -1,6 +1,8 @@
 package graft.pipeline
 
 import java.util.concurrent.{Callable, ExecutionException, Executors, Future, ThreadFactory}
+import org.apache.spark.sql.{classic, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Asynchronous job submission + sensor seam (SURVEY.md §2.3 O4/O5).
   *
@@ -33,9 +35,21 @@ object AsyncJob {
     }
   })
 
-  /** Submit `body` and return immediately (reference `asynchronous=True`). */
+  /** Submit `body` and return immediately (reference `asynchronous=True`).
+    * With a Spark session in scope, `body` runs under the submitting
+    * thread's active session and Spark local properties (job group,
+    * scheduler pool, job description), captured at submit time: a pooled
+    * thread otherwise keeps the properties it inherited when it was
+    * created, and its jobs escape the caller's job group — cancelling
+    * the group would not reach them.
+    */
   def submit[A](body: => A): JobHandle[A] =
-    new JobHandle(pool.submit(new Callable[A] { override def call(): A = body }))
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
+      case Some(s: classic.SparkSession) =>
+        new JobHandle(SQLExecution.withThreadLocalCaptured(s, pool)(body))
+      case _ =>
+        new JobHandle(pool.submit(new Callable[A] { override def call(): A = body }))
+    }
 
   /** Sensor loop: poll every `pollMs` until the job is terminal (reference
     * poke_interval = 15 000 ms), then surface its outcome — a failed job

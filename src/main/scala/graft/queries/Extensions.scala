@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.model.Tables
@@ -102,6 +102,870 @@ object Extensions extends QueryModule {
         recallAtLeast(col("n_hit"), col("n_exact"), minRecall)
           .as("recall_ok"))
 
+  /** Co-order graph over lineitem: an edge src < dst between two `key`s
+    * (l_suppkey or l_partkey) sharing an order, over the (l_orderkey,
+    * key) rows of `li`; not deduplicated.
+    */
+  private def coOrderPairs(li: DataFrame, key: String): DataFrame =
+    li.as("a").join(li.as("b"), "l_orderkey")
+      .filter(col(s"a.$key") < col(s"b.$key"))
+      .select(col(s"a.$key").as("src"), col(s"b.$key").as("dst"))
+
+  /** Distinct [[coOrderPairs]] over the distinct (l_orderkey, key) rows
+    * of lineitem, `sample` applied first. Distinct BEFORE the self-join:
+    * duplicate keys within an order would blow the join output up
+    * quadratically just to be distinct-ed away after.
+    */
+  private def coOrderEdges(s: SparkSession, dir: String, key: String,
+                           sample: Option[Column] = None): DataFrame = {
+    val li = t(s, dir, "lineitem").select("l_orderkey", key)
+    coOrderPairs(sample.fold(li)(p => li.filter(p)).distinct(), key)
+      .distinct()
+  }
+
+  /** Both directions of every edge (src, dst). */
+  private def symmetric(pairs: DataFrame): DataFrame =
+    pairs.unionByName(pairs.select(col("dst").as("src"), col("src").as("dst")))
+
+  /** Oracle side of [[coOrderEdges]], the body of a `pr AS (...)` CTE:
+    * distinct co-order edges over `key` of the lineitem rows in `from`.
+    */
+  private def coOrderSql(key: String, from: String = "lineitem"): String = s"""
+        SELECT DISTINCT a.$key AS src, b.$key AS dst
+        FROM $from a JOIN $from b
+          ON a.l_orderkey = b.l_orderkey AND a.$key < b.$key"""
+
+  /** `li`: lineitem's (l_orderkey, key) rows, with `s4` sampled to
+    * key % 4 = 0 — the sample the _s4 companions replay at sf1.
+    */
+  private def liCte(key: String, s4: Boolean): String =
+    s"li AS (SELECT l_orderkey, $key FROM lineitem" +
+      (if (s4) s"\n                  WHERE $key % 4 = 0)" else ")")
+
+  /** The `pr AS (...)` CTE of [[coOrderSql]]; with `s4`, over the sampled
+    * [[liCte]].
+    */
+  private def coOrderPr(key: String, s4: Boolean): String =
+    if (s4) s"${liCte(key, s4)},\n      pr AS (${coOrderSql(key, "li")})"
+    else s"pr AS (${coOrderSql(key)})"
+
+  /** Spark side of the _s4 sample ([[liCte]]). */
+  private def s4Sample(key: String, s4: Boolean): Option[Column] =
+    Option.when(s4)(col(key) % 4 === 0)
+
+  /** The canonical u < v part co-order pairs `e0` of x8_kcore and
+    * x8_ktruss, over [[liCte]].
+    */
+  private def partE0Cte(s4: Boolean): String = s"""
+      WITH ${liCte("l_partkey", s4)},
+      e0 AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+             FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
+              AND a.l_partkey < b.l_partkey),"""
+
+  /** PageRank round `i`'s inflow per node: Σ rank // outdeg of round
+    * i − 1 over the edge CTE `edges`, left-joined onto every node.
+    */
+  private def rankInflow(i: Int, edges: String): String = s"""
+        FROM nodes n LEFT JOIN (
+          SELECT e.dst AS id, sum(r.rank // d.outdeg) AS i
+          FROM $edges e JOIN deg d ON e.src = d.src JOIN r${i - 1} r ON r.id = e.src
+          GROUP BY e.dst) f ON f.id = n.id)"""
+
+  /** Both directions of every co-order edge in `pr`. */
+  private val coOrderEg = """eg AS (SELECT src, dst FROM pr
+             UNION ALL SELECT dst AS src, src AS dst FROM pr)"""
+
+  /** Portable MinHash over [[shCte]]'s `sh`, the oracle side of
+    * `Dedup.minHashLsh(portable = true)` at k = 16 and 4 bands: md5
+    * signature slots `sig` and per-band hashes `bandv` (doc_id, band, bh).
+    */
+  private val portableBandCte = """sig AS (SELECT doc_id,
+        """ + (0 until 16).map(j =>
+          s"min(md5('$j|'||shingle)) AS m$j").mkString(",\n        ") + """
+        FROM sh GROUP BY doc_id),
+      bandv AS (
+        """ + (0 until 4).map { b =>
+          val ms = (b * 4 until (b + 1) * 4).map(j => s"m$j").mkString("||'|'||")
+          s"SELECT doc_id, $b AS band, md5($ms) AS bh FROM sig"
+        }.mkString("\n        UNION ALL\n        ") + """),"""
+
+  /** Oracle side of [[langIdPred]]: per document its gold `lang` and the
+    * stopword-count `predicted` language (`pred`).
+    */
+  private val langIdPredCte = """
+      WITH scored AS (
+        SELECT lang,
+          len(list_filter(string_split(text,' '), tk -> tk IN ('the','a','of','and','to','is'))) AS s_en,
+          len(list_filter(string_split(text,' '), tk -> tk IN ('el','la','de','y','que','es'))) AS s_es,
+          len(list_filter(string_split(text,' '), tk -> tk IN ('le','les','des','et','une','est'))) AS s_fr,
+          len(list_filter(string_split(text,' '), tk -> tk IN ('der','die','das','und','ist','ein'))) AS s_de
+        FROM documents),
+      pred AS (
+        SELECT lang,
+          CASE WHEN s_en > 0 AND s_en >= greatest(s_en,s_es,s_fr,s_de) THEN 'en'
+               WHEN s_es > 0 AND s_es >= greatest(s_en,s_es,s_fr,s_de) THEN 'es'
+               WHEN s_fr > 0 AND s_fr >= greatest(s_en,s_es,s_fr,s_de) THEN 'fr'
+               WHEN s_de > 0 AND s_de >= greatest(s_en,s_es,s_fr,s_de) THEN 'de'
+               ELSE 'und' END AS predicted
+        FROM scored)"""
+
+  /** (lang, predicted) per document, by TextOps.langId. */
+  private def langIdPred(s: SparkSession, dir: String): DataFrame =
+    spread(t(s, dir, "documents"))
+      .select(col("lang"),
+        TextOps.langId(TextOps.tokens(col("text"))).as("predicted"))
+
+  /** DSIR importance model (TextOps.dsirScores): hashed-bigram `bg`
+    * features per doc and the per-bucket target/raw `ratio` in `m`.
+    */
+  private val dsirModelCte = """
+      WITH tk AS (SELECT doc_id, source, string_split(text,' ') AS toks
+                  FROM documents),
+      bg AS (SELECT doc_id, source,
+               substring(md5(array_to_string(toks[i:i+1],' ')), 1, 2)
+                 AS bucket
+             FROM tk, LATERAL (SELECT unnest(range(1, len(toks))) AS i) ii),
+      rc AS (SELECT bucket, count(*) AS rc FROM bg GROUP BY bucket),
+      tc AS (SELECT bucket, count(*) AS tc FROM bg
+             WHERE source = 'src0' GROUP BY bucket),
+      tot AS (SELECT (SELECT sum(rc) FROM rc) AS r_tot,
+                     (SELECT coalesce(sum(tc), 0) FROM tc) AS t_tot),
+      m AS (SELECT rc.bucket,
+              (CAST(coalesce(tc.tc, 0) + 1 AS DOUBLE)
+                 / CAST(t_tot + 256 AS DOUBLE))
+              * (CAST(r_tot + 256 AS DOUBLE)
+                 / CAST(rc.rc + 1 AS DOUBLE)) AS ratio
+            FROM rc LEFT JOIN tc USING (bucket) CROSS JOIN tot)"""
+
+  /** Each doc's DSIR score over [[dsirModelCte]]. */
+  private val dsirScoreCte = """,
+      sc AS (SELECT doc_id,
+               CAST(sum(CAST(floor(ratio * 1e6) AS HUGEINT)) AS DOUBLE)
+                 / 1e6 / CAST(count(*) AS DOUBLE) AS score
+             FROM bg JOIN m USING (bucket) GROUP BY doc_id)"""
+
+  /** Bigram LM (TextOps.bigramLmScore) over the token lists in `tk`:
+    * p(w2|w1) in `p`, per-doc bigram count and fixed-point sum in `sc`.
+    */
+  private val bigramLmCte = """
+      bg AS (SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS bg
+             FROM tk, LATERAL (SELECT unnest(range(1, len(toks))) AS i) ii),
+      c2 AS (SELECT bg, count(*) AS c2 FROM bg GROUP BY bg),
+      c2w AS (SELECT bg, c2, string_split(bg,' ')[1] AS w1 FROM c2),
+      c1 AS (SELECT w1, sum(c2) AS c1 FROM c2w GROUP BY w1),
+      p AS (SELECT bg, CAST(c2 AS DOUBLE) / CAST(c1 AS DOUBLE) AS p
+            FROM c2w JOIN c1 USING (w1)),
+      sc AS (SELECT doc_id, count(*) AS n_bigrams,
+               sum(CAST(floor(p * 1e12) AS HUGEINT)) AS s
+             FROM bg JOIN p USING (bg) GROUP BY doc_id)"""
+
+  /** The CCNet buckets' per-doc mean bigram probability `sc2` over
+    * [[bigramLmCte]].
+    */
+  private val ccnetScoreCte = s"""
+      WITH tk AS (SELECT doc_id, string_split(text,' ') AS toks
+                  FROM documents),$bigramLmCte,
+      sc2 AS (SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams,
+                CAST(s AS DOUBLE) / 1e12 / CAST(n_bigrams AS DOUBLE)
+                  AS avg_p
+              FROM sc)"""
+
+  /** 16-bit SimHash bits b0..b15 per doc over distinct tokens `tk` (doc_id,
+    * tok), the oracle side of Dedup.simhash.
+    */
+  private val simhashBitsCte = """bits AS (SELECT doc_id,
+        """ + (0 until 16).map(i =>
+          s"""CASE WHEN sum(CASE WHEN substr(md5(tok),${i + 1},1) IN
+             ('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END) > 0
+             THEN '1' ELSE '0' END AS b$i""").mkString(",\n        ") + """
+        FROM tk GROUP BY doc_id)"""
+
+  /** Two synchronous label-propagation rounds (Graph.labelPropagate)
+    * over the symmetric supplier co-order graph: labels `l2`.
+    */
+  private val labelPropCte = s"""
+      WITH pr AS (${coOrderSql("l_suppkey")}),
+      $coOrderEg,
+      nodes AS (SELECT DISTINCT src AS id FROM eg),
+      l0 AS (SELECT id, id AS label FROM nodes),
+      n1 AS (SELECT e.dst AS id, l.label, count(*) AS c
+             FROM eg e JOIN l0 l ON l.id = e.src GROUP BY 1, 2),
+      t1 AS (SELECT id, label FROM (
+               SELECT id, label,
+                 row_number() OVER (PARTITION BY id
+                   ORDER BY c DESC, label) AS rn FROM n1) WHERE rn = 1),
+      l1 AS (SELECT l0.id, coalesce(t1.label, l0.label) AS label
+             FROM l0 LEFT JOIN t1 ON t1.id = l0.id),
+      n2 AS (SELECT e.dst AS id, l.label, count(*) AS c
+             FROM eg e JOIN l1 l ON l.id = e.src GROUP BY 1, 2),
+      t2 AS (SELECT id, label FROM (
+               SELECT id, label,
+                 row_number() OVER (PARTITION BY id
+                   ORDER BY c DESC, label) AS rn FROM n2) WHERE rn = 1),
+      l2 AS (SELECT l1.id, coalesce(t2.label, l1.label) AS label
+             FROM l1 LEFT JOIN t2 ON t2.id = l1.id)"""
+
+  /** Positional 8-token shingles `sh` (doc_id, pos, g) of every document. */
+  private val gram8Cte = """
+      WITH sh AS (
+        SELECT doc_id, i - 1 AS pos, array_to_string(toks[i:i+7],' ') AS g
+        FROM (SELECT doc_id, string_split(text,' ') AS toks FROM documents) dd,
+             LATERAL (SELECT unnest(range(1, greatest(len(dd.toks)-6,1))) AS i) ii)"""
+
+  /** Rank `rn` of each 8-shingle match in `m` along its diagonal — runs of
+    * consecutive matches share pa − rn.
+    */
+  private val diagRankCte = """
+      r AS (SELECT da, db, pa, pb, pa - pb AS diag,
+              row_number() OVER (PARTITION BY da, db, pa - pb
+                                 ORDER BY pa) AS rn
+            FROM m)"""
+
+  /** x2_substring_dedup's report: per pair the longest shared run and
+    * its anchor matches, from the islands of [[diagRankCte]].
+    */
+  private val islandReport = """,
+      isl AS (SELECT da, db, count(*) AS cnt,
+                     min(pa) AS pa0, min(pb) AS pb0
+              FROM r GROUP BY da, db, diag, pa - rn)
+      SELECT da, db, CAST(max(cnt) + 7 AS BIGINT) AS longest_run,
+             CAST(sum(cnt) AS BIGINT) AS n_anchor_matches,
+             CAST(min(pa0) AS BIGINT) AS min_pa,
+             CAST(min(pb0) AS BIGINT) AS min_pb
+      FROM isl GROUP BY da, db ORDER BY da, db"""
+
+  /** x3_pq's encode / LUT / rank over the codebook `cb` (cid, j, cv):
+    * the 3 nearest corpus vectors per query by asymmetric distance.
+    */
+  private val pqAdcTail = """
+      c AS (SELECT vec_id AS nid, vv FROM v WHERE vec_id >= 10),
+      cd AS (SELECT nid, j, cid,
+               row_number() OVER (PARTITION BY nid, j ORDER BY
+                 list_dot_product(sv2, sv2) - 2.0*list_dot_product(sv2, cv)
+                   + list_dot_product(cv, cv) ASC, cid) AS rk
+             FROM (SELECT nid, CASE j WHEN 0 THEN vv[1:32] ELSE vv[33:64] END AS sv2,
+                          j, cid, cv
+                   FROM c, cb)),
+      codes AS (SELECT nid, j, cid FROM cd WHERE rk = 1),
+      q AS (SELECT vec_id AS qid, vv AS qv FROM v WHERE vec_id < 10),
+      lut AS (SELECT qid, j, cid,
+                list_dot_product(qs, qs) - 2.0*list_dot_product(qs, cv)
+                  + list_dot_product(cv, cv) AS d2
+              FROM (SELECT qid, CASE j WHEN 0 THEN qv[1:32] ELSE qv[33:64] END AS qs,
+                           j, cid, cv
+                    FROM q, cb)),
+      est AS (SELECT l.qid, s.nid, sum(l.d2) AS est_d2
+              FROM codes s JOIN lut l ON l.j = s.j AND l.cid = s.cid
+              GROUP BY l.qid, s.nid),
+      r AS (SELECT qid, nid, est_d2,
+              row_number() OVER (PARTITION BY qid ORDER BY est_d2 ASC, nid) AS rnk
+            FROM est)
+      SELECT qid, rnk, nid, est_d2 FROM r WHERE rnk <= 3 ORDER BY qid, rnk"""
+
+  /** x3_pq's Spark side: `iters` Lloyd iterations per subspace codebook,
+    * then the 3-NN ADC scan.
+    */
+  private def pqKnn(s: SparkSession, dir: String, iters: Int): DataFrame = {
+    val e = t(s, dir, "embeddings")
+    val cbs = Similarity.pqTrain(e, "vec_id", "embedding",
+      m = 2, k = 4, iters = iters)
+    Similarity.knnPq(
+        e.filter(col("vec_id") >= 10), e.filter(col("vec_id") < 10),
+        "vec_id", "embedding", cbs, k = 3)
+      .withColumnRenamed("rank", "rnk")
+      .orderBy("qid", "rnk")
+  }
+
+  /** The `k` best candidates per query by cosine `sim` in `sc` (qid,
+    * nid, sim), ranked sim DESC, nid.
+    */
+  private def topBySim(k: Int): String = s"""
+      r AS (SELECT qid, nid, sim,
+              row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk
+            FROM sc)
+      SELECT qid, rnk, nid, sim FROM r WHERE rnk <= $k ORDER BY qid, rnk"""
+
+  /** IVF probe over the 8 lowest-id embeddings as centroids: each query's
+    * top-2 cells `q` and the corpus cell members `c`, argmax-cosine
+    * assignment with the cid ASC tie rule.
+    */
+  private val ivfProbeCte = """
+      WITH ctr AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
+                   FROM embeddings WHERE vec_id < 8),
+      v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+      asn AS (SELECT v.vec_id, vv, cid,
+                row_number() OVER (PARTITION BY v.vec_id ORDER BY
+                  list_dot_product(vv, cv)
+                    / sqrt(list_dot_product(vv, vv) * list_dot_product(cv, cv))
+                    DESC, cid) AS rk
+              FROM v, ctr),
+      cell AS (SELECT vec_id, vv, cid AS cell FROM asn WHERE rk = 1),
+      q AS (SELECT vec_id AS qid, vv AS qv, cid AS cell FROM asn
+            WHERE vec_id < 10 AND rk <= 2),
+      c AS (SELECT vec_id AS nid, vv AS cv2, cell FROM cell WHERE vec_id >= 10)"""
+
+  /** Exact cosine of each probed (query, corpus) pair sharing a cell. */
+  private val ivfScoreCte = """
+      sc AS (SELECT qid, nid,
+               list_dot_product(qv, cv2)
+                 / sqrt(list_dot_product(qv, qv) * list_dot_product(cv2, cv2)) AS sim
+             FROM q JOIN c USING (cell)),"""
+
+  /** The media gates' input: doc ids below 100. */
+  private def mediaIds(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents").select("doc_id")
+      .filter(col("doc_id") < 100)
+
+  /** `media` written to a fresh landing directory as doc-<id>.<ext> files
+    * and read back through Spark's binaryFile source — the file-ingest
+    * path of the *_files gates.
+    */
+  private def landedMedia(s: SparkSession, media: Dataset[Multimodal.MediaRow],
+                          prefix: String, ext: String): Dataset[Multimodal.MediaRow] = {
+    import s.implicits._
+    val landing = graft.Scratch.fresh(prefix)
+    Multimodal.writeMediaFiles(media, landing, ext)
+    s.read.format("binaryFile")
+      .option("pathGlobFilter", s"*.$ext").load(landing)
+      .select(
+        regexp_extract(col("path"), s"doc-(\\d+)\\.$ext$$", 1)
+          .cast("long").as("id"),
+        col("content"),
+        struct(lit(ext).as("format"), lit(0).as("width"),
+          lit(0).as("height")).as("meta"))
+      .as[Multimodal.MediaRow]
+  }
+
+  /** Each AVI frame as a PNG media row with composite id video*16 +
+    * frame_no, which rides through the Decoder seam (nf <= 5 < 16, gate
+    * ids < 100 — collision-free by construction).
+    */
+  private def frameRows(frames: DataFrame): Dataset[Multimodal.MediaRow] = {
+    import frames.sparkSession.implicits._
+    frames.select(
+        (col("id") * 16 + col("frame_no")).as("id"),
+        col("frame").as("content"),
+        struct(lit("png").as("format"), lit(0).as("width"),
+          lit(0).as("height")).as("meta"))
+      .as[Multimodal.MediaRow]
+  }
+
+  /** Oracle of the synthetic grey PNGs' decoded size and pixel stats. */
+  private val pngStatsOracle = """
+      WITH d AS (SELECT doc_id, 8 + doc_id % 9 AS w, 8 + (3*doc_id) % 9 AS h
+                 FROM documents WHERE doc_id < 100),
+      px AS (SELECT doc_id, w, h, (7*x.x + 13*y.y + doc_id) % 256 AS g
+             FROM d,
+               LATERAL (SELECT unnest(range(0, w)) AS x) x,
+               LATERAL (SELECT unnest(range(0, h)) AS y) y)
+      SELECT doc_id AS id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
+             CAST(sum(g) AS BIGINT) AS sum_r,
+             CAST(min(g) AS BIGINT) AS min_r,
+             CAST(max(g) AS BIGINT) AS max_r
+      FROM px GROUP BY doc_id, w, h ORDER BY id"""
+
+  /** Spark side of [[pngStatsOracle]] from decoded features. */
+  private def pngStats(feats: Dataset[Multimodal.MediaFeatures]): DataFrame =
+    feats.toDF().select(col("id"),
+        element_at(col("codes"), 1).as("w"),
+        element_at(col("codes"), 2).as("h"),
+        element_at(col("codes"), 3).as("sum_r"),
+        element_at(col("codes"), 4).as("min_r"),
+        element_at(col("codes"), 5).as("max_r"))
+      .orderBy("id")
+
+  /** The synthetic WAVs' per-sample stereo values `s` (doc_id, n, i, l, r). */
+  private val wavSamplesCte = """
+      WITH d AS (SELECT doc_id, 256 + doc_id % 64 AS n
+                 FROM documents WHERE doc_id < 100),
+      s AS (SELECT doc_id, n, i.i AS i,
+              ((7*i.i + doc_id) % 65536) - 32768 AS l,
+              ((11*i.i + 2*doc_id) % 65536) - 32768 AS r
+            FROM d, LATERAL (SELECT unnest(range(0, n)) AS i) i),"""
+
+  /** The synthetic AVIs' frames `fr` (doc_id, w, h, f). */
+  private val aviFramesCte = """
+      WITH d AS (SELECT doc_id, 8 + doc_id % 9 AS w, 8 + (3*doc_id) % 9 AS h,
+                        2 + doc_id % 4 AS nf
+                 FROM documents WHERE doc_id < 100),
+      fr AS (SELECT doc_id, w, h, f.f AS f
+             FROM d, LATERAL (SELECT unnest(range(0, nf)) AS f) f),"""
+
+  /** Quarantine tally per `kind`: rows, decoded, quarantined (odd ids are
+    * the truncated payloads).
+    */
+  private val decodeTallyOracle = """
+             CAST(count(*) AS BIGINT) AS n_rows,
+             CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END)
+                  AS BIGINT) AS n_decoded,
+             CAST(sum(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END)
+                  AS BIGINT) AS n_quarantined
+      FROM documents WHERE doc_id < 100
+      GROUP BY 1 ORDER BY kind"""
+
+  /** Spark side of [[decodeTallyOracle]] from decoded features. */
+  private def decodeTally(kinded: DataFrame): DataFrame =
+    kinded
+        .groupBy("kind")
+        .agg(count(lit(1)).as("n_rows"),
+          sum(when(size(col("codes")) > 0, 1L).otherwise(0L))
+            .as("n_decoded"),
+          sum(when(size(col("codes")) === 0, 1L).otherwise(0L))
+            .as("n_quarantined"))
+        .orderBy("kind")
+
+  /** Cosine `sim` of every doc pair sharing a term, over term counts
+    * `tf` (doc_id, tok, tf).
+    */
+  private val tfCosineCte = """
+      n2 AS (SELECT doc_id, sum(tf*tf) AS n2 FROM tf GROUP BY doc_id),
+      num AS (SELECT a.doc_id AS da, b.doc_id AS db, sum(a.tf*b.tf) AS num
+              FROM tf a JOIN tf b
+                ON a.tok = b.tok AND a.doc_id < b.doc_id
+              GROUP BY 1, 2),
+      sim AS (SELECT da, db,
+                CAST(num AS DOUBLE)
+                  / (sqrt(CAST(x.n2 AS DOUBLE)) * sqrt(CAST(y.n2 AS DOUBLE))) AS sim
+              FROM num JOIN n2 x ON x.doc_id = da JOIN n2 y ON y.doc_id = db)"""
+
+  /** Rebuilt text per doc from its surviving segments `kept` (doc_id, pos,
+    * seg), with its segment count from `segs`.
+    */
+  private val segmentRebuild = """
+      tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_seg
+              FROM segs GROUP BY doc_id),
+      reb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
+                     string_agg(seg, ' ' ORDER BY pos) AS text_kept
+              FROM kept GROUP BY doc_id)
+      SELECT t.doc_id, n_seg,
+             coalesce(n_kept, CAST(0 AS BIGINT)) AS n_kept,
+             coalesce(text_kept, '') AS text_kept
+      FROM tot t LEFT JOIN reb ON t.doc_id = reb.doc_id
+      ORDER BY t.doc_id"""
+
+  /** Chi-square pieces over the contingency counts `h` (row, b, c):
+    * margins, cell deviations and the 1e-6-grid statistic `q6`.
+    */
+  private def chiSqCte(row: String): String = s"""
+      rt AS (SELECT $row, sum(c) AS rt FROM h GROUP BY $row),
+      ct AS (SELECT b, sum(c) AS ct FROM h GROUP BY b),
+      n AS (SELECT sum(c) AS n FROM h),
+      d AS (SELECT (SELECT count(*) FROM rt) AS r,
+                   (SELECT count(*) FROM ct) AS k),
+      t AS (SELECT CAST(CAST(n.n AS HUGEINT) * h.c - rt.rt * ct.ct
+                        AS DOUBLE) AS dev,
+                   CAST(CAST(n.n AS HUGEINT) * rt.rt * ct.ct
+                        AS DOUBLE) AS den
+            FROM h JOIN rt USING ($row) JOIN ct USING (b) CROSS JOIN n),
+      q AS (SELECT coalesce(sum(CAST(floor(dev * dev / den * 1e6)
+                                     AS HUGEINT)), 0) AS q6 FROM t)"""
+
+  /** The chi-square report columns over [[chiSqCte]]: dof, chi2 and
+    * Cramér's v.
+    */
+  private val chiSqStats = """
+        CAST((d.r - 1) * (d.k - 1) AS BIGINT) AS dof,
+        CAST(q.q6 AS DOUBLE) / 1e6 AS chi2,
+        CASE WHEN n.n > 0 AND least(d.r, d.k) > 1 THEN
+          sqrt((CAST(q.q6 AS DOUBLE) / 1e6)
+               / CAST(CAST(n.n AS HUGEINT) * (least(d.r, d.k) - 1)
+                      AS DOUBLE))
+        END AS v"""
+
+  /** The rank tests' input: (g = l_returnflag, v = floor(l_quantity)). */
+  private val flagQtyCte = """
+      WITH base AS (SELECT l_returnflag AS g,
+                      CAST(floor(l_quantity) AS BIGINT) AS v
+                    FROM lineitem),"""
+
+  /** Spark side of [[flagQtyCte]]. */
+  private def flagQty(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "lineitem").select(
+      col("l_returnflag").as("g"),
+      floor(col("l_quantity")).cast("long").as("v"))
+
+  /** Per-group count, sum and sum of squares of `x` for the view and
+    * purchase events of `g`, grouped by its first column.
+    */
+  private val viewPurchaseMoments = """
+              sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS n1,
+              sum(CASE WHEN event_type = 'view'
+                    THEN CAST(x AS HUGEINT) END) AS s1,
+              sum(CASE WHEN event_type = 'view'
+                    THEN CAST(x AS HUGEINT) * CAST(x AS HUGEINT) END) AS ss1,
+              sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS n2,
+              sum(CASE WHEN event_type = 'purchase'
+                    THEN CAST(x AS HUGEINT) END) AS s2,
+              sum(CASE WHEN event_type = 'purchase'
+                    THEN CAST(x AS HUGEINT) * CAST(x AS HUGEINT) END) AS ss2
+            FROM g GROUP BY 1)"""
+
+  /** Winnowing fingerprints `fp` (window 4) over md5-hashed 3-shingles
+    * `sh` (doc_id, pos, h).
+    */
+  private val winnowCte = """
+      WITH sh AS (
+        SELECT doc_id, i - 1 AS pos,
+               md5(array_to_string(toks[i:i+2],' ')) AS h
+        FROM (SELECT doc_id, string_split(text,' ') AS toks FROM documents) dd,
+             LATERAL (SELECT unnest(range(1, greatest(len(dd.toks)-1,1))) AS i) ii),
+      w AS (SELECT doc_id,
+              min(h) OVER (PARTITION BY doc_id ORDER BY pos
+                ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
+            FROM sh)"""
+
+  /** Sorted-neighbourhood candidates `cand` (da < db): docs within 8
+    * ranks of each other in their language's 24-char key order `ord`.
+    */
+  private val snmCandCte = """
+      ord AS (SELECT doc_id, lang,
+                row_number() OVER (PARTITION BY lang
+                  ORDER BY substr(text, 1, 24), doc_id) AS rn
+              FROM documents),
+      cand AS (SELECT least(a.doc_id, b.doc_id) AS da,
+                      greatest(a.doc_id, b.doc_id) AS db
+               FROM ord a JOIN ord b
+                 ON a.lang = b.lang AND b.rn > a.rn AND b.rn <= a.rn + 8)"""
+
+  /** Four BPE merge rounds from `t0` (carrying columns `keep`): round r's
+    * adjacent-pair counts `sh<r>`, its top pair `b<r>` (columns
+    * `merge(r)`) and `t<r>`, the text of t(r − 1) with that pair merged.
+    */
+  private def bpeRounds(merge: Int => String, keep: String): String =
+    (1 to 4).map { r =>
+      s"""sh$r AS (
+        SELECT array_to_string(toks[i:i+1],' ') AS pair
+        FROM (SELECT string_split(text,' ') AS toks FROM t${r - 1}) dd,
+             LATERAL (SELECT unnest(range(1, greatest(len(dd.toks),1))) AS i) ii),
+      b$r AS (SELECT ${merge(r)}
+              FROM (SELECT pair, count(*) AS c FROM sh$r GROUP BY 1)
+              ORDER BY c DESC, pair LIMIT 1),
+      t$r AS (SELECT $keep
+                     replace(text, coalesce((SELECT pair FROM b$r), ''),
+                             coalesce((SELECT merged FROM b$r), '')) AS text
+              FROM t${r - 1})"""
+    }.mkString(",\n      ")
+
+  /** A BPE round's top pair and its merged token, for [[bpeRounds]]. */
+  private val bpeMerge: Int => String = _ => "pair, replace(pair, ' ', '_') AS merged"
+
+  /** The 4-round BPE merge table as (pair, merged) — a bounded collect by
+    * contract (exactly rounds rows).
+    */
+  private def bpeVocab(docs: DataFrame): Seq[(String, String)] =
+    TextOps.bpeLearnVocab(docs, "doc_id", "text", rounds = 4)
+      .orderBy("rank").collect()
+      .map(r => (r.getString(1), r.getString(2))).toSeq
+
+  /** The fixed linear quality model (TextOps.linearQualityScore) over
+    * the text column `text`.
+    */
+  private def qualityScore(text: Column): Column =
+    TextOps.linearQualityScore(text, bias = -2.0, wTtr = 3.0, wStop = 5.0,
+      wAvgLen = 0.25, stopwords = enStop)
+
+  /** Oracle side of [[qualityScore]] over `text`. */
+  private val qualityScoreSql = """
+          -2.0 + 3.0 * (CAST(len(list_distinct(string_split(text,' '))) AS DOUBLE)
+                        / CAST(len(string_split(text,' ')) AS DOUBLE))
+               + 5.0 * (CAST(len(list_filter(string_split(text,' '),
+                          tk -> tk IN ('the','a','of','and','to','is'))) AS DOUBLE)
+                        / CAST(len(string_split(text,' ')) AS DOUBLE))
+               + 0.25 * (CAST(length(text) - len(string_split(text,' ')) + 1 AS DOUBLE)
+                         / CAST(len(string_split(text,' ')) AS DOUBLE))"""
+
+  /** a1/a2's oracle: each click's `p` ("last" or "next") purchase by
+    * DuckDB's ASOF JOIN under the time comparison `op`.
+    */
+  private def asOfOracle(op: String, p: String): String = s"""
+      SELECT e.user_id, e.event_id, epoch_ms(e.ts) AS ms,
+             epoch_ms(p.ts) AS ${p}_purchase_ms,
+             p.value AS ${p}_purchase_value
+      FROM (SELECT * FROM events WHERE event_type = 'click') e
+      ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
+        ON e.user_id = p.user_id AND e.ts $op p.ts
+      ORDER BY e.user_id, e.event_id"""
+
+  /** The as-of gates' inputs from events: clicks (user_id, event_id, ts)
+    * and purchases (user_id, ts, <p>_purchase_ms, <p>_purchase_value).
+    */
+  private def clicksAndPurchases(s: SparkSession, dir: String,
+                                 p: String): (DataFrame, DataFrame) = {
+    val ev = t(s, dir, "events")
+    val clicks = ev.filter(col("event_type") === "click")
+      .select("user_id", "event_id", "ts")
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts"),
+        unix_millis(col("ts")).as(s"${p}_purchase_ms"),
+        col("value").as(s"${p}_purchase_value"))
+    (clicks, purchases)
+  }
+
+  /** The as-of gates' output: each click with its `p` purchase. */
+  private def asOfReport(joined: DataFrame, p: String): DataFrame =
+    joined.select(col("user_id"), col("event_id"),
+        unix_millis(col("ts")).as("ms"),
+        col(s"${p}_purchase_ms"), col(s"${p}_purchase_value"))
+      .orderBy("user_id", "event_id")
+
+  /** Oracle of the exact 3-shingle Jaccard >= 0.8 pairs (x2_jaccard_*). */
+  private val jaccardPairsOracle = s"""
+      WITH $shCte
+      SELECT da, db,
+        CAST(ni AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - ni AS DOUBLE) AS jacc
+      FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
+      WHERE CAST(ni AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - ni AS DOUBLE)
+            >= CAST(0.8 AS DOUBLE)
+      ORDER BY da, db"""
+
+  /** The CCNet bucket report over per-doc buckets `j`. */
+  private val ccnetReport = """
+      SELECT lang, CAST(bucket AS BIGINT) AS bucket,
+             CAST(count(*) AS BIGINT) AS n_docs,
+             CAST(sum(n_bigrams) AS BIGINT) AS sum_bigrams,
+             min(avg_p) AS min_p, max(avg_p) AS max_p
+      FROM j GROUP BY lang, bucket ORDER BY lang, bucket"""
+
+  /** Brute-force search inputs: queries `q` (vec_id < 10) and corpus `c`. */
+  private val queryCorpusCte = """
+      WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
+                 FROM embeddings WHERE vec_id < 10),
+      c AS (SELECT vec_id AS nid, CAST(embedding AS DOUBLE[]) AS cv
+            FROM embeddings WHERE vec_id >= 10),"""
+
+  /** Hyperplane-LSH bucket `b` of every embedding, the 4 lowest-id
+    * embeddings as planes (sign bits in plane-id order).
+    */
+  private val lshBucketCte = """
+      WITH p AS (SELECT vec_id AS pid, CAST(embedding AS DOUBLE[]) AS pv
+                 FROM embeddings WHERE vec_id < 4),
+      v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+      b AS (SELECT v.vec_id, vv,
+              string_agg(CASE WHEN list_dot_product(vv, pv) >= CAST(0 AS DOUBLE)
+                              THEN '1' ELSE '0' END, '' ORDER BY pid) AS bucket
+            FROM v, p GROUP BY v.vec_id, vv)"""
+
+  /** Near-dup pairs (`pr`, da < db) at exact 3-shingle Jaccard >= 0.8
+    * over [[shCte]], and their symmetric edge list `eg` (src, dst).
+    */
+  private val nearDupEdgesCte = """
+      pr AS (
+        SELECT da, db
+        FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
+        WHERE CAST(ni AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - ni AS DOUBLE)
+              >= CAST(0.8 AS DOUBLE)),
+      eg AS (SELECT da AS src, db AS dst FROM pr
+             UNION ALL SELECT db, da FROM pr),"""
+
+  /** Oracle side of [[graft.operators.Dedup.resolveClusters]]: `reach`
+    * is the transitive closure of every `key` of `from` over the
+    * symmetric edge CTE `edges` (src, dst) — recursive, so the query
+    * opens WITH RECURSIVE.
+    */
+  private def reachCte(key: String, from: String,
+                       edges: String = "eg"): String = s"""
+      reach(id, r) AS (
+        SELECT $key, $key FROM $from
+        UNION
+        SELECT e.src, rc.r FROM $edges e JOIN reach rc ON e.dst = rc.id)"""
+
+  /** Each node's cluster: the least id that reaches it ([[reachCte]]). */
+  private val clCte = """,
+      cl AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id)"""
+
+  /** The curation capstones' near-dup CTEs after their own `sh`: shingle
+    * counts, pair intersections, the Jaccard >= 0.8 pairs `pr` and their
+    * symmetric edge list `eg`.
+    */
+  private val curationNearDupCte = """
+      cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+      inter AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS ni
+                FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+                GROUP BY 1, 2),
+      pr AS (SELECT da, db
+             FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
+             WHERE CAST(ni AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - ni AS DOUBLE)
+                   >= CAST(0.8 AS DOUBLE)),
+      eg AS (SELECT da AS src, db AS dst FROM pr UNION ALL SELECT db, da FROM pr),"""
+
+  /** x7_cluster_split's oracle after its leading CTEs `head` (which
+    * define sh/cnt/inter over the document set `docs`): per-split doc
+    * and cluster counts, plus the near-dup pairs straddling splits.
+    */
+  private def clusterSplitOracle(head: String, docs: String): String = s"""
+      WITH RECURSIVE $head,$nearDupEdgesCte${reachCte("doc_id", docs)}$clCte,
+      s AS (SELECT id, cluster,
+              CASE WHEN substr(md5(CAST(cluster AS VARCHAR)), 1, 2) < 'cc'
+                   THEN 'train' ELSE 'test' END AS split
+            FROM cl),
+      st AS (SELECT split, count(*) AS n_docs,
+               count(DISTINCT cluster) AS n_clusters
+             FROM s GROUP BY 1),
+      x AS (SELECT count(*) AS n_cross
+            FROM pr JOIN s a ON a.id = pr.da JOIN s b ON b.id = pr.db
+            WHERE a.split <> b.split)
+      SELECT split, CAST(n_docs AS BIGINT) AS n_docs,
+             CAST(n_clusters AS BIGINT) AS n_clusters,
+             CAST(n_cross AS BIGINT) AS n_cross
+      FROM st, x ORDER BY split"""
+
+  /** x7_cluster_split's body over `docs`: hashSplit on the near-dup
+    * cluster id, per-split counts and the straddling-pair count.
+    */
+  private def clusterSplit(docs: DataFrame): DataFrame = {
+    val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
+      n = 3, threshold = 0.8)
+    val labels = Dedup.resolveClusters(docs, "doc_id", pairs)
+      .withColumnRenamed("id", "doc_id")
+    val lab = docs.select("doc_id").join(labels, "doc_id")
+      .withColumn("split", graft.operators.Sample.hashSplit(
+        "cluster", Seq(("cc", "train")), "test"))
+    val stats = lab.groupBy("split")
+      .agg(count(lit(1)).as("n_docs"),
+        countDistinct("cluster").as("n_clusters"))
+    val sp = lab.select(col("doc_id"), col("split"))
+    val cross = pairs
+      .join(sp.select(col("doc_id").as("da"), col("split").as("sa")), "da")
+      .join(sp.select(col("doc_id").as("db"), col("split").as("sb")), "db")
+      .filter(col("sa") =!= col("sb"))
+      .agg(count(lit(1)).as("n_cross"))
+    stats.crossJoin(broadcast(cross)).orderBy("split")
+  }
+
+  /** x8_pagerank_dangling; with `s4`, its companion on the
+    * l_suppkey % 4 sample.
+    */
+  private def pageRankDanglingGate(name: String, s4: Boolean): QueryDef =
+    QueryDef(name, Some(s"""
+      WITH ${coOrderPr("l_suppkey", s4)},
+      nodes AS (SELECT DISTINCT id FROM
+        (SELECT src AS id FROM pr UNION ALL SELECT dst FROM pr)),
+      deg AS (SELECT src, count(*) AS outdeg FROM pr GROUP BY src),
+      nn AS (SELECT count(*) AS c FROM nodes),
+      r0 AS (SELECT id, CAST(1000000000 AS BIGINT) AS rank FROM nodes)""" +
+      (1 to 3).map { i =>
+        s""",
+      s${i - 1} AS (SELECT coalesce(sum(rank), 0) AS s FROM r${i - 1} n
+        WHERE NOT EXISTS (SELECT 1 FROM deg d WHERE d.src = n.id)),
+      r$i AS (SELECT n.id,
+        CAST(150000000 + (17 * (coalesce(f.i, 0)
+          + (SELECT s FROM s${i - 1}) // (SELECT c FROM nn))) // 20
+          AS BIGINT) AS rank${rankInflow(i, "pr")}"""
+      }.mkString + """
+      SELECT id, rank FROM r3 ORDER BY id""")) { (s, dir) =>
+      val pairs = coOrderEdges(s, dir, "l_suppkey", s4Sample("l_suppkey", s4))
+      Graph.pageRankInt(pairs, iters = 3, dangling = true).orderBy("id")
+    }
+
+  /** x8_hits; with `s4`, its companion on the l_suppkey % 4 sample. The
+    * oracle unrolls two hub/authority rounds.
+    */
+  private def hitsGate(name: String, s4: Boolean): QueryDef =
+    QueryDef(name, Some(s"""
+      WITH ${coOrderPr("l_suppkey", s4)},
+      nodes AS (SELECT DISTINCT id FROM
+        (SELECT src AS id FROM pr UNION ALL SELECT dst AS id FROM pr)),
+      h0 AS (SELECT id, CAST(1000000 AS BIGINT) AS h FROM nodes),""" +
+      (1 to 2).map { i =>
+        s"""
+      a${i}p AS (SELECT e.dst AS id, sum(h.h) AS ap
+              FROM pr e JOIN h${i - 1} h ON h.id = e.src GROUP BY e.dst),
+      a${i}m AS (SELECT max(ap) AS am FROM a${i}p),
+      a$i AS (SELECT id, (ap * 1000000) // am AS a FROM a${i}p, a${i}m),
+      h${i}p AS (SELECT e.src AS id, sum(a.a) AS hp
+              FROM pr e JOIN a$i a ON a.id = e.dst GROUP BY e.src),
+      h${i}m AS (SELECT max(hp) AS hm FROM h${i}p),
+      h$i AS (SELECT id, (hp * 1000000) // hm AS h FROM h${i}p, h${i}m)"""
+      }.mkString(",") + """
+      SELECT n.id, CAST(coalesce(h2.h, 0) AS BIGINT) AS hub,
+             CAST(coalesce(a2.a, 0) AS BIGINT) AS auth
+      FROM nodes n LEFT JOIN h2 ON h2.id = n.id LEFT JOIN a2 ON a2.id = n.id
+      ORDER BY n.id""")) { (s, dir) =>
+      val edges = coOrderEdges(s, dir, "l_suppkey", s4Sample("l_suppkey", s4))
+      Graph.hitsInt(edges, iters = 2).orderBy("id")
+    }
+
+  /** x8_triangles over the co-order pairs CTE `pr` (each gate keeps its
+    * own); `sample` is the Spark side of a sampled `pr`.
+    */
+  private def trianglesGate(name: String, pr: String,
+                            sample: Option[Column]): QueryDef =
+    QueryDef(name, Some(s"""
+      WITH $pr,
+      w AS (SELECT p1.src AS a, p1.dst AS b, p2.dst AS c
+            FROM pr p1 JOIN pr p2 ON p1.dst = p2.src),
+      tri AS (SELECT w.a, w.b, w.c
+              FROM w JOIN pr p3 ON p3.src = w.a AND p3.dst = w.c),
+      n AS (SELECT unnest([a, b, c]) AS id FROM tri)
+      SELECT id, CAST(count(*) AS BIGINT) AS triangles
+      FROM n GROUP BY id ORDER BY id""")) { (s, dir) =>
+      // The pair table feeds three join sides — persist it or the
+      // lineitem self-join recomputes per branch (harness unpersists
+      // between queries).
+      val pairs = coOrderEdges(s, dir, "l_suppkey", sample)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      Graph.triangleCounts(pairs).orderBy("id")
+    }
+
+  /** x8_linkpred at `minCommon`; with `s4`, its companion on the
+    * l_partkey % 4 sample.
+    */
+  private def linkPredGate(name: String, s4: Boolean,
+                           minCommon: Int): QueryDef =
+    QueryDef(name, Some(s"""
+      WITH ${coOrderPr("l_partkey", s4)},
+      $coOrderEg,
+      deg AS (SELECT src AS id, count(*) AS d FROM eg GROUP BY 1),
+      w AS (SELECT a.src AS z, a.dst AS u, b.dst AS v
+            FROM eg a JOIN eg b ON a.src = b.src AND a.dst < b.dst),
+      sc AS (SELECT u, v, CAST(count(*) AS BIGINT) AS cn,
+               CAST(sum(1000000000 // dz.d) AS BIGINT) AS ra
+             FROM w JOIN deg dz ON w.z = dz.id
+             GROUP BY u, v HAVING count(*) >= $minCommon),
+      ne AS (SELECT sc.* FROM sc LEFT JOIN pr
+               ON pr.src = sc.u AND pr.dst = sc.v
+             WHERE pr.src IS NULL)
+      SELECT ne.u, ne.v, ne.cn, ne.ra,
+             CAST(CAST(CAST(du.d AS DECIMAL(38,0)) * dv.d AS DECIMAL(38,0))
+               AS VARCHAR) AS pa
+      FROM ne JOIN deg du ON du.id = ne.u
+              JOIN deg dv ON dv.id = ne.v
+      ORDER BY u, v""")) { (s, dir) =>
+      val pairs = coOrderEdges(s, dir, "l_partkey", s4Sample("l_partkey", s4))
+      // pa (degree product) stays DECIMAL(38,0) inside the operator —
+      // hub degrees overflow BIGINT at scale — but the GATE renders it
+      // as a string (SURVEY §5.2 output-type contract).
+      graft.operators.Graph.linkPredict(pairs, minCommon = minCommon)
+        .withColumn("pa", col("pa").cast("string"))
+        .orderBy("u", "v")
+    }
+
+  /** x8_ktruss: a k-truss over two peel rounds, which the oracle unrolls
+    * (triangle enumeration on the canonical u < v list, each triangle
+    * credited to its three edges); with `s4`, on the l_partkey % 4
+    * sample.
+    */
+  private def kTrussGate(name: String, s4: Boolean, k: Long): QueryDef =
+    QueryDef(name, Some(s"""${partE0Cte(s4)}
+      ${(1 to 2).map { r =>
+        s"""t$r AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
+             FROM e${r - 1} e1 JOIN e${r - 1} e2 ON e2.u = e1.v
+             JOIN e${r - 1} e3 ON e3.u = e1.u AND e3.v = e2.v),
+      s$r AS (SELECT u, v, count(*) AS sup FROM (
+                SELECT a AS u, b AS v FROM t$r
+                UNION ALL SELECT b AS u, c AS v FROM t$r
+                UNION ALL SELECT a AS u, c AS v FROM t$r) GROUP BY u, v),
+      e$r AS (SELECT u, v, sup FROM s$r WHERE sup >= ${k - 2})"""
+      }.mkString(",\n      ")}
+      SELECT u, v, CAST(sup AS BIGINT) AS sup
+      FROM e2 ORDER BY u, v"""), bench = !s4) { (s, dir) =>
+      val li = t(s, dir, "lineitem").select("l_orderkey", "l_partkey")
+      val pairs = coOrderPairs(
+        s4Sample("l_partkey", s4).fold(li)(p => li.filter(p)), "l_partkey")
+      graft.operators.Graph.kTrussPeel(pairs, k = k, rounds = 2)
+        .orderBy("u", "v")
+    }
+
   val defs: Seq[QueryDef] = Seq(
 
     // ---------------- X5: text analysis ----------------
@@ -201,26 +1065,10 @@ object Extensions extends QueryModule {
         .orderBy("doc_id").limit(200)
     },
 
-    QueryDef("x5_langid", Some("""
-      WITH scored AS (
-        SELECT lang,
-          len(list_filter(string_split(text,' '), tk -> tk IN ('the','a','of','and','to','is'))) AS s_en,
-          len(list_filter(string_split(text,' '), tk -> tk IN ('el','la','de','y','que','es'))) AS s_es,
-          len(list_filter(string_split(text,' '), tk -> tk IN ('le','les','des','et','une','est'))) AS s_fr,
-          len(list_filter(string_split(text,' '), tk -> tk IN ('der','die','das','und','ist','ein'))) AS s_de
-        FROM documents),
-      pred AS (
-        SELECT lang,
-          CASE WHEN s_en > 0 AND s_en >= greatest(s_en,s_es,s_fr,s_de) THEN 'en'
-               WHEN s_es > 0 AND s_es >= greatest(s_en,s_es,s_fr,s_de) THEN 'es'
-               WHEN s_fr > 0 AND s_fr >= greatest(s_en,s_es,s_fr,s_de) THEN 'fr'
-               WHEN s_de > 0 AND s_de >= greatest(s_en,s_es,s_fr,s_de) THEN 'de'
-               ELSE 'und' END AS predicted
-        FROM scored)
+    QueryDef("x5_langid", Some(s"""$langIdPredCte
       SELECT lang, predicted, CAST(count(*) AS BIGINT) AS n
       FROM pred GROUP BY 1, 2 ORDER BY lang, predicted""")) { (s, dir) =>
-      spread(t(s, dir, "documents"))
-        .select(col("lang"), TextOps.langId(TextOps.tokens(col("text"))).as("predicted"))
+      langIdPred(s, dir)
         .groupBy("lang", "predicted").agg(count(lit(1)).as("n"))
         .orderBy("lang", "predicted")
     },
@@ -374,16 +1222,7 @@ object Extensions extends QueryModule {
     // Winnowing fingerprints (MOSS): sliding-window minima over 3-gram
     // md5 hashes at w=4 — any shared run of >= 6 words between two docs
     // shares a fingerprint. Lexicographic hex minima are engine-portable.
-    QueryDef("x5_winnow", Some("""
-      WITH sh AS (
-        SELECT doc_id, i - 1 AS pos,
-               md5(array_to_string(toks[i:i+2],' ')) AS h
-        FROM (SELECT doc_id, string_split(text,' ') AS toks FROM documents) dd,
-             LATERAL (SELECT unnest(range(1, greatest(len(dd.toks)-1,1))) AS i) ii),
-      w AS (SELECT doc_id,
-              min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-            FROM sh)
+    QueryDef("x5_winnow", Some(s"""$winnowCte
       SELECT DISTINCT doc_id, fp FROM w
       ORDER BY doc_id, fp LIMIT 500""")) { (s, dir) =>
       TextOps.winnowFingerprints(t(s, dir, "documents"), "doc_id", "text",
@@ -396,16 +1235,7 @@ object Extensions extends QueryModule {
     // wholly copied into a much longer doc has tiny Jaccard but
     // containment ~= 1. Integer cross-multiplied threshold (7/10),
     // boilerplate fingerprints (doc-freq > 20) dropped on both sides.
-    QueryDef("x2_containment", Some("""
-      WITH sh AS (
-        SELECT doc_id, i - 1 AS pos,
-               md5(array_to_string(toks[i:i+2],' ')) AS h
-        FROM (SELECT doc_id, string_split(text,' ') AS toks FROM documents) dd,
-             LATERAL (SELECT unnest(range(1, greatest(len(dd.toks)-1,1))) AS i) ii),
-      w AS (SELECT doc_id,
-              min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-            FROM sh),
+    QueryDef("x2_containment", Some(s"""$winnowCte,
       fps AS (SELECT DISTINCT doc_id, fp FROM w),
       rare AS (SELECT fp FROM fps GROUP BY fp HAVING count(*) <= 20),
       keep AS (SELECT f.doc_id, f.fp FROM fps f JOIN rare r USING (fp)),
@@ -449,14 +1279,7 @@ object Extensions extends QueryModule {
 
     // ---------------- X2: near-dup ----------------
 
-    QueryDef("x2_jaccard_pairs", Some(s"""
-      WITH $shCte
-      SELECT da, db,
-        CAST(ni AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - ni AS DOUBLE) AS jacc
-      FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-      WHERE CAST(ni AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - ni AS DOUBLE)
-            >= CAST(0.8 AS DOUBLE)
-      ORDER BY da, db"""), bench = true) { (s, dir) =>
+    QueryDef("x2_jaccard_pairs", Some(jaccardPairsOracle), bench = true) { (s, dir) =>
       Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
           n = 3, threshold = 0.8)
         .orderBy("da", "db")
@@ -465,14 +1288,7 @@ object Extensions extends QueryModule {
     // Same semantics through the PPJoin prefix-filtered candidate path —
     // the exact-optimization crossover for boilerplate-heavy corpora where
     // full posting-list self-joins explode. Identical oracle by design.
-    QueryDef("x2_jaccard_prefix", Some(s"""
-      WITH $shCte
-      SELECT da, db,
-        CAST(ni AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - ni AS DOUBLE) AS jacc
-      FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-      WHERE CAST(ni AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - ni AS DOUBLE)
-            >= CAST(0.8 AS DOUBLE)
-      ORDER BY da, db""")) { (s, dir) =>
+    QueryDef("x2_jaccard_prefix", Some(jaccardPairsOracle)) { (s, dir) =>
       Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
           n = 3, threshold = 0.8, prefixFilter = true)
         .orderBy("da", "db")
@@ -480,15 +1296,7 @@ object Extensions extends QueryModule {
 
     QueryDef("x2_minhash_lsh", Some(s"""
       WITH $shCte,
-      sig AS (SELECT doc_id,
-        """ + (0 until 16).map(j =>
-          s"min(md5('$j|'||shingle)) AS m$j").mkString(",\n        ") + """
-        FROM sh GROUP BY doc_id),
-      bandv AS (
-        """ + (0 until 4).map { b =>
-          val ms = (b * 4 until (b + 1) * 4).map(j => s"m$j").mkString("||'|'||")
-          s"SELECT doc_id, $b AS band, md5($ms) AS bh FROM sig"
-        }.mkString("\n        UNION ALL\n        ") + """),
+      $portableBandCte
       cand AS (
         SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
         FROM bandv x JOIN bandv y
@@ -519,15 +1327,7 @@ object Extensions extends QueryModule {
                    JOIN cnt cb ON cb.doc_id = db
         WHERE CAST(ni AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - ni AS DOUBLE)
               >= CAST(0.8 AS DOUBLE)),
-      sig AS (SELECT doc_id,
-        """ + (0 until 16).map(j =>
-          s"min(md5('$j|'||shingle)) AS m$j").mkString(",\n        ") + """
-        FROM sh GROUP BY doc_id),
-      bandv AS (
-        """ + (0 until 4).map { b =>
-          val ms = (b * 4 until (b + 1) * 4).map(j => s"m$j").mkString("||'|'||")
-          s"SELECT doc_id, $b AS band, md5($ms) AS bh FROM sig"
-        }.mkString("\n        UNION ALL\n        ") + """),
+      $portableBandCte
       cand AS (
         SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
         FROM bandv x JOIN bandv y
@@ -550,15 +1350,7 @@ object Extensions extends QueryModule {
     // and restricts candidates to cross-set collisions.
     QueryDef("x1_incr_neardup", Some(s"""
       WITH $shCte,
-      sig AS (SELECT doc_id,
-        """ + (0 until 16).map(j =>
-          s"min(md5('$j|'||shingle)) AS m$j").mkString(",\n        ") + """
-        FROM sh GROUP BY doc_id),
-      bandv AS (
-        """ + (0 until 4).map { b =>
-          val ms = (b * 4 until (b + 1) * 4).map(j => s"m$j").mkString("||'|'||")
-          s"SELECT doc_id, $b AS band, md5($ms) AS bh FROM sig"
-        }.mkString("\n        UNION ALL\n        ") + """),
+      $portableBandCte
       cand AS (
         SELECT DISTINCT x.doc_id AS na, y.doc_id AS ca
         FROM bandv x JOIN bandv y ON x.band = y.band AND x.bh = y.bh
@@ -629,18 +1421,7 @@ object Extensions extends QueryModule {
     // mirrors the min-label fixpoint with a recursive transitive-closure
     // CTE over the same exact-Jaccard pairs.
     QueryDef("x2_dedup_resolve", Some(s"""
-      WITH RECURSIVE $shCte,
-      pr AS (
-        SELECT da, db
-        FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-        WHERE CAST(ni AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - ni AS DOUBLE)
-              >= CAST(0.8 AS DOUBLE)),
-      eg AS (SELECT da AS src, db AS dst FROM pr
-             UNION ALL SELECT db, da FROM pr),
-      reach(id, r) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.src, rc.r FROM eg e JOIN reach rc ON e.dst = rc.id)
+      WITH RECURSIVE $shCte,$nearDupEdgesCte${reachCte("doc_id", "documents")}
       SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster
       FROM reach GROUP BY id ORDER BY doc_id"""), bench = true) { (s, dir) =>
       val docs = t(s, dir, "documents")
@@ -654,19 +1435,7 @@ object Extensions extends QueryModule {
     // per-language doc counts before/after resolution — the end-to-end
     // product a training pipeline consumes.
     QueryDef("x2_dedup_corpus", Some(s"""
-      WITH RECURSIVE $shCte,
-      pr AS (
-        SELECT da, db
-        FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-        WHERE CAST(ni AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - ni AS DOUBLE)
-              >= CAST(0.8 AS DOUBLE)),
-      eg AS (SELECT da AS src, db AS dst FROM pr
-             UNION ALL SELECT db, da FROM pr),
-      reach(id, r) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.src, rc.r FROM eg e JOIN reach rc ON e.dst = rc.id),
-      cl AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id)
+      WITH RECURSIVE $shCte,$nearDupEdgesCte${reachCte("doc_id", "documents")}$clCte
       SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
              CAST(count(*) FILTER (WHERE id = cluster) AS BIGINT) AS n_kept
       FROM documents JOIN cl ON doc_id = id
@@ -691,52 +1460,9 @@ object Extensions extends QueryModule {
     // near-duplicate (the eval-contamination bug doc-level splits
     // have). The gate pins the property itself: n_cross = near-dup
     // pairs straddling splits, provably 0 by construction.
-    QueryDef("x7_cluster_split", Some(s"""
-      WITH RECURSIVE $shCte,
-      pr AS (
-        SELECT da, db
-        FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-        WHERE CAST(ni AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - ni AS DOUBLE)
-              >= CAST(0.8 AS DOUBLE)),
-      eg AS (SELECT da AS src, db AS dst FROM pr
-             UNION ALL SELECT db, da FROM pr),
-      reach(id, r) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.src, rc.r FROM eg e JOIN reach rc ON e.dst = rc.id),
-      cl AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id),
-      s AS (SELECT id, cluster,
-              CASE WHEN substr(md5(CAST(cluster AS VARCHAR)), 1, 2) < 'cc'
-                   THEN 'train' ELSE 'test' END AS split
-            FROM cl),
-      st AS (SELECT split, count(*) AS n_docs,
-               count(DISTINCT cluster) AS n_clusters
-             FROM s GROUP BY 1),
-      x AS (SELECT count(*) AS n_cross
-            FROM pr JOIN s a ON a.id = pr.da JOIN s b ON b.id = pr.db
-            WHERE a.split <> b.split)
-      SELECT split, CAST(n_docs AS BIGINT) AS n_docs,
-             CAST(n_clusters AS BIGINT) AS n_clusters,
-             CAST(n_cross AS BIGINT) AS n_cross
-      FROM st, x ORDER BY split""")) { (s, dir) =>
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-        n = 3, threshold = 0.8)
-      val labels = Dedup.resolveClusters(docs, "doc_id", pairs)
-        .withColumnRenamed("id", "doc_id")
-      val lab = docs.select("doc_id").join(labels, "doc_id")
-        .withColumn("split", graft.operators.Sample.hashSplit(
-          "cluster", Seq(("cc", "train")), "test"))
-      val stats = lab.groupBy("split")
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct("cluster").as("n_clusters"))
-      val sp = lab.select(col("doc_id"), col("split"))
-      val cross = pairs
-        .join(sp.select(col("doc_id").as("da"), col("split").as("sa")), "da")
-        .join(sp.select(col("doc_id").as("db"), col("split").as("sb")), "db")
-        .filter(col("sa") =!= col("sb"))
-        .agg(count(lit(1)).as("n_cross"))
-      stats.crossJoin(broadcast(cross)).orderBy("split")
+    QueryDef("x7_cluster_split",
+      Some(clusterSplitOracle(shCte, "documents"))) { (s, dir) =>
+      clusterSplit(t(s, dir, "documents"))
     },
 
     // Oracle-replayable cluster-split companion (same jaccardPairs ∘
@@ -748,8 +1474,7 @@ object Extensions extends QueryModule {
     // kept×kept blocks; adjacent GenData pairs share a block except at
     // boundaries) while cutting the shingle-join pair space ~9x, within
     // DuckDB's sf1 replay envelope.
-    QueryDef("x7_cluster_split_s3", Some("""
-      WITH RECURSIVE docs AS (
+    QueryDef("x7_cluster_split_s3", Some(clusterSplitOracle("""docs AS (
         SELECT * FROM documents WHERE (doc_id // 64) % 3 = 0),
       sh AS (
         SELECT DISTINCT doc_id, array_to_string(toks[i:i+2],' ') AS shingle
@@ -759,52 +1484,10 @@ object Extensions extends QueryModule {
       inter AS (
         SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS ni
         FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
-      pr AS (
-        SELECT da, db
-        FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-        WHERE CAST(ni AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - ni AS DOUBLE)
-              >= CAST(0.8 AS DOUBLE)),
-      eg AS (SELECT da AS src, db AS dst FROM pr
-             UNION ALL SELECT db, da FROM pr),
-      reach(id, r) AS (
-        SELECT doc_id, doc_id FROM docs
-        UNION
-        SELECT e.src, rc.r FROM eg e JOIN reach rc ON e.dst = rc.id),
-      cl AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id),
-      s AS (SELECT id, cluster,
-              CASE WHEN substr(md5(CAST(cluster AS VARCHAR)), 1, 2) < 'cc'
-                   THEN 'train' ELSE 'test' END AS split
-            FROM cl),
-      st AS (SELECT split, count(*) AS n_docs,
-               count(DISTINCT cluster) AS n_clusters
-             FROM s GROUP BY 1),
-      x AS (SELECT count(*) AS n_cross
-            FROM pr JOIN s a ON a.id = pr.da JOIN s b ON b.id = pr.db
-            WHERE a.split <> b.split)
-      SELECT split, CAST(n_docs AS BIGINT) AS n_docs,
-             CAST(n_clusters AS BIGINT) AS n_clusters,
-             CAST(n_cross AS BIGINT) AS n_cross
-      FROM st, x ORDER BY split""")) { (s, dir) =>
-      val docs = t(s, dir, "documents")
-        .filter(expr("(doc_id div 64) % 3 = 0"))
-      val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-        n = 3, threshold = 0.8)
-      val labels = Dedup.resolveClusters(docs, "doc_id", pairs)
-        .withColumnRenamed("id", "doc_id")
-      val lab = docs.select("doc_id").join(labels, "doc_id")
-        .withColumn("split", graft.operators.Sample.hashSplit(
-          "cluster", Seq(("cc", "train")), "test"))
-      val stats = lab.groupBy("split")
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct("cluster").as("n_clusters"))
-      val sp = lab.select(col("doc_id"), col("split"))
-      val cross = pairs
-        .join(sp.select(col("doc_id").as("da"), col("split").as("sa")), "da")
-        .join(sp.select(col("doc_id").as("db"), col("split").as("sb")), "db")
-        .filter(col("sa") =!= col("sb"))
-        .agg(count(lit(1)).as("n_cross"))
-      stats.crossJoin(broadcast(cross)).orderBy("split")
+        GROUP BY 1, 2)""",
+        "docs"))) { (s, dir) =>
+      clusterSplit(t(s, dir, "documents")
+        .filter(expr("(doc_id div 64) % 3 = 0")))
     },
 
     // Cluster resolution keeping the BEST member (here: most tokens, min-id
@@ -812,19 +1495,7 @@ object Extensions extends QueryModule {
     // makes. Same recursive-CTE cluster map as x2_dedup_resolve, plus an
     // argmax window.
     QueryDef("x2_keep_best", Some(s"""
-      WITH RECURSIVE $shCte,
-      pr AS (
-        SELECT da, db
-        FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-        WHERE CAST(ni AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - ni AS DOUBLE)
-              >= CAST(0.8 AS DOUBLE)),
-      eg AS (SELECT da AS src, db AS dst FROM pr
-             UNION ALL SELECT db, da FROM pr),
-      reach(id, r) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.src, rc.r FROM eg e JOIN reach rc ON e.dst = rc.id),
-      cl AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id),
+      WITH RECURSIVE $shCte,$nearDupEdgesCte${reachCte("doc_id", "documents")}$clCte,
       scored AS (
         SELECT doc_id, cluster,
                CAST(len(string_split(text,' ')) AS BIGINT) AS n_tok
@@ -861,15 +1532,10 @@ object Extensions extends QueryModule {
         .orderBy("da", "db")
     },
 
-    QueryDef("x2_simhash", Some("""
+    QueryDef("x2_simhash", Some(s"""
       WITH tk AS (SELECT DISTINCT doc_id, unnest(string_split(text,' ')) AS tok
                   FROM documents),
-      bits AS (SELECT doc_id,
-        """ + (0 until 16).map(i =>
-          s"""CASE WHEN sum(CASE WHEN substr(md5(tok),${i + 1},1) IN
-             ('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END) > 0
-             THEN '1' ELSE '0' END AS b$i""").mkString(",\n        ") + """
-        FROM tk GROUP BY doc_id)
+      $simhashBitsCte
       SELECT """ + (0 until 16).map(i => s"b$i").mkString("||") + """ AS simhash,
              CAST(count(*) AS BIGINT) AS n_docs,
              CAST(min(doc_id) AS BIGINT) AS min_doc
@@ -885,15 +1551,10 @@ object Extensions extends QueryModule {
     // bands bound candidates (pigeonhole-complete for Hamming <= 3),
     // exact Hamming verify on collisions. The oracle, free of scale
     // concerns, verifies against the plain all-pairs Hamming join.
-    QueryDef("x2_simhash_pairs", Some("""
+    QueryDef("x2_simhash_pairs", Some(s"""
       WITH tk AS (SELECT DISTINCT doc_id, unnest(string_split(text,' ')) AS tok
                   FROM documents WHERE doc_id % 5 = 0),
-      bits AS (SELECT doc_id,
-        """ + (0 until 16).map(i =>
-          s"""CASE WHEN sum(CASE WHEN substr(md5(tok),${i + 1},1) IN
-             ('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END) > 0
-             THEN '1' ELSE '0' END AS b$i""").mkString(",\n        ") + """
-        FROM tk GROUP BY doc_id),
+      $simhashBitsCte,
       sig AS (SELECT doc_id, """ +
         (0 until 16).map(i => s"b$i").mkString("||") + """ AS sh FROM bits),
       pr AS (SELECT a.doc_id AS da, b.doc_id AS db, a.sh AS sa, b.sh AS sb
@@ -912,19 +1573,11 @@ object Extensions extends QueryModule {
 
     // ---------------- X3: similarity search ----------------
 
-    QueryDef("x3_knn", Some("""
-      WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-                 FROM embeddings WHERE vec_id < 10),
-      c AS (SELECT vec_id AS nid, CAST(embedding AS DOUBLE[]) AS cv
-            FROM embeddings WHERE vec_id >= 10),
+    QueryDef("x3_knn", Some(s"""$queryCorpusCte
       sc AS (SELECT qid, nid,
                list_dot_product(qv,cv)
                  / sqrt(list_dot_product(qv,qv) * list_dot_product(cv,cv)) AS sim
-             FROM q, c),
-      r AS (SELECT qid, nid, sim,
-              row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk
-            FROM sc)
-      SELECT qid, rnk, nid, sim FROM r WHERE rnk <= 5 ORDER BY qid, rnk"""),
+             FROM q, c),${topBySim(5)}"""),
       bench = true) { (s, dir) =>
       val e = t(s, dir, "embeddings")
       Similarity.knnBruteForce(
@@ -940,11 +1593,7 @@ object Extensions extends QueryModule {
     // Scale path is the Bachrach-2014 norm augmentation onto the LSH
     // index (rank equivalence pinned in SimilaritySpec); this gate is
     // the oracle-exact brute baseline.
-    QueryDef("x3_mips", Some("""
-      WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-                 FROM embeddings WHERE vec_id < 10),
-      c AS (SELECT vec_id AS nid, CAST(embedding AS DOUBLE[]) AS cv
-            FROM embeddings WHERE vec_id >= 10),
+    QueryDef("x3_mips", Some(s"""$queryCorpusCte
       sc AS (SELECT qid, nid, list_dot_product(qv, cv) AS score
              FROM q, c),
       r AS (SELECT qid, nid, score,
@@ -1014,14 +1663,7 @@ object Extensions extends QueryModule {
     // Bucketed ANN top-k: neighbors ranked within the query's LSH bucket —
     // the scale path when brute force is impossible. Recall < 1 by design;
     // the oracle mirrors the same buckets so results still hash-match.
-    QueryDef("x3_ann_knn", Some("""
-      WITH p AS (SELECT vec_id AS pid, CAST(embedding AS DOUBLE[]) AS pv
-                 FROM embeddings WHERE vec_id < 4),
-      v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-      b AS (SELECT v.vec_id, vv,
-              string_agg(CASE WHEN list_dot_product(vv, pv) >= CAST(0 AS DOUBLE)
-                              THEN '1' ELSE '0' END, '' ORDER BY pid) AS bucket
-            FROM v, p GROUP BY v.vec_id, vv),
+    QueryDef("x3_ann_knn", Some(s"""$lshBucketCte,
       q AS (SELECT vec_id AS qid, vv AS qv, bucket FROM b WHERE vec_id < 10),
       c AS (SELECT vec_id AS nid, vv AS cv, bucket FROM b WHERE vec_id >= 10),
       s AS (SELECT qid, nid, q.bucket,
@@ -1046,7 +1688,7 @@ object Extensions extends QueryModule {
     // collision in EITHER (union → distinct), which recovers most of the
     // recall a single table loses. Oracle mirrors both bucket assignments
     // and the union.
-    QueryDef("x3_ann_multi", Some("""
+    QueryDef("x3_ann_multi", Some(s"""
       WITH p1 AS (SELECT vec_id AS pid, CAST(embedding AS DOUBLE[]) AS pv
                   FROM embeddings WHERE vec_id < 4),
       p2 AS (SELECT vec_id AS pid, CAST(embedding AS DOUBLE[]) AS pv
@@ -1071,11 +1713,7 @@ object Extensions extends QueryModule {
       sc AS (SELECT qid, nid,
                list_dot_product(qv, cv)
                  / sqrt(list_dot_product(qv, qv) * list_dot_product(cv, cv)) AS sim
-             FROM cand),
-      r AS (SELECT qid, nid, sim,
-              row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk
-            FROM sc)
-      SELECT qid, rnk, nid, sim FROM r WHERE rnk <= 3 ORDER BY qid, rnk""")) {
+             FROM cand),${topBySim(3)}""")) {
       (s, dir) =>
       val e = t(s, dir, "embeddings")
       Similarity.knnLshMulti(
@@ -1091,28 +1729,7 @@ object Extensions extends QueryModule {
     // IVF-flat ANN: 8-centroid coarse quantizer, nprobe=2. The oracle
     // mirrors the argmax cell assignment (sim DESC, cid ASC tie rule) and
     // the per-query top-2 probe cells.
-    QueryDef("x3_ivf", Some("""
-      WITH ctr AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
-                   FROM embeddings WHERE vec_id < 8),
-      v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-      asn AS (SELECT v.vec_id, vv, cid,
-                row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                  list_dot_product(vv, cv)
-                    / sqrt(list_dot_product(vv, vv) * list_dot_product(cv, cv))
-                    DESC, cid) AS rk
-              FROM v, ctr),
-      cell AS (SELECT vec_id, vv, cid AS cell FROM asn WHERE rk = 1),
-      q AS (SELECT vec_id AS qid, vv AS qv, cid AS cell FROM asn
-            WHERE vec_id < 10 AND rk <= 2),
-      c AS (SELECT vec_id AS nid, vv AS cv2, cell FROM cell WHERE vec_id >= 10),
-      sc AS (SELECT qid, nid,
-               list_dot_product(qv, cv2)
-                 / sqrt(list_dot_product(qv, qv) * list_dot_product(cv2, cv2)) AS sim
-             FROM q JOIN c USING (cell)),
-      r AS (SELECT qid, nid, sim,
-              row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk
-            FROM sc)
-      SELECT qid, rnk, nid, sim FROM r WHERE rnk <= 3 ORDER BY qid, rnk""")) {
+    QueryDef("x3_ivf", Some(s"""$ivfProbeCte,$ivfScoreCte${topBySim(3)}""")) {
       (s, dir) =>
       val e = t(s, dir, "embeddings")
       Similarity.knnIvf(
@@ -1185,7 +1802,7 @@ object Extensions extends QueryModule {
     // seed with the 6 lowest-id vectors, assign by argmax cosine, average
     // each dimension on the fixed-point 1e-10 grid, re-assign, probe top-2
     // cells).
-    QueryDef("x3_ivf_trained", Some("""
+    QueryDef("x3_ivf_trained", Some(s"""
       WITH sd AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
                          CAST(embedding AS DOUBLE[]) AS sv
                   FROM embeddings ORDER BY vec_id LIMIT 6),
@@ -1215,15 +1832,7 @@ object Extensions extends QueryModule {
       cell1 AS (SELECT vec_id, vv, cid AS cell FROM a1 WHERE rk = 1),
       q AS (SELECT vec_id AS qid, vv AS qv, cid AS cell FROM a1
             WHERE vec_id < 10 AND rk <= 2),
-      c AS (SELECT vec_id AS nid, vv AS cv2, cell FROM cell1 WHERE vec_id >= 10),
-      sc AS (SELECT qid, nid,
-               list_dot_product(qv, cv2)
-                 / sqrt(list_dot_product(qv, qv) * list_dot_product(cv2, cv2)) AS sim
-             FROM q JOIN c USING (cell)),
-      r AS (SELECT qid, nid, sim,
-              row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk
-            FROM sc)
-      SELECT qid, rnk, nid, sim FROM r WHERE rnk <= 3 ORDER BY qid, rnk""")) {
+      c AS (SELECT vec_id AS nid, vv AS cv2, cell FROM cell1 WHERE vec_id >= 10),$ivfScoreCte${topBySim(3)}""")) {
       (s, dir) =>
       val e = t(s, dir, "embeddings")
       val trained = Similarity.kmeansCentroids(e, "vec_id", "embedding",
@@ -1282,7 +1891,7 @@ object Extensions extends QueryModule {
     // replays the same grid (as an exploded 9-offset equi-join), the same
     // dot-fold distance identity and the same canonical labels through a
     // recursive CTE.
-    QueryDef("x3_dbscan", Some("""
+    QueryDef("x3_dbscan", Some(s"""
       WITH RECURSIVE g AS (
         SELECT event_id AS id,
                CAST(user_id AS DOUBLE) AS x, value/100.0 AS y,
@@ -1304,12 +1913,7 @@ object Extensions extends QueryModule {
                 HAVING count(*) + 1 >= 4),
       ce AS (SELECT ia AS src, ib AS dst FROM nb
              WHERE ia IN (SELECT id FROM cores)
-               AND ib IN (SELECT id FROM cores)),
-      reach(id, r) AS (
-        SELECT id, id FROM cores
-        UNION
-        SELECT e.src, rc.r FROM ce e JOIN reach rc ON e.dst = rc.id),
-      cl AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id),
+               AND ib IN (SELECT id FROM cores)),${reachCte("id", "cores", "ce")}$clCte,
       border AS (
         SELECT nb.ia AS id, min(cl.cluster) AS cluster
         FROM nb JOIN cl ON nb.ib = cl.id
@@ -1331,44 +1935,13 @@ object Extensions extends QueryModule {
     // the compressed code scan. The oracle replays codebook build, corpus
     // encoding, the per-(query, code) LUT, and the 2-term distance sum
     // (FP addition is commutative, so the 2-addend grouped sum is exact).
-    QueryDef("x3_pq", Some("""
+    QueryDef("x3_pq", Some(s"""
       WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
       sd AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, vv AS sv
              FROM (SELECT vec_id, vv FROM v ORDER BY vec_id LIMIT 4)),
       cb AS (SELECT cid, 0 AS j, sv[1:32] AS cv FROM sd
-             UNION ALL SELECT cid, 1, sv[33:64] FROM sd),
-      c AS (SELECT vec_id AS nid, vv FROM v WHERE vec_id >= 10),
-      cd AS (SELECT nid, j, cid,
-               row_number() OVER (PARTITION BY nid, j ORDER BY
-                 list_dot_product(sv2, sv2) - 2.0*list_dot_product(sv2, cv)
-                   + list_dot_product(cv, cv) ASC, cid) AS rk
-             FROM (SELECT nid, CASE j WHEN 0 THEN vv[1:32] ELSE vv[33:64] END AS sv2,
-                          j, cid, cv
-                   FROM c, cb)),
-      codes AS (SELECT nid, j, cid FROM cd WHERE rk = 1),
-      q AS (SELECT vec_id AS qid, vv AS qv FROM v WHERE vec_id < 10),
-      lut AS (SELECT qid, j, cid,
-                list_dot_product(qs, qs) - 2.0*list_dot_product(qs, cv)
-                  + list_dot_product(cv, cv) AS d2
-              FROM (SELECT qid, CASE j WHEN 0 THEN qv[1:32] ELSE qv[33:64] END AS qs,
-                           j, cid, cv
-                    FROM q, cb)),
-      est AS (SELECT l.qid, s.nid, sum(l.d2) AS est_d2
-              FROM codes s JOIN lut l ON l.j = s.j AND l.cid = s.cid
-              GROUP BY l.qid, s.nid),
-      r AS (SELECT qid, nid, est_d2,
-              row_number() OVER (PARTITION BY qid ORDER BY est_d2 ASC, nid) AS rnk
-            FROM est)
-      SELECT qid, rnk, nid, est_d2 FROM r WHERE rnk <= 3 ORDER BY qid, rnk""")) {
-      (s, dir) =>
-      val e = t(s, dir, "embeddings")
-      val cbs = Similarity.pqTrain(e, "vec_id", "embedding",
-        m = 2, k = 4, iters = 0)
-      Similarity.knnPq(
-          e.filter(col("vec_id") >= 10), e.filter(col("vec_id") < 10),
-          "vec_id", "embedding", cbs, k = 3)
-        .withColumnRenamed("rank", "rnk")
-        .orderBy("qid", "rnk")
+             UNION ALL SELECT cid, 1, sv[33:64] FROM sd),$pqAdcTail""")) {
+      (s, dir) => pqKnn(s, dir, iters = 0)
     },
 
     // PQ with TRAINED codebooks: one decimal-exact Lloyd iteration per
@@ -1399,92 +1972,28 @@ object Extensions extends QueryModule {
       cl$j AS (SELECT cid, list(m ORDER BY dim) AS cv FROM upd$j GROUP BY cid),
       c$j AS (SELECT sd$j.cid, COALESCE(cl$j.cv, sd$j.sv) AS cv
               FROM sd$j LEFT JOIN cl$j USING (cid)),"""
-      }.mkString + """
-      cb AS (SELECT cid, 0 AS j, cv FROM c0 UNION ALL SELECT cid, 1, cv FROM c1),
-      c AS (SELECT vec_id AS nid, vv FROM v WHERE vec_id >= 10),
-      cd AS (SELECT nid, j, cid,
-               row_number() OVER (PARTITION BY nid, j ORDER BY
-                 list_dot_product(sv2, sv2) - 2.0*list_dot_product(sv2, cv)
-                   + list_dot_product(cv, cv) ASC, cid) AS rk
-             FROM (SELECT nid, CASE j WHEN 0 THEN vv[1:32] ELSE vv[33:64] END AS sv2,
-                          j, cid, cv
-                   FROM c, cb)),
-      codes AS (SELECT nid, j, cid FROM cd WHERE rk = 1),
-      q AS (SELECT vec_id AS qid, vv AS qv FROM v WHERE vec_id < 10),
-      lut AS (SELECT qid, j, cid,
-                list_dot_product(qs, qs) - 2.0*list_dot_product(qs, cv)
-                  + list_dot_product(cv, cv) AS d2
-              FROM (SELECT qid, CASE j WHEN 0 THEN qv[1:32] ELSE qv[33:64] END AS qs,
-                           j, cid, cv
-                    FROM q, cb)),
-      est AS (SELECT l.qid, s.nid, sum(l.d2) AS est_d2
-              FROM codes s JOIN lut l ON l.j = s.j AND l.cid = s.cid
-              GROUP BY l.qid, s.nid),
-      r AS (SELECT qid, nid, est_d2,
-              row_number() OVER (PARTITION BY qid ORDER BY est_d2 ASC, nid) AS rnk
-            FROM est)
-      SELECT qid, rnk, nid, est_d2 FROM r WHERE rnk <= 3 ORDER BY qid, rnk""")) {
-      (s, dir) =>
-      val e = t(s, dir, "embeddings")
-      val cbs = Similarity.pqTrain(e, "vec_id", "embedding",
-        m = 2, k = 4, iters = 1)
-      Similarity.knnPq(
-          e.filter(col("vec_id") >= 10), e.filter(col("vec_id") < 10),
-          "vec_id", "embedding", cbs, k = 3)
-        .withColumnRenamed("rank", "rnk")
-        .orderBy("qid", "rnk")
+      }.mkString + s"""
+      cb AS (SELECT cid, 0 AS j, cv FROM c0 UNION ALL SELECT cid, 1, cv FROM c1),$pqAdcTail""")) {
+      (s, dir) => pqKnn(s, dir, iters = 1)
     },
 
     // As-of join: each click event picks up the user's most recent
     // purchase at-or-before its timestamp. DuckDB's native ASOF JOIN is
     // the oracle; the Spark side is the union + keyed-window formulation
     // (one shuffle, no range explosion).
-    QueryDef("a1_asof", Some("""
-      SELECT e.user_id, e.event_id, epoch_ms(e.ts) AS ms,
-             epoch_ms(p.ts) AS last_purchase_ms,
-             p.value AS last_purchase_value
-      FROM (SELECT * FROM events WHERE event_type = 'click') e
-      ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-        ON e.user_id = p.user_id AND e.ts >= p.ts
-      ORDER BY e.user_id, e.event_id"""), bench = true) { (s, dir) =>
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("user_id", "event_id", "ts")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"),
-          unix_millis(col("ts")).as("last_purchase_ms"),
-          col("value").as("last_purchase_value"))
-      AsOf.joinAsOf(clicks, purchases, Seq("user_id"), "ts", "ts",
-          Seq("last_purchase_ms", "last_purchase_value"))
-        .select(col("user_id"), col("event_id"),
-          unix_millis(col("ts")).as("ms"),
-          col("last_purchase_ms"), col("last_purchase_value"))
-        .orderBy("user_id", "event_id")
+    QueryDef("a1_asof", Some(asOfOracle(">=", "last")), bench = true) { (s, dir) =>
+      val (clicks, purchases) = clicksAndPurchases(s, dir, "last")
+      asOfReport(AsOf.joinAsOf(clicks, purchases, Seq("user_id"), "ts", "ts",
+          Seq("last_purchase_ms", "last_purchase_value")), "last")
     },
 
     // Forward as-of: each click picks up the user's NEXT purchase at-or-
     // after its timestamp — same one-shuffle window plan, descending scan.
-    QueryDef("a2_asof_fwd", Some("""
-      SELECT e.user_id, e.event_id, epoch_ms(e.ts) AS ms,
-             epoch_ms(p.ts) AS next_purchase_ms,
-             p.value AS next_purchase_value
-      FROM (SELECT * FROM events WHERE event_type = 'click') e
-      ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-        ON e.user_id = p.user_id AND e.ts <= p.ts
-      ORDER BY e.user_id, e.event_id""")) { (s, dir) =>
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("user_id", "event_id", "ts")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"),
-          unix_millis(col("ts")).as("next_purchase_ms"),
-          col("value").as("next_purchase_value"))
-      AsOf.joinAsOf(clicks, purchases, Seq("user_id"), "ts", "ts",
-          Seq("next_purchase_ms", "next_purchase_value"), forward = true)
-        .select(col("user_id"), col("event_id"),
-          unix_millis(col("ts")).as("ms"),
-          col("next_purchase_ms"), col("next_purchase_value"))
-        .orderBy("user_id", "event_id")
+    QueryDef("a2_asof_fwd", Some(asOfOracle("<=", "next"))) { (s, dir) =>
+      val (clicks, purchases) = clicksAndPurchases(s, dir, "next")
+      asOfReport(AsOf.joinAsOf(clicks, purchases, Seq("user_id"), "ts", "ts",
+          Seq("next_purchase_ms", "next_purchase_value"), forward = true),
+        "next")
     },
 
     // As-of with a STALENESS BOUND (AsOf.joinAsOfTolerance): the nearest
@@ -1506,20 +2015,10 @@ object Extensions extends QueryModule {
         ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
           ON e.user_id = p.user_id AND e.ts >= p.ts)
       ORDER BY user_id, event_id""")) { (s, dir) =>
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("user_id", "event_id", "ts")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"),
-          unix_millis(col("ts")).as("last_purchase_ms"),
-          col("value").as("last_purchase_value"))
-      AsOf.joinAsOfTolerance(clicks, purchases, Seq("user_id"), "ts", "ts",
-          Seq("last_purchase_ms", "last_purchase_value"),
-          toleranceMs = 48L * 3600 * 1000)
-        .select(col("user_id"), col("event_id"),
-          unix_millis(col("ts")).as("ms"),
-          col("last_purchase_ms"), col("last_purchase_value"))
-        .orderBy("user_id", "event_id")
+      val (clicks, purchases) = clicksAndPurchases(s, dir, "last")
+      asOfReport(AsOf.joinAsOfTolerance(clicks, purchases, Seq("user_id"),
+          "ts", "ts", Seq("last_purchase_ms", "last_purchase_value"),
+          toleranceMs = 48L * 3600 * 1000), "last")
     },
 
     // Nearest as-of (AsOf.joinAsOfNearest): each click attaches the
@@ -1642,14 +2141,7 @@ object Extensions extends QueryModule {
     // Embedding-cosine near-dup: LSH bucket blocking + exact cosine verify,
     // mirrored exactly in the oracle (same data-derived planes, same
     // sequential-fold cosine).
-    QueryDef("x2_cosine_dup", Some("""
-      WITH p AS (SELECT vec_id AS pid, CAST(embedding AS DOUBLE[]) AS pv
-                 FROM embeddings WHERE vec_id < 4),
-      v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-      b AS (SELECT v.vec_id, vv,
-              string_agg(CASE WHEN list_dot_product(vv, pv) >= CAST(0 AS DOUBLE)
-                              THEN '1' ELSE '0' END, '' ORDER BY pid) AS bucket
-            FROM v, p GROUP BY v.vec_id, vv)
+    QueryDef("x2_cosine_dup", Some(s"""$lshBucketCte
       SELECT x.vec_id AS da, y.vec_id AS db,
         list_dot_product(x.vv, y.vv)
           / sqrt(list_dot_product(x.vv, x.vv) * list_dot_product(y.vv, y.vv)) AS cos
@@ -1741,25 +2233,9 @@ object Extensions extends QueryModule {
     // is EQUIVALENT to sharing a run >= 8, so the anchor join has perfect
     // recall with no sketch — the form that catches partially-copied
     // documents whose shared region straddles segment/CDC boundaries.
-    QueryDef("x2_substring_dedup", Some("""
-      WITH sh AS (
-        SELECT doc_id, i - 1 AS pos, array_to_string(toks[i:i+7],' ') AS g
-        FROM (SELECT doc_id, string_split(text,' ') AS toks FROM documents) dd,
-             LATERAL (SELECT unnest(range(1, greatest(len(dd.toks)-6,1))) AS i) ii),
+    QueryDef("x2_substring_dedup", Some(s"""$gram8Cte,
       m AS (SELECT a.doc_id AS da, b.doc_id AS db, a.pos AS pa, b.pos AS pb
-            FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id),
-      r AS (SELECT da, db, pa, pb, pa - pb AS diag,
-              row_number() OVER (PARTITION BY da, db, pa - pb
-                                 ORDER BY pa) AS rn
-            FROM m),
-      isl AS (SELECT da, db, count(*) AS cnt,
-                     min(pa) AS pa0, min(pb) AS pb0
-              FROM r GROUP BY da, db, diag, pa - rn)
-      SELECT da, db, CAST(max(cnt) + 7 AS BIGINT) AS longest_run,
-             CAST(sum(cnt) AS BIGINT) AS n_anchor_matches,
-             CAST(min(pa0) AS BIGINT) AS min_pa,
-             CAST(min(pb0) AS BIGINT) AS min_pb
-      FROM isl GROUP BY da, db ORDER BY da, db""")) { (s, dir) =>
+            FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id),$diagRankCte$islandReport""")) { (s, dir) =>
       Dedup.substringDedup(t(s, dir, "documents"), "doc_id", "text",
           minRun = 8)
         .orderBy("da", "db")
@@ -1772,28 +2248,12 @@ object Extensions extends QueryModule {
     // adjacent near-dup pairs (their shared runs are df-2 by
     // construction) while cutting the cross-corpus template grams —
     // the oracle replays the df cut relationally.
-    QueryDef("x2_substring_dedup_df", Some("""
-      WITH sh AS (
-        SELECT doc_id, i - 1 AS pos, array_to_string(toks[i:i+7],' ') AS g
-        FROM (SELECT doc_id, string_split(text,' ') AS toks FROM documents) dd,
-             LATERAL (SELECT unnest(range(1, greatest(len(dd.toks)-6,1))) AS i) ii),
+    QueryDef("x2_substring_dedup_df", Some(s"""$gram8Cte,
       keep AS (SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS df
                               FROM sh GROUP BY g) WHERE df <= 2),
       shk AS (SELECT sh.doc_id, sh.pos, sh.g FROM sh JOIN keep USING (g)),
       m AS (SELECT a.doc_id AS da, b.doc_id AS db, a.pos AS pa, b.pos AS pb
-            FROM shk a JOIN shk b ON a.g = b.g AND a.doc_id < b.doc_id),
-      r AS (SELECT da, db, pa, pb, pa - pb AS diag,
-              row_number() OVER (PARTITION BY da, db, pa - pb
-                                 ORDER BY pa) AS rn
-            FROM m),
-      isl AS (SELECT da, db, count(*) AS cnt,
-                     min(pa) AS pa0, min(pb) AS pb0
-              FROM r GROUP BY da, db, diag, pa - rn)
-      SELECT da, db, CAST(max(cnt) + 7 AS BIGINT) AS longest_run,
-             CAST(sum(cnt) AS BIGINT) AS n_anchor_matches,
-             CAST(min(pa0) AS BIGINT) AS min_pa,
-             CAST(min(pb0) AS BIGINT) AS min_pb
-      FROM isl GROUP BY da, db ORDER BY da, db""")) { (s, dir) =>
+            FROM shk a JOIN shk b ON a.g = b.g AND a.doc_id < b.doc_id),$diagRankCte$islandReport""")) { (s, dir) =>
       Dedup.substringDedup(t(s, dir, "documents"), "doc_id", "text",
           minRun = 8, maxDf = Some(2L))
         .orderBy("da", "db")
@@ -1807,17 +2267,9 @@ object Extensions extends QueryModule {
     // x2_substring_dedup, explodes each island's db-side interval to a
     // distinct (doc, pos) drop set, and rebuilds surviving text — the
     // same keyed-equi-work shape as the Spark plan (no BETWEEN joins).
-    QueryDef("x2_substring_rm", Some("""
-      WITH sh AS (
-        SELECT doc_id, i - 1 AS pos, array_to_string(toks[i:i+7],' ') AS g
-        FROM (SELECT doc_id, string_split(text,' ') AS toks FROM documents) dd,
-             LATERAL (SELECT unnest(range(1, greatest(len(dd.toks)-6,1))) AS i) ii),
+    QueryDef("x2_substring_rm", Some(s"""$gram8Cte,
       m AS (SELECT a.doc_id AS da, b.doc_id AS db, a.pos AS pa, b.pos AS pb
-            FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id),
-      r AS (SELECT da, db, pa, pb, pa - pb AS diag,
-              row_number() OVER (PARTITION BY da, db, pa - pb
-                                 ORDER BY pa) AS rn
-            FROM m),
+            FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id),$diagRankCte,
       isl AS (SELECT da, db, count(*) AS cnt, min(pb) AS pb0
               FROM r GROUP BY da, db, diag, pa - rn),
       drp AS (SELECT DISTINCT db AS doc_id, pb0 + u.i AS pos
@@ -1841,7 +2293,7 @@ object Extensions extends QueryModule {
     // Corpus-wide segment-level exact dedup (the line/paragraph-dedup step
     // of web curation, on fixed 8-word segments): keep only the first
     // occurrence of every distinct segment, rebuild docs from survivors.
-    QueryDef("x6_segment_dedup", Some("""
+    QueryDef("x6_segment_dedup", Some(s"""
       WITH toks AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
       segs AS (
         SELECT doc_id, i AS pos, array_to_string(ws[(i*8+1):(i*8+8)],' ') AS seg
@@ -1849,17 +2301,7 @@ object Extensions extends QueryModule {
       kept AS (SELECT doc_id, pos, seg FROM (
           SELECT doc_id, pos, seg,
                  row_number() OVER (PARTITION BY seg ORDER BY doc_id, pos) AS rn
-          FROM segs) WHERE rn = 1),
-      tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_seg
-              FROM segs GROUP BY doc_id),
-      reb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-                     string_agg(seg, ' ' ORDER BY pos) AS text_kept
-              FROM kept GROUP BY doc_id)
-      SELECT t.doc_id, n_seg,
-             coalesce(n_kept, CAST(0 AS BIGINT)) AS n_kept,
-             coalesce(text_kept, '') AS text_kept
-      FROM tot t LEFT JOIN reb ON t.doc_id = reb.doc_id
-      ORDER BY t.doc_id"""), bench = true) { (s, dir) =>
+          FROM segs) WHERE rn = 1),$segmentRebuild"""), bench = true) { (s, dir) =>
       Dedup.segmentDedup(t(s, dir, "documents"), "doc_id", "text", 8)
         .orderBy("doc_id")
     },
@@ -1869,7 +2311,7 @@ object Extensions extends QueryModule {
     // frequency defines boilerplate (vs segment dedup's keep-first, which
     // leaves one copy). Doc frequency on the (source, seg, doc)-distinct
     // table; seg-keyed join back; one groupBy(doc) reassembly.
-    QueryDef("x6_boilerplate", Some("""
+    QueryDef("x6_boilerplate", Some(s"""
       WITH toks AS (SELECT doc_id, source, string_split(text,' ') AS ws
                     FROM documents),
       segs AS (
@@ -1880,17 +2322,7 @@ object Extensions extends QueryModule {
       dfq AS (SELECT source, seg, count(DISTINCT doc_id) AS df
               FROM segs GROUP BY 1, 2),
       kept AS (SELECT doc_id, pos, seg
-               FROM segs JOIN dfq USING (source, seg) WHERE df < 2),
-      tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_seg
-              FROM segs GROUP BY doc_id),
-      reb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-                     string_agg(seg, ' ' ORDER BY pos) AS text_kept
-              FROM kept GROUP BY doc_id)
-      SELECT t.doc_id, n_seg,
-             coalesce(n_kept, CAST(0 AS BIGINT)) AS n_kept,
-             coalesce(text_kept, '') AS text_kept
-      FROM tot t LEFT JOIN reb ON t.doc_id = reb.doc_id
-      ORDER BY t.doc_id""")) { (s, dir) =>
+               FROM segs JOIN dfq USING (source, seg) WHERE df < 2),$segmentRebuild""")) { (s, dir) =>
       TextOps.stripBoilerplate(t(s, dir, "documents"), "doc_id", "text",
           segWords = 8, minDf = 2, scopeCols = Seq("source"))
         .orderBy("doc_id")
@@ -2053,7 +2485,7 @@ object Extensions extends QueryModule {
     // corpus, reported as per-language yields at each stage. Every stage is
     // an operator gated individually elsewhere; this gate proves they
     // compose.
-    QueryDef("x6_curation", Some("""
+    QueryDef("x6_curation", Some(s"""
       WITH RECURSIVE
       q AS (SELECT doc_id, lang, text FROM documents
             WHERE len(string_split(text, ' ')) >= 25
@@ -2065,21 +2497,7 @@ object Extensions extends QueryModule {
       exd AS (SELECT q.* FROM q JOIN ex USING (doc_id)),
       sh AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS shingle
              FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM exd) dd,
-                  LATERAL (SELECT unnest(range(1, greatest(len(dd.toks)-1, 1))) AS i) ii),
-      cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-      inter AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS ni
-                FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                GROUP BY 1, 2),
-      pr AS (SELECT da, db
-             FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-             WHERE CAST(ni AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - ni AS DOUBLE)
-                   >= CAST(0.8 AS DOUBLE)),
-      eg AS (SELECT da AS src, db AS dst FROM pr UNION ALL SELECT db, da FROM pr),
-      reach(id, r) AS (
-        SELECT doc_id, doc_id FROM exd
-        UNION
-        SELECT e.src, rc.r FROM eg e JOIN reach rc ON e.dst = rc.id),
-      cl AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id)
+                  LATERAL (SELECT unnest(range(1, greatest(len(dd.toks)-1, 1))) AS i) ii),$curationNearDupCte${reachCte("doc_id", "exd")}$clCte
       SELECT d.lang,
         CAST(count(*) AS BIGINT) AS n_raw,
         CAST(sum(CASE WHEN qq.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
@@ -2168,29 +2586,11 @@ object Extensions extends QueryModule {
     // plane) against the generator's closed form replayed per pixel in
     // SQL. PNG is lossless, so a correct decode reproduces the formula
     // bit-for-bit — pixel statistics, not digest stand-ins.
-    QueryDef("x4_decode_px", Some("""
-      WITH d AS (SELECT doc_id, 8 + doc_id % 9 AS w, 8 + (3*doc_id) % 9 AS h
-                 FROM documents WHERE doc_id < 100),
-      px AS (SELECT doc_id, w, h, (7*x.x + 13*y.y + doc_id) % 256 AS g
-             FROM d,
-               LATERAL (SELECT unnest(range(0, w)) AS x) x,
-               LATERAL (SELECT unnest(range(0, h)) AS y) y)
-      SELECT doc_id AS id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-             CAST(sum(g) AS BIGINT) AS sum_r,
-             CAST(min(g) AS BIGINT) AS min_r,
-             CAST(max(g) AS BIGINT) AS max_r
-      FROM px GROUP BY doc_id, w, h ORDER BY id""")) { (s, dir) =>
-      val ids = t(s, dir, "documents").select("doc_id")
-        .filter(col("doc_id") < 100)
+    QueryDef("x4_decode_px", Some(s"""$pngStatsOracle""")) { (s, dir) =>
+      val ids = mediaIds(s, dir)
       val media = Multimodal.syntheticPngs(ids, "doc_id")
       val feats = Multimodal.extractFeatures(media, Multimodal.ImageIoDecoder)
-      feats.toDF().select(col("id"),
-          element_at(col("codes"), 1).as("w"),
-          element_at(col("codes"), 2).as("h"),
-          element_at(col("codes"), 3).as("sum_r"),
-          element_at(col("codes"), 4).as("min_r"),
-          element_at(col("codes"), 5).as("max_r"))
-        .orderBy("id")
+      pngStats(feats)
     },
 
     // Full-color decode: three INDEPENDENT per-channel closed forms
@@ -2216,8 +2616,7 @@ object Extensions extends QueryModule {
              CAST(sum(b) AS BIGINT) AS sum_b, CAST(min(b) AS BIGINT) AS min_b,
              CAST(max(b) AS BIGINT) AS max_b
       FROM px GROUP BY doc_id, w, h ORDER BY id""")) { (s, dir) =>
-      val ids = t(s, dir, "documents").select("doc_id")
-        .filter(col("doc_id") < 100)
+      val ids = mediaIds(s, dir)
       val media = Multimodal.syntheticRgbPngs(ids, "doc_id")
       val feats = Multimodal.extractFeatures(media, Multimodal.ImageIoDecoder)
       val field = Seq("w", "h", "sum_r", "min_r", "max_r",
@@ -2238,41 +2637,12 @@ object Extensions extends QueryModule {
     // in X4: schema, path parsing, and binary-scan pruning are now the
     // production path (MultimodalSpec asserts the content column prunes
     // from metadata-only reads).
-    QueryDef("x4_binary_files", Some("""
-      WITH d AS (SELECT doc_id, 8 + doc_id % 9 AS w, 8 + (3*doc_id) % 9 AS h
-                 FROM documents WHERE doc_id < 100),
-      px AS (SELECT doc_id, w, h, (7*x.x + 13*y.y + doc_id) % 256 AS g
-             FROM d,
-               LATERAL (SELECT unnest(range(0, w)) AS x) x,
-               LATERAL (SELECT unnest(range(0, h)) AS y) y)
-      SELECT doc_id AS id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-             CAST(sum(g) AS BIGINT) AS sum_r,
-             CAST(min(g) AS BIGINT) AS min_r,
-             CAST(max(g) AS BIGINT) AS max_r
-      FROM px GROUP BY doc_id, w, h ORDER BY id""")) { (s, dir) =>
-      import s.implicits._
-      val ids = t(s, dir, "documents").select("doc_id")
-        .filter(col("doc_id") < 100)
-      val landing = graft.Scratch.fresh("x4bin")
-      Multimodal.writeMediaFiles(
-        Multimodal.syntheticPngs(ids, "doc_id"), landing, "png")
-      val rows = s.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png").load(landing)
-        .select(
-          regexp_extract(col("path"), "doc-(\\d+)\\.png$", 1)
-            .cast("long").as("id"),
-          col("content"),
-          struct(lit("png").as("format"), lit(0).as("width"),
-            lit(0).as("height")).as("meta"))
-        .as[Multimodal.MediaRow]
+    QueryDef("x4_binary_files", Some(s"""$pngStatsOracle""")) { (s, dir) =>
+      val ids = mediaIds(s, dir)
+      val rows = landedMedia(s,
+        Multimodal.syntheticPngs(ids, "doc_id"), "x4bin", "png")
       val feats = Multimodal.extractFeatures(rows, Multimodal.ImageIoDecoder)
-      feats.toDF().select(col("id"),
-          element_at(col("codes"), 1).as("w"),
-          element_at(col("codes"), 2).as("h"),
-          element_at(col("codes"), 3).as("sum_r"),
-          element_at(col("codes"), 4).as("min_r"),
-          element_at(col("codes"), 5).as("max_r"))
-        .orderBy("id")
+      pngStats(feats)
     },
 
     // Poison-row quarantine at the decode seam: by id mod 4 the payload
@@ -2283,33 +2653,18 @@ object Extensions extends QueryModule {
     // NonFatal catch exists for (ADVICE r9). JPEG pixels are
     // codec-dependent and never gated; decoded-vs-quarantined COUNTS are
     // portable, so the oracle derives them from the id partition alone.
-    QueryDef("x4_quarantine", Some("""
+    QueryDef("x4_quarantine", Some(s"""
       SELECT CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'png_trunc'
-                             WHEN 2 THEN 'jpg' ELSE 'jpg_trunc' END AS kind,
-             CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_decoded,
-             CAST(sum(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_quarantined
-      FROM documents WHERE doc_id < 100
-      GROUP BY 1 ORDER BY kind""")) { (s, dir) =>
-      val ids = t(s, dir, "documents").select("doc_id")
-        .filter(col("doc_id") < 100)
+                             WHEN 2 THEN 'jpg' ELSE 'jpg_trunc' END AS kind,$decodeTallyOracle""")) { (s, dir) =>
+      val ids = mediaIds(s, dir)
       val media = Multimodal.syntheticMixed(ids, "doc_id")
       val feats = Multimodal.extractFeatures(media, Multimodal.ImageIoDecoder)
-      feats.toDF()
+      decodeTally(feats.toDF()
         .withColumn("kind",
           when(pmod(col("id"), lit(4)) === 0, "png")
             .when(pmod(col("id"), lit(4)) === 1, "png_trunc")
             .when(pmod(col("id"), lit(4)) === 2, "jpg")
-            .otherwise("jpg_trunc"))
-        .groupBy("kind")
-        .agg(count(lit(1)).as("n_rows"),
-          sum(when(size(col("codes")) > 0, 1L).otherwise(0L))
-            .as("n_decoded"),
-          sum(when(size(col("codes")) === 0, 1L).otherwise(0L))
-            .as("n_quarantined"))
-        .orderBy("kind")
+            .otherwise("jpg_trunc")))
     },
 
     // REAL audio decode (r10 verdict next-round #3 — the second modality
@@ -2322,13 +2677,7 @@ object Extensions extends QueryModule {
     // generator formulas because PCM is lossless. A decoder that
     // deinterleaved at the wrong stride or read one plane twice cannot
     // pass.
-    QueryDef("x4_audio_decode", Some("""
-      WITH d AS (SELECT doc_id, 256 + doc_id % 64 AS n
-                 FROM documents WHERE doc_id < 100),
-      s AS (SELECT doc_id, n, i.i AS i,
-              ((7*i.i + doc_id) % 65536) - 32768 AS l,
-              ((11*i.i + 2*doc_id) % 65536) - 32768 AS r
-            FROM d, LATERAL (SELECT unnest(range(0, n)) AS i) i),
+    QueryDef("x4_audio_decode", Some(s"""$wavSamplesCte
       g AS (SELECT doc_id, n, i, l, r,
               lag(l) OVER (PARTITION BY doc_id ORDER BY i) AS pl,
               lag(r) OVER (PARTITION BY doc_id ORDER BY i) AS pr
@@ -2348,8 +2697,7 @@ object Extensions extends QueryModule {
                             AND ((r >= 0) != (pr >= 0))
                            THEN 1 ELSE 0 END) AS BIGINT) AS zc_r
       FROM g GROUP BY doc_id, n ORDER BY id""")) { (s, dir) =>
-      val ids = t(s, dir, "documents").select("doc_id")
-        .filter(col("doc_id") < 100)
+      val ids = mediaIds(s, dir)
       val media = Multimodal.syntheticWavs(ids, "doc_id")
       val feats = Multimodal.extractFeatures(media, Multimodal.WavDecoder)
       val field = Seq("rate", "channels", "n_frames",
@@ -2368,13 +2716,7 @@ object Extensions extends QueryModule {
     // statistics oracle is unchanged — the closed form doesn't care how
     // the bytes arrived (the x4_binary_files recipe for the audio
     // modality).
-    QueryDef("x4_audio_files", Some("""
-      WITH d AS (SELECT doc_id, 256 + doc_id % 64 AS n
-                 FROM documents WHERE doc_id < 100),
-      s AS (SELECT doc_id, n, i.i AS i,
-              ((7*i.i + doc_id) % 65536) - 32768 AS l,
-              ((11*i.i + 2*doc_id) % 65536) - 32768 AS r
-            FROM d, LATERAL (SELECT unnest(range(0, n)) AS i) i),
+    QueryDef("x4_audio_files", Some(s"""$wavSamplesCte
       g AS (SELECT doc_id, n, i, l, r,
               lag(l) OVER (PARTITION BY doc_id ORDER BY i) AS pl
             FROM s)
@@ -2386,21 +2728,9 @@ object Extensions extends QueryModule {
                             AND ((l >= 0) != (pl >= 0))
                            THEN 1 ELSE 0 END) AS BIGINT) AS zc_l
       FROM g GROUP BY doc_id, n ORDER BY id""")) { (s, dir) =>
-      import s.implicits._
-      val ids = t(s, dir, "documents").select("doc_id")
-        .filter(col("doc_id") < 100)
-      val landing = graft.Scratch.fresh("x4wav")
-      Multimodal.writeMediaFiles(
-        Multimodal.syntheticWavs(ids, "doc_id"), landing, "wav")
-      val rows = s.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav").load(landing)
-        .select(
-          regexp_extract(col("path"), "doc-(\\d+)\\.wav$", 1)
-            .cast("long").as("id"),
-          col("content"),
-          struct(lit("wav").as("format"), lit(0).as("width"),
-            lit(0).as("height")).as("meta"))
-        .as[Multimodal.MediaRow]
+      val ids = mediaIds(s, dir)
+      val rows = landedMedia(s,
+        Multimodal.syntheticWavs(ids, "doc_id"), "x4wav", "wav")
       val feats = Multimodal.extractFeatures(rows, Multimodal.WavDecoder)
       feats.toDF().select(col("id"),
           element_at(col("codes"), 3).as("n_frames"),
@@ -2417,29 +2747,14 @@ object Extensions extends QueryModule {
     // empty codes without killing the task; the decoded-vs-quarantined
     // counts are portable, so the oracle derives them from the id
     // partition alone (the x4_quarantine recipe).
-    QueryDef("x4_audio_quarantine", Some("""
-      SELECT CASE doc_id % 2 WHEN 0 THEN 'wav' ELSE 'wav_trunc' END AS kind,
-             CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_decoded,
-             CAST(sum(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_quarantined
-      FROM documents WHERE doc_id < 100
-      GROUP BY 1 ORDER BY kind""")) { (s, dir) =>
-      val ids = t(s, dir, "documents").select("doc_id")
-        .filter(col("doc_id") < 100)
+    QueryDef("x4_audio_quarantine", Some(s"""
+      SELECT CASE doc_id % 2 WHEN 0 THEN 'wav' ELSE 'wav_trunc' END AS kind,$decodeTallyOracle""")) { (s, dir) =>
+      val ids = mediaIds(s, dir)
       val media = Multimodal.syntheticMixedWavs(ids, "doc_id")
       val feats = Multimodal.extractFeatures(media, Multimodal.WavDecoder)
-      feats.toDF()
+      decodeTally(feats.toDF()
         .withColumn("kind",
-          when(pmod(col("id"), lit(2)) === 0, "wav").otherwise("wav_trunc"))
-        .groupBy("kind")
-        .agg(count(lit(1)).as("n_rows"),
-          sum(when(size(col("codes")) > 0, 1L).otherwise(0L))
-            .as("n_decoded"),
-          sum(when(size(col("codes")) === 0, 1L).otherwise(0L))
-            .as("n_quarantined"))
-        .orderBy("kind")
+          when(pmod(col("id"), lit(2)) === 0, "wav").otherwise("wav_trunc")))
     },
 
     // REAL video container decode (r10 verdict stretch #8 — retires the
@@ -2453,12 +2768,7 @@ object Extensions extends QueryModule {
     // differs, so a parser that misses frames, double-reads a chunk, or
     // mis-seeks past the padding cannot pass. Frame count per video is
     // implied by the row set (2 + id mod 4 rows per id).
-    QueryDef("x4_video_decode", Some("""
-      WITH d AS (SELECT doc_id, 8 + doc_id % 9 AS w, 8 + (3*doc_id) % 9 AS h,
-                        2 + doc_id % 4 AS nf
-                 FROM documents WHERE doc_id < 100),
-      fr AS (SELECT doc_id, w, h, f.f AS f
-             FROM d, LATERAL (SELECT unnest(range(0, nf)) AS f) f),
+    QueryDef("x4_video_decode", Some(s"""$aviFramesCte
       px AS (SELECT doc_id, w, h, f,
                (7*x.x + 13*y.y + doc_id + 19*f) % 256 AS g
              FROM fr,
@@ -2471,19 +2781,10 @@ object Extensions extends QueryModule {
              CAST(max(g) AS BIGINT) AS max_g
       FROM px GROUP BY doc_id, f, w, h ORDER BY id, frame_no""")) {
       (s, dir) =>
-      import s.implicits._
-      val ids = t(s, dir, "documents").select("doc_id")
-        .filter(col("doc_id") < 100)
+      val ids = mediaIds(s, dir)
       val frames = Multimodal.parseAviFrames(
         Multimodal.syntheticAvis(ids, "doc_id"))
-      // Composite id = video*16 + frame_no rides through the Decoder seam
-      // (nf <= 5 < 16, gate ids < 100 — collision-free by construction).
-      val rows = frames.select(
-          (col("id") * 16 + col("frame_no")).as("id"),
-          col("frame").as("content"),
-          struct(lit("png").as("format"), lit(0).as("width"),
-            lit(0).as("height")).as("meta"))
-        .as[Multimodal.MediaRow]
+      val rows = frameRows(frames)
       val feats = Multimodal.extractFeatures(rows, Multimodal.ImageIoDecoder)
       feats.toDF().select(
           (col("id") / 16).cast("long").as("id"),
@@ -2505,12 +2806,7 @@ object Extensions extends QueryModule {
     // the exact cross-frame pixel-sum total. Benched (VERDICT r13 #6):
     // the real-file multimodal ingestion line the cross-round perf
     // series lacked.
-    QueryDef("x4_video_files", Some("""
-      WITH d AS (SELECT doc_id, 8 + doc_id % 9 AS w, 8 + (3*doc_id) % 9 AS h,
-                        2 + doc_id % 4 AS nf
-                 FROM documents WHERE doc_id < 100),
-      fr AS (SELECT doc_id, w, h, f.f AS f
-             FROM d, LATERAL (SELECT unnest(range(0, nf)) AS f) f),
+    QueryDef("x4_video_files", Some(s"""$aviFramesCte
       px AS (SELECT doc_id, f,
                (7*x.x + 13*y.y + doc_id + 19*f) % 256 AS g
              FROM fr,
@@ -2519,28 +2815,11 @@ object Extensions extends QueryModule {
       SELECT doc_id AS id, CAST(count(DISTINCT f) AS BIGINT) AS n_frames,
              CAST(sum(g) AS BIGINT) AS sum_g
       FROM px GROUP BY doc_id ORDER BY id"""), bench = true) { (s, dir) =>
-      import s.implicits._
-      val ids = t(s, dir, "documents").select("doc_id")
-        .filter(col("doc_id") < 100)
-      val landing = graft.Scratch.fresh("x4avi")
-      Multimodal.writeMediaFiles(
-        Multimodal.syntheticAvis(ids, "doc_id"), landing, "avi")
-      val vids = s.read.format("binaryFile")
-        .option("pathGlobFilter", "*.avi").load(landing)
-        .select(
-          regexp_extract(col("path"), "doc-(\\d+)\\.avi$", 1)
-            .cast("long").as("id"),
-          col("content"),
-          struct(lit("avi").as("format"), lit(0).as("width"),
-            lit(0).as("height")).as("meta"))
-        .as[Multimodal.MediaRow]
+      val ids = mediaIds(s, dir)
+      val vids = landedMedia(s,
+        Multimodal.syntheticAvis(ids, "doc_id"), "x4avi", "avi")
       val frames = Multimodal.parseAviFrames(vids)
-      val rows = frames.select(
-          (col("id") * 16 + col("frame_no")).as("id"),
-          col("frame").as("content"),
-          struct(lit("png").as("format"), lit(0).as("width"),
-            lit(0).as("height")).as("meta"))
-        .as[Multimodal.MediaRow]
+      val rows = frameRows(frames)
       val feats = Multimodal.extractFeatures(rows, Multimodal.ImageIoDecoder)
       feats.toDF()
         .select((col("id") / 16).cast("long").as("id"),
@@ -2564,8 +2843,7 @@ object Extensions extends QueryModule {
                            ELSE 0 END) AS BIGINT) AS n_frames
       FROM documents WHERE doc_id < 100
       GROUP BY 1 ORDER BY kind""")) { (s, dir) =>
-      val ids = t(s, dir, "documents").select("doc_id")
-        .filter(col("doc_id") < 100)
+      val ids = mediaIds(s, dir)
       val frames = Multimodal.parseAviFrames(
         Multimodal.syntheticMixedAvis(ids, "doc_id"))
       val cnt = frames.groupBy("id").agg(count(lit(1)).as("nf"))
@@ -2694,7 +2972,7 @@ object Extensions extends QueryModule {
     // near-dup resolution keeping the best (longest) cluster member →
     // per-language token-budget mixture. Round-3 operators composed into
     // one gate; per-language yields at every stage.
-    QueryDef("x6_curation2", Some("""
+    QueryDef("x6_curation2", Some(s"""
       WITH RECURSIVE
       q AS (SELECT doc_id, lang, text,
                    CAST(len(string_split(text,' ')) AS BIGINT) AS n_tok
@@ -2710,21 +2988,7 @@ object Extensions extends QueryModule {
               >= CAST(0.7 AS DOUBLE)),
       sh AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS shingle
              FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM q) dd,
-                  LATERAL (SELECT unnest(range(1, greatest(len(dd.toks)-1, 1))) AS i) ii),
-      cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-      inter AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS ni
-                FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                GROUP BY 1, 2),
-      pr AS (SELECT da, db
-             FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-             WHERE CAST(ni AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - ni AS DOUBLE)
-                   >= CAST(0.8 AS DOUBLE)),
-      eg AS (SELECT da AS src, db AS dst FROM pr UNION ALL SELECT db, da FROM pr),
-      reach(id, r) AS (
-        SELECT doc_id, doc_id FROM q
-        UNION
-        SELECT e.src, rc.r FROM eg e JOIN reach rc ON e.dst = rc.id),
-      cl AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id),
+                  LATERAL (SELECT unnest(range(1, greatest(len(dd.toks)-1, 1))) AS i) ii),$curationNearDupCte${reachCte("doc_id", "q")}$clCte,
       best AS (SELECT q.doc_id, q.lang, q.n_tok,
                  row_number() OVER (PARTITION BY cl.cluster
                    ORDER BY q.n_tok DESC, q.doc_id) AS rn
@@ -2752,8 +3016,7 @@ object Extensions extends QueryModule {
       LEFT JOIN fin f2 ON d.doc_id = f2.doc_id
       GROUP BY d.lang ORDER BY d.lang""")) { (s, dir) =>
       val docs = t(s, dir, "documents")
-      val score = TextOps.linearQualityScore(col("text"), bias = -2.0,
-        wTtr = 3.0, wStop = 5.0, wAvgLen = 0.25, stopwords = enStop)
+      val score = qualityScore(col("text"))
       val q = spread(docs).filter(score >= 0.7)
         .withColumn("n_tok", size(TextOps.tokens(col("text"))).cast("long"))
       val pairs = Dedup.jaccardPairs(q, "doc_id", "text", n = 3, threshold = 0.8)
@@ -2788,7 +3051,7 @@ object Extensions extends QueryModule {
     // survivor counts at every stage plus pack/shard/split tallies.
     // Benched (VERDICT r13 #6): the heaviest composition in the engine,
     // now a headline line so its cross-round perf series exists.
-    QueryDef("x6_curation3", Some("""
+    QueryDef("x6_curation3", Some(s"""
       WITH RECURSIVE
       raw AS (SELECT doc_id, lang, source, text FROM documents
               WHERE doc_id % 17 <> 0),
@@ -2821,21 +3084,7 @@ object Extensions extends QueryModule {
       exd AS (SELECT q.* FROM q JOIN exm USING (doc_id)),
       sh AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2],' ') AS shingle
              FROM (SELECT doc_id, string_split(ctext,' ') AS toks FROM exd) dd,
-                  LATERAL (SELECT unnest(range(1, greatest(len(dd.toks)-1,1))) AS i) ii),
-      cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-      inter AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS ni
-                FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                GROUP BY 1, 2),
-      pr AS (SELECT da, db
-             FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-             WHERE CAST(ni AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - ni AS DOUBLE)
-                   >= CAST(0.8 AS DOUBLE)),
-      eg AS (SELECT da AS src, db AS dst FROM pr UNION ALL SELECT db, da FROM pr),
-      reach(id, r) AS (
-        SELECT doc_id, doc_id FROM exd
-        UNION
-        SELECT e.src, rc.r FROM eg e JOIN reach rc ON e.dst = rc.id),
-      cl AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id),
+                  LATERAL (SELECT unnest(range(1, greatest(len(dd.toks)-1,1))) AS i) ii),$curationNearDupCte${reachCte("doc_id", "exd")}$clCte,
       bst AS (SELECT exd.*, row_number() OVER (PARTITION BY cl.cluster
                 ORDER BY exd.n_tok DESC, exd.doc_id) AS rn
               FROM exd JOIN cl ON exd.doc_id = cl.id),
@@ -2943,8 +3192,7 @@ object Extensions extends QueryModule {
         .filter(col("n_kept") > 0)
         .select(col("doc_id"), col("text_kept").as("ctext"))
         .join(raw.select("doc_id", "lang"), "doc_id")
-      val score = TextOps.linearQualityScore(col("ctext"), bias = -2.0,
-        wTtr = 3.0, wStop = 5.0, wAvgLen = 0.25, stopwords = enStop)
+      val score = qualityScore(col("ctext"))
       val q = st.filter(score >= 0.7)
         .withColumn("n_tok", size(TextOps.tokens(col("ctext"))).cast("long"))
       val ex = Dedup.exactKeepFirst(q.withColumn("__h", md5(col("ctext"))),
@@ -3092,8 +3340,7 @@ object Extensions extends QueryModule {
       FROM documents ORDER BY doc_id LIMIT 100""")) { (s, dir) =>
       spread(t(s, dir, "documents"))
         .select(col("doc_id"),
-          TextOps.linearQualityScore(col("text"), bias = -2.0, wTtr = 3.0,
-            wStop = 5.0, wAvgLen = 0.25, stopwords = enStop).as("score"))
+          qualityScore(col("text")).as("score"))
         .orderBy("doc_id").limit(100)
     },
 
@@ -3102,10 +3349,7 @@ object Extensions extends QueryModule {
     // damping-17/20 integer recurrence. The oracle unrolls the identical
     // recurrence — bit-exact longs, no float drift.
     QueryDef("x8_pagerank", Some(s"""
-      WITH pr AS (
-        SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
+      WITH pr AS (${coOrderSql("l_suppkey")}),
       eg AS (SELECT src, dst FROM pr UNION ALL SELECT dst AS src, src AS dst FROM pr),
       nodes AS (SELECT DISTINCT src AS id FROM eg),
       deg AS (SELECT src, count(*) AS outdeg FROM eg GROUP BY src),
@@ -3113,24 +3357,11 @@ object Extensions extends QueryModule {
       (1 to 3).map { i =>
         s""",
       r$i AS (SELECT n.id,
-        CAST(150000000 + (17 * coalesce(f.i, 0)) // 20 AS BIGINT) AS rank
-        FROM nodes n LEFT JOIN (
-          SELECT e.dst AS id, sum(r.rank // d.outdeg) AS i
-          FROM eg e JOIN deg d ON e.src = d.src JOIN r${i - 1} r ON r.id = e.src
-          GROUP BY e.dst) f ON f.id = n.id)"""
+        CAST(150000000 + (17 * coalesce(f.i, 0)) // 20 AS BIGINT) AS rank${rankInflow(i, "eg")}"""
       }.mkString + """
       SELECT id, rank FROM r3 ORDER BY id"""), bench = true) { (s, dir) =>
-      // Distinct (order, supplier) BEFORE the self-join: duplicate
-      // suppliers within an order would blow the join output up
-      // quadratically just to be distinct-ed away after.
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        .distinct()
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_suppkey") < col("b.l_suppkey"))
-        .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
-        .distinct()
-      val edges = pairs.unionByName(
-        pairs.select(col("dst").as("src"), col("src").as("dst")))
+      val pairs = coOrderEdges(s, dir, "l_suppkey")
+      val edges = symmetric(pairs)
       Graph.pageRankInt(edges, iters = 3).orderBy("id")
     },
 
@@ -3141,38 +3372,7 @@ object Extensions extends QueryModule {
     // S div n of the sink-drained rank each iteration — canonical
     // semantics, still exact-integer, so it hash-gates. x8_pagerank
     // stays as the documented drain-semantics variant.
-    QueryDef("x8_pagerank_dangling", Some(s"""
-      WITH pr AS (
-        SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
-      nodes AS (SELECT DISTINCT id FROM
-        (SELECT src AS id FROM pr UNION ALL SELECT dst FROM pr)),
-      deg AS (SELECT src, count(*) AS outdeg FROM pr GROUP BY src),
-      nn AS (SELECT count(*) AS c FROM nodes),
-      r0 AS (SELECT id, CAST(1000000000 AS BIGINT) AS rank FROM nodes)""" +
-      (1 to 3).map { i =>
-        s""",
-      s${i - 1} AS (SELECT coalesce(sum(rank), 0) AS s FROM r${i - 1} n
-        WHERE NOT EXISTS (SELECT 1 FROM deg d WHERE d.src = n.id)),
-      r$i AS (SELECT n.id,
-        CAST(150000000 + (17 * (coalesce(f.i, 0)
-          + (SELECT s FROM s${i - 1}) // (SELECT c FROM nn))) // 20
-          AS BIGINT) AS rank
-        FROM nodes n LEFT JOIN (
-          SELECT e.dst AS id, sum(r.rank // d.outdeg) AS i
-          FROM pr e JOIN deg d ON e.src = d.src JOIN r${i - 1} r ON r.id = e.src
-          GROUP BY e.dst) f ON f.id = n.id)"""
-      }.mkString + """
-      SELECT id, rank FROM r3 ORDER BY id""")) { (s, dir) =>
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        .distinct()
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_suppkey") < col("b.l_suppkey"))
-        .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
-        .distinct()
-      Graph.pageRankInt(pairs, iters = 3, dangling = true).orderBy("id")
-    },
+    pageRankDanglingGate("x8_pagerank_dangling", s4 = false),
 
     // Oracle-replayable dangling-PageRank companion (same
     // Graph.pageRankInt code path, dangling = true): the FULL
@@ -3183,41 +3383,7 @@ object Extensions extends QueryModule {
     // of the co-purchase graph (~16x fewer edges, ~64x less iteration
     // mass), which DuckDB replays at sf1, carrying the 100x-scale value
     // evidence for the dangling family the x8_ktruss_s4 way.
-    QueryDef("x8_pagerank_dangling_s4", Some(s"""
-      WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem
-                  WHERE l_suppkey % 4 = 0),
-      pr AS (
-        SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
-        FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
-      nodes AS (SELECT DISTINCT id FROM
-        (SELECT src AS id FROM pr UNION ALL SELECT dst FROM pr)),
-      deg AS (SELECT src, count(*) AS outdeg FROM pr GROUP BY src),
-      nn AS (SELECT count(*) AS c FROM nodes),
-      r0 AS (SELECT id, CAST(1000000000 AS BIGINT) AS rank FROM nodes)""" +
-      (1 to 3).map { i =>
-        s""",
-      s${i - 1} AS (SELECT coalesce(sum(rank), 0) AS s FROM r${i - 1} n
-        WHERE NOT EXISTS (SELECT 1 FROM deg d WHERE d.src = n.id)),
-      r$i AS (SELECT n.id,
-        CAST(150000000 + (17 * (coalesce(f.i, 0)
-          + (SELECT s FROM s${i - 1}) // (SELECT c FROM nn))) // 20
-          AS BIGINT) AS rank
-        FROM nodes n LEFT JOIN (
-          SELECT e.dst AS id, sum(r.rank // d.outdeg) AS i
-          FROM pr e JOIN deg d ON e.src = d.src JOIN r${i - 1} r ON r.id = e.src
-          GROUP BY e.dst) f ON f.id = n.id)"""
-      }.mkString + """
-      SELECT id, rank FROM r3 ORDER BY id""")) { (s, dir) =>
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        .filter(col("l_suppkey") % 4 === 0)
-        .distinct()
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_suppkey") < col("b.l_suppkey"))
-        .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
-        .distinct()
-      Graph.pageRankInt(pairs, iters = 3, dangling = true).orderBy("id")
-    },
+    pageRankDanglingGate("x8_pagerank_dangling_s4", s4 = true),
 
     // Personalized PageRank (Graph.personalizedPageRankInt): teleport
     // restricted to a seed set — "rank relative to these suppliers", the
@@ -3226,10 +3392,7 @@ object Extensions extends QueryModule {
     // seeds start at scale, everything else at 0, so mass provably drains
     // from the seed neighborhood. Oracle unrolls 3 rounds.
     QueryDef("x8_ppr", Some(s"""
-      WITH pr AS (
-        SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
+      WITH pr AS (${coOrderSql("l_suppkey")}),
       eg AS (SELECT src, dst FROM pr UNION ALL SELECT dst AS src, src AS dst FROM pr),
       nodes AS (SELECT DISTINCT src AS id,
                   CASE WHEN src % 10 = 0 THEN 1 ELSE 0 END AS sd
@@ -3241,21 +3404,11 @@ object Extensions extends QueryModule {
         s""",
       r$i AS (SELECT n.id, n.sd,
         CAST(n.sd * 150000000 + (17 * coalesce(f.i, 0)) // 20 AS BIGINT)
-          AS rank
-        FROM nodes n LEFT JOIN (
-          SELECT e.dst AS id, sum(r.rank // d.outdeg) AS i
-          FROM eg e JOIN deg d ON e.src = d.src JOIN r${i - 1} r ON r.id = e.src
-          GROUP BY e.dst) f ON f.id = n.id)"""
+          AS rank${rankInflow(i, "eg")}"""
       }.mkString + """
       SELECT id, rank FROM r3 ORDER BY id""")) { (s, dir) =>
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        .distinct()
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_suppkey") < col("b.l_suppkey"))
-        .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
-        .distinct()
-      val edges = pairs.unionByName(
-        pairs.select(col("dst").as("src"), col("src").as("dst")))
+      val pairs = coOrderEdges(s, dir, "l_suppkey")
+      val edges = symmetric(pairs)
       val seeds = edges.select(col("src").as("id")).distinct()
         .filter(col("id") % 10 === 0)
       Graph.personalizedPageRankInt(edges, seeds, iters = 3).orderBy("id")
@@ -3265,42 +3418,7 @@ object Extensions extends QueryModule {
     // point low→high supplier id), exact fixed-point integer arithmetic:
     // long sums + max-normalizing integral division each half-step, so
     // the scores hash-gate. Two unrolled iterations in the oracle.
-    QueryDef("x8_hits", Some("""
-      WITH pr AS (
-        SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
-      nodes AS (SELECT DISTINCT id FROM
-        (SELECT src AS id FROM pr UNION ALL SELECT dst AS id FROM pr)),
-      h0 AS (SELECT id, CAST(1000000 AS BIGINT) AS h FROM nodes),
-      a1p AS (SELECT e.dst AS id, sum(h.h) AS ap
-              FROM pr e JOIN h0 h ON h.id = e.src GROUP BY e.dst),
-      a1m AS (SELECT max(ap) AS am FROM a1p),
-      a1 AS (SELECT id, (ap * 1000000) // am AS a FROM a1p, a1m),
-      h1p AS (SELECT e.src AS id, sum(a.a) AS hp
-              FROM pr e JOIN a1 a ON a.id = e.dst GROUP BY e.src),
-      h1m AS (SELECT max(hp) AS hm FROM h1p),
-      h1 AS (SELECT id, (hp * 1000000) // hm AS h FROM h1p, h1m),
-      a2p AS (SELECT e.dst AS id, sum(h.h) AS ap
-              FROM pr e JOIN h1 h ON h.id = e.src GROUP BY e.dst),
-      a2m AS (SELECT max(ap) AS am FROM a2p),
-      a2 AS (SELECT id, (ap * 1000000) // am AS a FROM a2p, a2m),
-      h2p AS (SELECT e.src AS id, sum(a.a) AS hp
-              FROM pr e JOIN a2 a ON a.id = e.dst GROUP BY e.src),
-      h2m AS (SELECT max(hp) AS hm FROM h2p),
-      h2 AS (SELECT id, (hp * 1000000) // hm AS h FROM h2p, h2m)
-      SELECT n.id, CAST(coalesce(h2.h, 0) AS BIGINT) AS hub,
-             CAST(coalesce(a2.a, 0) AS BIGINT) AS auth
-      FROM nodes n LEFT JOIN h2 ON h2.id = n.id LEFT JOIN a2 ON a2.id = n.id
-      ORDER BY n.id""")) { (s, dir) =>
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        .distinct()
-      val edges = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_suppkey") < col("b.l_suppkey"))
-        .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
-        .distinct()
-      Graph.hitsInt(edges, iters = 2).orderBy("id")
-    },
+    hitsGate("x8_hits", s4 = false),
 
     // Oracle-replayable HITS companion (same Graph.hitsInt code path):
     // the FULL x8_hits sf1 oracle pins >18GB of non-spillable hash
@@ -3308,86 +3426,18 @@ object Extensions extends QueryModule {
     // family's sf1 correctness resting on sf0.1 alone (r10 verdict,
     // missing #2). Identical two-iteration recurrence on the
     // l_suppkey % 4 subsample — DuckDB replays it at sf1.
-    QueryDef("x8_hits_s4", Some("""
-      WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem
-                  WHERE l_suppkey % 4 = 0),
-      pr AS (
-        SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
-        FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
-      nodes AS (SELECT DISTINCT id FROM
-        (SELECT src AS id FROM pr UNION ALL SELECT dst AS id FROM pr)),
-      h0 AS (SELECT id, CAST(1000000 AS BIGINT) AS h FROM nodes),
-      a1p AS (SELECT e.dst AS id, sum(h.h) AS ap
-              FROM pr e JOIN h0 h ON h.id = e.src GROUP BY e.dst),
-      a1m AS (SELECT max(ap) AS am FROM a1p),
-      a1 AS (SELECT id, (ap * 1000000) // am AS a FROM a1p, a1m),
-      h1p AS (SELECT e.src AS id, sum(a.a) AS hp
-              FROM pr e JOIN a1 a ON a.id = e.dst GROUP BY e.src),
-      h1m AS (SELECT max(hp) AS hm FROM h1p),
-      h1 AS (SELECT id, (hp * 1000000) // hm AS h FROM h1p, h1m),
-      a2p AS (SELECT e.dst AS id, sum(h.h) AS ap
-              FROM pr e JOIN h1 h ON h.id = e.src GROUP BY e.dst),
-      a2m AS (SELECT max(ap) AS am FROM a2p),
-      a2 AS (SELECT id, (ap * 1000000) // am AS a FROM a2p, a2m),
-      h2p AS (SELECT e.src AS id, sum(a.a) AS hp
-              FROM pr e JOIN a2 a ON a.id = e.dst GROUP BY e.src),
-      h2m AS (SELECT max(hp) AS hm FROM h2p),
-      h2 AS (SELECT id, (hp * 1000000) // hm AS h FROM h2p, h2m)
-      SELECT n.id, CAST(coalesce(h2.h, 0) AS BIGINT) AS hub,
-             CAST(coalesce(a2.a, 0) AS BIGINT) AS auth
-      FROM nodes n LEFT JOIN h2 ON h2.id = n.id LEFT JOIN a2 ON a2.id = n.id
-      ORDER BY n.id""")) { (s, dir) =>
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        .filter(col("l_suppkey") % 4 === 0)
-        .distinct()
-      val edges = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_suppkey") < col("b.l_suppkey"))
-        .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
-        .distinct()
-      Graph.hitsInt(edges, iters = 2).orderBy("id")
-    },
+    hitsGate("x8_hits_s4", s4 = true),
 
     // Synchronous label propagation on the symmetrized co-purchase
     // graph: most-frequent neighbor label per round, smallest-label
     // ties — all-integer and round-synchronous, so the (normally
     // run-order-dependent) LPA is exactly reproducible. Two unrolled
     // rounds in the oracle.
-    QueryDef("x8_labelprop", Some("""
-      WITH pr AS (
-        SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
-      eg AS (SELECT src, dst FROM pr
-             UNION ALL SELECT dst AS src, src AS dst FROM pr),
-      nodes AS (SELECT DISTINCT src AS id FROM eg),
-      l0 AS (SELECT id, id AS label FROM nodes),
-      n1 AS (SELECT e.dst AS id, l.label, count(*) AS c
-             FROM eg e JOIN l0 l ON l.id = e.src GROUP BY 1, 2),
-      t1 AS (SELECT id, label FROM (
-               SELECT id, label,
-                 row_number() OVER (PARTITION BY id
-                   ORDER BY c DESC, label) AS rn FROM n1) WHERE rn = 1),
-      l1 AS (SELECT l0.id, coalesce(t1.label, l0.label) AS label
-             FROM l0 LEFT JOIN t1 ON t1.id = l0.id),
-      n2 AS (SELECT e.dst AS id, l.label, count(*) AS c
-             FROM eg e JOIN l1 l ON l.id = e.src GROUP BY 1, 2),
-      t2 AS (SELECT id, label FROM (
-               SELECT id, label,
-                 row_number() OVER (PARTITION BY id
-                   ORDER BY c DESC, label) AS rn FROM n2) WHERE rn = 1),
-      l2 AS (SELECT l1.id, coalesce(t2.label, l1.label) AS label
-             FROM l1 LEFT JOIN t2 ON t2.id = l1.id)
+    QueryDef("x8_labelprop", Some(s"""$labelPropCte
       SELECT id, CAST(label AS BIGINT) AS label FROM l2
       ORDER BY id""")) { (s, dir) =>
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        .distinct()
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_suppkey") < col("b.l_suppkey"))
-        .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
-        .distinct()
-      val edges = pairs.unionByName(
-        pairs.select(col("dst").as("src"), col("src").as("dst")))
+      val pairs = coOrderEdges(s, dir, "l_suppkey")
+      val edges = symmetric(pairs)
       Graph.labelPropagate(edges, rounds = 2).orderBy("id")
     },
 
@@ -3414,18 +3464,8 @@ object Extensions extends QueryModule {
     // over the corpus, score each doc by its mean bigram probability on
     // the fixed-point 1e-12 grid — the log-free, gate-exact form of the
     // CCNet perplexity filter.
-    QueryDef("x5_bigram_lm", Some("""
-      WITH tk AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-      bg AS (SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS bg
-             FROM tk, LATERAL (SELECT unnest(range(1, len(toks))) AS i) ii),
-      c2 AS (SELECT bg, count(*) AS c2 FROM bg GROUP BY bg),
-      c2w AS (SELECT bg, c2, string_split(bg,' ')[1] AS w1 FROM c2),
-      c1 AS (SELECT w1, sum(c2) AS c1 FROM c2w GROUP BY w1),
-      p AS (SELECT bg, CAST(c2 AS DOUBLE) / CAST(c1 AS DOUBLE) AS p
-            FROM c2w JOIN c1 USING (w1)),
-      sc AS (SELECT doc_id, count(*) AS n_bigrams,
-               sum(CAST(floor(p * 1e12) AS HUGEINT)) AS s
-             FROM bg JOIN p USING (bg) GROUP BY doc_id)
+    QueryDef("x5_bigram_lm", Some(s"""
+      WITH tk AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),$bigramLmCte
       SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams,
              CAST(s AS DOUBLE) / 1e12 / CAST(n_bigrams AS DOUBLE) AS avg_p
       FROM sc ORDER BY doc_id""")) { (s, dir) =>
@@ -3491,24 +3531,7 @@ object Extensions extends QueryModule {
     // whole corpus, per-doc mean ratio — the "select crawl data that
     // looks like the target domain" sampler weight, log-free so it
     // gate-hashes. 256 md5 buckets; model is a 256-row broadcast.
-    QueryDef("x6_dsir", Some("""
-      WITH tk AS (SELECT doc_id, source, string_split(text,' ') AS toks
-                  FROM documents),
-      bg AS (SELECT doc_id, source,
-               substring(md5(array_to_string(toks[i:i+1],' ')), 1, 2)
-                 AS bucket
-             FROM tk, LATERAL (SELECT unnest(range(1, len(toks))) AS i) ii),
-      rc AS (SELECT bucket, count(*) AS rc FROM bg GROUP BY bucket),
-      tc AS (SELECT bucket, count(*) AS tc FROM bg
-             WHERE source = 'src0' GROUP BY bucket),
-      tot AS (SELECT (SELECT sum(rc) FROM rc) AS r_tot,
-                     (SELECT coalesce(sum(tc), 0) FROM tc) AS t_tot),
-      m AS (SELECT rc.bucket,
-              (CAST(coalesce(tc.tc, 0) + 1 AS DOUBLE)
-                 / CAST(t_tot + 256 AS DOUBLE))
-              * (CAST(r_tot + 256 AS DOUBLE)
-                 / CAST(rc.rc + 1 AS DOUBLE)) AS ratio
-            FROM rc LEFT JOIN tc USING (bucket) CROSS JOIN tot)
+    QueryDef("x6_dsir", Some(s"""$dsirModelCte
       SELECT doc_id, CAST(count(*) AS BIGINT) AS n_feats,
              CAST(sum(CAST(floor(ratio * 1e6) AS HUGEINT)) AS DOUBLE) / 1e6
                / CAST(count(*) AS DOUBLE) AS score
@@ -3524,28 +3547,7 @@ object Extensions extends QueryModule {
     // corpus by importance score and report per-source acceptance — the
     // resampling half of x6_dsir, whose acceptance skew toward the
     // target domain's sources is the operator's whole point.
-    QueryDef("x6_dsir_select", Some("""
-      WITH tk AS (SELECT doc_id, source, string_split(text,' ') AS toks
-                  FROM documents),
-      bg AS (SELECT doc_id, source,
-               substring(md5(array_to_string(toks[i:i+1],' ')), 1, 2)
-                 AS bucket
-             FROM tk, LATERAL (SELECT unnest(range(1, len(toks))) AS i) ii),
-      rc AS (SELECT bucket, count(*) AS rc FROM bg GROUP BY bucket),
-      tc AS (SELECT bucket, count(*) AS tc FROM bg
-             WHERE source = 'src0' GROUP BY bucket),
-      tot AS (SELECT (SELECT sum(rc) FROM rc) AS r_tot,
-                     (SELECT coalesce(sum(tc), 0) FROM tc) AS t_tot),
-      m AS (SELECT rc.bucket,
-              (CAST(coalesce(tc.tc, 0) + 1 AS DOUBLE)
-                 / CAST(t_tot + 256 AS DOUBLE))
-              * (CAST(r_tot + 256 AS DOUBLE)
-                 / CAST(rc.rc + 1 AS DOUBLE)) AS ratio
-            FROM rc LEFT JOIN tc USING (bucket) CROSS JOIN tot),
-      sc AS (SELECT doc_id,
-               CAST(sum(CAST(floor(ratio * 1e6) AS HUGEINT)) AS DOUBLE)
-                 / 1e6 / CAST(count(*) AS DOUBLE) AS score
-             FROM bg JOIN m USING (bucket) GROUP BY doc_id),
+    QueryDef("x6_dsir_select", Some(s"""$dsirModelCte$dsirScoreCte,
       r AS (SELECT doc_id,
               row_number() OVER (ORDER BY score DESC, doc_id) AS rn,
               count(*) OVER () AS n
@@ -3571,28 +3573,7 @@ object Extensions extends QueryModule {
     // scalar compare in the corpus scan), never a global sort. Same
     // per-source acceptance report; kept count matches the exact form up
     // to sampling error and threshold ties.
-    QueryDef("x6_dsir_select_t", Some("""
-      WITH tk AS (SELECT doc_id, source, string_split(text,' ') AS toks
-                  FROM documents),
-      bg AS (SELECT doc_id, source,
-               substring(md5(array_to_string(toks[i:i+1],' ')), 1, 2)
-                 AS bucket
-             FROM tk, LATERAL (SELECT unnest(range(1, len(toks))) AS i) ii),
-      rc AS (SELECT bucket, count(*) AS rc FROM bg GROUP BY bucket),
-      tc AS (SELECT bucket, count(*) AS tc FROM bg
-             WHERE source = 'src0' GROUP BY bucket),
-      tot AS (SELECT (SELECT sum(rc) FROM rc) AS r_tot,
-                     (SELECT coalesce(sum(tc), 0) FROM tc) AS t_tot),
-      m AS (SELECT rc.bucket,
-              (CAST(coalesce(tc.tc, 0) + 1 AS DOUBLE)
-                 / CAST(t_tot + 256 AS DOUBLE))
-              * (CAST(r_tot + 256 AS DOUBLE)
-                 / CAST(rc.rc + 1 AS DOUBLE)) AS ratio
-            FROM rc LEFT JOIN tc USING (bucket) CROSS JOIN tot),
-      sc AS (SELECT doc_id,
-               CAST(sum(CAST(floor(ratio * 1e6) AS HUGEINT)) AS DOUBLE)
-                 / 1e6 / CAST(count(*) AS DOUBLE) AS score
-             FROM bg JOIN m USING (bucket) GROUP BY doc_id),
+    QueryDef("x6_dsir_select_t", Some(s"""$dsirModelCte$dsirScoreCte,
       samp AS (SELECT doc_id, score FROM sc
                WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '40'),
       r AS (SELECT score,
@@ -3625,32 +3606,11 @@ object Extensions extends QueryModule {
     // Wenzek et al. 2019): per-language terciles of the bigram-LM
     // corpus-likelihood — the "keep head+middle, drop tail" curation
     // cut, gated by per-bucket doc/bigram totals and the score range.
-    QueryDef("x6_ccnet_buckets", Some("""
-      WITH tk AS (SELECT doc_id, string_split(text,' ') AS toks
-                  FROM documents),
-      bg AS (SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS bg
-             FROM tk, LATERAL (SELECT unnest(range(1, len(toks))) AS i) ii),
-      c2 AS (SELECT bg, count(*) AS c2 FROM bg GROUP BY bg),
-      c2w AS (SELECT bg, c2, string_split(bg,' ')[1] AS w1 FROM c2),
-      c1 AS (SELECT w1, sum(c2) AS c1 FROM c2w GROUP BY w1),
-      p AS (SELECT bg, CAST(c2 AS DOUBLE) / CAST(c1 AS DOUBLE) AS p
-            FROM c2w JOIN c1 USING (w1)),
-      sc AS (SELECT doc_id, count(*) AS n_bigrams,
-               sum(CAST(floor(p * 1e12) AS HUGEINT)) AS s
-             FROM bg JOIN p USING (bg) GROUP BY doc_id),
-      sc2 AS (SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams,
-                CAST(s AS DOUBLE) / 1e12 / CAST(n_bigrams AS DOUBLE)
-                  AS avg_p
-              FROM sc),
+    QueryDef("x6_ccnet_buckets", Some(s"""$ccnetScoreCte,
       j AS (SELECT d.lang, sc2.doc_id, sc2.n_bigrams, sc2.avg_p,
               ntile(3) OVER (PARTITION BY d.lang
                 ORDER BY sc2.avg_p DESC, sc2.doc_id) AS bucket
-            FROM sc2 JOIN documents d USING (doc_id))
-      SELECT lang, CAST(bucket AS BIGINT) AS bucket,
-             CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(n_bigrams) AS BIGINT) AS sum_bigrams,
-             min(avg_p) AS min_p, max(avg_p) AS max_p
-      FROM j GROUP BY lang, bucket ORDER BY lang, bucket"""),
+            FROM sc2 JOIN documents d USING (doc_id))$ccnetReport"""),
       bench = true) { (s, dir) =>
       TextOps.lmScoreBuckets(t(s, dir, "documents"), "doc_id", "text",
           "lang", buckets = 3)
@@ -3663,23 +3623,7 @@ object Extensions extends QueryModule {
     // broadcast as one row per language, and every doc bucketed by a
     // codegen'd compare chain. Tile populations match the exact ntile up
     // to sampling error; cut-score ties land in the better bucket.
-    QueryDef("x6_ccnet_buckets_t", Some("""
-      WITH tk AS (SELECT doc_id, string_split(text,' ') AS toks
-                  FROM documents),
-      bg AS (SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS bg
-             FROM tk, LATERAL (SELECT unnest(range(1, len(toks))) AS i) ii),
-      c2 AS (SELECT bg, count(*) AS c2 FROM bg GROUP BY bg),
-      c2w AS (SELECT bg, c2, string_split(bg,' ')[1] AS w1 FROM c2),
-      c1 AS (SELECT w1, sum(c2) AS c1 FROM c2w GROUP BY w1),
-      p AS (SELECT bg, CAST(c2 AS DOUBLE) / CAST(c1 AS DOUBLE) AS p
-            FROM c2w JOIN c1 USING (w1)),
-      sc AS (SELECT doc_id, count(*) AS n_bigrams,
-               sum(CAST(floor(p * 1e12) AS HUGEINT)) AS s
-             FROM bg JOIN p USING (bg) GROUP BY doc_id),
-      sc2 AS (SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams,
-                CAST(s AS DOUBLE) / 1e12 / CAST(n_bigrams AS DOUBLE)
-                  AS avg_p
-              FROM sc),
+    QueryDef("x6_ccnet_buckets_t", Some(s"""$ccnetScoreCte,
       samp AS (SELECT d.lang, sc2.avg_p,
                  row_number() OVER (PARTITION BY d.lang
                    ORDER BY sc2.avg_p DESC, sc2.doc_id) AS rn,
@@ -3694,12 +3638,7 @@ object Extensions extends QueryModule {
               1 + (CASE WHEN sc2.avg_p < c.cc1 THEN 1 ELSE 0 END)
                 + (CASE WHEN sc2.avg_p < c.cc2 THEN 1 ELSE 0 END) AS bucket
             FROM sc2 JOIN documents d USING (doc_id)
-            LEFT JOIN cuts c ON d.lang = c.lang)
-      SELECT lang, CAST(bucket AS BIGINT) AS bucket,
-             CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(n_bigrams) AS BIGINT) AS sum_bigrams,
-             min(avg_p) AS min_p, max(avg_p) AS max_p
-      FROM j GROUP BY lang, bucket ORDER BY lang, bucket"""),
+            LEFT JOIN cuts c ON d.lang = c.lang)$ccnetReport"""),
       bench = true) { (s, dir) =>
       TextOps.lmScoreBucketsThreshold(t(s, dir, "documents"), "doc_id",
           "text", "lang", buckets = 3, sampleHexCeil = "80")
@@ -3738,7 +3677,7 @@ object Extensions extends QueryModule {
     // per-vector (min, max) + one byte per dimension, dequantized inline
     // and ranked asymmetrically — the training-free 4x compression rung.
     // The oracle replays the quantize/dequantize arithmetic exactly.
-    QueryDef("x3_sq8", Some("""
+    QueryDef("x3_sq8", Some(s"""
       WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
       c AS (SELECT vec_id AS nid, vv,
               list_aggregate(vv, 'min') AS mn,
@@ -3755,11 +3694,7 @@ object Extensions extends QueryModule {
       sc AS (SELECT qid, nid,
                list_dot_product(qv, rv)
                  / sqrt(list_dot_product(qv, qv) * list_dot_product(rv, rv)) AS sim
-             FROM q, rec),
-      r AS (SELECT qid, nid, sim,
-              row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk
-            FROM sc)
-      SELECT qid, rnk, nid, sim FROM r WHERE rnk <= 3 ORDER BY qid, rnk""")) {
+             FROM q, rec),${topBySim(3)}""")) {
       (s, dir) =>
       val e = t(s, dir, "embeddings")
       Similarity.knnSq8(
@@ -3825,11 +3760,7 @@ object Extensions extends QueryModule {
     // neighbor as the positive, md5-hash-order draws as deterministic
     // uniform negatives — the (anchor, positive, negative) prep for
     // embedding training.
-    QueryDef("x3_triplets", Some("""
-      WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-                 FROM embeddings WHERE vec_id < 10),
-      c AS (SELECT vec_id AS nid, CAST(embedding AS DOUBLE[]) AS cv
-            FROM embeddings WHERE vec_id >= 10),
+    QueryDef("x3_triplets", Some(s"""$queryCorpusCte
       sc AS (SELECT qid, nid,
                list_dot_product(qv, cv)
                  / sqrt(list_dot_product(qv, qv) * list_dot_product(cv, cv)) AS sim,
@@ -3857,20 +3788,11 @@ object Extensions extends QueryModule {
     // tf-idf-retrieval-style frequency-sensitive sibling of
     // x2_jaccard_pairs, same inverted-index discipline. Integer-exact
     // numerator and norms; one IEEE division at the end.
-    QueryDef("x2_sparse_cosine", Some("""
+    QueryDef("x2_sparse_cosine", Some(s"""
       WITH tf AS (SELECT doc_id, tok, count(*) AS tf
                   FROM (SELECT doc_id, unnest(string_split(text,' ')) AS tok
                         FROM documents) tt
-                  GROUP BY doc_id, tok),
-      n2 AS (SELECT doc_id, sum(tf*tf) AS n2 FROM tf GROUP BY doc_id),
-      num AS (SELECT a.doc_id AS da, b.doc_id AS db, sum(a.tf*b.tf) AS num
-              FROM tf a JOIN tf b
-                ON a.tok = b.tok AND a.doc_id < b.doc_id
-              GROUP BY 1, 2),
-      sim AS (SELECT da, db,
-                CAST(num AS DOUBLE)
-                  / (sqrt(CAST(x.n2 AS DOUBLE)) * sqrt(CAST(y.n2 AS DOUBLE))) AS sim
-              FROM num JOIN n2 x ON x.doc_id = da JOIN n2 y ON y.doc_id = db)
+                  GROUP BY doc_id, tok),$tfCosineCte
       SELECT da, db, sim FROM sim WHERE sim >= CAST(0.98 AS DOUBLE)
       ORDER BY da, db""")) { (s, dir) =>
       Dedup.sparseCosinePairs(t(s, dir, "documents"), "doc_id", "text",
@@ -3884,22 +3806,13 @@ object Extensions extends QueryModule {
     // Σ df² is ~2e10 at sf1 (quadratic by definition — that variant is
     // gate-checked at sf0.01/0.1 only); 4-shingles carry the same
     // frequency-sensitive cosine with measured pair mass 1.5e7 at sf1.
-    QueryDef("x2_sparse_cosine_sh", Some("""
+    QueryDef("x2_sparse_cosine_sh", Some(s"""
       WITH sh AS (SELECT doc_id, array_to_string(toks[i:i+3],' ') AS tok
                   FROM (SELECT doc_id, string_split(text,' ') AS toks
                         FROM documents) dd,
                        LATERAL (SELECT unnest(range(1,
                           greatest(len(dd.toks)-2, 1))) AS i) ii),
-      tf AS (SELECT doc_id, tok, count(*) AS tf FROM sh GROUP BY 1, 2),
-      n2 AS (SELECT doc_id, sum(tf*tf) AS n2 FROM tf GROUP BY doc_id),
-      num AS (SELECT a.doc_id AS da, b.doc_id AS db, sum(a.tf*b.tf) AS num
-              FROM tf a JOIN tf b
-                ON a.tok = b.tok AND a.doc_id < b.doc_id
-              GROUP BY 1, 2),
-      sim AS (SELECT da, db,
-                CAST(num AS DOUBLE)
-                  / (sqrt(CAST(x.n2 AS DOUBLE)) * sqrt(CAST(y.n2 AS DOUBLE))) AS sim
-              FROM num JOIN n2 x ON x.doc_id = da JOIN n2 y ON y.doc_id = db)
+      tf AS (SELECT doc_id, tok, count(*) AS tf FROM sh GROUP BY 1, 2),$tfCosineCte
       SELECT da, db, sim FROM sim WHERE sim >= CAST(0.8 AS DOUBLE)
       ORDER BY da, db""")) { (s, dir) =>
       Dedup.sparseCosinePairs(t(s, dir, "documents"), "doc_id", "text",
@@ -4018,30 +3931,10 @@ object Extensions extends QueryModule {
     // detection and spam-farm analysis start from. Ordered triples a<b<c
     // count each triangle once and bound wedge fan-out; two equijoins plus
     // one aggregate, no adjacency collected.
-    QueryDef("x8_triangles", Some("""
-      WITH pr AS (SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
+    trianglesGate("x8_triangles", """pr AS (SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
                   FROM lineitem a JOIN lineitem b
                     ON a.l_orderkey = b.l_orderkey
-                   AND a.l_suppkey < b.l_suppkey),
-      w AS (SELECT p1.src AS a, p1.dst AS b, p2.dst AS c
-            FROM pr p1 JOIN pr p2 ON p1.dst = p2.src),
-      tri AS (SELECT w.a, w.b, w.c
-              FROM w JOIN pr p3 ON p3.src = w.a AND p3.dst = w.c),
-      n AS (SELECT unnest([a, b, c]) AS id FROM tri)
-      SELECT id, CAST(count(*) AS BIGINT) AS triangles
-      FROM n GROUP BY id ORDER BY id""")) { (s, dir) =>
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        .distinct()
-      // The pair table feeds three join sides — persist it or the
-      // lineitem self-join recomputes per branch (harness unpersists
-      // between queries).
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_suppkey") < col("b.l_suppkey"))
-        .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      Graph.triangleCounts(pairs).orderBy("id")
-    },
+                   AND a.l_suppkey < b.l_suppkey)""", None),
 
     // Oracle-replayable triangle-count companion (same
     // Graph.triangleCounts code path): the FULL x8_triangles sf1 oracle
@@ -4051,41 +3944,19 @@ object Extensions extends QueryModule {
     // claim was asserted, not checked (r10 verdict, missing #2). Same
     // per-node counts on the l_suppkey % 4 subsample (~64x fewer
     // wedges), replayable by DuckDB at sf1.
-    QueryDef("x8_triangles_s4", Some("""
-      WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem
-                  WHERE l_suppkey % 4 = 0),
+    trianglesGate("x8_triangles_s4", s"""${liCte("l_suppkey", s4 = true)},
       pr AS (SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
              FROM li a JOIN li b
                ON a.l_orderkey = b.l_orderkey
-              AND a.l_suppkey < b.l_suppkey),
-      w AS (SELECT p1.src AS a, p1.dst AS b, p2.dst AS c
-            FROM pr p1 JOIN pr p2 ON p1.dst = p2.src),
-      tri AS (SELECT w.a, w.b, w.c
-              FROM w JOIN pr p3 ON p3.src = w.a AND p3.dst = w.c),
-      n AS (SELECT unnest([a, b, c]) AS id FROM tri)
-      SELECT id, CAST(count(*) AS BIGINT) AS triangles
-      FROM n GROUP BY id ORDER BY id""")) { (s, dir) =>
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        .filter(col("l_suppkey") % 4 === 0)
-        .distinct()
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_suppkey") < col("b.l_suppkey"))
-        .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      Graph.triangleCounts(pairs).orderBy("id")
-    },
+              AND a.l_suppkey < b.l_suppkey)""",
+      s4Sample("l_suppkey", s4 = true)),
 
     // Bounded k-core peeling (Graph.kCorePeel) on the co-purchase part
     // graph: three cascading degree-threshold rounds — the densest-
     // subgraph filter behind spam-farm pruning and community cores. Each
     // round is one degree aggregate + two semi joins on node id; the
     // oracle unrolls the identical rounds as CTEs.
-    QueryDef("x8_kcore", Some(s"""
-      WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-      e0 AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-             FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-              AND a.l_partkey < b.l_partkey),
+    QueryDef("x8_kcore", Some(s"""${partE0Cte(s4 = false)}
       ${(1 to 3).map { r =>
         s"""d$r AS (SELECT n, count(*) AS c
              FROM (SELECT u AS n FROM e${r - 1}
@@ -4096,10 +3967,8 @@ object Extensions extends QueryModule {
       }.mkString(",\n      ")}
       SELECT CAST(n AS BIGINT) AS id, CAST(c AS BIGINT) AS degree
       FROM k3 ORDER BY id""")) { (s, dir) =>
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_partkey")
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
+      val pairs = coOrderPairs(
+        t(s, dir, "lineitem").select("l_orderkey", "l_partkey"), "l_partkey")
         .distinct()
       Graph.kCorePeel(pairs, k = 90L, rounds = 3).orderBy("id")
     },
@@ -4126,11 +3995,8 @@ object Extensions extends QueryModule {
     // (anti join against the settled set); the oracle's recursive CTE
     // explores every path and min-aggregates after — same answer, but only
     // the frontier form survives a dense 100 TB graph.
-    QueryDef("x8_bfs", Some("""
-      WITH RECURSIVE pr AS (
-        SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    QueryDef("x8_bfs", Some(s"""
+      WITH RECURSIVE pr AS (${coOrderSql("l_partkey")}),
       eg AS (SELECT src, dst FROM pr UNION ALL SELECT dst, src FROM pr),
       seeds AS (SELECT DISTINCT src AS id FROM eg WHERE src % 100 = 0),
       bfs(id, h) AS (
@@ -4141,14 +4007,8 @@ object Extensions extends QueryModule {
       SELECT id, CAST(min(h) AS BIGINT) AS hop
       FROM bfs GROUP BY id ORDER BY id"""),
       bench = true) { (s, dir) =>
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_partkey")
-        .distinct()
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-        .distinct()
-      val edges = pairs.unionByName(
-          pairs.select(col("dst").as("src"), col("src").as("dst")))
+      val pairs = coOrderEdges(s, dir, "l_partkey")
+      val edges = symmetric(pairs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val seeds = edges.select(col("src").as("id")).distinct()
         .filter(col("id") % 100 === 0)
@@ -4162,11 +4022,8 @@ object Extensions extends QueryModule {
     // both engines); the oracle's recursive CTE enumerates every ≤3-edge
     // path and min-aggregates after — same bounded-hops answer, but only
     // the frontier form survives a dense 100 TB graph.
-    QueryDef("x8_sssp", Some("""
-      WITH RECURSIVE pr AS (
-        SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+    QueryDef("x8_sssp", Some(s"""
+      WITH RECURSIVE pr AS (${coOrderSql("l_partkey")}
         WHERE a.l_orderkey % 5 = 0),
       eg AS (SELECT src, dst, 1 + (src + dst) % 5 AS w FROM pr
              UNION ALL SELECT dst, src, 1 + (src + dst) % 5 FROM pr),
@@ -4179,15 +4036,9 @@ object Extensions extends QueryModule {
       SELECT id, CAST(min(d) AS BIGINT) AS dist
       FROM sp GROUP BY id ORDER BY id"""),
       bench = true) { (s, dir) =>
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_orderkey") % 5 === 0)
-        .select("l_orderkey", "l_partkey").distinct()
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-        .distinct()
-      val edges = pairs.unionByName(
-          pairs.select(col("dst").as("src"), col("src").as("dst")))
+      val pairs = coOrderEdges(s, dir, "l_partkey",
+        Some(col("l_orderkey") % 5 === 0))
+      val edges = symmetric(pairs)
         .withColumn("w", lit(1L) + (col("src") + col("dst")) % 5)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val seeds = edges.select(col("src").as("id")).distinct()
@@ -4202,11 +4053,8 @@ object Extensions extends QueryModule {
     // node: landmarks reaching it within 2 hops, exact hop sum, one IEEE
     // division. The oracle enumerates every <=2-hop path per landmark and
     // min-aggregates.
-    QueryDef("x8_closeness", Some("""
-      WITH RECURSIVE pr AS (
-        SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+    QueryDef("x8_closeness", Some(s"""
+      WITH RECURSIVE pr AS (${coOrderSql("l_partkey")}
         WHERE a.l_orderkey % 5 = 0),
       eg AS (SELECT src, dst FROM pr UNION ALL SELECT dst, src FROM pr),
       lms AS (SELECT DISTINCT src AS lm FROM eg WHERE src % 100 = 0),
@@ -4222,15 +4070,9 @@ object Extensions extends QueryModule {
              THEN CAST(count(*) AS DOUBLE) / CAST(sum(h) AS DOUBLE)
         END AS closeness
       FROM m GROUP BY id ORDER BY id""")) { (s, dir) =>
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_orderkey") % 5 === 0)
-        .select("l_orderkey", "l_partkey").distinct()
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-        .distinct()
-      val edges = pairs.unionByName(
-          pairs.select(col("dst").as("src"), col("src").as("dst")))
+      val pairs = coOrderEdges(s, dir, "l_partkey",
+        Some(col("l_orderkey") % 5 === 0))
+      val edges = symmetric(pairs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val lms = edges.select(col("src").as("id")).distinct()
         .filter(col("id") % 100 === 0)
@@ -4245,10 +4087,7 @@ object Extensions extends QueryModule {
     // a WindowGroupLimit arg-min per walker. Oracle unrolls the three
     // steps as CTEs with the same hash arg-min.
     QueryDef("x8_walk", Some(s"""
-      WITH pr AS (
-        SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+      WITH pr AS (${coOrderSql("l_partkey")}
         WHERE a.l_orderkey % 5 = 0),
       eg AS (SELECT src, dst FROM pr UNION ALL SELECT dst, src FROM pr),
       s0 AS (SELECT DISTINCT src AS walker, src AS cur FROM eg
@@ -4267,15 +4106,9 @@ object Extensions extends QueryModule {
         ${(1 to 3).map(t =>
           s"UNION ALL SELECT walker, $t, cur FROM s$t").mkString("\n        ")})
       ORDER BY walker, step""")) { (s, dir) =>
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_orderkey") % 5 === 0)
-        .select("l_orderkey", "l_partkey").distinct()
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-        .distinct()
-      val edges = pairs.unionByName(
-          pairs.select(col("dst").as("src"), col("src").as("dst")))
+      val pairs = coOrderEdges(s, dir, "l_partkey",
+        Some(col("l_orderkey") % 5 === 0))
+      val edges = symmetric(pairs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val seeds = edges.select(col("src").as("id")).distinct()
         .filter(col("id") % 100 === 0)
@@ -4402,21 +4235,9 @@ object Extensions extends QueryModule {
     // merged, freq) hash-gates.
     QueryDef("x5_bpe_vocab", Some(s"""
       WITH t0 AS (SELECT doc_id, text FROM documents),
-      ${(1 to 4).map { r =>
-        s"""sh$r AS (
-        SELECT array_to_string(toks[i:i+1],' ') AS pair
-        FROM (SELECT string_split(text,' ') AS toks FROM t${r - 1}) dd,
-             LATERAL (SELECT unnest(range(1, greatest(len(dd.toks),1))) AS i) ii),
-      b$r AS (SELECT CAST($r AS BIGINT) AS rank, pair,
+      ${bpeRounds(r => s"""CAST($r AS BIGINT) AS rank, pair,
                      replace(pair, ' ', '_') AS merged,
-                     CAST(c AS BIGINT) AS freq
-              FROM (SELECT pair, count(*) AS c FROM sh$r GROUP BY 1)
-              ORDER BY c DESC, pair LIMIT 1),
-      t$r AS (SELECT doc_id,
-                     replace(text, coalesce((SELECT pair FROM b$r), ''),
-                             coalesce((SELECT merged FROM b$r), '')) AS text
-              FROM t${r - 1})"""
-      }.mkString(",\n      ")}
+                     CAST(c AS BIGINT) AS freq""", "doc_id,")}
       SELECT rank, pair, merged, freq FROM (
         SELECT * FROM b1 UNION ALL SELECT * FROM b2
         UNION ALL SELECT * FROM b3 UNION ALL SELECT * FROM b4)
@@ -4433,19 +4254,7 @@ object Extensions extends QueryModule {
     // token counts hash-gate the compression the vocab bought.
     QueryDef("x5_bpe_encode", Some(s"""
       WITH t0 AS (SELECT doc_id, text FROM documents),
-      ${(1 to 4).map { r =>
-        s"""sh$r AS (
-        SELECT array_to_string(toks[i:i+1],' ') AS pair
-        FROM (SELECT string_split(text,' ') AS toks FROM t${r - 1}) dd,
-             LATERAL (SELECT unnest(range(1, greatest(len(dd.toks),1))) AS i) ii),
-      b$r AS (SELECT pair, replace(pair, ' ', '_') AS merged
-              FROM (SELECT pair, count(*) AS c FROM sh$r GROUP BY 1)
-              ORDER BY c DESC, pair LIMIT 1),
-      t$r AS (SELECT doc_id,
-                     replace(text, coalesce((SELECT pair FROM b$r), ''),
-                             coalesce((SELECT merged FROM b$r), '')) AS text
-              FROM t${r - 1})"""
-      }.mkString(",\n      ")}
+      ${bpeRounds(bpeMerge, "doc_id,")}
       SELECT t0.doc_id, t4.text AS text_encoded,
              CAST(len(string_split(t0.text, ' ')) AS BIGINT) AS n_tokens_raw,
              CAST(len(string_split(t4.text, ' ')) AS BIGINT)
@@ -4453,12 +4262,7 @@ object Extensions extends QueryModule {
       FROM t0 JOIN t4 ON t0.doc_id = t4.doc_id
       ORDER BY t0.doc_id LIMIT 100""")) { (s, dir) =>
       val docs = t(s, dir, "documents")
-      // Bounded collect by contract: the learned merge table is exactly
-      // rounds=4 rows (rank, pair, merged, freq).
-      val vocab = TextOps.bpeLearnVocab(docs, "doc_id", "text", rounds = 4)
-        .orderBy("rank").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      TextOps.bpeEncode(docs, "text", vocab)
+      TextOps.bpeEncode(docs, "text", bpeVocab(docs))
         .select(col("doc_id"), col("text_encoded"), col("n_tokens_raw"),
           col("n_tokens_encoded"))
         .orderBy("doc_id").limit(100)
@@ -4472,19 +4276,7 @@ object Extensions extends QueryModule {
     // recurrence; one IEEE division per language.
     QueryDef("x5_bpe_fertility", Some(s"""
       WITH t0 AS (SELECT doc_id, lang, text FROM documents),
-      ${(1 to 4).map { r =>
-        s"""sh$r AS (
-        SELECT array_to_string(toks[i:i+1],' ') AS pair
-        FROM (SELECT string_split(text,' ') AS toks FROM t${r - 1}) dd,
-             LATERAL (SELECT unnest(range(1, greatest(len(dd.toks),1))) AS i) ii),
-      b$r AS (SELECT pair, replace(pair, ' ', '_') AS merged
-              FROM (SELECT pair, count(*) AS c FROM sh$r GROUP BY 1)
-              ORDER BY c DESC, pair LIMIT 1),
-      t$r AS (SELECT doc_id, lang,
-                     replace(text, coalesce((SELECT pair FROM b$r), ''),
-                             coalesce((SELECT merged FROM b$r), '')) AS text
-              FROM t${r - 1})"""
-      }.mkString(",\n      ")}
+      ${bpeRounds(bpeMerge, "doc_id, lang,")}
       SELECT t0.lang, CAST(count(*) AS BIGINT) AS n_docs,
              CAST(sum(len(string_split(t0.text, ' '))) AS BIGINT)
                AS sum_raw,
@@ -4496,11 +4288,7 @@ object Extensions extends QueryModule {
       FROM t0 JOIN t4 ON t0.doc_id = t4.doc_id
       GROUP BY t0.lang ORDER BY t0.lang""")) { (s, dir) =>
       val docs = t(s, dir, "documents")
-      // Bounded collect by contract: the merge table is rounds=4 rows.
-      val vocab = TextOps.bpeLearnVocab(docs, "doc_id", "text", rounds = 4)
-        .orderBy("rank").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      TextOps.bpeEncode(docs, "text", vocab)
+      TextOps.bpeEncode(docs, "text", bpeVocab(docs))
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),
           sum("n_tokens_raw").as("sum_raw"),
@@ -4744,16 +4532,9 @@ object Extensions extends QueryModule {
     // anything. Counts are exact; the rate is one integer division. No
     // score sums (double→decimal casts are not engine-portable), so the
     // whole diagram gates.
-    QueryDef("x9_calibration", Some("""
+    QueryDef("x9_calibration", Some(s"""
       WITH scored AS (
-        SELECT CAST(floor(
-          -2.0 + 3.0 * (CAST(len(list_distinct(string_split(text,' '))) AS DOUBLE)
-                        / CAST(len(string_split(text,' ')) AS DOUBLE))
-               + 5.0 * (CAST(len(list_filter(string_split(text,' '),
-                          tk -> tk IN ('the','a','of','and','to','is'))) AS DOUBLE)
-                        / CAST(len(string_split(text,' ')) AS DOUBLE))
-               + 0.25 * (CAST(length(text) - len(string_split(text,' ')) + 1 AS DOUBLE)
-                         / CAST(len(string_split(text,' ')) AS DOUBLE))) AS BIGINT)
+        SELECT CAST(floor($qualityScoreSql) AS BIGINT)
           AS bin,
           CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
         FROM documents)
@@ -4762,9 +4543,7 @@ object Extensions extends QueryModule {
              CAST(sum(pos) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS frac_pos
       FROM scored GROUP BY bin ORDER BY bin""")) { (s, dir) =>
       spread(t(s, dir, "documents"))
-        .select(floor(TextOps.linearQualityScore(col("text"), bias = -2.0,
-            wTtr = 3.0, wStop = 5.0, wAvgLen = 0.25, stopwords = enStop))
-            .cast("long").as("bin"),
+        .select(floor(qualityScore(col("text"))).cast("long").as("bin"),
           when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
         .groupBy("bin")
         .agg(count(lit(1)).as("n"), sum("pos").as("n_pos"))
@@ -4901,16 +4680,9 @@ object Extensions extends QueryModule {
     // standard tie correction — exact integer numerator, one final
     // division, cumulative window on the grid-sized histogram. The rank
     // metric that normally can't hash-gate, gating.
-    QueryDef("x9_auc", Some("""
+    QueryDef("x9_auc", Some(s"""
       WITH scored AS (
-        SELECT CAST(floor(100.0 * (
-          -2.0 + 3.0 * (CAST(len(list_distinct(string_split(text,' '))) AS DOUBLE)
-                        / CAST(len(string_split(text,' ')) AS DOUBLE))
-               + 5.0 * (CAST(len(list_filter(string_split(text,' '),
-                          tk -> tk IN ('the','a','of','and','to','is'))) AS DOUBLE)
-                        / CAST(len(string_split(text,' ')) AS DOUBLE))
-               + 0.25 * (CAST(length(text) - len(string_split(text,' ')) + 1 AS DOUBLE)
-                         / CAST(len(string_split(text,' ')) AS DOUBLE)))) AS BIGINT)
+        SELECT CAST(floor(100.0 * ($qualityScoreSql)) AS BIGINT)
           AS bin,
           CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
         FROM documents),
@@ -4926,8 +4698,7 @@ object Extensions extends QueryModule {
              CAST(sum(2 * nn_below * np + nn * np) AS DOUBLE)
                / CAST(2 * sum(np) * sum(nn) AS DOUBLE) AS auc
       FROM cum""")) { (s, dir) =>
-      val score = TextOps.linearQualityScore(col("text"), bias = -2.0,
-        wTtr = 3.0, wStop = 5.0, wAvgLen = 0.25, stopwords = enStop)
+      val score = qualityScore(col("text"))
       graft.operators.Stats.aucOnGrid(
         spread(t(s, dir, "documents")).select(
           floor(lit(100.0) * score).cast("long").as("bin"),
@@ -4940,22 +4711,7 @@ object Extensions extends QueryModule {
     // three class tables are |classes|-sized; precision and recall are
     // single exact-integer divisions, F1 one fixed-shape expression over
     // them — identical IEEE evaluation in both engines.
-    QueryDef("x9_prf", Some("""
-      WITH scored AS (
-        SELECT lang,
-          len(list_filter(string_split(text,' '), tk -> tk IN ('the','a','of','and','to','is'))) AS s_en,
-          len(list_filter(string_split(text,' '), tk -> tk IN ('el','la','de','y','que','es'))) AS s_es,
-          len(list_filter(string_split(text,' '), tk -> tk IN ('le','les','des','et','une','est'))) AS s_fr,
-          len(list_filter(string_split(text,' '), tk -> tk IN ('der','die','das','und','ist','ein'))) AS s_de
-        FROM documents),
-      pred AS (
-        SELECT lang,
-          CASE WHEN s_en > 0 AND s_en >= greatest(s_en,s_es,s_fr,s_de) THEN 'en'
-               WHEN s_es > 0 AND s_es >= greatest(s_en,s_es,s_fr,s_de) THEN 'es'
-               WHEN s_fr > 0 AND s_fr >= greatest(s_en,s_es,s_fr,s_de) THEN 'fr'
-               WHEN s_de > 0 AND s_de >= greatest(s_en,s_es,s_fr,s_de) THEN 'de'
-               ELSE 'und' END AS predicted
-        FROM scored),
+    QueryDef("x9_prf", Some(s"""$langIdPredCte,
       act AS (SELECT lang, count(*) AS act_n FROM pred GROUP BY 1),
       prd AS (SELECT predicted, count(*) AS pred_n FROM pred GROUP BY 1),
       tp AS (SELECT lang, count(*) AS tp FROM pred
@@ -4975,9 +4731,7 @@ object Extensions extends QueryModule {
              CASE WHEN p + r = CAST(0 AS DOUBLE) THEN CAST(0 AS DOUBLE)
                   ELSE 2 * p * r / (p + r) END AS f1
       FROM pr ORDER BY lang""")) { (s, dir) =>
-      val pred = spread(t(s, dir, "documents"))
-        .select(col("lang"),
-          TextOps.langId(TextOps.tokens(col("text"))).as("predicted"))
+      val pred = langIdPred(s, dir)
       val act = pred.groupBy("lang").agg(count(lit(1)).as("act_n"))
       val prd = pred.groupBy("predicted").agg(count(lit(1)).as("pred_n"))
       val tp = pred.filter(col("lang") === col("predicted"))
@@ -5203,42 +4957,7 @@ object Extensions extends QueryModule {
     // gate SFs (322k rows at sf0.01, 16 at sf0.1), so the 10x oracle
     // sweep carries non-empty evidence; a production corpus re-derives
     // the cut from its own d̄²/n.
-    QueryDef("x8_linkpred", Some("""
-      WITH pr AS (
-        SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-      eg AS (SELECT src, dst FROM pr
-             UNION ALL SELECT dst AS src, src AS dst FROM pr),
-      deg AS (SELECT src AS id, count(*) AS d FROM eg GROUP BY 1),
-      w AS (SELECT a.src AS z, a.dst AS u, b.dst AS v
-            FROM eg a JOIN eg b ON a.src = b.src AND a.dst < b.dst),
-      sc AS (SELECT u, v, CAST(count(*) AS BIGINT) AS cn,
-               CAST(sum(1000000000 // dz.d) AS BIGINT) AS ra
-             FROM w JOIN deg dz ON w.z = dz.id
-             GROUP BY u, v HAVING count(*) >= 10),
-      ne AS (SELECT sc.* FROM sc LEFT JOIN pr
-               ON pr.src = sc.u AND pr.dst = sc.v
-             WHERE pr.src IS NULL)
-      SELECT ne.u, ne.v, ne.cn, ne.ra,
-             CAST(CAST(CAST(du.d AS DECIMAL(38,0)) * dv.d AS DECIMAL(38,0))
-               AS VARCHAR) AS pa
-      FROM ne JOIN deg du ON du.id = ne.u
-              JOIN deg dv ON dv.id = ne.v
-      ORDER BY u, v""")) { (s, dir) =>
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_partkey")
-        .distinct()
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-        .distinct()
-      // pa (degree product) stays DECIMAL(38,0) inside the operator —
-      // hub degrees overflow BIGINT at scale — but the GATE renders it
-      // as a string (SURVEY §5.2 output-type contract).
-      graft.operators.Graph.linkPredict(pairs, minCommon = 10)
-        .withColumn("pa", col("pa").cast("string"))
-        .orderBy("u", "v")
-    },
+    linkPredGate("x8_linkpred", s4 = false, minCommon = 10),
 
     // Oracle-replayable link-prediction companion (same
     // Graph.linkPredict code path): the FULL x8_linkpred sf1 oracle
@@ -5251,44 +4970,7 @@ object Extensions extends QueryModule {
     // max cn on the subgraph: 10 at sf0.01, 5 at sf0.1) — 3 keeps the
     // sweep non-empty at all three gate scales (28186 rows at sf0.01,
     // 12207 at sf0.1, measured in DuckDB).
-    QueryDef("x8_linkpred_s4", Some("""
-      WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem
-                  WHERE l_partkey % 4 = 0),
-      pr AS (
-        SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-      eg AS (SELECT src, dst FROM pr
-             UNION ALL SELECT dst AS src, src AS dst FROM pr),
-      deg AS (SELECT src AS id, count(*) AS d FROM eg GROUP BY 1),
-      w AS (SELECT a.src AS z, a.dst AS u, b.dst AS v
-            FROM eg a JOIN eg b ON a.src = b.src AND a.dst < b.dst),
-      sc AS (SELECT u, v, CAST(count(*) AS BIGINT) AS cn,
-               CAST(sum(1000000000 // dz.d) AS BIGINT) AS ra
-             FROM w JOIN deg dz ON w.z = dz.id
-             GROUP BY u, v HAVING count(*) >= 3),
-      ne AS (SELECT sc.* FROM sc LEFT JOIN pr
-               ON pr.src = sc.u AND pr.dst = sc.v
-             WHERE pr.src IS NULL)
-      SELECT ne.u, ne.v, ne.cn, ne.ra,
-             CAST(CAST(CAST(du.d AS DECIMAL(38,0)) * dv.d AS DECIMAL(38,0))
-               AS VARCHAR) AS pa
-      FROM ne JOIN deg du ON du.id = ne.u
-              JOIN deg dv ON dv.id = ne.v
-      ORDER BY u, v""")) { (s, dir) =>
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_partkey")
-        .filter(col("l_partkey") % 4 === 0)
-        .distinct()
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-        .distinct()
-      // pa rendered as string per the SURVEY §5.2 contract, as in the
-      // parent gate.
-      graft.operators.Graph.linkPredict(pairs, minCommon = 3)
-        .withColumn("pa", col("pa").cast("string"))
-        .orderBy("u", "v")
-    },
+    linkPredGate("x8_linkpred_s4", s4 = true, minCommon = 3),
 
     // Exact lag-1 autocorrelation per event type (Stats.autocorrInt):
     // the n²-scaled identity clears the FP mean out of the textbook
@@ -5473,22 +5155,7 @@ object Extensions extends QueryModule {
     // is rational in the confusion counts ((n·a − Σrow·col)/(n² −
     // Σrow·col)), so the single-division statistic hash-gates where an
     // FP-accumulated version would not.
-    QueryDef("x9_kappa", Some("""
-      WITH scored AS (
-        SELECT lang,
-          len(list_filter(string_split(text,' '), tk -> tk IN ('the','a','of','and','to','is'))) AS s_en,
-          len(list_filter(string_split(text,' '), tk -> tk IN ('el','la','de','y','que','es'))) AS s_es,
-          len(list_filter(string_split(text,' '), tk -> tk IN ('le','les','des','et','une','est'))) AS s_fr,
-          len(list_filter(string_split(text,' '), tk -> tk IN ('der','die','das','und','ist','ein'))) AS s_de
-        FROM documents),
-      pred AS (
-        SELECT lang,
-          CASE WHEN s_en > 0 AND s_en >= greatest(s_en,s_es,s_fr,s_de) THEN 'en'
-               WHEN s_es > 0 AND s_es >= greatest(s_en,s_es,s_fr,s_de) THEN 'es'
-               WHEN s_fr > 0 AND s_fr >= greatest(s_en,s_es,s_fr,s_de) THEN 'fr'
-               WHEN s_de > 0 AND s_de >= greatest(s_en,s_es,s_fr,s_de) THEN 'de'
-               ELSE 'und' END AS predicted
-        FROM scored),
+    QueryDef("x9_kappa", Some(s"""$langIdPredCte,
       cells AS (SELECT lang AS la, predicted AS lb, count(*) AS c
                 FROM pred GROUP BY 1, 2),
       tot AS (SELECT sum(c) AS n FROM cells),
@@ -5503,9 +5170,7 @@ object Extensions extends QueryModule {
                THEN CAST(n * agree - chance_num AS DOUBLE)
                   / CAST(n * n - chance_num AS DOUBLE) END AS kappa
       FROM tot, ag, ch ORDER BY n""")) { (s, dir) =>
-      val pred = spread(t(s, dir, "documents"))
-        .select(col("lang"),
-          TextOps.langId(TextOps.tokens(col("text"))).as("predicted"))
+      val pred = langIdPred(s, dir)
       // chance_num (marginal product sum) stays DECIMAL(38,0) inside the
       // operator — it overflows BIGINT past ~3e9 rows — but the GATE
       // renders it as a string (SURVEY §5.2 output-type contract).
@@ -5521,15 +5186,7 @@ object Extensions extends QueryModule {
     // candidates. Candidate volume is O(n·window) by construction — no
     // posting-list skew can blow it up.
     QueryDef("x2_sorted_nbr", Some(s"""
-      WITH $shCte,
-      ord AS (SELECT doc_id, lang,
-                row_number() OVER (PARTITION BY lang
-                  ORDER BY substr(text, 1, 24), doc_id) AS rn
-              FROM documents),
-      cand AS (SELECT least(a.doc_id, b.doc_id) AS da,
-                      greatest(a.doc_id, b.doc_id) AS db
-               FROM ord a JOIN ord b
-                 ON a.lang = b.lang AND b.rn > a.rn AND b.rn <= a.rn + 8),
+      WITH $shCte,$snmCandCte,
       j AS (SELECT c.da, c.db,
               CAST(i.ni AS DOUBLE) / (ca.n_sh + cb.n_sh - i.ni) AS jacc
             FROM cand c JOIN inter i ON i.da = c.da AND i.db = c.db
@@ -5645,20 +5302,7 @@ object Extensions extends QueryModule {
     // cell, the threshold is a codegen residual; no ranking shuffle
     // exists. The oracle replays the same 8-cell / nprobe=2 probe, so
     // the gate pins the IVF recall contract, not brute force.
-    QueryDef("x3_radius", Some("""
-      WITH ctr AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
-                   FROM embeddings WHERE vec_id < 8),
-      v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-      asn AS (SELECT v.vec_id, vv, cid,
-                row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                  list_dot_product(vv, cv)
-                    / sqrt(list_dot_product(vv, vv) * list_dot_product(cv, cv))
-                    DESC, cid) AS rk
-              FROM v, ctr),
-      cell AS (SELECT vec_id, vv, cid AS cell FROM asn WHERE rk = 1),
-      q AS (SELECT vec_id AS qid, vv AS qv, cid AS cell FROM asn
-            WHERE vec_id < 10 AND rk <= 2),
-      c AS (SELECT vec_id AS nid, vv AS cv2, cell FROM cell WHERE vec_id >= 10)
+    QueryDef("x3_radius", Some(s"""$ivfProbeCte
       SELECT qid, nid,
              list_dot_product(qv, cv2)
                / sqrt(list_dot_product(qv, qv) * list_dot_product(cv2, cv2))
@@ -5720,31 +5364,7 @@ object Extensions extends QueryModule {
     // over x8_labelprop's partition): Q is rational in edge counts —
     // Σ_c(4·m·e_c − d_c²) / (4m²) — so the community-quality score itself
     // hash-gates. The oracle replays two LPA rounds then the exact sum.
-    QueryDef("x8_modularity", Some("""
-      WITH pr AS (
-        SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
-      eg AS (SELECT src, dst FROM pr
-             UNION ALL SELECT dst AS src, src AS dst FROM pr),
-      nodes AS (SELECT DISTINCT src AS id FROM eg),
-      l0 AS (SELECT id, id AS label FROM nodes),
-      n1 AS (SELECT e.dst AS id, l.label, count(*) AS c
-             FROM eg e JOIN l0 l ON l.id = e.src GROUP BY 1, 2),
-      t1 AS (SELECT id, label FROM (
-               SELECT id, label,
-                 row_number() OVER (PARTITION BY id
-                   ORDER BY c DESC, label) AS rn FROM n1) WHERE rn = 1),
-      l1 AS (SELECT l0.id, coalesce(t1.label, l0.label) AS label
-             FROM l0 LEFT JOIN t1 ON t1.id = l0.id),
-      n2 AS (SELECT e.dst AS id, l.label, count(*) AS c
-             FROM eg e JOIN l1 l ON l.id = e.src GROUP BY 1, 2),
-      t2 AS (SELECT id, label FROM (
-               SELECT id, label,
-                 row_number() OVER (PARTITION BY id
-                   ORDER BY c DESC, label) AS rn FROM n2) WHERE rn = 1),
-      l2 AS (SELECT l1.id, coalesce(t2.label, l1.label) AS label
-             FROM l1 LEFT JOIN t2 ON t2.id = l1.id),
+    QueryDef("x8_modularity", Some(s"""$labelPropCte,
       lp AS (SELECT p.src, p.dst, a.label AS ls, b.label AS ld
              FROM pr p JOIN l2 a ON a.id = p.src
                        JOIN l2 b ON b.id = p.dst),
@@ -5762,14 +5382,8 @@ object Extensions extends QueryModule {
              CAST(sum(t) AS DOUBLE)
                / CAST(4 * CAST(m AS HUGEINT) * m AS DOUBLE) AS q
       FROM tm GROUP BY m ORDER BY m""")) { (s, dir) =>
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        .distinct()
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_suppkey") < col("b.l_suppkey"))
-        .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
-        .distinct()
-      val edges = pairs.unionByName(
-        pairs.select(col("dst").as("src"), col("src").as("dst")))
+      val pairs = coOrderEdges(s, dir, "l_suppkey")
+      val edges = symmetric(pairs)
       val labels = graft.operators.Graph.labelPropagate(edges, rounds = 2)
       graft.operators.Graph.modularityInt(pairs, labels).orderBy("m")
     },
@@ -5834,11 +5448,8 @@ object Extensions extends QueryModule {
     // count, internal edges, volume, cut and φ = cut/min(vol, 2m−vol)
     // per community — cut and the min are exact integers, one division
     // ends it, so the whole structure report hash-gates.
-    QueryDef("x8_conductance", Some("""
-      WITH pr AS (
-        SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
+    QueryDef("x8_conductance", Some(s"""
+      WITH pr AS (${coOrderSql("l_suppkey")}),
       lb AS (SELECT s_suppkey AS id, CAST(s_nationkey AS BIGINT) AS label
              FROM supplier),
       lp AS (SELECT la.label AS ls, bb.label AS ld
@@ -5862,12 +5473,7 @@ object Extensions extends QueryModule {
                   / CAST(least(dc.vol, 2 * m - dc.vol) AS DOUBLE) END AS phi
       FROM nn JOIN dc USING (label) LEFT JOIN ec USING (label), mm
       ORDER BY label""")) { (s, dir) =>
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        .distinct()
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_suppkey") < col("b.l_suppkey"))
-        .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
-        .distinct()
+      val pairs = coOrderEdges(s, dir, "l_suppkey")
       val labels = t(s, dir, "supplier")
         .select(col("s_suppkey").as("id"),
           col("s_nationkey").cast("long").as("label"))
@@ -5910,15 +5516,7 @@ object Extensions extends QueryModule {
       tr AS (SELECT i.da, i.db FROM inter i
              JOIN cnt ca ON ca.doc_id = i.da
              JOIN cnt cb ON cb.doc_id = i.db
-             WHERE CAST(i.ni AS DOUBLE) / (ca.n_sh + cb.n_sh - i.ni) >= 0.6),
-      ord AS (SELECT doc_id, lang,
-                row_number() OVER (PARTITION BY lang
-                  ORDER BY substr(text, 1, 24), doc_id) AS rn
-              FROM documents),
-      cand AS (SELECT least(a.doc_id, b.doc_id) AS da,
-                      greatest(a.doc_id, b.doc_id) AS db
-               FROM ord a JOIN ord b
-                 ON a.lang = b.lang AND b.rn > a.rn AND b.rn <= a.rn + 8),
+             WHERE CAST(i.ni AS DOUBLE) / (ca.n_sh + cb.n_sh - i.ni) >= 0.6),$snmCandCte,
       fo AS (SELECT c.da, c.db FROM cand c JOIN tr USING (da, db))
       SELECT CAST(t.n AS BIGINT) AS n_truth, CAST(f.n AS BIGINT) AS n_found,
              CASE WHEN t.n > 0
@@ -5936,22 +5534,11 @@ object Extensions extends QueryModule {
     // reduces to exact (n, Σx, Σx²) on the grid; t is ONE fixed-shape
     // IEEE expression over single divisions of exact integers, so the
     // statistic hash-gates.
-    QueryDef("x9_ttest", Some("""
+    QueryDef("x9_ttest", Some(s"""
       WITH g AS (SELECT CAST(date_trunc('day', ts) AS DATE) AS d, event_type,
                    CAST(floor(value * 10000) AS BIGINT) AS x
                  FROM events WHERE event_type IN ('view', 'purchase')),
-      a AS (SELECT d,
-              sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS n1,
-              sum(CASE WHEN event_type = 'view'
-                    THEN CAST(x AS HUGEINT) END) AS s1,
-              sum(CASE WHEN event_type = 'view'
-                    THEN CAST(x AS HUGEINT) * CAST(x AS HUGEINT) END) AS ss1,
-              sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS n2,
-              sum(CASE WHEN event_type = 'purchase'
-                    THEN CAST(x AS HUGEINT) END) AS s2,
-              sum(CASE WHEN event_type = 'purchase'
-                    THEN CAST(x AS HUGEINT) * CAST(x AS HUGEINT) END) AS ss2
-            FROM g GROUP BY 1)
+      a AS (SELECT d,$viewPurchaseMoments
       SELECT d, CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
         CASE WHEN n1 > 1 AND n2 > 1
                AND (n1 * ss1 - s1 * s1 > 0 OR n2 * ss2 - s2 * s2 > 0)
@@ -6022,22 +5609,11 @@ object Extensions extends QueryModule {
     // ship/no-ship magnitude companion to x9_ttest's significance
     // (t inflates with n, d does not). Same exact-moment machinery,
     // one fixed IEEE tree per day.
-    QueryDef("x9_cohens_d", Some("""
+    QueryDef("x9_cohens_d", Some(s"""
       WITH g AS (SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
                    event_type, CAST(floor(value * 10000) AS BIGINT) AS x
                  FROM events WHERE event_type IN ('view', 'purchase')),
-      a AS (SELECT day,
-              sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS n1,
-              sum(CASE WHEN event_type = 'view'
-                    THEN CAST(x AS HUGEINT) END) AS s1,
-              sum(CASE WHEN event_type = 'view'
-                    THEN CAST(x AS HUGEINT) * CAST(x AS HUGEINT) END) AS ss1,
-              sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS n2,
-              sum(CASE WHEN event_type = 'purchase'
-                    THEN CAST(x AS HUGEINT) END) AS s2,
-              sum(CASE WHEN event_type = 'purchase'
-                    THEN CAST(x AS HUGEINT) * CAST(x AS HUGEINT) END) AS ss2
-            FROM g GROUP BY 1)
+      a AS (SELECT day,$viewPurchaseMoments
       SELECT day, CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
         CASE WHEN n1 > 1 AND n2 > 1
                AND (n1 * ss1 - s1 * s1 > 0 OR n2 * ss2 - s2 * s2 > 0)
@@ -6181,10 +5757,7 @@ object Extensions extends QueryModule {
     // location test — exact-integer grand median from the value
     // histogram, then the chiSquareAssoc lattice-deterministic χ² over
     // the group × above-median table.
-    QueryDef("x9_mediantest", Some("""
-      WITH base AS (SELECT l_returnflag AS g,
-                      CAST(floor(l_quantity) AS BIGINT) AS v
-                    FROM lineitem),
+    QueryDef("x9_mediantest", Some(s"""$flagQtyCte
       vh AS (SELECT v, count(*) AS c FROM base GROUP BY v),
       m AS (SELECT min(v) AS median FROM (
               SELECT v, sum(c) OVER (ORDER BY v) AS cum,
@@ -6192,32 +5765,11 @@ object Extensions extends QueryModule {
             WHERE cum * 2 >= nn),
       fl AS (SELECT g, CASE WHEN base.v > m.median THEN 1 ELSE 0 END AS b
              FROM base, m),
-      h AS (SELECT g, b, count(*) AS c FROM fl GROUP BY 1, 2),
-      rt AS (SELECT g, sum(c) AS rt FROM h GROUP BY g),
-      ct AS (SELECT b, sum(c) AS ct FROM h GROUP BY b),
-      n AS (SELECT sum(c) AS n FROM h),
-      d AS (SELECT (SELECT count(*) FROM rt) AS r,
-                   (SELECT count(*) FROM ct) AS k),
-      t AS (SELECT CAST(CAST(n.n AS HUGEINT) * h.c - rt.rt * ct.ct
-                        AS DOUBLE) AS dev,
-                   CAST(CAST(n.n AS HUGEINT) * rt.rt * ct.ct
-                        AS DOUBLE) AS den
-            FROM h JOIN rt USING (g) JOIN ct USING (b) CROSS JOIN n),
-      q AS (SELECT coalesce(sum(CAST(floor(dev * dev / den * 1e6)
-                                     AS HUGEINT)), 0) AS q6 FROM t)
-      SELECT m.median, CAST(n.n AS BIGINT) AS n,
-        CAST((d.r - 1) * (d.k - 1) AS BIGINT) AS dof,
-        CAST(q.q6 AS DOUBLE) / 1e6 AS chi2,
-        CASE WHEN n.n > 0 AND least(d.r, d.k) > 1 THEN
-          sqrt((CAST(q.q6 AS DOUBLE) / 1e6)
-               / CAST(CAST(n.n AS HUGEINT) * (least(d.r, d.k) - 1)
-                      AS DOUBLE))
-        END AS v
+      h AS (SELECT g, b, count(*) AS c FROM fl GROUP BY 1, 2),${chiSqCte("g")}
+      SELECT m.median, CAST(n.n AS BIGINT) AS n,$chiSqStats
       FROM m, n, q, d ORDER BY n""")) { (s, dir) =>
       graft.operators.Stats.moodMedianTest(
-          t(s, dir, "lineitem").select(
-            col("l_returnflag").as("g"),
-            floor(col("l_quantity")).cast("long").as("v")),
+          flagQty(s, dir),
           "g", "v")
         .orderBy("n")
     },
@@ -6230,10 +5782,7 @@ object Extensions extends QueryModule {
     // N^6-scale numerators multiply as doubles — one IEEE multiply, not
     // a data-ordered sum), so z hash-gates. jt2 ~ N^2/2 renders as a
     // string per the §5.2 contract.
-    QueryDef("x9_jonckheere", Some("""
-      WITH base AS (SELECT l_returnflag AS g,
-                      CAST(floor(l_quantity) AS BIGINT) AS v
-                    FROM lineitem),
+    QueryDef("x9_jonckheere", Some(s"""$flagQtyCte
       h AS (SELECT g, v, count(*) AS c FROM base GROUP BY 1, 2),
       jt AS (SELECT coalesce(sum(CASE
                WHEN a.v < b.v THEN 2 * CAST(a.c AS HUGEINT) * b.c
@@ -6269,9 +5818,7 @@ object Extensions extends QueryModule {
         END AS z
       FROM tm, jt, gm ORDER BY n""")) { (s, dir) =>
       graft.operators.Stats.jonckheereTerpstra(
-          t(s, dir, "lineitem").select(
-            col("l_returnflag").as("g"),
-            floor(col("l_quantity")).cast("long").as("v")),
+          flagQty(s, dir),
           "g", "v")
         .orderBy("n")
     },
@@ -6282,10 +5829,7 @@ object Extensions extends QueryModule {
     // exact integers; the one cross-group float sum is floor-quantized
     // to the 1e-6 lattice per the x9_chisq technique, so the
     // tie-corrected H hash-gates.
-    QueryDef("x9_kruskal", Some("""
-      WITH base AS (SELECT l_returnflag AS g,
-                      CAST(floor(l_quantity) AS BIGINT) AS v
-                    FROM lineitem),
+    QueryDef("x9_kruskal", Some(s"""$flagQtyCte
       h AS (SELECT g, v, count(*) AS c FROM base GROUP BY 1, 2),
       tv AS (SELECT v, sum(c) AS t,
                sum(sum(c)) OVER (ORDER BY v) - sum(c) AS cb
@@ -6311,9 +5855,7 @@ object Extensions extends QueryModule {
         END AS h
       FROM n, q, k ORDER BY n""")) { (s, dir) =>
       graft.operators.Stats.kruskalWallisH(
-          t(s, dir, "lineitem").select(
-            col("l_returnflag").as("g"),
-            floor(col("l_quantity")).cast("long").as("v")),
+          flagQty(s, dir),
           "g", "v")
         .orderBy("n")
     },
@@ -6325,31 +5867,12 @@ object Extensions extends QueryModule {
     // double trees over exact DECIMAL/HUGEINT integers, quantized to
     // the 10⁻⁶ lattice via floor (the only rounding mode identical
     // everywhere) and summed exactly, so the total hash-gates.
-    QueryDef("x9_chisq", Some("""
+    QueryDef("x9_chisq", Some(s"""
       WITH base AS (SELECT CAST(floor(l_quantity) AS BIGINT) AS a,
                       CAST(floor(l_discount * 100) AS BIGINT) AS b
                     FROM lineitem),
-      h AS (SELECT a, b, count(*) AS c FROM base GROUP BY 1, 2),
-      rt AS (SELECT a, sum(c) AS rt FROM h GROUP BY a),
-      ct AS (SELECT b, sum(c) AS ct FROM h GROUP BY b),
-      n AS (SELECT sum(c) AS n FROM h),
-      d AS (SELECT (SELECT count(*) FROM rt) AS r,
-                   (SELECT count(*) FROM ct) AS k),
-      t AS (SELECT CAST(CAST(n.n AS HUGEINT) * h.c - rt.rt * ct.ct
-                        AS DOUBLE) AS dev,
-                   CAST(CAST(n.n AS HUGEINT) * rt.rt * ct.ct
-                        AS DOUBLE) AS den
-            FROM h JOIN rt USING (a) JOIN ct USING (b) CROSS JOIN n),
-      q AS (SELECT coalesce(sum(CAST(floor(dev * dev / den * 1e6)
-                                     AS HUGEINT)), 0) AS q6 FROM t)
-      SELECT CAST(n.n AS BIGINT) AS n,
-        CAST((d.r - 1) * (d.k - 1) AS BIGINT) AS dof,
-        CAST(q.q6 AS DOUBLE) / 1e6 AS chi2,
-        CASE WHEN n.n > 0 AND least(d.r, d.k) > 1 THEN
-          sqrt((CAST(q.q6 AS DOUBLE) / 1e6)
-               / CAST(CAST(n.n AS HUGEINT) * (least(d.r, d.k) - 1)
-                      AS DOUBLE))
-        END AS v
+      h AS (SELECT a, b, count(*) AS c FROM base GROUP BY 1, 2),${chiSqCte("a")}
+      SELECT CAST(n.n AS BIGINT) AS n,$chiSqStats
       FROM n, q, d ORDER BY n""")) { (s, dir) =>
       graft.operators.Stats.chiSquareAssoc(
           t(s, dir, "lineitem").select(
@@ -6464,30 +5987,7 @@ object Extensions extends QueryModule {
     // >= 8 triangles with surviving edges. The oracle unrolls the same
     // recurrence (triangle enumeration on the canonical u<v list, each
     // triangle credited to its three edges).
-    QueryDef("x8_ktruss", Some(s"""
-      WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-      e0 AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-             FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-              AND a.l_partkey < b.l_partkey),
-      ${(1 to 2).map { r =>
-        s"""t$r AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
-             FROM e${r - 1} e1 JOIN e${r - 1} e2 ON e2.u = e1.v
-             JOIN e${r - 1} e3 ON e3.u = e1.u AND e3.v = e2.v),
-      s$r AS (SELECT u, v, count(*) AS sup FROM (
-                SELECT a AS u, b AS v FROM t$r
-                UNION ALL SELECT b AS u, c AS v FROM t$r
-                UNION ALL SELECT a AS u, c AS v FROM t$r) GROUP BY u, v),
-      e$r AS (SELECT u, v, sup FROM s$r WHERE sup >= 8)"""
-      }.mkString(",\n      ")}
-      SELECT u, v, CAST(sup AS BIGINT) AS sup
-      FROM e2 ORDER BY u, v"""), bench = true) { (s, dir) =>
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_partkey")
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-      graft.operators.Graph.kTrussPeel(pairs, k = 10L, rounds = 2)
-        .orderBy("u", "v")
-    },
+    kTrussGate("x8_ktruss", s4 = false, k = 10L),
 
     // Oracle-replayable k-truss companion (same Graph.kTrussPeel code
     // path): the FULL x8_ktruss sf1 oracle exhausts DuckDB's temp disk
@@ -6496,42 +5996,14 @@ object Extensions extends QueryModule {
     // subsample of the co-purchase graph — ~64x fewer triangles, which
     // DuckDB replays at sf1 in ~90 s (60165 rows measured) — making the
     // same code path oracle-checkable at 100x gate scale.
-    QueryDef("x8_ktruss_s4", Some(s"""
-      WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem
-                  WHERE l_partkey % 4 = 0),
-      e0 AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-             FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-              AND a.l_partkey < b.l_partkey),
-      ${(1 to 2).map { r =>
-        s"""t$r AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
-             FROM e${r - 1} e1 JOIN e${r - 1} e2 ON e2.u = e1.v
-             JOIN e${r - 1} e3 ON e3.u = e1.u AND e3.v = e2.v),
-      s$r AS (SELECT u, v, count(*) AS sup FROM (
-                SELECT a AS u, b AS v FROM t$r
-                UNION ALL SELECT b AS u, c AS v FROM t$r
-                UNION ALL SELECT a AS u, c AS v FROM t$r) GROUP BY u, v),
-      e$r AS (SELECT u, v, sup FROM s$r WHERE sup >= 3)"""
-      }.mkString(",\n      ")}
-      SELECT u, v, CAST(sup AS BIGINT) AS sup
-      FROM e2 ORDER BY u, v""")) { (s, dir) =>
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_partkey")
-        .filter(col("l_partkey") % 4 === 0)
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-      graft.operators.Graph.kTrussPeel(pairs, k = 5L, rounds = 2)
-        .orderBy("u", "v")
-    },
+    kTrussGate("x8_ktruss_s4", s4 = true, k = 5L),
 
     // Degree distribution (Graph.degreeHistogram) of the undirected
     // supplier co-purchase graph: nodes per degree + each bucket's
     // share of edge endpoints — the hub-heaviness profile read before
     // choosing skew strategies for the graph family.
-    QueryDef("x8_degree_hist", Some("""
-      WITH pr AS (
-        SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
+    QueryDef("x8_degree_hist", Some(s"""
+      WITH pr AS (${coOrderSql("l_suppkey")}),
       eg AS (SELECT src, dst FROM pr
              UNION ALL SELECT dst, src FROM pr),
       deg AS (SELECT src, count(*) AS d FROM eg GROUP BY src),
@@ -6894,13 +6366,9 @@ object Extensions extends QueryModule {
     // fixed-shape IEEE expression — hubs-link-to-hubs vs hubs-link-to-
     // leaves, the structure diagnostic that predicts join skew over the
     // edge list.
-    QueryDef("x8_assortativity", Some("""
-      WITH pr AS (
-        SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
-      eg AS (SELECT src, dst FROM pr
-             UNION ALL SELECT dst AS src, src AS dst FROM pr),
+    QueryDef("x8_assortativity", Some(s"""
+      WITH pr AS (${coOrderSql("l_suppkey")}),
+      $coOrderEg,
       deg AS (SELECT src AS id, count(*) AS d FROM eg GROUP BY 1),
       j AS (SELECT dj.d AS dj, dk.d AS dk
             FROM eg JOIN deg dj ON dj.id = eg.src
@@ -6917,12 +6385,7 @@ object Extensions extends QueryModule {
              / (sqrt(CAST(m * sjj - sj * sj AS DOUBLE))
                 * sqrt(CAST(m * skk - sk * sk AS DOUBLE))) END AS r
       FROM a ORDER BY m""")) { (s, dir) =>
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        .distinct()
-      val pairs = li.as("a").join(li.as("b"), "l_orderkey")
-        .filter(col("a.l_suppkey") < col("b.l_suppkey"))
-        .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
-        .distinct()
+      val pairs = coOrderEdges(s, dir, "l_suppkey")
       graft.operators.Graph.assortativity(pairs).orderBy("m")
     },
 
@@ -6957,7 +6420,7 @@ object Extensions extends QueryModule {
     // "how many real entities do we have" number. Composes
     // fieldMatchPairs + resolveClusters; oracle replays the match SQL
     // plus a recursive min-label CTE.
-    QueryDef("x2_reclink_resolve", Some("""
+    QueryDef("x2_reclink_resolve", Some(s"""
       WITH RECURSIVE c AS (SELECT c_custkey, c_nationkey, c_mktsegment,
                    floor(c_acctbal / 500) AS band
                  FROM customer),
@@ -6967,12 +6430,7 @@ object Extensions extends QueryModule {
              WHERE (CASE WHEN a.c_mktsegment = b.c_mktsegment THEN 3 ELSE 0 END
                   + CASE WHEN a.band = b.band THEN 2 ELSE 0 END) >= 5),
       eg AS (SELECT da AS src, db AS dst FROM pr
-             UNION ALL SELECT db, da FROM pr),
-      reach(id, r) AS (
-        SELECT c_custkey, c_custkey FROM customer
-        UNION
-        SELECT e.src, rc.r FROM eg e JOIN reach rc ON e.dst = rc.id),
-      cl AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id)
+             UNION ALL SELECT db, da FROM pr),${reachCte("c_custkey", "customer")}$clCte
       SELECT c_nationkey,
              CAST(count(*) AS BIGINT) AS n_records,
              CAST(count(DISTINCT cluster) AS BIGINT) AS n_entities

@@ -461,6 +461,40 @@ class GraphSpec extends SparkSpec {
     assert(run(e.unionAll(rev), 1) == expect)
   }
 
+  test("kTrussPeel: concurrent support jobs stay in the caller's job group") {
+    // supportOf runs two driver jobs on pooled threads. A pooled thread
+    // must not keep the job group of the call that created it: every job
+    // of the second call carries the second call's group.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val e = (for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b))
+      .toDF("src", "dst")
+    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.put(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+    }
+    def inGroup(g: String)(body: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    // Job starts reach the listener in order, so once a fence job's start
+    // arrives every earlier job's start has arrived too.
+    def drainTo(fence: String): Seq[String] = {
+      inGroup(fence)(sc.parallelize(Seq(1)).count())
+      Iterator.continually(groups.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(g => g != null && g != fence).toSeq
+    }
+    sc.addSparkListener(listener)
+    try {
+      inGroup("g1")(Graph.kTrussPeel(e, k = 4L, rounds = 2).collect())
+      drainTo("fence1")
+      inGroup("g2")(Graph.kTrussPeel(e, k = 4L, rounds = 2).collect())
+      val second = drainTo("fence2")
+      assert(second.nonEmpty && second.forall(_ == "g2"), second)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("degreeHistogram: star graph — hub degree n, leaves degree 1") {
     // Undirected star 0-{1,2,3}: hub degree 3, three leaves degree 1.
     // Endpoint mass m = 6: degree 1 share 3/6, degree 3 share 3/6.
