@@ -854,8 +854,7 @@ object Dedup {
     * planning measured 0.7–3 s/round on the old deep-lineage loop —
     * DOMINANT over its 0.3 s execution), stats stay default-sized, and a
     * superseded round's blocks are released as soon as its successor
-    * materializes (the leak discipline the r8 probe showed is
-    * load-bearing).
+    * materializes.
     *
     * Output: (id, cluster) for every doc in `df`, cluster = min id of the
     * doc's connected component.
@@ -894,62 +893,61 @@ object Dedup {
         least(col("da").cast("long"), col("db").cast("long")).as("a"),
         greatest(col("da").cast("long"), col("db").cast("long")).as("b"))
       .filter(col("a") =!= col("b"))
-    var pin = org.apache.spark.sql.graft.FreshCheckpoint.pinned(e0)
-    var e = pin.df
-    var rows = pin.rows
-    var converged = rows == 0L // no edges: every doc is already a singleton
-    var round = 0
-    while (!converged && round < maxRounds) {
-      // Large-star: every current edge (u,v), u < v, is rewired to
-      // (min(N(u) ∪ {u}), v) — one output edge per input edge, computed
-      // from the doubled neighbor view with one aggregate + one equijoin.
-      // Duplicates are NOT collapsed here: the small-star aggregate below
-      // is duplicate-safe under min, and the round's pinned output is
-      // distinct'd once.
-      val nbr = e.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(e.select(col("b").as("u"), col("a").as("v")))
-      val mL = nbr.groupBy("u").agg(min("v").as("mv"))
-        .select(col("u"), least(col("u"), col("mv")).as("m"))
-      val e1 = nbr.join(mL, "u").filter(col("v") > col("u"))
-        .select(col("m").as("a"), col("v").as("b")) // m <= u < v: canonical
-      // Small-star: u and all its smaller neighbors re-attach to their
-      // min. Every node of e1 survives (as a re-attached smaller neighbor,
-      // as the kept min, or via its own (m, u) edge), so no component
-      // member is ever dropped mid-contraction.
-      val nbr1 = e1.select(col("b").as("u"), col("a").as("v")) // v < u
-      val mS = nbr1.groupBy("u").agg(min("v").as("m"))
-      val next = nbr1.join(mS, "u")
-        .filter(col("m") =!= col("v"))
-        .select(col("m").as("a"), col("v").as("b"))
-        .unionByName(mS.select(col("m").as("a"), col("u").as("b")))
-        .distinct()
-      val nextPin = org.apache.spark.sql.graft.FreshCheckpoint.pinned(next)
-      // Fixpoint = exact SET equality with the previous round. The row
-      // count (free from the pin's forcing count) screens; only
-      // count-equal rounds pay the one-job anti-join that PROVES equality
-      // — a count can plateau while edges still churn, and stopping on a
-      // plateau would freeze labels mid-contraction.
-      converged = nextPin.rows == rows &&
-        nextPin.df.join(e, Seq("a", "b"), "left_anti").isEmpty
-      // Predecessor pin retired only now: the successor is materialized
-      // and nothing reads it again (the r8 leak discipline — leaked
-      // checkpoint storage starves later gates; in durable mode release
-      // also reaps the round's checkpoint files so the loop holds one
-      // round on durable storage, not all of them).
-      org.apache.spark.sql.graft.FreshCheckpoint.release(pin)
-      pin = nextPin
-      e = pin.df
-      rows = nextPin.rows
-      round += 1
+    val stars = org.apache.spark.sql.graft.FreshCheckpoint.rounds { r =>
+      var pin = r.pin(e0)
+      var e = pin.df
+      // No edges: every doc is already a singleton.
+      var converged = pin.rows == 0L
+      var round = 0
+      while (!converged && round < maxRounds) {
+        // Large-star: every current edge (u,v), u < v, is rewired to
+        // (min(N(u) ∪ {u}), v) — one output edge per input edge, computed
+        // from the doubled neighbor view with one aggregate + one equijoin.
+        // Duplicates are NOT collapsed here: the small-star aggregate below
+        // is duplicate-safe under min, and the round's pinned output is
+        // distinct'd once.
+        val nbr = e.select(col("a").as("u"), col("b").as("v"))
+          .unionByName(e.select(col("b").as("u"), col("a").as("v")))
+        val mL = nbr.groupBy("u").agg(min("v").as("mv"))
+          .select(col("u"), least(col("u"), col("mv")).as("m"))
+        val e1 = nbr.join(mL, "u").filter(col("v") > col("u"))
+          .select(col("m").as("a"), col("v").as("b")) // m <= u < v: canonical
+        // Small-star: u and all its smaller neighbors re-attach to their
+        // min. Every node of e1 survives (as a re-attached smaller neighbor,
+        // as the kept min, or via its own (m, u) edge), so no component
+        // member is ever dropped mid-contraction.
+        val nbr1 = e1.select(col("b").as("u"), col("a").as("v")) // v < u
+        val mS = nbr1.groupBy("u").agg(min("v").as("m"))
+        val next = nbr1.join(mS, "u")
+          .filter(col("m") =!= col("v"))
+          .select(col("m").as("a"), col("v").as("b"))
+          .unionByName(mS.select(col("m").as("a"), col("u").as("b")))
+          .distinct()
+        val nextPin = r.pin(next)
+        // Fixpoint = exact SET equality with the previous round. The row
+        // count (free from the pin's forcing count) screens; only
+        // count-equal rounds pay the one-job anti-join that PROVES equality
+        // — a count can plateau while edges still churn, and stopping on a
+        // plateau would freeze labels mid-contraction.
+        converged = nextPin.rows == pin.rows &&
+          nextPin.df.join(e, Seq("a", "b"), "left_anti").isEmpty
+        // Predecessor pin retired only now: the successor is materialized
+        // and nothing reads it again.
+        r.release(pin)
+        pin = nextPin
+        e = pin.df
+        round += 1
+      }
+      require(converged,
+        s"star contraction did not converge in $maxRounds rounds")
+      pin
     }
-    require(converged,
-      s"star contraction did not converge in $maxRounds rounds")
     // Fixpoint stars: every non-center node carries exactly one
     // (center, node) edge and centers appear only on the a side. The
     // min-aggregate is defensive (it also collapses the center's
     // duplicate self-rows from the union).
-    val labels = e.select(col("b").as("id"), col("a").as("cluster"))
-      .unionByName(e.select(col("a").as("id"), col("a").as("cluster")))
+    val labels = stars.select(col("b").as("id"), col("a").as("cluster"))
+      .unionByName(stars.select(col("a").as("id"), col("a").as("cluster")))
       .groupBy("id").agg(min("cluster").as("cluster"))
     // Singletons: every doc with no near-dup edge is its own cluster. The
     // final round's pinned blocks stay live — the returned plan reads

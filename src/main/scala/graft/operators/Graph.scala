@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FreshCheckpoint
 
 /** Iterative graph ranking over an edge list — the authority-weighting
   * signal web-corpus curation pipelines attach to documents (rank a page's
@@ -22,25 +23,6 @@ object Graph {
     * identical either way — only the join strategy moves.
     */
   private val frontierBroadcastMaxRows = 1L << 22
-
-  /** The pin-and-release block shared by the frontier loops: `body` gets a
-    * `pin` that persists a DataFrame at MEMORY_AND_DISK and remembers it,
-    * and returns the loop state; that state is materialized eagerly
-    * through FreshCheckpoint, and then EVERY block the call pinned —
-    * including the data-sized edge list — is released, in a `finally` so
-    * an exception cannot leak them into the BlockManager for the session
-    * (the resolveClusters leak discipline: leaked storage measurably
-    * starves later memory-sensitive stages). One live checkpoint (the
-    * result itself, node-sized) remains.
-    */
-  private def pinnedLoop(body: (DataFrame => DataFrame) => DataFrame)
-      : DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val retained = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try org.apache.spark.sql.graft.FreshCheckpoint(
-      body { d => retained += d.persist(lvl); d })
-    finally retained.foreach(_.unpersist(blocking = false))
-  }
 
   /** Multi-source BFS: minimum hop distance from any seed node, bounded at
     * `maxHops`. Classic frontier expansion — per round, one equijoin of the
@@ -64,17 +46,17 @@ object Graph {
     *         unreached within `maxHops` are absent
     */
   def bfsHops(edges: DataFrame, sources: DataFrame, maxHops: Int)
-      : DataFrame = pinnedLoop { pin =>
+      : DataFrame = FreshCheckpoint.rounds { r =>
     require(maxHops >= 0, "maxHops must be >= 0")
     // Loop-invariant operand: persisted (the caller's edge derivation —
     // often a co-purchase self-join — must not re-run per hop) and
     // PRE-PARTITIONED on src, the per-hop join key, so the cached
     // partitioning satisfies the edge-side Exchange in every round and
     // only the frontier shuffles.
-    val e = pin(edges.select(col("src").cast("long").as("src"),
+    val e = r.persist(edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
       .repartition(col("src")))
-    var dist = pin(sources.select(col("id").cast("long").as("id"),
+    var dist = r.persist(sources.select(col("id").cast("long").as("id"),
       lit(0L).as("hop")).distinct())
     var frontier = dist
     // Frontiers are usually TINY next to the edge list (seeds, then the
@@ -98,18 +80,18 @@ object Graph {
           else fSrc, "src")
         .select(col("dst").as("id")).distinct()
       val settled = dist.select("id")
-      val next = pin(reached
+      val next = r.persist(reached
         .join(if (distRows <= frontierBroadcastMaxRows) broadcast(settled)
               else settled,
           Seq("id"), "left_anti")
         .select(col("id"), lit(h.toLong).as("hop")))
-      dist = pin(dist.unionByName(next))
+      dist = r.persist(dist.unionByName(next))
       frontier = next
       frontierRows = next.count()
       distRows += frontierRows
       h += 1
     }
-    dist
+    r.pin(dist)
   }
 
   /** Landmark hop distances: [[bfsHops]] run per landmark IN ONE SWEEP —
@@ -130,15 +112,13 @@ object Graph {
     *         unreached (id, lm) pairs absent
     */
   def landmarkHops(edges: DataFrame, landmarks: DataFrame,
-                   maxHops: Int): DataFrame = pinnedLoop { pin =>
+                   maxHops: Int): DataFrame = FreshCheckpoint.rounds { r =>
     require(maxHops >= 0, "maxHops must be >= 0")
-    // Same loop-invariant discipline as bfsHops: one edge shuffle total,
-    // and the same exit discipline — eager result checkpoint, every
-    // pinned block (edge list included) released before returning.
-    val e = pin(edges.select(col("src").cast("long").as("src"),
+    // Same loop-invariant discipline as bfsHops: one edge shuffle total.
+    val e = r.persist(edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
       .repartition(col("src")))
-    var dist = pin(landmarks.select(col("id").cast("long").as("id"))
+    var dist = r.persist(landmarks.select(col("id").cast("long").as("id"))
       .distinct()
       .select(col("id"), col("id").as("lm"), lit(0L).as("hop")))
     var frontier = dist
@@ -155,18 +135,18 @@ object Graph {
           else fSrc, "src")
         .select(col("dst").as("id"), col("lm")).distinct()
       val settled = dist.select("id", "lm")
-      val next = pin(reached
+      val next = r.persist(reached
         .join(if (distRows <= frontierBroadcastMaxRows) broadcast(settled)
               else settled,
           Seq("id", "lm"), "left_anti")
         .select(col("id"), col("lm"), lit(h.toLong).as("hop")))
-      dist = pin(dist.unionByName(next))
+      dist = r.persist(dist.unionByName(next))
       frontier = next
       frontierRows = next.count()
       distRows += frontierRows
       h += 1
     }
-    dist
+    r.pin(dist)
   }
 
   /** Bounded-radius closeness centrality against a landmark set: per
@@ -216,14 +196,13 @@ object Graph {
     * @return (id, dist) — nodes unreached within `rounds` are absent
     */
   def ssspRounds(edges: DataFrame, sources: DataFrame,
-                 rounds: Int): DataFrame = pinnedLoop { pin =>
+                 rounds: Int): DataFrame = FreshCheckpoint.rounds { rs =>
     require(rounds >= 0, "rounds must be >= 0")
-    // Same loop-invariant discipline as bfsHops: one edge shuffle total,
-    // eager result checkpoint, all pinned blocks released on exit.
-    val e = pin(edges.select(col("src").cast("long").as("src"),
+    // Same loop-invariant discipline as bfsHops: one edge shuffle total.
+    val e = rs.persist(edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
       .repartition(col("src")))
-    var dist = pin(sources.select(col("id").cast("long").as("id"),
+    var dist = rs.persist(sources.select(col("id").cast("long").as("id"),
       lit(0L).as("dist")).distinct())
     var frontier = dist
     // Same frontier-broadcast / early-exit round shape as bfsHops: the
@@ -241,17 +220,18 @@ object Graph {
           else fr, "src")
         .groupBy(col("dst").as("id"))
         .agg(min(col("dist") + col("w")).as("cand"))
-      val improved = pin(cand.join(dist, Seq("id"), "left_outer")
+      val improved = rs.persist(cand.join(dist, Seq("id"), "left_outer")
         .filter(col("dist").isNull || col("cand") < col("dist"))
         .select(col("id"), col("cand").as("dist")))
-      dist = pin(dist.join(improved.select(col("id"), col("dist").as("nd")),
-          Seq("id"), "full_outer")
-        .select(col("id"), coalesce(col("nd"), col("dist")).as("dist")))
+      dist = rs.persist(
+        dist.join(improved.select(col("id"), col("dist").as("nd")),
+            Seq("id"), "full_outer")
+          .select(col("id"), coalesce(col("nd"), col("dist")).as("dist")))
       frontier = improved
       frontierRows = improved.count()
       r += 1
     }
-    dist
+    rs.pin(dist)
   }
 
   /** Hash-driven "random" walks — the DeepWalk/node2vec corpus primitive,
@@ -361,12 +341,11 @@ object Graph {
     *         degree counted over the edge set that test saw (i.e. after
     *         `rounds` − 1 cascades of removals)
     */
-  def kCorePeel(pairs: DataFrame, k: Long, rounds: Int): DataFrame = {
+  def kCorePeel(pairs: DataFrame, k: Long, rounds: Int): DataFrame =
+      FreshCheckpoint.rounds { rs =>
     require(rounds >= 1, "rounds must be >= 1")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var e = pairs.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-      .persist(lvl)
+    var e = rs.persist(pairs.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst")))
     var keep: DataFrame = null
     for (r <- 1 to rounds) {
       keep = e.select(col("src").as("id"))
@@ -374,13 +353,13 @@ object Graph {
         .groupBy("id").agg(count(lit(1)).as("degree"))
         .filter(col("degree") >= k)
       if (r < rounds) {
-        e = e.join(keep.select(col("id").as("src")), "src", "left_semi")
-          .join(keep.select(col("id").as("dst")), "dst", "left_semi")
-          .select("src", "dst")
-          .persist(lvl)
+        e = rs.persist(
+          e.join(keep.select(col("id").as("src")), "src", "left_semi")
+            .join(keep.select(col("id").as("dst")), "dst", "left_semi")
+            .select("src", "dst"))
       }
     }
-    keep
+    rs.pin(keep)
   }
 
   /** Integer-exact PageRank, damping 17/20, rank scaled by `scale`.
@@ -404,73 +383,62 @@ object Graph {
     */
   def pageRankInt(edges: DataFrame, iters: Int,
                   scale: Long = 1000000000L,
-                  dangling: Boolean = false): DataFrame = {
+                  dangling: Boolean = false): DataFrame =
+      FreshCheckpoint.rounds { r =>
     require(iters >= 1, "iters must be >= 1")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
     // Edge list with out-degree attached — the loop-invariant operand,
     // pre-partitioned on src (each iteration's rank join key) so only
     // the rank table shuffles per iteration.
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val ew = e.join(outdeg, "src").repartition(col("src")).persist(lvl)
-    val nodes = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
-      .distinct()
-      .persist(lvl)
+    val ew = r.persist(e.join(outdeg, "src").repartition(col("src")))
+    val nodes = r.persist(e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct())
     val base = (3L * scale) / 20L
     // n is needed only as a literal divisor for the dangling share; the
     // count is one job over the (already persisted) node table.
     val nNodes = if (dangling) nodes.count() else 0L
     val sinks =
       if (dangling)
-        nodes.join(outdeg.select(col("src").as("id")), Seq("id"), "left_anti")
-          .persist(lvl)
+        r.persist(nodes.join(outdeg.select(col("src").as("id")), Seq("id"),
+          "left_anti"))
       else null
     // Dangling mode reads each iteration's ranks TWICE (inflow + sink
     // sum): left lazy, the plan tree would double per iteration — pin each
-    // round with an eager localCheckpoint, keeping exactly one live
-    // checkpoint (the resolveClusters leak discipline).
+    // round eagerly and retire its predecessor, so one round stays live.
     // FreshCheckpoint, not Dataset.localCheckpoint: the latter carries the
     // origin plan's statistics into each round's LogicalRDD, and a loop
     // that reads its own checkpoint twice per iteration grows the stat
     // multiplicatively — see FreshCheckpoint's scaladoc for the measured
     // pointer-jump blowup this prevents.
-    // Release by EXACT handle, not by diffing the global persistent-RDD
-    // keyset: the diff captured any block persisted concurrently on the
-    // same context, and unpersisting someone else's in-use localCheckpoint
-    // block is an unrecoverable missing-block failure.
-    var liveCkpt: Option[org.apache.spark.sql.graft.FreshCheckpoint.Pinned] =
-      None
-    def checkpointed(d: DataFrame): DataFrame = {
-      val p = org.apache.spark.sql.graft.FreshCheckpoint.pinned(d)
-      liveCkpt.foreach(org.apache.spark.sql.graft.FreshCheckpoint.release(_))
-      liveCkpt = Some(p)
-      p.df
-    }
     // `rnk` internally: `rank` is a window-function name to the SQL parser
     // inside expr(), and `div` has no Column-API operator.
     var ranks = nodes.withColumn("rnk", lit(scale))
+    var live: FreshCheckpoint.Pinned = null
     for (_ <- 1 to iters) {
       val inflow = ew.join(ranks.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), expr("rnk div outdeg").as("c"))
         .groupBy("id").agg(sum("c").as("inflow"))
-      ranks =
-        if (dangling) {
-          val sRow = ranks.join(sinks, "id")
-            .agg(coalesce(sum("rnk"), lit(0L)).as("__s"))
-          checkpointed(nodes.join(inflow, Seq("id"), "left")
-            .crossJoin(broadcast(sRow))
-            .select(col("id"),
-              (lit(base) + expr("(17 * (coalesce(inflow, 0) " +
-                s"+ __s div CAST($nNodes AS BIGINT))) div 20")).as("rnk")))
-        } else {
-          nodes.join(inflow, Seq("id"), "left")
-            .select(col("id"),
-              (lit(base) + expr("(17 * coalesce(inflow, 0)) div 20")).as("rnk"))
-        }
+      if (dangling) {
+        val sRow = ranks.join(sinks, "id")
+          .agg(coalesce(sum("rnk"), lit(0L)).as("__s"))
+        val next = r.pin(nodes.join(inflow, Seq("id"), "left")
+          .crossJoin(broadcast(sRow))
+          .select(col("id"),
+            (lit(base) + expr("(17 * (coalesce(inflow, 0) " +
+              s"+ __s div CAST($nNodes AS BIGINT))) div 20")).as("rnk")))
+        if (live != null) r.release(live)
+        live = next
+        ranks = next.df
+      } else {
+        ranks = nodes.join(inflow, Seq("id"), "left")
+          .select(col("id"),
+            (lit(base) + expr("(17 * coalesce(inflow, 0)) div 20")).as("rnk"))
+      }
     }
-    ranks.select(col("id"), col("rnk").as("rank"))
-  }
+    if (dangling) live else r.pin(ranks)
+  }.select(col("id"), col("rnk").as("rank"))
 
   /** Personalized PageRank in the same pure-integer arithmetic as
     * [[pageRankInt]], with teleportation restricted to a SEED set — "rank
@@ -488,19 +456,18 @@ object Graph {
     * iterations; the seed flag rides the node table, nothing driver-side.
     */
   def personalizedPageRankInt(edges: DataFrame, seeds: DataFrame, iters: Int,
-                              scale: Long = 1000000000L): DataFrame = {
+                              scale: Long = 1000000000L): DataFrame =
+      FreshCheckpoint.rounds { r =>
     require(iters >= 1, "iters must be >= 1")
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val ew = e.join(outdeg, "src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("id"))
+    val ew = r.persist(e.join(outdeg, "src"))
+    val nodes = r.persist(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
       .join(seeds.select(col("id").cast("long").as("id"))
         .distinct().withColumn("is_seed", lit(1L)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("id"), coalesce(col("is_seed"), lit(0L)).as("is_seed")))
     val base = (3L * scale) / 20L
     var ranks = nodes.withColumn("rnk", col("is_seed") * scale)
     for (_ <- 1 to iters) {
@@ -513,7 +480,7 @@ object Graph {
           (col("is_seed") * base
             + expr("(17 * coalesce(inflow, 0)) div 20")).as("rnk"))
     }
-    ranks.select(col("id"), col("rnk").as("rank"))
+    r.pin(ranks.select(col("id"), col("rnk").as("rank")))
   }
 
   /** Synchronous label propagation (community detection): every node
@@ -535,11 +502,11 @@ object Graph {
     *
     * Output: (id, label).
     */
-  def labelPropagate(edges: DataFrame, rounds: Int): DataFrame = {
+  def labelPropagate(edges: DataFrame, rounds: Int): DataFrame =
+      FreshCheckpoint.rounds { r =>
     require(rounds >= 1, "rounds must be >= 1")
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = r.persist(edges.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst")))
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
     var lab = nodes.select(col("id"), col("id").as("label"))
@@ -555,7 +522,7 @@ object Graph {
         .select(col("id"),
           coalesce(col("newlab"), col("label")).as("label"))
     }
-    lab
+    r.pin(lab)
   }
 
   /** HITS hubs/authorities (Kleinberg) on a DIRECTED edge list, in exact
@@ -579,14 +546,12 @@ object Graph {
     * Output: (id, hub, auth) over all nodes.
     */
   def hitsInt(edges: DataFrame, iters: Int,
-              scale: Long = 1000000L): DataFrame = {
+              scale: Long = 1000000L): DataFrame = FreshCheckpoint.rounds { r =>
     require(iters >= 1, "iters must be >= 1")
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = r.persist(edges.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst")))
+    val nodes = r.persist(e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct())
     var h = nodes.select(col("id"), lit(scale).as("h"))
     var a: DataFrame = null
     for (_ <- 1 to iters) {
@@ -603,9 +568,9 @@ object Graph {
       h = hp.crossJoin(broadcast(hm))
         .select(col("id"), expr(s"(hp * ${scale}L) div hm").as("h"))
     }
-    nodes.join(h, Seq("id"), "left").join(a, Seq("id"), "left")
+    r.pin(nodes.join(h, Seq("id"), "left").join(a, Seq("id"), "left")
       .select(col("id"), coalesce(col("h"), lit(0L)).as("hub"),
-        coalesce(col("a"), lit(0L)).as("auth"))
+        coalesce(col("a"), lit(0L)).as("auth")))
   }
 
   /** Degree assortativity over an undirected unique-pair edge list —
@@ -901,13 +866,10 @@ object Graph {
     *         PREVIOUS round's survivors, the value the final filter
     *         tested
     */
-  def kTrussPeel(edges: DataFrame, k: Long, rounds: Int): DataFrame = {
+  def kTrussPeel(edges: DataFrame, k: Long, rounds: Int): DataFrame =
+      FreshCheckpoint.rounds { r =>
     require(k >= 3, "truss needs k >= 3")
     require(rounds >= 1, "needs at least one round")
-    import org.apache.spark.sql.graft.FreshCheckpoint
-    import org.apache.spark.sql.graft.FreshCheckpoint.Pinned
-    def fresh(d: DataFrame): Pinned = FreshCheckpoint.pinned(d)
-    def release(p: Pinned): Unit = FreshCheckpoint.release(p)
     // Broadcast bound for the removed set on the delta path: 2 longs per
     // row, so 1M rows ≈ 16 MB on the wire — safely under executor memory
     // at any realistic configuration. Above it the chains fall back to
@@ -923,8 +885,7 @@ object Graph {
     // checkpoint: it shares blocks lazily with the e0 pipeline without
     // paying a second materialization pass, and it lives only until e0
     // is pinned (no loop self-join ever sees its stats).
-    val simpleC = simple
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val simpleC = r.persist(simple)
     val degBase = simpleC
       .select(explode(array(col("u"), col("v"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("d"))
@@ -937,7 +898,7 @@ object Graph {
     // default stats and would otherwise sort-merge.
     val deg =
       if (degBase.count() <= 8000000L) broadcast(degBase) else degBase
-    val e0P = fresh(simpleC
+    val e0P = r.pin(simpleC
       .join(deg.select(col("id").as("u"), col("d").as("du")), "u")
       .join(deg.select(col("id").as("v"), col("d").as("dv")), "v")
       .select(
@@ -947,7 +908,7 @@ object Graph {
           .otherwise(struct(col("v").as("s"), col("u").as("t")))
           .as("__o"))
       .select(col("__o.s").as("s"), col("__o.t").as("t")))
-    simpleC.unpersist(blocking = false)   // e0 is checkpointed; inputs done
+    r.release(simpleC)   // e0 is checkpointed; inputs done
     // Ordered-triple enumeration with a caller-chosen relation in each
     // of the three edge positions; inner-join order follows the
     // syntactic order, so passing the small set first keeps the chain
@@ -1035,22 +996,21 @@ object Graph {
         .agg(count(lit(1)).as("sup"))
     }
     // Round 1: full enumeration — the base support every edge carries.
-    var supP = fresh(supportOf(e0P.df, e0P.rows).filter(col("sup") >= k - 2))
+    var supP = r.pin(supportOf(e0P.df, e0P.rows).filter(col("sup") >= k - 2))
     var prevP = e0P               // the set supP was counted against
     var round = 1
     var fixed = false
     while (round < rounds && !fixed) {
-      val remP = fresh(prevP.df.select("s", "t")
+      val remP = r.pin(prevP.df.select("s", "t")
         .join(supP.df.select("s", "t"), Seq("s", "t"), "left_anti"))
       if (remP.rows == 0L) {
-        release(remP)
         fixed = true
       } else {
         val nextP = if (remP.rows > trussDeltaShare * supP.rows) {
           // Removals dominate: one survivor-driven re-enumeration over
           // the (smaller) survivor set beats three removal-driven
           // chains that would each walk near-full wedge sets.
-          fresh(supportOf(supP.df.select("s", "t"), supP.rows)
+          r.pin(supportOf(supP.df.select("s", "t"), supP.rows)
             .filter(col("sup") >= k - 2))
         } else {
           val prevEdges = prevP.df.select("s", "t")
@@ -1082,23 +1042,22 @@ object Graph {
               struct(col("a").as("s"), col("c").as("t")))).as("__e"))
             .groupBy(col("__e.s").as("s"), col("__e.t").as("t"))
             .agg(count(lit(1)).as("d"))
-          fresh(supP.df
+          r.pin(supP.df
             .join(delta, Seq("s", "t"), "left")
             .select(col("s"), col("t"),
               (col("sup") - coalesce(col("d"), lit(0L))).as("sup"))
             .filter(col("sup") >= k - 2))
         }
-        release(prevP)
-        release(remP)
+        r.release(prevP)
+        r.release(remP)
         prevP = supP
         supP = nextP
       }
       round += 1
     }
-    if (prevP.rdd ne supP.rdd) release(prevP)
-    supP.df.select(least(col("s"), col("t")).as("u"),
-      greatest(col("s"), col("t")).as("v"), col("sup"))
-  }
+    supP
+  }.select(least(col("s"), col("t")).as("u"),
+    greatest(col("s"), col("t")).as("v"), col("sup"))
 
   /** Degree distribution of an edge list — the first structure report
     * run on any new graph (is it hub-heavy? how long is the tail? does
@@ -1152,23 +1111,24 @@ object Graph {
     * @return (id, scc, scc_size) — scc is the min node id of the
     *         component, one row per node appearing in `edges`
     */
-  def sccBounded(edges: DataFrame, maxNodes: Int): DataFrame = {
+  def sccBounded(edges: DataFrame, maxNodes: Int): DataFrame =
+      FreshCheckpoint.rounds { r =>
     require(maxNodes >= 2, "maxNodes must be >= 2")
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).distinct()
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
     val rounds = 32 - Integer.numberOfLeadingZeros(maxNodes - 1)
-    var reach = e.union(nodes.select(col("id").as("src"),
-      col("id").as("dst"))).distinct().persist()
+    var reach = r.persist(e.union(nodes.select(col("id").as("src"),
+      col("id").as("dst"))).distinct())
     reach.count()
     for (_ <- 1 to rounds) {
-      val next = reach.as("a")
+      val next = r.persist(reach.as("a")
         .join(reach.as("b"), col("a.dst") === col("b.src"))
         .select(col("a.src").as("src"), col("b.dst").as("dst"))
-        .union(reach).distinct().persist()
+        .union(reach).distinct())
       next.count()
-      reach.unpersist()
+      r.release(reach)
       reach = next
     }
     val lab = reach.as("f")
@@ -1177,13 +1137,7 @@ object Graph {
       .select(col("f.src").as("id"), col("f.dst").as("w"))
       .groupBy("id").agg(min("w").as("scc"))
     val size = lab.groupBy("scc").agg(count(lit(1)).as("scc_size"))
-    // Through the FreshCheckpoint seam, not Dataset.localCheckpoint: the
-    // result pin then honors graft.checkpoint.dir like every other
-    // checkpoint in the engine (and gets default stats, harmless here).
-    val out = org.apache.spark.sql.graft.FreshCheckpoint(
-      lab.join(size, "scc")
-        .select(col("id"), col("scc"), col("scc_size")))
-    reach.unpersist()
-    out
+    r.pin(lab.join(size, "scc")
+      .select(col("id"), col("scc"), col("scc_size")))
   }
 }

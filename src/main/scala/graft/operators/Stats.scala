@@ -935,13 +935,13 @@ object Stats {
   def perceptronRounds(features: DataFrame, docCol: String,
                        bucketCol: String, cntCol: String,
                        labels: DataFrame, labelCol: String,
-                       rounds: Int): DataFrame = {
+                       rounds: Int): DataFrame =
+      org.apache.spark.sql.graft.FreshCheckpoint.rounds { rs =>
     require(rounds >= 1, "rounds must be >= 1")
-    val fy = features.select(col(docCol).as("doc"),
+    val fy = rs.persist(features.select(col(docCol).as("doc"),
         col(bucketCol).as("bucket"), col(cntCol).cast("long").as("cnt"))
       .join(labels.select(col(docCol).as("doc"),
-        col(labelCol).cast("long").as("y")), "doc")
-      .persist()
+        col(labelCol).cast("long").as("y")), "doc"))
     var w = fy.select(col("bucket")).distinct()
       .withColumn("w", lit(0L))
     val perRound = (1 to rounds).map { r =>
@@ -954,18 +954,13 @@ object Stats {
       // FreshCheckpoint: w feeds both the margin join and its own update
       // each round, so localCheckpoint's inherited statistics would grow
       // multiplicatively with rounds (see FreshCheckpoint's scaladoc).
-      w = org.apache.spark.sql.graft.FreshCheckpoint(
+      w = rs.pin(
         w.join(delta, Seq("bucket"), "left")
           .select(col("bucket"),
-            (col("w") + coalesce(col("dw"), lit(0L))).as("w")))
+            (col("w") + coalesce(col("dw"), lit(0L))).as("w"))).df
       w.withColumn("rnd", lit(r.toLong))
     }
-    // Every round's weights are eagerly checkpointed above, so the
-    // data-sized labeled feature table is no longer referenced — release
-    // its blocks now rather than leaking them for the session (the
-    // resolveClusters discipline).
-    fy.unpersist(blocking = false)
-    perRound.reduce(_ unionByName _).select("rnd", "bucket", "w")
+    rs.pin(perRound.reduce(_ unionByName _).select("rnd", "bucket", "w"))
   }
 
   /** Welch's two-sample t statistic per key — the parametric A/B-test

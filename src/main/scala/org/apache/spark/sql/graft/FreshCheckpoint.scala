@@ -4,6 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable.ArrayBuffer
 
 /** Eager round checkpoint that does NOT inherit the origin plan's
   * Catalyst statistics.
@@ -48,17 +49,20 @@ import org.apache.spark.storage.StorageLevel
   *     also persisted MEMORY_AND_DISK first so the checkpoint write
   *     reads the computed rows instead of recomputing the round, and so
   *     successor rounds read from memory, falling back to the files
-  *     only after loss; the caller's existing `rdd.unpersist` release
-  *     still frees executor memory while the durable files remain until
+  *     only after loss; `release` frees the memory and deletes the
+  *     round's files. A result pin nobody releases keeps its files until
   *     context stop (set `spark.cleaner.referenceTracking
   *     .cleanCheckpoints=true` to reap them when the RDD is GC'd).
   *
   * Both modes rebuild the Dataset through `internalCreateDataFrame`, so
-  * the default-stats property above holds identically; all iterative
-  * call sites (resolve, PageRank/PPR, SSSP, BFS, k-core, k-truss, SCC,
-  * DBSCAN, …) inherit the mode with no code change. Pair the durable
-  * mode with dynamicAllocation in cluster profiles — it is what makes
-  * downscale-during-iteration safe.
+  * the default-stats property above holds identically; every iterative
+  * operator pins through [[rounds]] (`Graph.bfsHops`, `landmarkHops`,
+  * `ssspRounds`, `kCorePeel`, `pageRankInt`, `personalizedPageRankInt`,
+  * `labelPropagate`, `hitsInt`, `kTrussPeel`, `sccBounded`,
+  * `Dedup.resolveClusters`, so `Density.dbscan` too,
+  * `Stats.perceptronRounds`) and so inherits the mode with no code
+  * change. Pair the durable mode with dynamicAllocation in cluster
+  * profiles — it is what makes downscale-during-iteration safe.
   *
   * Measured price (sf1, local[32], matched calibrations — PLANS r14):
   * +8.9% on the resolve bench line and +6.7% on DBSCAN, writing ~400 MB
@@ -72,12 +76,9 @@ object FreshCheckpoint {
     */
   val DirConf = "graft.checkpoint.dir"
 
-  /** Pin `rdd`'s computed rows per the session's durability mode; returns
-    * true when the reliable path was taken (callers never branch on it —
-    * spec observability only).
-    */
+  /** Pin `rdd`'s computed rows per the session's durability mode. */
   private def pin(spark: org.apache.spark.sql.classic.SparkSession,
-                  rdd: RDD[InternalRow]): Boolean =
+                  rdd: RDD[InternalRow]): Unit =
     spark.conf.getOption(DirConf).filter(_.nonEmpty) match {
       case Some(dir) =>
         val sc = spark.sparkContext
@@ -89,21 +90,15 @@ object FreshCheckpoint {
           sc.setCheckpointDir(dir)
         rdd.persist(StorageLevel.MEMORY_AND_DISK)
         rdd.checkpoint()
-        true
       case None =>
         rdd.localCheckpoint()
-        false
     }
 
   /** A checkpointed round table: the rebuilt DataFrame, the EXACT RDD
     * handle whose blocks back it, and the row count the forcing count
     * already produced (free to the caller — peel loops branch on it).
-    * Release with `rdd.unpersist(blocking = false)` once the round that
-    * used it has materialized its successor.
     */
   final case class Pinned(df: DataFrame, rdd: RDD[InternalRow], rows: Long)
-
-  def apply(df: DataFrame): DataFrame = pinned(df).df
 
   /** Retire a round pin once its successor is materialized: free the
     * executor-memory blocks, and in durable mode ALSO delete the round's
@@ -113,13 +108,10 @@ object FreshCheckpoint {
     * until context stop). The pin is DEAD after release in BOTH modes —
     * that was already the localCheckpoint contract (truncated lineage
     * cannot recompute an unpersisted block), so deleting the durable
-    * files alongside changes nothing a caller could observe. Callers that
-    * still release via a raw `p.rdd.unpersist` stay correct in durable
-    * mode; they just leave that round's files for the
-    * `spark.cleaner.referenceTracking.cleanCheckpoints` reaper.
+    * files alongside changes nothing a caller could observe.
     */
-  def release(p: Pinned, blocking: Boolean = false): Unit = {
-    p.rdd.unpersist(blocking)
+  def release(p: Pinned): Unit = {
+    p.rdd.unpersist(blocking = false)
     p.rdd.getCheckpointFile.foreach { f =>
       val path = new org.apache.hadoop.fs.Path(f)
       path.getFileSystem(p.rdd.sparkContext.hadoopConfiguration)
@@ -127,14 +119,13 @@ object FreshCheckpoint {
     }
   }
 
-  /** Like `apply`, but also returns the checkpointed RDD handle so the
-    * caller can later release EXACTLY the block it created. Iterative
-    * operators used to identify their checkpoint block by diffing the
-    * global `sc.getPersistentRDDs` keyset around this call — which
-    * captures any RDD persisted concurrently on the same context and,
-    * because these are localCheckpoint blocks, unpersisting someone
-    * else's still-in-use block is an unrecoverable missing-block
-    * failure, not a recompute.
+  /** Materialize `df` eagerly (one forcing count) and pin it per the
+    * durability mode. Returns the checkpointed RDD handle so the caller
+    * can later release EXACTLY the block it created: diffing the global
+    * `sc.getPersistentRDDs` keyset instead would capture any RDD
+    * persisted concurrently on the same context, and unpersisting
+    * someone else's still-in-use localCheckpoint block is an
+    * unrecoverable missing-block failure, not a recompute.
     */
   def pinned(df: DataFrame): Pinned = {
     val spark = df.sparkSession
@@ -145,18 +136,60 @@ object FreshCheckpoint {
     Pinned(spark.internalCreateDataFrame(rdd, df.schema), rdd, n)
   }
 
-  /** Lazy variant: no forcing count — the blocks materialize with the
-    * CALLER's first action over the returned df (`rows` is therefore -1).
-    * Right for loops that run their own per-round aggregate anyway (the
-    * convergence test doubles as the forcing action), where the eager
-    * count is a whole extra job of pure fixed cost per round. Same
-    * default-stats / truncated-lineage properties as `pinned`.
+  /** The round state one [[rounds]] scope has persisted or pinned. */
+  final class Rounds private[FreshCheckpoint] {
+    private[FreshCheckpoint] val pins = ArrayBuffer.empty[Pinned]
+    private[FreshCheckpoint] val persisted = ArrayBuffer.empty[DataFrame]
+
+    /** Lazy MEMORY_AND_DISK persist — for loop-invariant operands. */
+    def persist(df: DataFrame): DataFrame = {
+      persisted += df.persist(StorageLevel.MEMORY_AND_DISK)
+      df
+    }
+
+    /** Eager round pin ([[pinned]]) — for state a loop reads back. */
+    def pin(df: DataFrame): Pinned = {
+      val p = pinned(df)
+      pins += p
+      p
+    }
+
+    /** Retire a pin before the scope ends, once its successor is pinned. */
+    def release(p: Pinned): Unit = {
+      pins -= p
+      FreshCheckpoint.release(p)
+    }
+
+    /** Unpersist a persist before the scope ends. */
+    def release(df: DataFrame): Unit = {
+      persisted -= df
+      df.unpersist(blocking = false)
+    }
+  }
+
+  /** The one lifetime rule for an iterative operator's round state.
+    * `body` persists and pins through the [[Rounds]] it is given and
+    * returns the pin that holds its result; the scope returns that pin's
+    * DataFrame and, in a `finally`, releases every other pin and persist
+    * the body registered — on return and when the body throws. Without
+    * that, each round's blocks stay in the BlockManager for the session:
+    * leaked storage measurably starves later memory-sensitive stages, and
+    * in durable mode it parks every round's files on the checkpoint store.
+    * Only the result's pin outlives the call; it holds truncated lineage,
+    * so releasing the persists it was computed from is safe.
+    *
+    * State lives in the scope, not in a global registry, so concurrent
+    * jobs on one context and nested scopes release only their own blocks.
     */
-  def lazyPinned(df: DataFrame): Pinned = {
-    val spark = df.sparkSession
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val rdd = df.queryExecution.toRdd.map(_.copy())
-    pin(spark, rdd)
-    Pinned(spark.internalCreateDataFrame(rdd, df.schema), rdd, -1L)
+  def rounds(body: Rounds => Pinned): DataFrame = {
+    val r = new Rounds
+    var kept: Pinned = null
+    try {
+      kept = body(r)
+      kept.df
+    } finally {
+      r.pins.filterNot(_ eq kept).foreach(release)
+      r.persisted.foreach(_.unpersist(blocking = false))
+    }
   }
 }

@@ -57,18 +57,6 @@ class FreshCheckpointSpec extends SparkSpec {
     p.rdd.unpersist(blocking = false)
   }
 
-  test("lazyPinned under the conf checkpoints on the caller's first action") {
-    import spark.implicits._
-    withCkptDir { dir =>
-      val p = FreshCheckpoint.lazyPinned((1 to 500).toDF("x"))
-      assert(p.rows == -1L)
-      assert(p.df.count() == 500L) // the forcing action
-      assert(p.rdd.isCheckpointed)
-      assert(p.rdd.getCheckpointFile.exists(_.contains(dir.toString)))
-      p.rdd.unpersist(blocking = false)
-    }
-  }
-
   test("release reaps durable round files; default mode has none to reap") {
     import spark.implicits._
     withCkptDir { dir =>
@@ -80,12 +68,12 @@ class FreshCheckpointSpec extends SparkSpec {
       val f1 = p1.rdd.getCheckpointFile.get
       val f2 = p2.rdd.getCheckpointFile.get
       assert(f1 != f2)
-      FreshCheckpoint.release(p1, blocking = true)
+      FreshCheckpoint.release(p1)
       assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(new java.net.URI(f1).getPath)),
         s"released round's checkpoint files survive at $f1")
       assert(p2.df.count() == 400L, "surviving round must stay readable")
-      FreshCheckpoint.release(p2, blocking = true)
+      FreshCheckpoint.release(p2)
     }
     // Default mode: release is exactly the old unpersist (no files).
     val p = FreshCheckpoint.pinned((1 to 50).toDF("x"))
@@ -94,11 +82,13 @@ class FreshCheckpointSpec extends SparkSpec {
 
   test("both modes produce identical results on iterative gates") {
     val sfDir = "/root/testdata/sf0.001"
-    // One gate per FreshCheckpoint usage shape: resolve (pinned loop with
-    // release), pagerank (checkpointed() rotation), ktruss (fresh/release
-    // delta rounds), scc (the final-result pin routed through the seam).
+    // One gate per FreshCheckpoint.rounds shape: resolve (round pins
+    // retired as the successor lands), pagerank, kcore, labelprop and
+    // perceptron (lazy rounds, result pinned at the end), ktruss (delta
+    // rounds), scc (persist rotation, result pin).
     for (gate <- Seq("x2_dedup_resolve", "x8_pagerank", "x8_ktruss",
-                     "x8_scc")) {
+                     "x8_scc", "x8_kcore", "x8_labelprop",
+                     "x9_perceptron")) {
       val local = graft.SparkEntry.queries(gate)(spark, sfDir)
         .collect().map(_.toString).sorted.toSeq
       val durable = withCkptDir { _ =>
