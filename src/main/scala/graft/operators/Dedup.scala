@@ -82,21 +82,12 @@ object Dedup {
     def cnt = sh.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
     // The lossy df cut (if any) applies to candidate generation only;
     // scoring always uses the UNFILTERED sets.
-    val candInput =
-      if (maxDocFreq <= 0) sh
-      else {
-        val rare = sh.groupBy("shingle").agg(count(lit(1)).as("__df"))
-          .filter(col("__df") <= maxDocFreq).select("shingle")
-        sh.join(rare, "shingle")
-      }
+    val candInput = rareShingles(sh, maxDocFreq)
     if (prefixFilter)
       scorePairs(pairIntersections(
         prefixCandidates(candInput, idCol, threshold), sh, idCol),
         cnt, idCol, threshold)
-    else if (maxDocFreq <= 0)
-      // The length-filtered self-join already carries both set sizes.
-      scorePairsCarried(
-        sharedShingleIntersections(sh, idCol, Some(threshold)), threshold)
+    else if (maxDocFreq <= 0) exactPairs(sh, idCol, threshold)
     else scorePairs(pairIntersections(
       sharedShingleIntersections(candInput, idCol).select("da", "db"),
       sh, idCol), cnt, idCol, threshold)
@@ -461,16 +452,7 @@ object Dedup {
     // Feeds signature aggregation AND the verify joins — materialize once.
     val sh = shingleSet(df, idCol, textCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Both sides of the candidate self-join — without this the signature
-    // aggregation re-runs once per union branch per side.
-    val bandMat = bandHashTable(sh, idCol, k, bands, portable)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = bandMat.as("x")
-      .join(bandMat.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("da"), col(s"y.$idCol").as("db"))
-      .distinct()
+    val cand = bandCandidates(sh, idCol, k, bands, portable)
     // Exact verify, restricted to the candidate pairs.
     val cnt = sh.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
     scorePairs(pairIntersections(cand, sh, idCol), cnt, idCol, threshold)
@@ -499,18 +481,9 @@ object Dedup {
     require(k % bands == 0, "k must be divisible by bands")
     val sh = shingleSet(df, idCol, textCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val truth =
-      scorePairsCarried(
-        sharedShingleIntersections(sh, idCol, Some(threshold)), threshold)
-        .select(col("da"), col("db"), lit(1L).as("__t"))
-    val bandDf = bandHashTable(sh, idCol, k, bands, portable)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = bandDf.as("x")
-      .join(bandDf.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("da"), col(s"y.$idCol").as("db"))
-      .distinct()
+    val truth = exactPairs(sh, idCol, threshold)
+      .select(col("da"), col("db"), lit(1L).as("__t"))
+    val cand = bandCandidates(sh, idCol, k, bands, portable)
       .withColumn("__c", lit(1L))
     truth.join(cand, Seq("da", "db"), "full_outer")
       .agg(coalesce(sum("__t"), lit(0L)).as("n_truth"),
@@ -550,18 +523,9 @@ object Dedup {
     val sh = shingleSet(df, idCol, textCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cnt = sh.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
-    val truth =
-      scorePairsCarried(
-        sharedShingleIntersections(sh, idCol, Some(threshold)), threshold)
-        .select(col("da"), col("db"), lit(1L).as("__t"))
-    val bandDf = bandHashTable(sh, idCol, k, bands, portable)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = bandDf.as("x")
-      .join(bandDf.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("da"), col(s"y.$idCol").as("db"))
-      .distinct()
+    val truth = exactPairs(sh, idCol, threshold)
+      .select(col("da"), col("db"), lit(1L).as("__t"))
+    val cand = bandCandidates(sh, idCol, k, bands, portable)
     val surfaced = scorePairs(pairIntersections(cand, sh, idCol),
         cnt, idCol, threshold)
       .select(col("da"), col("db"), lit(1L).as("__s"))
@@ -673,6 +637,38 @@ object Dedup {
     }
   }
 
+  /** Candidate pairs (da, db), da < db, of docs sharing a band hash.
+    * The band table is persisted: it feeds both sides of the self-join,
+    * and without that the signature aggregation re-runs once per side.
+    */
+  private def bandCandidates(sh: DataFrame, idCol: String, k: Int, bands: Int,
+                             portable: Boolean): DataFrame = {
+    val bandMat = bandHashTable(sh, idCol, k, bands, portable)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    bandMat.as("x")
+      .join(bandMat.as("y"),
+        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
+          col(s"x.$idCol") < col(s"y.$idCol"))
+      .select(col(s"x.$idCol").as("da"), col(s"y.$idCol").as("db"))
+      .distinct()
+  }
+
+  /** Exact Jaccard >= `threshold` pairs (da, db, jacc) of the shingle set
+    * `sh`: the length-filtered self-join already carries both set sizes.
+    */
+  private def exactPairs(sh: DataFrame, idCol: String,
+                         threshold: Double): DataFrame =
+    scorePairsCarried(
+      sharedShingleIntersections(sh, idCol, Some(threshold)), threshold)
+
+  /** The lossy df cut: `sh` without shingles in more than `maxDocFreq`
+    * docs (0 = keep all) — for candidate generation only.
+    */
+  private def rareShingles(sh: DataFrame, maxDocFreq: Long): DataFrame =
+    if (maxDocFreq <= 0) sh
+    else sh.join(sh.groupBy("shingle").agg(count(lit(1)).as("__df"))
+      .filter(col("__df") <= maxDocFreq).select("shingle"), "shingle")
+
   /** Incremental NEAR-dup: new-batch docs whose Jaccard similarity to some
     * standing-corpus doc reaches `threshold` — the daily-crawl companion
     * to [[incrementalDedup]] (which only catches byte-identical content).
@@ -742,14 +738,8 @@ object Dedup {
       n: Int, prefixLen: Int, maxDist: Int, maxDocFreq: Long = 0L): DataFrame = {
     val sh = shingleSet(df, idCol, textCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val shCand =
-      if (maxDocFreq <= 0) sh
-      else {
-        val rare = sh.groupBy("shingle").agg(count(lit(1)).as("__df"))
-          .filter(col("__df") <= maxDocFreq).select("shingle")
-        sh.join(rare, "shingle")
-      }
-    val cand = sharedShingleIntersections(shCand, idCol).select("da", "db")
+    val cand = sharedShingleIntersections(rareShingles(sh, maxDocFreq), idCol)
+      .select("da", "db")
     val pre = df.select(col(idCol),
       substring(col(textCol), 1, prefixLen).as("__pre"))
     cand

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.FreshCheckpoint
 
@@ -46,18 +46,21 @@ object Graph {
     *         unreached within `maxHops` are absent
     */
   def bfsHops(edges: DataFrame, sources: DataFrame, maxHops: Int)
-      : DataFrame = FreshCheckpoint.rounds { r =>
+      : DataFrame = frontierHops(edges,
+    sources.select(col("id").cast("long").as("id"), lit(0L).as("hop"))
+      .distinct(), Nil, maxHops)
+
+  /** The frontier loop [[bfsHops]] and [[landmarkHops]] share: `seeds` is
+    * the hop-0 settled set (id, labels..., hop), and a node is settled
+    * once per distinct label tuple — `Nil` for plain BFS, `Seq("lm")` for
+    * the landmark sweep.
+    */
+  private def frontierHops(edges: DataFrame, seeds: DataFrame,
+                           labels: Seq[String], maxHops: Int): DataFrame =
+      FreshCheckpoint.rounds { r =>
     require(maxHops >= 0, "maxHops must be >= 0")
-    // Loop-invariant operand: persisted (the caller's edge derivation —
-    // often a co-purchase self-join — must not re-run per hop) and
-    // PRE-PARTITIONED on src, the per-hop join key, so the cached
-    // partitioning satisfies the edge-side Exchange in every round and
-    // only the frontier shuffles.
-    val e = r.persist(edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-      .repartition(col("src")))
-    var dist = r.persist(sources.select(col("id").cast("long").as("id"),
-      lit(0L).as("hop")).distinct())
+    val e = edgeOperand(r, edges)
+    var dist = r.persist(seeds)
     var frontier = dist
     // Frontiers are usually TINY next to the edge list (seeds, then the
     // reached set), but the frontier join planned as a sort-merge join
@@ -69,22 +72,21 @@ object Graph {
     // cache probing the frontier hash table), and an early exit when the
     // frontier empties (remaining rounds are no-ops by construction).
     // Above the bound the pre-partitioned shuffle join stands unchanged.
-    // The settled set rides the same bound on the anti-join side.
+    // The settled set rides the same bound on the anti-join side. A
+    // labeled frontier is (node × label)-bounded, still far under the
+    // edge list.
     var frontierRows = frontier.count()
     var distRows = frontierRows
     var h = 1
     while (h <= maxHops && frontierRows > 0) {
-      val fSrc = frontier.withColumnRenamed("id", "src").select("src")
-      val reached = e.join(
-          if (frontierRows <= frontierBroadcastMaxRows) broadcast(fSrc)
-          else fSrc, "src")
-        .select(col("dst").as("id")).distinct()
-      val settled = dist.select("id")
+      val reached = e.join(broadcastUnder(frontierRows,
+          frontier.withColumnRenamed("id", "src").select("src", labels: _*)),
+          "src")
+        .select(col("dst").as("id") +: labels.map(col): _*).distinct()
       val next = r.persist(reached
-        .join(if (distRows <= frontierBroadcastMaxRows) broadcast(settled)
-              else settled,
-          Seq("id"), "left_anti")
-        .select(col("id"), lit(h.toLong).as("hop")))
+        .join(broadcastUnder(distRows, dist.select("id", labels: _*)),
+          "id" +: labels, "left_anti")
+        .select(col("id") +: labels.map(col) :+ lit(h.toLong).as("hop"): _*))
       dist = r.persist(dist.unionByName(next))
       frontier = next
       frontierRows = next.count()
@@ -93,6 +95,32 @@ object Graph {
     }
     r.pin(dist)
   }
+
+  /** Loop-invariant edge operand of the frontier loops: long-cast,
+    * persisted (the caller's edge derivation — often a co-purchase
+    * self-join — must not re-run per round) and PRE-PARTITIONED on src,
+    * the per-round join key, so the cached partitioning satisfies the
+    * edge-side Exchange in every round and only the frontier shuffles.
+    */
+  private def edgeOperand(r: FreshCheckpoint.Rounds, edges: DataFrame,
+                          extra: String*): DataFrame =
+    r.persist(longEdges(edges, extra: _*).repartition(col("src")))
+
+  /** `df` with a broadcast hint when its `rows` are under
+    * [[frontierBroadcastMaxRows]]; above it, the shuffle join stands.
+    */
+  private def broadcastUnder(rows: Long, df: DataFrame): DataFrame =
+    if (rows <= frontierBroadcastMaxRows) broadcast(df) else df
+
+  /** (src, dst, extra...) with every column cast to long. */
+  private def longEdges(edges: DataFrame, extra: String*): DataFrame =
+    edges.select(
+      ("src" +: "dst" +: extra).map(c => col(c).cast("long").as(c)): _*)
+
+  /** Every node id on an edge of `e`, once. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
+      .distinct()
 
   /** Landmark hop distances: [[bfsHops]] run per landmark IN ONE SWEEP —
     * the frontier carries the landmark label, so k landmark BFSs cost one
@@ -112,42 +140,11 @@ object Graph {
     *         unreached (id, lm) pairs absent
     */
   def landmarkHops(edges: DataFrame, landmarks: DataFrame,
-                   maxHops: Int): DataFrame = FreshCheckpoint.rounds { r =>
-    require(maxHops >= 0, "maxHops must be >= 0")
-    // Same loop-invariant discipline as bfsHops: one edge shuffle total.
-    val e = r.persist(edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-      .repartition(col("src")))
-    var dist = r.persist(landmarks.select(col("id").cast("long").as("id"))
-      .distinct()
-      .select(col("id"), col("id").as("lm"), lit(0L).as("hop")))
-    var frontier = dist
-    // Same frontier-broadcast / early-exit round shape as bfsHops — the
-    // labeled frontier is (node × landmark)-bounded, still far under the
-    // edge list the sort-merge fallback would re-sort per round.
-    var frontierRows = frontier.count()
-    var distRows = frontierRows
-    var h = 1
-    while (h <= maxHops && frontierRows > 0) {
-      val fSrc = frontier.withColumnRenamed("id", "src").select("src", "lm")
-      val reached = e.join(
-          if (frontierRows <= frontierBroadcastMaxRows) broadcast(fSrc)
-          else fSrc, "src")
-        .select(col("dst").as("id"), col("lm")).distinct()
-      val settled = dist.select("id", "lm")
-      val next = r.persist(reached
-        .join(if (distRows <= frontierBroadcastMaxRows) broadcast(settled)
-              else settled,
-          Seq("id", "lm"), "left_anti")
-        .select(col("id"), col("lm"), lit(h.toLong).as("hop")))
-      dist = r.persist(dist.unionByName(next))
-      frontier = next
-      frontierRows = next.count()
-      distRows += frontierRows
-      h += 1
-    }
-    r.pin(dist)
-  }
+                   maxHops: Int): DataFrame =
+    frontierHops(edges,
+      landmarks.select(col("id").cast("long").as("id")).distinct()
+        .select(col("id"), col("id").as("lm"), lit(0L).as("hop")),
+      Seq("lm"), maxHops)
 
   /** Bounded-radius closeness centrality against a landmark set: per
     * node, how many landmarks reach it within `maxHops` and at what total
@@ -198,15 +195,12 @@ object Graph {
   def ssspRounds(edges: DataFrame, sources: DataFrame,
                  rounds: Int): DataFrame = FreshCheckpoint.rounds { rs =>
     require(rounds >= 0, "rounds must be >= 0")
-    // Same loop-invariant discipline as bfsHops: one edge shuffle total.
-    val e = rs.persist(edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
-      .repartition(col("src")))
+    val e = edgeOperand(rs, edges, "w")
     var dist = rs.persist(sources.select(col("id").cast("long").as("id"),
       lit(0L).as("dist")).distinct())
     var frontier = dist
-    // Same frontier-broadcast / early-exit round shape as bfsHops: the
-    // improved-last-round frontier SHRINKS as distances settle, so the
+    // Same frontier-broadcast / early-exit round shape as frontierHops:
+    // the improved-last-round frontier SHRINKS as distances settle, so the
     // relaxation join should never pay a per-round sort of the full
     // edge list for it. Only the edge join branches; the keep-if-better
     // and full-outer merge joins are node-sized on both sides and keep
@@ -214,10 +208,8 @@ object Graph {
     var frontierRows = frontier.count()
     var r = 1
     while (r <= rounds && frontierRows > 0) {
-      val fr = frontier.withColumnRenamed("id", "src")
-      val cand = e.join(
-          if (frontierRows <= frontierBroadcastMaxRows) broadcast(fr)
-          else fr, "src")
+      val cand = e.join(broadcastUnder(frontierRows,
+          frontier.withColumnRenamed("id", "src")), "src")
         .groupBy(col("dst").as("id"))
         .agg(min(col("dist") + col("w")).as("cand"))
       val improved = rs.persist(cand.join(dist, Seq("id"), "left_outer")
@@ -252,8 +244,7 @@ object Graph {
   def hashWalk(edges: DataFrame, seeds: DataFrame, steps: Int,
                salt: String): DataFrame = {
     require(steps >= 0, "steps must be >= 0")
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
+    val e = longEdges(edges)
     var state = seeds.select(col("id").cast("long").as("walker"),
       col("id").cast("long").as("cur")).distinct()
     var out = state.select(col("walker"), lit(0).as("step"),
@@ -300,8 +291,7 @@ object Graph {
     */
   def triangleCounts(pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.graft.BloomOps
-    val p = pairs.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
+    val p = longEdges(pairs)
     // The closure side never meets the wedge stream in an exchange:
     // candidate wedges are m^(3/2)-many while closed triangles are
     // typically ~|edges|-many, so shuffling + sorting wedges for the
@@ -344,8 +334,7 @@ object Graph {
   def kCorePeel(pairs: DataFrame, k: Long, rounds: Int): DataFrame =
       FreshCheckpoint.rounds { rs =>
     require(rounds >= 1, "rounds must be >= 1")
-    var e = rs.persist(pairs.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")))
+    var e = rs.persist(longEdges(pairs))
     var keep: DataFrame = null
     for (r <- 1 to rounds) {
       keep = e.select(col("src").as("id"))
@@ -383,47 +372,34 @@ object Graph {
     */
   def pageRankInt(edges: DataFrame, iters: Int,
                   scale: Long = 1000000000L,
-                  dangling: Boolean = false): DataFrame =
-      FreshCheckpoint.rounds { r =>
-    require(iters >= 1, "iters must be >= 1")
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-    // Edge list with out-degree attached — the loop-invariant operand,
-    // pre-partitioned on src (each iteration's rank join key) so only
-    // the rank table shuffles per iteration.
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val ew = r.persist(e.join(outdeg, "src").repartition(col("src")))
-    val nodes = r.persist(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct())
+                  dangling: Boolean = false): DataFrame = {
     val base = (3L * scale) / 20L
-    // n is needed only as a literal divisor for the dangling share; the
-    // count is one job over the (already persisted) node table.
-    val nNodes = if (dangling) nodes.count() else 0L
-    val sinks =
-      if (dangling)
-        r.persist(nodes.join(outdeg.select(col("src").as("id")), Seq("id"),
-          "left_anti"))
-      else null
-    // Dangling mode reads each iteration's ranks TWICE (inflow + sink
-    // sum): left lazy, the plan tree would double per iteration — pin each
-    // round eagerly and retire its predecessor, so one round stays live.
-    // FreshCheckpoint, not Dataset.localCheckpoint: the latter carries the
-    // origin plan's statistics into each round's LogicalRDD, and a loop
-    // that reads its own checkpoint twice per iteration grows the stat
-    // multiplicatively — see FreshCheckpoint's scaladoc for the measured
-    // pointer-jump blowup this prevents.
-    // `rnk` internally: `rank` is a window-function name to the SQL parser
-    // inside expr(), and `div` has no Column-API operator.
-    var ranks = nodes.withColumn("rnk", lit(scale))
-    var live: FreshCheckpoint.Pinned = null
-    for (_ <- 1 to iters) {
-      val inflow = ew.join(ranks.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), expr("rnk div outdeg").as("c"))
-        .groupBy("id").agg(sum("c").as("inflow"))
-      if (dangling) {
+    if (!dangling)
+      rankRecurrence(edges, iters, identity, lit(scale), lit(base))
+    else FreshCheckpoint.rounds { r =>
+      require(iters >= 1, "iters must be >= 1")
+      val e = longEdges(edges)
+      val (outdeg, ew) = rankOperand(r, e)
+      val nodes = r.persist(nodesOf(e))
+      // n is needed only as a literal divisor for the dangling share; the
+      // count is one job over the (already persisted) node table.
+      val nNodes = nodes.count()
+      val sinks = r.persist(nodes.join(outdeg.select(col("src").as("id")),
+        Seq("id"), "left_anti"))
+      // Each iteration's ranks are read TWICE (inflow + sink sum): left
+      // lazy, the plan tree would double per iteration — pin each round
+      // eagerly and retire its predecessor, so one round stays live.
+      // FreshCheckpoint, not Dataset.localCheckpoint: the latter carries
+      // the origin plan's statistics into each round's LogicalRDD, and a
+      // loop that reads its own checkpoint twice per iteration grows the
+      // stat multiplicatively — see FreshCheckpoint's scaladoc for the
+      // measured pointer-jump blowup this prevents.
+      var ranks = nodes.withColumn("rnk", lit(scale))
+      var live: FreshCheckpoint.Pinned = null
+      for (_ <- 1 to iters) {
         val sRow = ranks.join(sinks, "id")
           .agg(coalesce(sum("rnk"), lit(0L)).as("__s"))
-        val next = r.pin(nodes.join(inflow, Seq("id"), "left")
+        val next = r.pin(nodes.join(inflow(ew, ranks), Seq("id"), "left")
           .crossJoin(broadcast(sRow))
           .select(col("id"),
             (lit(base) + expr("(17 * (coalesce(inflow, 0) " +
@@ -431,14 +407,52 @@ object Graph {
         if (live != null) r.release(live)
         live = next
         ranks = next.df
-      } else {
-        ranks = nodes.join(inflow, Seq("id"), "left")
-          .select(col("id"),
-            (lit(base) + expr("(17 * coalesce(inflow, 0)) div 20")).as("rnk"))
       }
+      live
     }
-    if (dangling) live else r.pin(ranks)
   }.select(col("id"), col("rnk").as("rank"))
+
+  /** Loop-invariant operands of the integer rank recurrence: out-degree
+    * per source, and the edge list with out-degree attached — persisted
+    * and pre-partitioned on src (each iteration's rank join key) so only
+    * the rank table shuffles per iteration.
+    */
+  private def rankOperand(r: FreshCheckpoint.Rounds, e: DataFrame)
+      : (DataFrame, DataFrame) = {
+    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
+    (outdeg, r.persist(e.join(outdeg, "src").repartition(col("src"))))
+  }
+
+  /** Per node, Σ over in-edges u→v of rank(u) div outdeg(u). `rnk`
+    * internally: `rank` is a window-function name to the SQL parser
+    * inside expr(), and `div` has no Column-API operator.
+    */
+  private def inflow(ew: DataFrame, ranks: DataFrame): DataFrame =
+    ew.join(ranks.select(col("id").as("src"), col("rnk")), "src")
+      .select(col("dst").as("id"), expr("rnk div outdeg").as("c"))
+      .groupBy("id").agg(sum("c").as("inflow"))
+
+  /** The drain-mode recurrence [[pageRankInt]] and
+    * [[personalizedPageRankInt]] share. `nodeTable` turns the node set
+    * into the table the ranks ride; `init` (the starting rank) and
+    * `teleport` (each iteration's `teleport + (17 · inflow) div 20`) may
+    * read its extra columns. Output: (id, rnk).
+    */
+  private def rankRecurrence(edges: DataFrame, iters: Int,
+                             nodeTable: DataFrame => DataFrame,
+                             init: Column, teleport: Column): DataFrame =
+      FreshCheckpoint.rounds { r =>
+    require(iters >= 1, "iters must be >= 1")
+    val e = longEdges(edges)
+    val (_, ew) = rankOperand(r, e)
+    val nodes = r.persist(nodeTable(nodesOf(e)))
+    val rnk = (teleport + expr("(17 * coalesce(inflow, 0)) div 20")).as("rnk")
+    var ranks = nodes.withColumn("rnk", init)
+    for (_ <- 1 to iters)
+      ranks = nodes.join(inflow(ew, ranks), Seq("id"), "left")
+        .select(nodes.columns.toSeq.map(col) :+ rnk: _*)
+    r.pin(ranks.select("id", "rnk"))
+  }
 
   /** Personalized PageRank in the same pure-integer arithmetic as
     * [[pageRankInt]], with teleportation restricted to a SEED set — "rank
@@ -457,31 +471,12 @@ object Graph {
     */
   def personalizedPageRankInt(edges: DataFrame, seeds: DataFrame, iters: Int,
                               scale: Long = 1000000000L): DataFrame =
-      FreshCheckpoint.rounds { r =>
-    require(iters >= 1, "iters must be >= 1")
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val ew = r.persist(e.join(outdeg, "src"))
-    val nodes = r.persist(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .join(seeds.select(col("id").cast("long").as("id"))
-        .distinct().withColumn("is_seed", lit(1L)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("is_seed"), lit(0L)).as("is_seed")))
-    val base = (3L * scale) / 20L
-    var ranks = nodes.withColumn("rnk", col("is_seed") * scale)
-    for (_ <- 1 to iters) {
-      val inflow = ew.join(ranks.withColumnRenamed("id", "src")
-          .select("src", "rnk"), Seq("src"))
-        .select(col("dst").as("id"), expr("rnk div outdeg").as("c"))
-        .groupBy("id").agg(sum("c").as("inflow"))
-      ranks = nodes.join(inflow, Seq("id"), "left")
-        .select(col("id"), col("is_seed"),
-          (col("is_seed") * base
-            + expr("(17 * coalesce(inflow, 0)) div 20")).as("rnk"))
-    }
-    r.pin(ranks.select(col("id"), col("rnk").as("rank")))
-  }
+    rankRecurrence(edges, iters,
+      _.join(seeds.select(col("id").cast("long").as("id"))
+          .distinct().withColumn("is_seed", lit(1L)), Seq("id"), "left")
+        .select(col("id"), coalesce(col("is_seed"), lit(0L)).as("is_seed")),
+      col("is_seed") * scale, col("is_seed") * ((3L * scale) / 20L))
+      .select(col("id"), col("rnk").as("rank"))
 
   /** Synchronous label propagation (community detection): every node
     * starts labeled with its own id; each round it adopts the label most
@@ -505,10 +500,8 @@ object Graph {
   def labelPropagate(edges: DataFrame, rounds: Int): DataFrame =
       FreshCheckpoint.rounds { r =>
     require(rounds >= 1, "rounds must be >= 1")
-    val e = r.persist(edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")))
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
+    val e = r.persist(longEdges(edges))
+    val nodes = nodesOf(e)
     var lab = nodes.select(col("id"), col("id").as("label"))
     for (_ <- 1 to rounds) {
       val nb = e.join(lab.withColumnRenamed("id", "src"), "src")
@@ -548,10 +541,8 @@ object Graph {
   def hitsInt(edges: DataFrame, iters: Int,
               scale: Long = 1000000L): DataFrame = FreshCheckpoint.rounds { r =>
     require(iters >= 1, "iters must be >= 1")
-    val e = r.persist(edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")))
-    val nodes = r.persist(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct())
+    val e = r.persist(longEdges(edges))
+    val nodes = r.persist(nodesOf(e))
     var h = nodes.select(col("id"), lit(scale).as("h"))
     var a: DataFrame = null
     for (_ <- 1 to iters) {
@@ -595,8 +586,7 @@ object Graph {
     */
   def assortativity(pairs: DataFrame): DataFrame = {
     val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
-    val p = pairs.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
+    val p = longEdges(pairs)
     val eg = p.select(explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
@@ -670,8 +660,7 @@ object Graph {
     */
   def modularityInt(pairs: DataFrame, labels: DataFrame): DataFrame = {
     val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
-    val p = pairs.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
+    val p = longEdges(pairs)
     val lb = labels.select(col("id").cast("long").as("id"),
       col("label").cast("long").as("label"))
     val withLab = p
@@ -714,16 +703,14 @@ object Graph {
     * @return per community: (label, n_nodes, e_in, vol, cut, phi)
     */
   def communityStats(pairs: DataFrame, labels: DataFrame): DataFrame = {
-    val p = pairs.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
+    val p = longEdges(pairs)
     val lb = labels.select(col("id").cast("long").as("id"),
       col("label").cast("long").as("label"))
     val withLab = p
       .join(lb.select(col("id").as("src"), col("label").as("ls")), "src")
       .join(lb.select(col("id").as("dst"), col("label").as("ld")), "dst")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nn = p.select(col("src").as("id")).union(p.select(col("dst").as("id")))
-      .distinct().join(lb, "id")
+    val nn = nodesOf(p).join(lb, "id")
       .groupBy("label").agg(count(lit(1)).as("n_nodes"))
     val ec = withLab.filter(col("ls") === col("ld"))
       .groupBy(col("ls").as("label")).agg(count(lit(1)).as("e_in"))
@@ -749,9 +736,7 @@ object Graph {
     // The pair list feeds three plan branches (wedge legs via eg, the
     // adjacency anti-join, degree joins) and is often itself an expensive
     // self-join (co-occurrence pairs) — materialize it once.
-    val p = pairs.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-      .persist(lvl)
+    val p = longEdges(pairs).persist(lvl)
     val eg = p.select(explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
@@ -1114,10 +1099,8 @@ object Graph {
   def sccBounded(edges: DataFrame, maxNodes: Int): DataFrame =
       FreshCheckpoint.rounds { r =>
     require(maxNodes >= 2, "maxNodes must be >= 2")
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct()
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
+    val e = longEdges(edges).distinct()
+    val nodes = nodesOf(e)
     val rounds = 32 - Integer.numberOfLeadingZeros(maxNodes - 1)
     var reach = r.persist(e.union(nodes.select(col("id").as("src"),
       col("id").as("dst"))).distinct())

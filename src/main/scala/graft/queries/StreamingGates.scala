@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import graft.Scratch
 import graft.model.Tables
 import graft.streaming.Streams
@@ -58,10 +58,11 @@ object StreamingGates extends QueryModule {
     *
     * Both overrides are restored after termination so the BATCH work
     * around the stream (staging writes, final reads) and every later query
-    * keep the session's planning envelope.
+    * keep the session's planning envelope. `sink` is the configured
+    * writer; this starts it under `Trigger.AvailableNow`.
     */
   private def runStream(s: SparkSession)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+      sink: => DataStreamWriter[_]): Unit = {
     val sp = s.conf.getOption("graft.stream.statePartitions")
       .filter(_.nonEmpty)
     val prov = s.conf.getOption("graft.stream.stateStore")
@@ -73,7 +74,7 @@ object StreamingGates extends QueryModule {
     graft.Sessions.withConf(s)(
         sp.map("spark.sql.shuffle.partitions" -> _).toSeq ++
           prov.map("spark.sql.streaming.stateStore.providerClass" -> _): _*) {
-      start.awaitTermination()
+      sink.trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
   }
 
@@ -95,11 +96,9 @@ object StreamingGates extends QueryModule {
       ORDER BY event_type, hour_s"""),
       bench = true) { (s, dir) =>
       val (in, out, ck) = stage(s, dir)
-      runStream(s) { Streams.windowedCounts(
-          Streams.readEventStream(s, in), "1 hour", "1 hour")
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ck)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start() }
+      runStream(s) { Streams.parquetSink(Streams.windowedCounts(
+          Streams.readEventStream(s, in), "1 hour", "1 hour"),
+        out, ck) }
       s.read.parquet(out)
         .select(col("event_type"),
           date_format(col("win_start"), "yyyy-MM-dd HH:mm:ss").as("hour_s"),
@@ -128,11 +127,9 @@ object StreamingGates extends QueryModule {
       WHERE ws + INTERVAL 2 HOUR <= m - INTERVAL 1 HOUR
       ORDER BY event_type, win_s""")) { (s, dir) =>
       val (in, out, ck) = stage(s, dir)
-      runStream(s) { Streams.windowedCountsSliding(
-          Streams.readEventStream(s, in), "2 hours", "1 hour", "1 hour")
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ck)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start() }
+      runStream(s) { Streams.parquetSink(Streams.windowedCountsSliding(
+          Streams.readEventStream(s, in), "2 hours", "1 hour", "1 hour"),
+        out, ck) }
       s.read.parquet(out)
         .select(col("event_type"),
           date_format(col("win_start"), "yyyy-MM-dd HH:mm:ss").as("win_s"),
@@ -156,11 +153,9 @@ object StreamingGates extends QueryModule {
         .filter(col("event_type") === "click")
       val purchases = Streams.readEventStream(s, in)
         .filter(col("event_type") === "purchase")
-      runStream(s) { Streams.intervalJoin(clicks, purchases, "user_id",
-          windowMs = 30 * 60 * 1000L, lateness = "1 hour")
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ck)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start() }
+      runStream(s) { Streams.parquetSink(Streams.intervalJoin(clicks,
+          purchases, "user_id", windowMs = 30 * 60 * 1000L, lateness = "1 hour"),
+        out, ck) }
       s.read.parquet(out)
         .select(col("l_key").as("user_id"), col("l_id"), col("r_id"),
           (unix_millis(col("r_ts")) - unix_millis(col("l_ts"))).as("lag_ms"))
@@ -195,11 +190,9 @@ object StreamingGates extends QueryModule {
         .filter(col("event_type") === "click")
       val purchases = Streams.readEventStream(s, in)
         .filter(col("event_type") === "purchase")
-      runStream(s) { Streams.intervalJoinLeftOuter(clicks, purchases, "user_id",
-          windowMs = 30 * 60 * 1000L, lateness = "1 hour")
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ck)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start() }
+      runStream(s) { Streams.parquetSink(Streams.intervalJoinLeftOuter(clicks,
+          purchases, "user_id", windowMs = 30 * 60 * 1000L, lateness = "1 hour"),
+        out, ck) }
       s.read.parquet(out)
         .select(col("l_key").as("user_id"), col("l_id"), col("r_id"),
           (unix_millis(col("r_ts")) - unix_millis(col("l_ts"))).as("lag_ms"))
@@ -220,11 +213,9 @@ object StreamingGates extends QueryModule {
       val ev = Tables.load(s, dir, "events")
       ev.unionByName(ev).write.mode("overwrite").parquet(in)
       val (out, ck) = (Scratch.fresh("stream-out"), Scratch.fresh("stream-ck"))
-      runStream(s) { Streams.dedupWithinWatermark(
-          Streams.readEventStream(s, in), Seq("event_id"), lateness = "1 hour")
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ck)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start() }
+      runStream(s) { Streams.parquetSink(Streams.dedupWithinWatermark(
+          Streams.readEventStream(s, in), Seq("event_id"), lateness = "1 hour"),
+        out, ck) }
       s.read.parquet(out)
         .groupBy("event_type")
         .agg(count(lit(1)).as("cnt"),
@@ -264,10 +255,8 @@ object StreamingGates extends QueryModule {
       import s.implicits._
       val (in, out, ck) = stage(s, dir)
       val events = Streams.readEventStream(s, in).as[Streams.Event]
-      runStream(s) { Streams.sessionize(events, gapMs, lateness = "1 hour")
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ck)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start() }
+      runStream(s) { Streams.parquetSink(
+        Streams.sessionize(events, gapMs, lateness = "1 hour").toDF(), out, ck) }
       s.read.parquet(out)
         .select("user_id", "n_events", "start_ms", "end_ms")
         .orderBy("user_id", "start_ms")
@@ -289,11 +278,9 @@ object StreamingGates extends QueryModule {
       val (in, out, ck) = stage(s, dir)
       val dim = Tables.load(s, dir, "events").groupBy("user_id")
         .agg(floor(count(lit(1)) / lit(10.0)).cast("long").as("seg"))
-      runStream(s) { Streams.enrichWithDim(
-          Streams.readEventStream(s, in), dim, Seq("user_id"))
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ck)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start() }
+      runStream(s) { Streams.parquetSink(Streams.enrichWithDim(
+          Streams.readEventStream(s, in), dim, Seq("user_id")),
+        out, ck) }
       s.read.parquet(out)
         .groupBy("seg", "event_type")
         .agg(count(lit(1)).as("cnt"),
@@ -318,11 +305,9 @@ object StreamingGates extends QueryModule {
           col("text"))
         .repartition(2)
         .write.format("graft-zip").mode("overwrite").save(zdir)
-      runStream(s) { s.readStream.format("graft-zip").load(zdir)
-        .select("member", "text")
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start() }
+      runStream(s) { Streams.parquetSink(
+        s.readStream.format("graft-zip").load(zdir).select("member", "text"),
+        out, ck) }
       s.read.parquet(out)
         .select(regexp_extract(col("member"), "doc_(\\d+)\\.txt", 1)
           .cast("long").as("doc_id"), col("text"))
@@ -355,8 +340,7 @@ object StreamingGates extends QueryModule {
         .drop("__rn").coalesce(1).write.mode("overwrite").parquet(in)
       runStream(s) { Streams.mergeSink(Streams.readEventStream(s, in),
           Seq("user_id"), snap)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start() }
+        .option("checkpointLocation", ck) }
       s.read.parquet(Streams.latestSnapshot(s, snap)
           .getOrElse(sys.error("mergeSink wrote no snapshot")))
         .select("user_id", "event_id", "event_type", "value")
@@ -411,8 +395,7 @@ object StreamingGates extends QueryModule {
           floor(col("value") * 10).as("bin"),
           when(col("event_type") === "purchase", 1L).otherwise(0L).as("b"))
       runStream(s) { Streams.aggSink(src, Seq("d", "bin"), Seq("nb" -> "b"), snap)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start() }
+        .option("checkpointLocation", ck) }
       val h = s.read.parquet(Streams.latestSnapshot(s, snap)
           .getOrElse(sys.error("aggSink wrote no snapshot")))
         .select(col("d"), col("bin"), col("cnt"),
@@ -449,8 +432,7 @@ object StreamingGates extends QueryModule {
         .option("maxFilesPerTrigger", "1").parquet(in)
       runStream(s) { Streams.aggSink(src, Seq("event_type"),
           Seq("total" -> "value"), snap)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start() }
+        .option("checkpointLocation", ck) }
       s.read.parquet(Streams.latestSnapshot(s, snap)
           .getOrElse(sys.error("aggSink wrote no snapshot")))
         .select(col("event_type"), col("cnt"),
@@ -483,10 +465,8 @@ object StreamingGates extends QueryModule {
         .select(md5(col("text")).as("digest"))
       val src = s.readStream.schema(Streams.documentsSchema)
         .option("maxFilesPerTrigger", "1").parquet(in)
-      runStream(s) { Streams.curateStream(src, digests, minTokens = 8)
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ck)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start() }
+      runStream(s) { Streams.parquetSink(
+        Streams.curateStream(src, digests, minTokens = 8), out, ck) }
       s.read.parquet(out)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"),
@@ -520,8 +500,7 @@ object StreamingGates extends QueryModule {
         .option("maxFilesPerTrigger", "1").parquet(in)
       runStream(s) { Integrity.fingerprintSink(src, Seq("event_id", "event_type"),
           snap)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start() }
+        .option("checkpointLocation", ck) }
       // Gate projection renders the DECIMAL(38,0) checksum sums as
       // strings (SURVEY §5.2 output-type contract); snapshot internals
       // stay exact decimals.

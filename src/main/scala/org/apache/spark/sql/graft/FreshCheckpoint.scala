@@ -141,9 +141,19 @@ object FreshCheckpoint {
     private[FreshCheckpoint] val pins = ArrayBuffer.empty[Pinned]
     private[FreshCheckpoint] val persisted = ArrayBuffer.empty[DataFrame]
 
-    /** Lazy MEMORY_AND_DISK persist — for loop-invariant operands. */
+    /** Lazy MEMORY_AND_DISK persist — for loop-invariant operands. The
+      * CacheManager matches entries by plan, so persisting a plan already
+      * cached reuses the existing entry (a no-op): that entry belongs to
+      * whoever cached it, and the scope registers — and later unpersists —
+      * only the entries it created.
+      */
     def persist(df: DataFrame): DataFrame = {
-      persisted += df.persist(StorageLevel.MEMORY_AND_DISK)
+      val cache = df.sparkSession
+        .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sharedState.cacheManager
+      if (cache.lookupCachedData(
+          df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty)
+        persisted += df.persist(StorageLevel.MEMORY_AND_DISK)
       df
     }
 
@@ -160,11 +170,12 @@ object FreshCheckpoint {
       FreshCheckpoint.release(p)
     }
 
-    /** Unpersist a persist before the scope ends. */
-    def release(df: DataFrame): Unit = {
-      persisted -= df
-      df.unpersist(blocking = false)
-    }
+    /** Unpersist a persist before the scope ends (if the scope owns it). */
+    def release(df: DataFrame): Unit =
+      if (persisted.contains(df)) {
+        persisted -= df
+        df.unpersist(blocking = false)
+      }
   }
 
   /** The one lifetime rule for an iterative operator's round state.

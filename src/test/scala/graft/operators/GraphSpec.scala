@@ -220,6 +220,18 @@ class GraphSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     val pr = Graph.pageRankInt(sym, 3).as[(Long, Long)].collect().toMap
     assert(ppr == pr)
+    // ... and on a directed random graph with sinks (nodes 20-24 only
+    // receive edges), repartitioned: the drain-mode recurrences coincide.
+    val rnd = new scala.util.Random(7)
+    val dir = Seq.fill(80)((rnd.nextInt(20).toLong, rnd.nextInt(25).toLong))
+      .filter { case (a, b) => a != b }.distinct.toDF("src", "dst")
+      .repartition(5)
+    val allNodes = dir.select($"src".as("id"))
+      .union(dir.select($"dst".as("id"))).distinct()
+    val pprAll = Graph.personalizedPageRankInt(dir, allNodes, 4)
+      .as[(Long, Long)].collect().toMap
+    assert(pprAll.keySet.exists(_ >= 20L))
+    assert(pprAll == Graph.pageRankInt(dir, 4).as[(Long, Long)].collect().toMap)
   }
 
   test("hashWalk: deterministic, follows edges, dead ends terminate") {
@@ -410,6 +422,17 @@ class GraphSpec extends SparkSpec {
     val b1 = Graph.landmarkHops(und, lms, maxHops = 1)
       .as[(Long, Long, Long)].collect().toSet
     assert(b1 == Set((1L, 1L, 0L), (2L, 1L, 1L), (5L, 5L, 0L), (4L, 5L, 1L)))
+    // Random graph: each landmark's rows are bfsHops from it alone.
+    val rnd = new scala.util.Random(11)
+    val rg = Seq.fill(40)((rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
+      .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
+    val lmIds = Seq(0L, 7L, 19L)
+    val byLm = Graph.landmarkHops(rg, lmIds.toDF("id"), maxHops = 3)
+      .as[(Long, Long, Long)].collect().toSeq.groupBy(_._2)
+      .map { case (lm, rows) => lm -> rows.map(r => (r._1, r._3)).toSet }
+    for (lm <- lmIds)
+      assert(byLm(lm) == Graph.bfsHops(rg, Seq(lm).toDF("id"), maxHops = 3)
+        .as[(Long, Long)].collect().toSet, s"landmark $lm")
   }
 
   test("closenessFromLandmarks: hand-computed sums; isolated landmark is null") {

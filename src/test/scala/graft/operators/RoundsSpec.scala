@@ -111,4 +111,19 @@ class RoundsSpec extends SparkSpec {
     }
     assert(thrown.isEmpty)
   }
+
+  test("rounds: a persist of a plan the caller cached leaves the caller's entry") {
+    val df = (1 to 100).toDF("x")
+    leftBy {
+      val x = df.filter($"x" > 10)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      assert(x.count() == 90L)
+      val out = FreshCheckpoint.rounds { r =>
+        r.pin(r.persist(df.filter($"x" > 10)).filter($"x" > 50))
+      }
+      assert(out.count() == 50L)
+      assert(x.storageLevel ==
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+  }
 }
