@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.FreshCheckpoint
+import Exact.dec
 
 /** Iterative graph ranking over an edge list — the authority-weighting
   * signal web-corpus curation pipelines attach to documents (rank a page's
@@ -585,7 +586,6 @@ object Graph {
     * @return one row: (m_directed, r)
     */
   def assortativity(pairs: DataFrame): DataFrame = {
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val p = longEdges(pairs)
     val eg = p.select(explode(array(
         struct(col("src"), col("dst")),
@@ -601,15 +601,8 @@ object Graph {
         sum(dec(col("dj")) * dec(col("dk"))).as("sjk"),
         sum(dec(col("dj")) * dec(col("dj"))).as("sjj"),
         sum(dec(col("dk")) * dec(col("dk"))).as("skk"))
-    agg.select(col("m"),
-      when(dec(col("m")) * col("sjj") - col("sj") * col("sj") > 0 &&
-          dec(col("m")) * col("skk") - col("sk") * col("sk") > 0,
-        (dec(col("m")) * col("sjk") - col("sj") * col("sk")).cast("double") /
-          (sqrt((dec(col("m")) * col("sjj") - col("sj") * col("sj"))
-            .cast("double")) *
-           sqrt((dec(col("m")) * col("skk") - col("sk") * col("sk"))
-            .cast("double"))))
-        .as("r"))
+    agg.select(col("m"), Exact.pearson(col("m"), col("sj"), col("sk"),
+      col("sjj"), col("skk"), col("sjk")).as("r"))
   }
 
   /** Link prediction over an undirected unique-pair edge list (src < dst):
@@ -659,7 +652,6 @@ object Graph {
     * @return one row: (m, n_comm, q)
     */
   def modularityInt(pairs: DataFrame, labels: DataFrame): DataFrame = {
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val p = longEdges(pairs)
     val lb = labels.select(col("id").cast("long").as("id"),
       col("label").cast("long").as("label"))

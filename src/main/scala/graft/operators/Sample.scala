@@ -12,21 +12,12 @@ import org.apache.spark.sql.functions._
   */
 object Sample {
 
-  /** Hash-Bernoulli sample at `percent` %: keep a row iff its id hashes
-    * into the first `percent` of 100 buckets. xxhash64 path — codegen'd,
-    * the production choice. Pure filter: no shuffle, pushes past columnar
-    * scans like any predicate.
-    */
-  def bernoulli(idCol: String, percent: Int): Column = {
-    require(percent >= 0 && percent <= 100, "percent in [0, 100]")
-    pmod(xxhash64(col(idCol)), lit(100)) < percent
-  }
-
-  /** Engine-portable variant: keep rows whose first two md5 hex digits
+  /** Hash-Bernoulli sample: keep rows whose first two md5 hex digits
     * compare below `hexCeil` ("40" = 64/256 = 25%). Lowercase hex orders
     * lexicographically like numerically, so a plain string compare is
     * reproducible in any engine with md5 — no numeric conversion to
-    * diverge on.
+    * diverge on. Pure filter: no shuffle, pushes past columnar scans like
+    * any predicate.
     */
   def bernoulliPortable(idCol: String, hexCeil: String): Column =
     substring(md5(col(idCol).cast("string")), 1, 2) < lit(hexCeil)

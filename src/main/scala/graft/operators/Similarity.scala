@@ -31,17 +31,22 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.VectorFunctions.vecCosine(a, b)
 
-  /** Higher-order-function formulations — semantically identical to the
-    * native expressions above (same sequential fold); kept as the
-    * cross-check reference implementation.
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  def cosineHof(a: Column, b: Column): Column =
-    dotHof(a, b) / sqrt(dotHof(a, a) * dotHof(b, b))
-
   private def asDouble(c: Column): Column = c.cast("array<double>")
+
+  /** Per-query top-k of a scored candidate set: `row_number` over `qid`
+    * in (`score`, nid) order, ranks 1..k kept — Catalyst plans the
+    * per-partition sort + filter as a partial top-k. `score` carries its
+    * direction (`.desc` for similarities, ascending for distances); nid
+    * breaks ties so the ranking is total. Output: (qid, rank, nid, out…).
+    */
+  private def topKPerQuery(scored: DataFrame, score: Column, k: Int,
+                           out: String*): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("qid").orderBy(score, col("nid"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select("qid", Seq("rank", "nid") ++ out: _*)
+  }
 
   /** Brute-force cosine top-k: every query row against every corpus row,
     * query side broadcast (must be small), top-k per query via window rank —
@@ -57,11 +62,7 @@ object Similarity {
       .select(col(idCol).as("nid"), asDouble(col(vecCol)).as("cv"))
     val scored = c.crossJoin(q)
       .withColumn("sim", cosine(col("qv"), col("cv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("sim").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("qid", "rank", "nid", "sim")
+    topKPerQuery(scored, col("sim").desc, k, "sim")
   }
 
   /** Maximum inner-product search (MIPS), brute force: top-k by RAW dot
@@ -91,11 +92,7 @@ object Similarity {
     val scored = c.crossJoin(q)
       .withColumn("score",
         org.apache.spark.sql.graft.VectorFunctions.vecDot(col("qv"), col("cv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("score").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("qid", "rank", "nid", "score")
+    topKPerQuery(scored, col("score").desc, k, "score")
   }
 
   /** The plane vectors, collected once and ordered by plane id — they are
@@ -214,11 +211,7 @@ object Similarity {
       .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv"), col("bucket"))
     val scored = cb.join(broadcast(qb), "bucket")
       .withColumn("sim", cosine(col("qv"), col("cv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("sim").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("qid", "rank", "nid", "sim", "bucket")
+    topKPerQuery(scored, col("sim").desc, k, "sim", "bucket")
   }
 
   /** `bucket` plus every bucket string at Hamming distance 1 (one flipped
@@ -275,11 +268,7 @@ object Similarity {
     }.reduce(_ unionAll _)
       .dropDuplicates("qid", "nid")
     val scored = cand.withColumn("sim", cosine(col("qv"), col("cv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("sim").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("qid", "rank", "nid", "sim")
+    topKPerQuery(scored, col("sim").desc, k, "sim")
   }
 
   /** Nearest-centroid cell id (IVF coarse quantizer): argmax cosine over
@@ -450,11 +439,7 @@ object Similarity {
       }
     }.reduce(_ + _)
     val scored = coded.crossJoin(qb).withColumn("est_d2", est)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("est_d2"), col("nid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("qid", "rank", "nid", "est_d2")
+    topKPerQuery(scored, col("est_d2"), k, "est_d2")
   }
 
   /** SQ8 scalar-quantized ANN: each corpus vector is stored as a per-vector
@@ -492,11 +477,7 @@ object Similarity {
       .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv")))
     val scored = c.crossJoin(qb)
       .withColumn("sim", cosine(col("qv"), col("__rv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("sim").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("qid", "rank", "nid", "sim")
+    topKPerQuery(scored, col("sim").desc, k, "sim")
   }
 
   /** SEMANTIC DECONTAMINATION — drop every training vector whose cosine
@@ -663,11 +644,7 @@ object Similarity {
       dist2(qsub, element_at(typedLit(cb.toSeq), col(s"c$j") + 1))
     }.reduce(_ + _)
     val scored = coded.join(qb, "cell").withColumn("est_d2", est)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("est_d2"), col("nid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("qid", "rank", "nid", "est_d2")
+    topKPerQuery(scored, col("est_d2"), k, "est_d2")
   }
 
   /** Signed random projection (the Johnson-Lindenstrauss sketch with a
@@ -733,11 +710,7 @@ object Similarity {
     // are distinct, so (qid, nid) pairs are already unique — no dedup.
     val scored = cb.join(qb, "cell")
       .withColumn("sim", cosine(col("qv"), col("cv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("sim").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("qid", "rank", "nid", "sim")
+    topKPerQuery(scored, col("sim").desc, k, "sim")
   }
 
   /** RADIUS similarity search — every corpus vector with cosine >= `tau`

@@ -1,13 +1,23 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exact.{dec, gridFloor}
 
 /** Distributed descriptive statistics: equi-width histograms and exact
   * second-moment statistics (variance / correlation). The reference's
   * analytics surface stops at count(*) (SURVEY.md §2.2 R4); these are the
   * profiling passes a data platform runs over every numeric column, built
   * so the results are deterministic under any partitioning.
+  *
+  * Each exact-arithmetic step has one definition. The steps other
+  * operator modules share — the DECIMAL(38,0) carrier `dec`, the
+  * `floor(v·grid)` lattice `gridFloor`, Pearson from exact moments —
+  * live in [[Exact]]. The rank and test steps only this module uses —
+  * the ROWS-frame running sum, doubled mid-ranks, tie sums, the 10⁻⁶
+  * lattice sum and the two-group moments — are private defs below
+  * [[localGrid]].
   */
 object Stats {
 
@@ -46,6 +56,54 @@ object Stats {
     * (categories × bins), far below driver heap.
     */
   private val maxGridCells = 4000000
+
+  /** Exact decimal zero: the empty-sum value of a DECIMAL(38,0) total. */
+  private def dec0: Column = dec(lit(0))
+
+  /** Running total of `c` over the ROWS frame up to and including the
+    * current row, per `keys` in `order` — the cumulative count every
+    * ECDF, rank and median statistic here reads.
+    */
+  private def runningSum(c: String, keys: Seq[Column],
+                         order: Column): Column =
+    sum(c).over(Window.partitionBy(keys: _*).orderBy(order)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+
+  /** [[runningSum]] of the rows strictly before the current one. */
+  private def runningBefore(c: String, keys: Seq[Column],
+                            order: Column): Column =
+    runningSum(c, keys, order) - col(c)
+
+  /** Doubled tie-averaged rank of a tie group of `t` rows with `cb` rows
+    * before it: 2·avgRank = 2·cb + t + 1, an exact integer.
+    */
+  private def midRank2(cb: Column, t: Column): Column =
+    lit(2L) * dec(cb) + dec(t) + 1
+
+  /** t³ − t in exact integers: a tie group's term of the rank-test tie
+    * correction Σ(t³−t), and at t = N the value that sum reaches when
+    * every row ties (the degenerate-variance guard).
+    */
+  private def cubeTies(t: Column): Column =
+    dec(t) * dec(t) * dec(t) - dec(t)
+
+  /** t(t−1)(2t+5) in exact integers: the Kendall-family variance term,
+    * per tie group or group size, and for the whole sample at t = n.
+    */
+  private def ties25(t: Column): Column =
+    dec(t) * (dec(t) - 1) * (dec(lit(2)) * dec(t) + 5)
+
+  /** Exact sum of a per-row double `term` on the 10⁻⁶ lattice: each term
+    * floors to the integer `t6` (floor, not round — only floor is
+    * rounding-mode-identical everywhere) and the integers sum in
+    * DECIMAL(38,0). One row (q6); [[q6Value]] reads it back.
+    */
+  private def latticeSum(df: DataFrame, term: Column, t6: String): DataFrame =
+    df.select(floor(term * lit(1e6)).as(t6))
+      .agg(coalesce(sum(dec(col(t6))), dec0).as("q6"))
+
+  /** A [[latticeSum]] total read back in units: q6 / 10⁶. */
+  private def q6Value: Column = col("q6").cast("double") / lit(1e6)
 
   /** Two-pass equi-width histogram: pass 1 reduces to the global (min, max)
     * — one scalar row, broadcast back — pass 2 assigns each value its
@@ -244,21 +302,6 @@ object Stats {
     counts.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
   }
 
-  /** Exact sufficient statistics for variance and correlation of two
-    * integer-valued columns, per group: n, Σx, Σx², Σy, Σxy, plus the
-    * integer-exact variance numerator `n·Σx² − (Σx)²` and covariance
-    * numerator `n·Σxy − Σx·Σy`. Everything up to the numerators is long
-    * arithmetic — bit-identical under any partial-aggregation order, which
-    * double-accumulating variance can never be. Callers derive
-    * `var = var_num / (n(n−1))` and `corr = cov_num / √(var_num_x·var_num_y)`
-    * as a final single-expression step (one IEEE division / sqrt —
-    * deterministic); the exact integer core is what shuffles and merges.
-    *
-    * Overflow envelope: |x|,|y| ≤ B, n rows per group needs
-    * n·B⁴ < 2⁶³ for the numerators — B = 100 is safe past 9×10¹⁰ rows per
-    * group; larger domains should pre-scale or switch the numerators to
-    * decimal(38,0).
-    */
   /** Rolling z-score anomaly detection in EXACT integer arithmetic: values
     * land on a fixed-point grid (`floor(value · gridScale)` longs) and the
     * trailing-window test `|x − mean| > τ·σ` is evaluated in its squared,
@@ -537,12 +580,8 @@ object Stats {
       isB.cast("long").as("b"): _*)
     val cnt = d.groupBy(k :+ col("x"): _*)
       .agg(sum(lit(1L) - col("b")).as("ca"), sum("b").as("cb"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(k: _*).orderBy(col("x"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val cum = cnt.withColumn("cca", sum("ca").over(w))
-      .withColumn("ccb", sum("cb").over(w))
+    val cum = cnt.withColumn("cca", runningSum("ca", k, col("x")))
+      .withColumn("ccb", runningSum("cb", k, col("x")))
     val tot = cnt.groupBy(k: _*)
       .agg(sum("ca").as("n_a"), sum("cb").as("n_b"))
       .filter(col("n_a") > 0 && col("n_b") > 0)
@@ -574,11 +613,8 @@ object Stats {
     val hist = df.groupBy(col(binCol).as("bin"))
       .agg(sum(col(posCol).cast("long")).as("np"),
         sum(lit(1L) - col(posCol).cast("long")).as("nn"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy("bin")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
     hist
-      .withColumn("nn_below", sum("nn").over(w) - col("nn"))
+      .withColumn("nn_below", runningBefore("nn", Nil, col("bin")))
       .agg(sum("np").as("n_pos"), sum("nn").as("n_neg"),
         sum(lit(2L) * col("nn_below") * col("np")
           + col("nn") * col("np")).as("auc_num"))
@@ -665,6 +701,21 @@ object Stats {
       .withColumn("rnk", (col("__pos") + 1).cast("long"))
       .drop("__pos")
 
+  /** Exact sufficient statistics for variance and correlation of two
+    * integer-valued columns, per group: n, Σx, Σx², Σy, Σxy, plus the
+    * integer-exact variance numerator `n·Σx² − (Σx)²` and covariance
+    * numerator `n·Σxy − Σx·Σy`. Everything up to the numerators is long
+    * arithmetic — bit-identical under any partial-aggregation order, which
+    * double-accumulating variance can never be. Callers derive
+    * `var = var_num / (n(n−1))` and `corr = cov_num / √(var_num_x·var_num_y)`
+    * as a final single-expression step (one IEEE division / sqrt —
+    * deterministic); the exact integer core is what shuffles and merges.
+    *
+    * Overflow envelope: |x|,|y| ≤ B, n rows per group needs
+    * n·B⁴ < 2⁶³ for the numerators — B = 100 is safe past 9×10¹⁰ rows per
+    * group; larger domains should pre-scale or switch the numerators to
+    * decimal(38,0).
+    */
   def momentsInt(df: DataFrame, keys: Seq[String],
                  xCol: String, yCol: String): DataFrame = {
     val x = col(xCol).cast("long")
@@ -709,12 +760,9 @@ object Stats {
   def autocorrInt(df: DataFrame, keys: Seq[String], orderCols: Seq[String],
                   valueCol: String, lag: Int, grid: Long): DataFrame = {
     require(lag >= 1, "lag must be >= 1")
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(orderCols.map(col): _*)
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val g = df.withColumn("__x",
-        floor(col(valueCol) * lit(grid.toDouble)).cast("long"))
+    val g = df.withColumn("__x", gridFloor(col(valueCol), grid))
       .withColumn("__y", lead(col("__x"), lag).over(w))
     g.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n"),
@@ -754,13 +802,11 @@ object Stats {
                    xCol: String, yCol: String, lag: Int,
                    grid: Long): DataFrame = {
     require(lag >= 1, "lag must be >= 1")
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(orderCols.map(col): _*)
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val g = df
-      .withColumn("__x", floor(col(xCol) * lit(grid.toDouble)).cast("long"))
-      .withColumn("__y0", floor(col(yCol) * lit(grid.toDouble)).cast("long"))
+      .withColumn("__x", gridFloor(col(xCol), grid))
+      .withColumn("__y0", gridFloor(col(yCol), grid))
       .withColumn("__y", lead(col("__y0"), lag).over(w))
       .filter(col("__y").isNotNull)
     g.groupBy(keys.map(col): _*)
@@ -771,15 +817,8 @@ object Stats {
         sum(dec(col("__y")) * dec(col("__y"))).as("syy"),
         sum(dec(col("__x")) * dec(col("__y"))).as("sxy"))
       .select((keys.map(col) :+ col("n_pairs") :+
-        when(
-          (dec(col("n_pairs")) * col("sxx") - col("sx") * col("sx")) > 0 &&
-            (dec(col("n_pairs")) * col("syy") - col("sy") * col("sy")) > 0,
-          (dec(col("n_pairs")) * col("sxy") - col("sx") * col("sy"))
-            .cast("double") /
-            (sqrt((dec(col("n_pairs")) * col("sxx") - col("sx") * col("sx"))
-              .cast("double")) *
-              sqrt((dec(col("n_pairs")) * col("syy") - col("sy") * col("sy"))
-                .cast("double")))).as("xcf")): _*)
+        Exact.pearson(col("n_pairs"), col("sx"), col("sy"), col("sxx"),
+          col("syy"), col("sxy")).as("xcf")): _*)
   }
 
   /** CUSUM mean-shift changepoint per key — WHERE in an ordered stream
@@ -800,13 +839,11 @@ object Stats {
   def cusumChangepoint(df: DataFrame, keys: Seq[String],
                        orderCols: Seq[String], valueCol: String,
                        grid: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val wOrd = Window.partitionBy(keys.map(col): _*)
       .orderBy(orderCols.map(col): _*)
     val wAll = Window.partitionBy(keys.map(col): _*)
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val g = df
-      .withColumn("__x", floor(col(valueCol) * lit(grid.toDouble)).cast("long"))
+      .withColumn("__x", gridFloor(col(valueCol), grid))
       .withColumn("__t", row_number().over(wOrd).cast("long"))
       .withColumn("__st", sum(dec(col("__x"))).over(wOrd))
       .withColumn("__n", count(lit(1)).over(wAll))
@@ -852,10 +889,9 @@ object Stats {
     // them as DECIMAL(38,0) (the engine-wide exact-integer envelope, as
     // in contingencyResiduals/autocorrInt) so the statistic survives the
     // advertised scale. n and agree stay BIGINT (plain row counts).
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val chance = ra.join(cb, col("la") === col("lb"))
-      .agg(coalesce(sum(dec(col("ca")) * dec(col("cb"))),
-        lit(0).cast("decimal(38,0)")).as("chance_num"))
+      .agg(coalesce(sum(dec(col("ca")) * dec(col("cb"))), dec0)
+        .as("chance_num"))
     n.crossJoin(broadcast(agree)).crossJoin(broadcast(chance))
       .select(col("n"), col("agree"), col("chance_num"),
         when(dec(col("n")) * dec(col("n")) =!= col("chance_num"),
@@ -890,7 +926,6 @@ object Stats {
     */
   def contingencyResiduals(df: DataFrame, aCol: String,
                            bCol: String): DataFrame = {
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val cells = localGrid(df.groupBy(col(aCol).as("a"), col(bCol).as("b"))
       .agg(count(lit(1)).as("observed")))
     val rowT = cells.groupBy("a").agg(sum("observed").as("row_tot"))
@@ -980,11 +1015,36 @@ object Stats {
   def welchT(df: DataFrame, keys: Seq[String], groupCol: String,
              groupA: String, groupB: String, valueCol: String,
              grid: Long): DataFrame = {
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val x = floor(col(valueCol) * lit(grid.toDouble)).cast("long")
+    // Sample variance s² = (n·Σx² − (Σx)²) / (n·(n−1)) — exact integer
+    // numerator and denominator; the grid divisor cancels out of t except
+    // as an overall 1/grid factor on the mean difference, so we keep
+    // everything in grid units and t is scale-free.
+    def varOf(s: Column, ss: Column, n: Column) =
+      (dec(n) * ss - s * s).cast("double") /
+        (dec(n) * dec(n - lit(1))).cast("double")
+    val v1 = varOf(col("s1"), col("ss1"), col("n1"))
+    val v2 = varOf(col("s2"), col("ss2"), col("n2"))
+    val se2 = v1 / col("n1").cast("double") + v2 / col("n2").cast("double")
+    twoGroupStat(df, keys, groupCol, groupA, groupB, valueCol, grid, "t")(
+      (meanOf(col("s1"), col("n1")) - meanOf(col("s2"), col("n2"))) /
+        sqrt(se2))
+  }
+
+  /** Two-group (n, Σx, Σx²) moments per key on the integer grid — n1, s1,
+    * ss1 for `groupA` and n2, s2, ss2 for `groupB`, exact DECIMAL(38,0)
+    * sums with map-side partials — reduced to (keys..., n1, n2, `name`).
+    * `stat` is the caller's fixed-shape expression over those moments;
+    * it is null unless both groups have ≥ 2 rows and at least one has a
+    * positive spread.
+    */
+  private def twoGroupStat(df: DataFrame, keys: Seq[String],
+                           groupCol: String, groupA: String, groupB: String,
+                           valueCol: String, grid: Long,
+                           name: String)(stat: Column): DataFrame = {
+    val x = gridFloor(col(valueCol), grid)
     val isA = col(groupCol) === groupA
     val isB = col(groupCol) === groupB
-    val agg = df.filter(isA || isB)
+    df.filter(isA || isB)
       .groupBy(keys.map(col): _*)
       .agg(sum(when(isA, 1L).otherwise(0L)).as("n1"),
         sum(when(isA, dec(x))).as("s1"),
@@ -992,25 +1052,14 @@ object Stats {
         sum(when(isB, 1L).otherwise(0L)).as("n2"),
         sum(when(isB, dec(x))).as("s2"),
         sum(when(isB, dec(x) * dec(x))).as("ss2"))
-    // Sample variance s² = (n·Σx² − (Σx)²) / (n·(n−1)) — exact integer
-    // numerator and denominator; the grid divisor cancels out of t except
-    // as an overall 1/grid factor on the mean difference, so we keep
-    // everything in grid units and t is scale-free.
-    def meanOf(s: Column, n: Column) = s.cast("double") / n.cast("double")
-    def varOf(s: Column, ss: Column, n: Column) =
-      (dec(n) * ss - s * s).cast("double") /
-        (dec(n) * dec(n - lit(1))).cast("double")
-    val m1 = meanOf(col("s1"), col("n1"))
-    val m2 = meanOf(col("s2"), col("n2"))
-    val v1 = varOf(col("s1"), col("ss1"), col("n1"))
-    val v2 = varOf(col("s2"), col("ss2"), col("n2"))
-    val se2 = v1 / col("n1").cast("double") + v2 / col("n2").cast("double")
-    agg.select((keys.map(col) :+ col("n1") :+ col("n2") :+
-      when(col("n1") > 1 && col("n2") > 1 &&
-          (dec(col("n1")) * col("ss1") - col("s1") * col("s1") > 0 ||
-           dec(col("n2")) * col("ss2") - col("s2") * col("s2") > 0),
-        (m1 - m2) / sqrt(se2)).as("t")): _*)
+      .select((keys.map(col) :+ col("n1") :+ col("n2") :+
+        when(col("n1") > 1 && col("n2") > 1 &&
+            (dec(col("n1")) * col("ss1") - col("s1") * col("s1") > 0 ||
+             dec(col("n2")) * col("ss2") - col("s2") * col("s2") > 0),
+          stat).as(name)): _*)
   }
+
+  private def meanOf(s: Column, n: Column) = s.cast("double") / n.cast("double")
 
   /** Cohen's d effect size per key — the magnitude companion to
     * [[welchT]]'s significance: a t statistic says the groups differ, d
@@ -1031,31 +1080,15 @@ object Stats {
   def cohensD(df: DataFrame, keys: Seq[String], groupCol: String,
               groupA: String, groupB: String, valueCol: String,
               grid: Long): DataFrame = {
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val x = floor(col(valueCol) * lit(grid.toDouble)).cast("long")
-    val isA = col(groupCol) === groupA
-    val isB = col(groupCol) === groupB
-    val agg = df.filter(isA || isB)
-      .groupBy(keys.map(col): _*)
-      .agg(sum(when(isA, 1L).otherwise(0L)).as("n1"),
-        sum(when(isA, dec(x))).as("s1"),
-        sum(when(isA, dec(x) * dec(x))).as("ss1"),
-        sum(when(isB, 1L).otherwise(0L)).as("n2"),
-        sum(when(isB, dec(x))).as("s2"),
-        sum(when(isB, dec(x) * dec(x))).as("ss2"))
-    def meanOf(s: Column, n: Column) = s.cast("double") / n.cast("double")
     def ssqOf(s: Column, ss: Column, n: Column) = // (n−1)·s², exact num.
       (dec(n) * ss - s * s).cast("double") / n.cast("double")
     val pooled =
       (ssqOf(col("s1"), col("ss1"), col("n1")) +
         ssqOf(col("s2"), col("ss2"), col("n2"))) /
         (col("n1") + col("n2") - 2).cast("double")
-    agg.select((keys.map(col) :+ col("n1") :+ col("n2") :+
-      when(col("n1") > 1 && col("n2") > 1 &&
-          (dec(col("n1")) * col("ss1") - col("s1") * col("s1") > 0 ||
-           dec(col("n2")) * col("ss2") - col("s2") * col("s2") > 0),
-        (meanOf(col("s1"), col("n1")) - meanOf(col("s2"), col("n2"))) /
-          sqrt(pooled)).as("d")): _*)
+    twoGroupStat(df, keys, groupCol, groupA, groupB, valueCol, grid, "d")(
+      (meanOf(col("s1"), col("n1")) - meanOf(col("s2"), col("n2"))) /
+        sqrt(pooled))
   }
 
   /** Histogram-resolution quantiles — the SCALE PATH for percentiles,
@@ -1082,17 +1115,15 @@ object Stats {
   def histQuantiles(df: DataFrame, keys: Seq[String], valueCol: String,
                     grid: Long): DataFrame = {
     require(grid >= 1, "grid must be >= 1")
-    import org.apache.spark.sql.expressions.Window
     val hist = df
-      .withColumn("__g", floor(col(valueCol) * lit(grid.toDouble)).cast("long"))
+      .withColumn("__g", gridFloor(col(valueCol), grid))
       .groupBy((keys.map(col) :+ col("__g")): _*)
       .agg(count(lit(1)).as("__c"))
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col("__g"))
     val cum = hist
-      .withColumn("__cum", sum("__c").over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("__cum", runningSum("__c", keys.map(col), col("__g")))
       .withColumn("__n", sum("__c").over(
-        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+        Window.partitionBy(keys.map(col): _*).orderBy(col("__g"))
+          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
     cum.groupBy(keys.map(col): _*)
       .agg(max("__n").as("n"),
         (min(when(col("__cum") >= expr("(__n + 1) div 2"), col("__g")))
@@ -1130,9 +1161,8 @@ object Stats {
   def olsFit(df: DataFrame, keys: Seq[String], xCol: String, yCol: String,
              xGrid: Long = 1L, yGrid: Long = 1L): DataFrame = {
     require(xGrid >= 1 && yGrid >= 1, "grids must be >= 1")
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val x = dec(floor(col(xCol) * lit(xGrid.toDouble)).cast("long"))
-    val y = dec(floor(col(yCol) * lit(yGrid.toDouble)).cast("long"))
+    val x = dec(gridFloor(col(xCol), xGrid))
+    val y = dec(gridFloor(col(yCol), yGrid))
     val agg = df.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n"), sum(x).as("sx"), sum(y).as("sy"),
         sum(x * y).as("sxy"), sum(x * x).as("sxx"), sum(y * y).as("syy"))
@@ -1168,9 +1198,8 @@ object Stats {
   def corrMatrix(df: DataFrame, cols: Seq[(String, Long)]): DataFrame = {
     require(cols.size >= 2, "corrMatrix needs at least two columns")
     require(cols.forall(_._2 >= 1), "grids must be >= 1")
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val g: Map[String, Column] = cols.map { case (c, grid) =>
-      c -> dec(floor(col(c) * lit(grid.toDouble)).cast("long"))
+      c -> dec(gridFloor(col(c), grid))
     }.toMap
     val names = cols.map(_._1)
     val pairs = for {
@@ -1182,16 +1211,11 @@ object Stats {
         sum(g(names(i)) * g(names(j))).as(s"__sp_${i}_$j")
       }).toSeq
     val m = df.agg(count(lit(1)).as("n"), aggs: _*)
-    val n = dec(col("n"))
     val rows = pairs.map { case (i, j) =>
       val (ci, cj) = (names(i), names(j))
-      val num = n * col(s"__sp_${i}_$j") - col(s"__s_$ci") * col(s"__s_$cj")
-      val di = n * col(s"__ss_$ci") - col(s"__s_$ci") * col(s"__s_$ci")
-      val dj = n * col(s"__ss_$cj") - col(s"__s_$cj") * col(s"__s_$cj")
       struct(lit(ci).as("col_a"), lit(cj).as("col_b"),
-        when(di > 0 && dj > 0,
-          num.cast("double") /
-            (sqrt(di.cast("double")) * sqrt(dj.cast("double"))))
+        Exact.pearson(col("n"), col(s"__s_$ci"), col(s"__s_$cj"),
+          col(s"__ss_$ci"), col(s"__ss_$cj"), col(s"__sp_${i}_$j"))
           .as("corr"))
     }
     m.select(col("n"), explode(array(rows: _*)).as("__p"))
@@ -1216,7 +1240,6 @@ object Stats {
     */
   def diversity(df: DataFrame, keys: Seq[String],
                 catCol: String): DataFrame = {
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val cells = df.groupBy((keys :+ catCol).map(col): _*)
       .agg(count(lit(1)).as("__c"))
     val agg = cells.groupBy(keys.map(col): _*)
@@ -1293,23 +1316,17 @@ object Stats {
         (col(labelCol) === aLabel).cast("long").as("a"))
     val hist = d.groupBy("v")
       .agg(sum("a").as("ca"), sum(lit(1L) - col("a")).as("cb"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy("v")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val cum = hist
       .withColumn("t", col("ca") + col("cb"))
-      .withColumn("cb4", sum(col("t")).over(w) - col("t"))
+      .withColumn("cb4", runningBefore("t", Nil, col("v")))
     // 2·avgRank of the tie group at v = 2·cum_before + t + 1 (integer).
     // r_a2 ~ n_a·N at the top — past LongType at ~3e9 rows, so it
     // accumulates as DECIMAL(38,0) (gates render it per the §5.2
     // output-type contract).
     val agg = cum.agg(
       sum("ca").as("n_a"), sum("cb").as("n_b"),
-      sum(dec(col("ca")) * (lit(2L) * dec(col("cb4")) + dec(col("t")) + 1))
-        .as("r_a2"),
-      sum(dec(col("t")) * dec(col("t")) * dec(col("t")) - dec(col("t")))
-        .as("ties"))
+      sum(dec(col("ca")) * midRank2(col("cb4"), col("t"))).as("r_a2"),
+      sum(cubeTies(col("t"))).as("ties"))
     agg.select(col("n_a"), col("n_b"), col("r_a2"),
         ((col("r_a2") - dec(col("n_a")) * (dec(col("n_a")) + 1))
           .cast("double") / 2.0).as("u_a"),
@@ -1321,8 +1338,7 @@ object Stats {
         // divides to NULL where DuckDB yields NaN, so the case must be
         // excluded symbolically, not left to IEEE.
         when(col("n_a") > 0 && col("n_b") > 0 && col("nn") > 1 &&
-          col("ties") <
-            dec(col("nn")) * dec(col("nn")) * dec(col("nn")) - dec(col("nn")),
+          col("ties") < cubeTies(col("nn")),
           (col("u_a") - (dec(col("n_a")) * dec(col("n_b")))
             .cast("double") / 2.0) /
             sqrt((dec(col("n_a")) * dec(col("n_b"))).cast("double") / 12.0 *
@@ -1352,14 +1368,9 @@ object Stats {
       .agg(count(lit(1)).as("c"))
     def rankMap(vc: String) = {
       val h = hist.groupBy(col(vc).as("v")).agg(sum("c").as("t"))
-      val w = org.apache.spark.sql.expressions.Window.orderBy("v")
-        .rowsBetween(
-          org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)
-      h.withColumn("cb", sum("t").over(w) - col("t"))
+      h.withColumn("cb", runningBefore("t", Nil, col("v")))
         .select(col("v"), (lit(2L) * col("cb") + col("t") + 1L).as("r2"))
     }
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     // Rank maps resolve against the RENAMED histogram columns (x, y) —
     // never the caller's xCol/yCol names, which no longer exist on hist
     // (and would silently rank the wrong column if the caller's names
@@ -1375,15 +1386,8 @@ object Stats {
       sum(dec(col("c")) * dec(col("rx2")) * dec(col("rx2"))).as("sxx"),
       sum(dec(col("c")) * dec(col("ry2")) * dec(col("ry2"))).as("syy"),
       sum(dec(col("c")) * dec(col("rx2")) * dec(col("ry2"))).as("sxy"))
-    a.select(col("n"),
-      when(
-        (dec(col("n")) * col("sxx") - col("sx") * col("sx")) > 0 &&
-          (dec(col("n")) * col("syy") - col("sy") * col("sy")) > 0,
-        (dec(col("n")) * col("sxy") - col("sx") * col("sy")).cast("double") /
-          (sqrt((dec(col("n")) * col("sxx") - col("sx") * col("sx"))
-            .cast("double")) *
-            sqrt((dec(col("n")) * col("syy") - col("sy") * col("sy"))
-              .cast("double")))).as("rho"))
+    a.select(col("n"), Exact.pearson(col("n"), col("sx"), col("sy"),
+      col("sxx"), col("syy"), col("sxy")).as("rho"))
   }
 
   /** Kendall tau-b over two BOUNDED integer grids — the concordance
@@ -1407,7 +1411,6 @@ object Stats {
     * them per the §5.2 output-type contract).
     */
   def kendallTauB(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val cells = localGrid(df.groupBy(col(xCol).as("x"), col(yCol).as("y"))
       .agg(count(lit(1)).as("c")))
     val a = cells.select(col("x").as("x1"), col("y").as("y1"),
@@ -1417,18 +1420,14 @@ object Stats {
     val pairs = a.join(b, col("x1") < col("x2"))
       .agg(
         coalesce(sum(when(col("y1") < col("y2"),
-          dec(col("c1")) * dec(col("c2")))), lit(0).cast("decimal(38,0)"))
-          .as("conc"),
+          dec(col("c1")) * dec(col("c2")))), dec0).as("conc"),
         coalesce(sum(when(col("y1") > col("y2"),
-          dec(col("c1")) * dec(col("c2")))), lit(0).cast("decimal(38,0)"))
-          .as("disc"))
+          dec(col("c1")) * dec(col("c2")))), dec0).as("disc"))
     val n = cells.agg(sum("c").as("n"))
     val tx = cells.groupBy("x").agg(sum("c").as("t"))
-      .agg(coalesce(sum(dec(col("t")) * (dec(col("t")) - 1)),
-        lit(0).cast("decimal(38,0)")).as("tx2"))
+      .agg(coalesce(sum(dec(col("t")) * (dec(col("t")) - 1)), dec0).as("tx2"))
     val ty = cells.groupBy("y").agg(sum("c").as("t"))
-      .agg(coalesce(sum(dec(col("t")) * (dec(col("t")) - 1)),
-        lit(0).cast("decimal(38,0)")).as("ty2"))
+      .agg(coalesce(sum(dec(col("t")) * (dec(col("t")) - 1)), dec0).as("ty2"))
     // n₀, n₁, n₂ doubled (×2) keeps everything integer: n0_2 = n(n−1),
     // tie sums Σt(t−1) — the √ product divides the 2s back out.
     n.crossJoin(broadcast(pairs)).crossJoin(broadcast(tx))
@@ -1437,7 +1436,7 @@ object Stats {
         when(
           (dec(col("n")) * (dec(col("n")) - 1) - col("tx2")) > 0 &&
             (dec(col("n")) * (dec(col("n")) - 1) - col("ty2")) > 0,
-          (lit(2).cast("decimal(38,0)") * (col("conc") - col("disc")))
+          (dec(lit(2)) * (col("conc") - col("disc")))
             .cast("double") /
             (sqrt((dec(col("n")) * (dec(col("n")) - 1) - col("tx2"))
               .cast("double")) *
@@ -1465,12 +1464,7 @@ object Stats {
     val k = keys.map(col)
     val hist = df.groupBy(k :+ col(valueCol).as("v"): _*)
       .agg(count(lit(1)).as("c"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*).orderBy("v")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    hist.withColumn("cb", sum("c").over(w) - col("c"))
+    hist.withColumn("cb", runningBefore("c", k, col("v")))
       .groupBy(k: _*)
       .agg(sum("c").as("n"),
         sum(dec(col("v")) * dec(col("c"))).as("total"),
@@ -1478,7 +1472,7 @@ object Stats {
           dec(col("c")) * dec(col("c") + 1L) / 2)).as("s"))
       .select(k :+ col("n") :+ col("total").cast("long").as("total") :+
         when(col("total") > 0 && col("n") > 0,
-          (lit(2).cast("decimal(38,0)") * col("s") -
+          (dec(lit(2)) * col("s") -
             dec(col("n") + 1L) * col("total")).cast("double") /
             (dec(col("n")) * col("total")).cast("double")).as("gini"): _*)
   }
@@ -1503,14 +1497,11 @@ object Stats {
                      binCol: String): DataFrame = {
     val hist = df.groupBy(col(binCol).as("v"))
       .agg(count(lit(1)).as("c"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy("v")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
     // The median is ONE scalar — collect it once and inject it as a
     // literal, instead of cross-joining the (data-sized-aggregate) plan
     // into BOTH the flag pass and the final projection, which re-ran the
     // whole value histogram twice.
-    val medRow = hist.withColumn("cum", sum("c").over(w))
+    val medRow = hist.withColumn("cum", runningSum("c", Nil, col("v")))
       .crossJoin(broadcast(hist.agg(sum("c").as("n"))))
       .filter(col("cum") * 2 >= col("n"))
       .agg(min("v").as("median"))
@@ -1557,7 +1548,6 @@ object Stats {
     */
   def jonckheereTerpstra(df: DataFrame, groupCol: String,
                          binCol: String): DataFrame = {
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val cells = localGrid(df.groupBy(col(groupCol).as("g"), col(binCol).as("v"))
       .agg(count(lit(1)).as("c")))
     val jt = cells.select(col("g").as("g1"), col("v").as("v1"),
@@ -1566,18 +1556,16 @@ object Stats {
         col("c").as("c2")), col("g1") < col("g2"))
       .agg(coalesce(sum(
         when(col("v1") < col("v2"),
-          lit(2).cast("decimal(38,0)") * dec(col("c1")) * dec(col("c2")))
+          dec(lit(2)) * dec(col("c1")) * dec(col("c2")))
           .when(col("v1") === col("v2"), dec(col("c1")) * dec(col("c2")))
-          .otherwise(lit(0).cast("decimal(38,0)"))),
-        lit(0).cast("decimal(38,0)")).as("jt2"))
+          .otherwise(dec0)), dec0).as("jt2"))
     // Value-tie marginals: t per distinct v pooled over groups.
     val tm = cells.groupBy("v").agg(sum("c").as("t"))
       .agg(sum(dec(col("t"))).as("n"),
         sum(dec(col("t")) * (dec(col("t")) - 1)).as("t2"),
         sum(dec(col("t")) * (dec(col("t")) - 1) * (dec(col("t")) - 2))
           .as("t3"),
-        sum(dec(col("t")) * (dec(col("t")) - 1) *
-          (lit(2).cast("decimal(38,0)") * dec(col("t")) + 5)).as("t25"))
+        sum(ties25(col("t"))).as("t25"))
     // Group-size marginals.
     val gm = cells.groupBy("g").agg(sum("c").as("ng"))
       .agg(count(lit(1)).as("k"),
@@ -1585,8 +1573,7 @@ object Stats {
         sum(dec(col("ng")) * (dec(col("ng")) - 1)).as("g2"),
         sum(dec(col("ng")) * (dec(col("ng")) - 1) * (dec(col("ng")) - 2))
           .as("g3"),
-        sum(dec(col("ng")) * (dec(col("ng")) - 1) *
-          (lit(2).cast("decimal(38,0)") * dec(col("ng")) + 5)).as("g25"))
+        sum(ties25(col("ng"))).as("g25"))
     tm.crossJoin(broadcast(jt)).crossJoin(broadcast(gm))
       .select(col("n").cast("long").as("n"), col("k").cast("long").as("k"),
         col("jt2").cast("string").as("jt2"),
@@ -1602,14 +1589,13 @@ object Stats {
             // two exactly-rounded casts is one IEEE multiply —
             // deterministic cross-engine, unlike a data-ordered sum.
             (lit(2.0) * sqrt(
-              (dec(col("n")) * (dec(col("n")) - 1) *
-                (lit(2).cast("decimal(38,0)") * dec(col("n")) + 5)
-                - col("t25") - col("g25")).cast("double") / 72.0 +
+              (ties25(col("n")) - col("t25") - col("g25")).cast("double") /
+                72.0 +
               col("t3").cast("double") * col("g3").cast("double") /
-                (lit(36).cast("decimal(38,0)") * dec(col("n")) *
+                (dec(lit(36)) * dec(col("n")) *
                   (dec(col("n")) - 1) * (dec(col("n")) - 2)).cast("double") +
               col("t2").cast("double") * col("g2").cast("double") /
-                (lit(8).cast("decimal(38,0)") * dec(col("n")) *
+                (dec(lit(8)) * dec(col("n")) *
                   (dec(col("n")) - 1)).cast("double")))).as("z"))
   }
 
@@ -1637,41 +1623,26 @@ object Stats {
     */
   def kruskalWallisH(df: DataFrame, groupCol: String,
                      binCol: String): DataFrame = {
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val hist = df.groupBy(col(groupCol).as("g"), col(binCol).as("v"))
       .agg(count(lit(1)).as("c"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy("v")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
     val tv = hist.groupBy("v").agg(sum("c").as("t"))
-      .withColumn("cb", sum("t").over(w) - col("t"))
+      .withColumn("cb", runningBefore("t", Nil, col("v")))
     val perG = hist.join(tv, "v")
       .groupBy("g")
       .agg(sum("c").as("n_g"),
-        sum(dec(col("c")) *
-          (lit(2L) * dec(col("cb")) + dec(col("t")) + 1)).as("r2"))
-    val tot = tv.agg(sum("t").as("n"),
-      sum(dec(col("t")) * dec(col("t")) * dec(col("t")) - dec(col("t")))
-        .as("ties"))
+        sum(dec(col("c")) * midRank2(col("cb"), col("t"))).as("r2"))
+    val tot = tv.agg(sum("t").as("n"), sum(cubeTies(col("t"))).as("ties"))
     val k = perG.agg(count(lit(1)).as("k"))
-    val q = perG.crossJoin(broadcast(tot))
-      .select(floor(lit(3.0) * col("r2").cast("double") *
-        col("r2").cast("double") /
+    val q = latticeSum(perG.crossJoin(broadcast(tot)),
+      lit(3.0) * col("r2").cast("double") * col("r2").cast("double") /
         (dec(col("n_g")) * dec(col("n")) * (dec(col("n")) + 1))
-          .cast("double") * lit(1e6)).as("h6"))
-      .agg(coalesce(sum(dec(col("h6"))), lit(0).cast("decimal(38,0)"))
-        .as("q6"))
+          .cast("double"), "h6")
     tot.crossJoin(broadcast(q)).crossJoin(broadcast(k))
       .select(col("n").cast("long").as("n"), col("k").cast("long").as("k"),
-        when(col("n") > 1 && col("k") > 1 &&
-          col("ties") <
-            dec(col("n")) * dec(col("n")) * dec(col("n")) - dec(col("n")),
-          ((col("q6").cast("double") / lit(1e6)) -
-            (lit(3).cast("decimal(38,0)") * (dec(col("n")) + 1))
-              .cast("double")) /
+        when(col("n") > 1 && col("k") > 1 && col("ties") < cubeTies(col("n")),
+          (q6Value - (dec(lit(3)) * (dec(col("n")) + 1)).cast("double")) /
             (lit(1.0) - col("ties").cast("double") /
-              (dec(col("n")) * dec(col("n")) * dec(col("n")) - dec(col("n")))
-                .cast("double"))).as("h"))
+              cubeTies(col("n")).cast("double"))).as("h"))
   }
 
   /** Total χ² of association + Cramér's V between two categorical /
@@ -1700,7 +1671,6 @@ object Stats {
     * null when the table is degenerate (single row or column).
     */
   def chiSquareAssoc(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val cells = localGrid(df.groupBy(col(aCol).as("a"), col(bCol).as("b"))
       .agg(count(lit(1)).as("c")))
     val rowT = cells.groupBy("a").agg(sum("c").as("rt"))
@@ -1708,23 +1678,21 @@ object Stats {
     val tot = cells.agg(sum("c").as("n"))
     val dims = rowT.agg(count(lit(1)).as("r"))
       .crossJoin(colT.agg(count(lit(1)).as("k")))
-    val q = cells.join(broadcast(rowT), "a").join(broadcast(colT), "b")
-      .crossJoin(broadcast(tot))
-      .select(
-        (dec(col("n")) * dec(col("c")) - dec(col("rt")) * dec(col("ct")))
-          .cast("double").as("dev"),
-        (dec(col("n")) * dec(col("rt")) * dec(col("ct"))).cast("double")
-          .as("den"))
-      .select(floor(col("dev") * col("dev") / col("den") * lit(1e6))
-        .as("t6"))
-      .agg(coalesce(sum(dec(col("t6"))), lit(0).cast("decimal(38,0)"))
-        .as("q6"))
+    val q = latticeSum(
+      cells.join(broadcast(rowT), "a").join(broadcast(colT), "b")
+        .crossJoin(broadcast(tot))
+        .select(
+          (dec(col("n")) * dec(col("c")) - dec(col("rt")) * dec(col("ct")))
+            .cast("double").as("dev"),
+          (dec(col("n")) * dec(col("rt")) * dec(col("ct"))).cast("double")
+            .as("den")),
+      col("dev") * col("dev") / col("den"), "t6")
     tot.crossJoin(broadcast(q)).crossJoin(broadcast(dims))
       .select(col("n").cast("long").as("n"),
         ((col("r") - 1) * (col("k") - 1)).cast("long").as("dof"),
-        (col("q6").cast("double") / lit(1e6)).as("chi2"),
+        q6Value.as("chi2"),
         when(col("n") > 0 && least(col("r"), col("k")) > 1,
-          sqrt((col("q6").cast("double") / lit(1e6)) /
+          sqrt(q6Value /
             (dec(col("n")) * dec(least(col("r"), col("k")) - 1))
               .cast("double"))).as("v"))
   }
@@ -1757,7 +1725,6 @@ object Stats {
     */
   def mannKendall(df: DataFrame, groupCol: String, timeCol: String,
                   valueCol: String): DataFrame = {
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val pts = localGrid(df.select(col(groupCol).as("g"),
       col(timeCol).as("t"), col(valueCol).cast("long").as("v")))
     val pairs = pts.select(col("g"), col("t").as("t1"), col("v").as("v1"))
@@ -1770,15 +1737,12 @@ object Stats {
     val ties = pts.groupBy("g", "v").agg(count(lit(1)).as("tc"))
       .groupBy("g")
       .agg(count(lit(1)).as("ntie"),
-        sum(dec(col("tc")) * (dec(col("tc")) - 1) *
-          (lit(2).cast("decimal(38,0)") * dec(col("tc")) + 5)).as("t25"))
+        sum(ties25(col("tc"))).as("t25"))
     val n = pts.groupBy("g").agg(count(lit(1)).as("n"))
     n.join(pairs, Seq("g"), "left").join(ties, Seq("g"))
       .select(col("g"), col("n").cast("long").as("n"),
         coalesce(col("s"), lit(0L)).cast("long").as("s"),
-        (dec(col("n")) * (dec(col("n")) - 1) *
-          (lit(2).cast("decimal(38,0)") * dec(col("n")) + 5) - col("t25"))
-          .cast("long").as("var18"))
+        (ties25(col("n")) - col("t25")).cast("long").as("var18"))
       .withColumn("z",
         when(col("var18") > 0,
           (col("s") - signum(col("s")).cast("long")).cast("double") /
@@ -1827,8 +1791,6 @@ object Stats {
     */
   def brownForsythe(df: DataFrame, groupCol: String,
                     binCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val hist = localGrid(df.groupBy(col(groupCol).as("g"),
       col(binCol).cast("long").as("v")).agg(count(lit(1)).as("c")))
     val wCum = Window.partitionBy("g").orderBy("v")
@@ -1857,7 +1819,7 @@ object Stats {
         // oracle's HUGEINT `//`. A double-floor here saturates at
         // Long.MaxValue for the ~10²¹ values these terms reach.
         val ngD = dec(col("ng"))
-        val m6 = lit(1000000L).cast("decimal(38,0)")
+        val m6 = dec(lit(1000000L))
         // Envelope guard (ADVICE r9): past S ≈ 10¹⁶ (or n·Q ≈ 10³²) the
         // decimal(38,0) products above would overflow — and under Spark's
         // default non-ANSI mode an overflowed decimal is a SILENT NULL,
@@ -1867,22 +1829,21 @@ object Stats {
         // trusting a saturated lattice. (Per-group k-row arithmetic; the
         // guard's own products stay within the bound by construction —
         // literals, never data² — and a NULL condition also throws.)
-        val sBound = lit("10000000000000000").cast("decimal(38,0)")
-        val nqBound =
-          lit("100000000000000000000000000000000").cast("decimal(38,0)")
+        val sBound = dec(lit("10000000000000000"))
+        val nqBound = dec(lit("100000000000000000000000000000000"))
         val guard = assert_true(
           col("s") < sBound && ngD * col("q") < nqBound,
           lit("brownForsythe: sum-of-Z envelope exceeded (S >= 1e16 or " +
             "n*Q >= 1e32) — the decimal(38,0) 1e-6 lattice would " +
             "overflow to NULL; rebin binCol to a coarser grid"))
-        def idiv(a: Column) = ((a - a % ngD) / ngD).cast("decimal(38,0)")
+        def idiv(a: Column) = dec((a - a % ngD) / ngD)
         // coalesce evaluates lazily in order, so the guard raises BEFORE
         // the product can overflow (under ANSI a raw overflow would also
         // raise, but with a generic decimal error; under non-ANSI it
         // would silently null — both paths now surface the same named
         // envelope message).
         def guarded(a: Column) =
-          coalesce(guard.cast("decimal(38,0)"), idiv(a))
+          coalesce(dec(guard), idiv(a))
         Seq(guarded(col("s") * col("s") * m6).as("b6"),
           guarded((ngD * col("q") - col("s") * col("s")) * m6).as("d6"))
       }: _*)

@@ -594,13 +594,8 @@ object TextOps {
     val model = c2.join(c1, "w1")
       .select(col("bg"),
         (col("c2").cast("double") / col("c1").cast("double")).as("p"))
-    bg.join(model, "bg")
-      .groupBy(idCol)
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(floor(col("p") * lit(1e12)).cast("decimal(38,0)")).as("__s"))
-      .select(col(idCol), col("n_bigrams"),
-        (col("__s").cast("double") / lit(1e12) /
-          col("n_bigrams").cast("double")).as("avg_p"))
+    Exact.fixedPointMean(bg.join(model, "bg"), idCol, "p", 1e12,
+      "n_bigrams", "avg_p")
   }
 
   /** 16-bit SimHash over *distinct* tokens, materialized as a '0'/'1' string.
@@ -881,13 +876,8 @@ object TextOps {
             (col("__T") + b).cast("double")) *
           ((col("__R") + b).cast("double") /
             (coalesce(col("rc"), lit(0L)) + 1).cast("double"))).as("ratio"))
-    rawB.join(broadcast(model), "bucket")
-      .groupBy(idCol)
-      .agg(count(lit(1)).as("n_feats"),
-        sum(floor(col("ratio") * lit(1e6)).cast("decimal(38,0)")).as("__s"))
-      .select(col(idCol), col("n_feats"),
-        (col("__s").cast("double") / lit(1e6) /
-          col("n_feats").cast("double")).as("score"))
+    Exact.fixedPointMean(rawB.join(broadcast(model), "bucket"), idCol,
+      "ratio", 1e6, "n_feats", "score")
   }
 
   /** The selection half of DSIR: rank the raw corpus by [[dsirScores]]
@@ -1075,12 +1065,7 @@ object TextOps {
           .when(col("c3").isNotNull,
             lit(0.16) * (col("c3").cast("double") / col("__N").cast("double")))
           .otherwise(lit(0.0)).as("s"))
-    s.groupBy(idCol)
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum(floor(col("s") * lit(1e12)).cast("decimal(38,0)")).as("__s"))
-      .select(col(idCol), col("n_trigrams"),
-        (col("__s").cast("double") / lit(1e12) /
-          col("n_trigrams").cast("double")).as("score"))
+    Exact.fixedPointMean(s, idCol, "s", 1e12, "n_trigrams", "score")
   }
 
   /** CCNet-style LM-score bucketing (Wenzek et al. 2019): within each

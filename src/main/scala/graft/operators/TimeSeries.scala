@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exact.{dec, gridFloor}
 
 /** Time-series resampling: project an event stream onto a fixed-interval
   * grid per key and forward-fill the last observed value — the
@@ -264,11 +265,9 @@ object TimeSeries {
   def maseNaive(df: DataFrame, keys: Seq[String], orderCols: Seq[String],
                 valueCol: String, season: Int, grid: Long): DataFrame = {
     require(season >= 1, "season must be >= 1")
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(orderCols.map(col): _*)
-    val g = df.withColumn("__x",
-        floor(col(valueCol) * lit(grid.toDouble)).cast("long"))
+    val g = df.withColumn("__x", gridFloor(col(valueCol), grid))
       .withColumn("__xs", lag(col("__x"), season).over(w))
       .withColumn("__x1", lag(col("__x"), 1).over(w))
     g.groupBy(keys.map(col): _*)
@@ -306,8 +305,7 @@ object TimeSeries {
   def seasonalIndex(df: DataFrame, keys: Seq[String], slot: Column,
                     valueCol: String, grid: Long): DataFrame = {
     require(grid >= 1, "grid must be >= 1")
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val x = dec(floor(col(valueCol) * lit(grid.toDouble)).cast("long"))
+    val x = dec(gridFloor(col(valueCol), grid))
     val bySlot = df.withColumn("__slot", slot)
       .groupBy((keys :+ "__slot").map(col): _*)
       .agg(count(lit(1)).as("cnt"), sum(x).as("__s"))

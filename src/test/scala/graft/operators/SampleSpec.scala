@@ -12,7 +12,7 @@ class SampleSpec extends SparkSpec {
     val one = docs.repartition(1)
     val many = docs.repartition(13)
     def ids(df: org.apache.spark.sql.DataFrame) =
-      df.filter(Sample.bernoulli("doc_id", 25))
+      df.filter(Sample.bernoulliPortable("doc_id", "40"))
         .select("doc_id").as[Long].collect().toSet
     assert(ids(one) == ids(many))
     val n = ids(one).size.toDouble / docs.count()
@@ -20,7 +20,7 @@ class SampleSpec extends SparkSpec {
   }
 
   test("bernoulli is a pure filter — no shuffle") {
-    val plan = docs.filter(Sample.bernoulli("doc_id", 25))
+    val plan = docs.filter(Sample.bernoulliPortable("doc_id", "40"))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"))
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class StatsSpec extends SparkSpec {
@@ -996,5 +997,80 @@ class StatsSpec extends SparkSpec {
         m.contains("NUMERIC_VALUE_OUT_OF_RANGE") ||
         m.contains("cannot be represented")),
       s"expected a loud overflow, got: ${messages(e).take(3)}")
+  }
+
+  test("exact-arithmetic statistics on empty and one-row inputs: null " +
+      "statistic or the degenerate row") {
+    // One row: key k1, group a, label pair (a, b), t = 1, x = 2.5,
+    // y = 3.5, bin v = 4, pos = 1. Expected cells are Row renderings,
+    // sorted and ';'-joined; "" is no output row. aucOnGrid divides by
+    // 2·N⁺·N⁻ unguarded, so a one-class input raises under ANSI.
+    val one = Seq(("k1", "a", "b", 1L, 2.5, 3.5, 4L, 1L))
+      .toDF("k", "g", "g2", "t", "x", "y", "v", "pos")
+    val empty = one.filter(col("v") < 0)
+    val cases: Seq[(String, DataFrame => DataFrame, String, String)] = Seq(
+      ("ksTwoSample", Stats.ksTwoSample(_, Seq("k"), "x", col("g") === "b"),
+        "", ""),
+      ("aucOnGrid", Stats.aucOnGrid(_, "v", "pos"),
+        "[null,null,null,null]", "ERR DIVIDE_BY_ZERO"),
+      ("autocorrInt", Stats.autocorrInt(_, Seq("k"), Seq("t"), "x", 1, 100L),
+        "", "[k1,1,null]"),
+      ("crossCorrInt",
+        Stats.crossCorrInt(_, Seq("k"), Seq("t"), "x", "y", 1, 100L), "", ""),
+      ("cusumChangepoint",
+        Stats.cusumChangepoint(_, Seq("k"), Seq("t"), "x", 100L),
+        "", "[k1,1,1,0.0]"),
+      ("cohenKappa", Stats.cohenKappa(_, "g", "g2"),
+        "[null,0,0,null]", "[1,0,0,0.0]"),
+      ("contingencyResiduals", Stats.contingencyResiduals(_, "g", "g2"),
+        "", "[a,b,1,1,1,0,0.0]"),
+      ("welchT", Stats.welchT(_, Seq("k"), "g", "a", "b", "x", 100L),
+        "", "[k1,1,0,null]"),
+      ("cohensD", Stats.cohensD(_, Seq("k"), "g", "a", "b", "x", 100L),
+        "", "[k1,1,0,null]"),
+      ("histQuantiles", Stats.histQuantiles(_, Seq("k"), "x", 100L),
+        "", "[k1,1,2.5,2.5]"),
+      ("olsFit", Stats.olsFit(_, Seq("k"), "x", "y", 100L, 100L),
+        "", "[k1,1,null,null,null]"),
+      ("corrMatrix", Stats.corrMatrix(_, Seq("x" -> 100L, "y" -> 100L)),
+        "[x,y,0,null]", "[x,y,1,null]"),
+      ("diversity", Stats.diversity(_, Seq("k"), "g"),
+        "", "[k1,1,1,0.0,1.0]"),
+      ("mannWhitneyU", Stats.mannWhitneyU(_, "g", "a", "b", "v"),
+        "[null,null,null,null,null]", "[1,0,2,0.0,null]"),
+      ("spearmanRho", Stats.spearmanRho(_, "v", "t"),
+        "[null,null]", "[1,null]"),
+      ("kendallTauB", Stats.kendallTauB(_, "v", "t"),
+        "[null,0,0,null]", "[1,0,0,null]"),
+      ("gini", Stats.gini(_, Seq("k"), "v"), "", "[k1,1,4,0.0]"),
+      ("moodMedianTest", Stats.moodMedianTest(_, "g", "v"),
+        "[null,null,1,0.0,null]", "[4,1,0,0.0,null]"),
+      ("jonckheereTerpstra", Stats.jonckheereTerpstra(_, "g", "v"),
+        "[null,0,0,null]", "[1,1,0,null]"),
+      ("kruskalWallisH", Stats.kruskalWallisH(_, "g", "v"),
+        "[null,0,null]", "[1,1,null]"),
+      ("chiSquareAssoc", Stats.chiSquareAssoc(_, "g", "g2"),
+        "[null,1,0.0,null]", "[1,0,0.0,null]"),
+      ("mannKendall", Stats.mannKendall(_, "g", "t", "v"),
+        "", "[a,1,0,0,null]"),
+      ("brownForsythe", Stats.brownForsythe(_, "g", "v"),
+        "[null,0,null]", "[1,1,null]"),
+      ("maseNaive", TimeSeries.maseNaive(_, Seq("k"), Seq("t"), "x", 1, 100L),
+        "", "[k1,1,null,null,null]"),
+      ("seasonalIndex",
+        TimeSeries.seasonalIndex(_, Seq("k"), col("t") % 7, "x", 100L),
+        "", "[k1,1,1,1.0]"),
+      ("assortativity", (d: DataFrame) =>
+        Graph.assortativity(d.select(col("t").as("src"), col("v").as("dst"))),
+        "[0,null]", "[2,null]"))
+    def render(out: => DataFrame): String =
+      try out.collect().map(_.toString).sorted.mkString(";")
+      catch {
+        case e: org.apache.spark.SparkThrowable => "ERR " + e.getCondition
+      }
+    cases.foreach { case (name, f, onEmpty, onOne) =>
+      assert(render(f(empty)) == onEmpty, s"$name on an empty input")
+      assert(render(f(one)) == onOne, s"$name on a one-row input")
+    }
   }
 }
