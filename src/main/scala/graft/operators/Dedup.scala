@@ -284,10 +284,10 @@ object Dedup {
     }
   }
 
-  /** (da, db, ni, na, nb) → thresholded (da, db, jacc): the no-join score
-    * for intersection tables that already carry both docs' set sizes
-    * ([[sharedShingleIntersections]] with a lengthFilter). Identical
-    * arithmetic to [[scorePairs]] on identical integers.
+  /** (da, db, ni, na, nb) → thresholded (da, db, jacc): the Jaccard score
+    * of intersection tables that carry both docs' set sizes
+    * ([[sharedShingleIntersections]] with a lengthFilter, or
+    * [[scorePairs]] after its two size joins).
     */
   private def scorePairsCarried(inter: DataFrame,
                                 threshold: Double): DataFrame =
@@ -315,14 +315,10 @@ object Dedup {
   /** (da, db, ni) + per-doc set sizes → thresholded (da, db, jacc). */
   private def scorePairs(inter: DataFrame, cnt: DataFrame, idCol: String,
                          threshold: Double): DataFrame =
-    inter
+    scorePairsCarried(inter
       .join(cnt.select(col(idCol).as("da"), col("n_sh").as("na")), "da")
-      .join(cnt.select(col(idCol).as("db"), col("n_sh").as("nb")), "db")
-      .withColumn("jacc",
-        col("ni").cast("double") /
-          (col("na") + col("nb") - col("ni")).cast("double"))
-      .filter(col("jacc") >= threshold)
-      .select("da", "db", "jacc")
+      .join(cnt.select(col(idCol).as("db"), col("n_sh").as("nb")), "db"),
+      threshold)
 
   /** All-pairs sparse COSINE similarity over bag-of-words count vectors,
     * through the same inverted-index self-join discipline as
@@ -1010,31 +1006,43 @@ object Dedup {
   def segmentDedup(df: DataFrame, idCol: String, textCol: String,
                    segWords: Int): DataFrame = {
     require(segWords > 0, "segWords must be positive")
-    val toks = TextOps.tokens(col(textCol))
-    val nseg = ceil(size(toks).cast("double") / segWords).cast("int")
-    val segs = Par.spread(df)
-      .select(col(idCol),
-        posexplode(transform(sequence(lit(0), nseg - 1),
-          i => array_join(slice(toks, i * segWords + 1, lit(segWords)), " ")))
-          .as(Seq("pos", "seg")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("seg")).orderBy(col(idCol), col("pos"))
-    val kept = segs.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-    // n_seg is a pure function of the token count — computing it from the
-    // exploded segments would re-run the whole explode branch (a second
-    // full corpus pass) for a per-doc scalar. Plain narrow projection (no
-    // spread: splitting one text per row is not CPU-heavy work).
-    val tot = df.select(col(idCol), nseg.cast("long").as("n_seg"))
+    val (segs, tot) = TextOps.wordSegments(df, idCol, textCol, segWords, Nil)
+    reassemble(tot, keepFirst(segs, "seg", idCol, "pos"),
+      idCol, "n_seg", "pos", "seg")
+  }
+
+  /** The `pieceCol` strings of a group, space-joined in `posCol` order. */
+  private def joinInOrder(posCol: String, pieceCol: String): Column =
+    concat_ws(" ",
+      transform(array_sort(collect_list(struct(col(posCol), col(pieceCol)))),
+        x => x.getItem(pieceCol)))
+
+  /** Rebuilds every doc of `tot` (idCol, totCol) from its `kept` pieces:
+    * (idCol, totCol, n_kept, text_kept), the pieces in `posCol` order; a
+    * doc with no kept piece gets n_kept = 0 and an empty text.
+    */
+  private[graft] def reassemble(tot: DataFrame, kept: DataFrame,
+                                idCol: String, totCol: String,
+                                posCol: String, pieceCol: String): DataFrame = {
     val reb = kept.groupBy(idCol).agg(
       count(lit(1)).cast("long").as("n_kept"),
-      concat_ws(" ",
-        transform(array_sort(collect_list(struct(col("pos"), col("seg")))),
-          x => x.getItem("seg"))).as("text_kept"))
+      joinInOrder(posCol, pieceCol).as("text_kept"))
     tot.join(reb, Seq(idCol), "left")
-      .select(col(idCol), col("n_seg"),
+      .select(col(idCol), col(totCol),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         coalesce(col("text_kept"), lit("")).as("text_kept"))
+  }
+
+  /** The first occurrence of each distinct `pieceCol` corpus-wide, first
+    * = smallest (idCol, posCol): the keep-first step of [[segmentDedup]]
+    * and [[cdcChunkDedup]].
+    */
+  private def keepFirst(pieces: DataFrame, pieceCol: String, idCol: String,
+                        posCol: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(pieceCol)).orderBy(col(idCol), col(posCol))
+    pieces.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
   }
 
   /** Content-defined chunk dedup: like [[segmentDedup]], but chunk
@@ -1069,24 +1077,11 @@ object Dedup {
     val ch = toks
       .withColumn("chunk", coalesce(sum("brk").over(wChunk), lit(0L)))
       .groupBy(idCol, "chunk")
-      .agg(concat_ws(" ",
-        transform(array_sort(collect_list(struct(col("pos"), col("word")))),
-          x => x.getItem("word"))).as("ctext"))
+      .agg(joinInOrder("pos", "word").as("ctext"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val wKeep = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("ctext")).orderBy(col(idCol), col("chunk"))
-    val kept = ch.withColumn("__rn", row_number().over(wKeep))
-      .filter(col("__rn") === 1)
     val tot = ch.groupBy(idCol).agg(count(lit(1)).cast("long").as("n_chunks"))
-    val reb = kept.groupBy(idCol).agg(
-      count(lit(1)).cast("long").as("n_kept"),
-      concat_ws(" ",
-        transform(array_sort(collect_list(struct(col("chunk"), col("ctext")))),
-          x => x.getItem("ctext"))).as("text_kept"))
-    tot.join(reb, Seq(idCol), "left")
-      .select(col(idCol), col("n_chunks"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("text_kept"), lit("")).as("text_kept"))
+    reassemble(tot, keepFirst(ch, "ctext", idCol, "chunk"),
+      idCol, "n_chunks", "chunk", "ctext")
   }
 
   /** EXACT substring dedup (the Lee et al. 2022 "Deduplicating Training

@@ -607,7 +607,8 @@ object Stats {
     *
     * Input: `binCol` integer score bin, `posCol` 0/1 label.
     * Output: one row (n_pos, n_neg, auc_num, auc); auc_num is the
-    * tie-corrected numerator ×2.
+    * tie-corrected numerator ×2. auc is null when either class is absent
+    * (an empty or one-class input has no positive–negative pair).
     */
   def aucOnGrid(df: DataFrame, binCol: String, posCol: String): DataFrame = {
     val hist = df.groupBy(col(binCol).as("bin"))
@@ -619,8 +620,9 @@ object Stats {
         sum(lit(2L) * col("nn_below") * col("np")
           + col("nn") * col("np")).as("auc_num"))
       .select(col("n_pos"), col("n_neg"), col("auc_num"),
-        (col("auc_num").cast("double")
-          / (lit(2L) * col("n_pos") * col("n_neg")).cast("double"))
+        when(col("n_pos") > 0 && col("n_neg") > 0,
+          col("auc_num").cast("double")
+            / (lit(2L) * col("n_pos") * col("n_neg")).cast("double"))
           .as("auc"))
   }
 
@@ -1491,7 +1493,8 @@ object Stats {
     * cumulative window to find the median, broadcast back as a scalar
     * predicate; then chiSquareAssoc's cell aggregate over a k×2 table.
     *
-    * Output: one row (median, n, dof, chi2, v).
+    * Output: one row (median, n, dof, chi2, v); an empty input reads
+    * median and n null, dof 0.
     */
   def moodMedianTest(df: DataFrame, groupCol: String,
                      binCol: String): DataFrame = {
@@ -1668,7 +1671,8 @@ object Stats {
     * with both marginals data-sized).
     *
     * Output: one row (n, dof, chi2, v) — v = √(χ²/(n·(min(r,k)−1))),
-    * null when the table is degenerate (single row or column).
+    * null when the table is degenerate (single row or column); dof =
+    * (r−1)·(k−1), 0 for an empty table.
     */
   def chiSquareAssoc(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val cells = localGrid(df.groupBy(col(aCol).as("a"), col(bCol).as("b"))
@@ -1689,7 +1693,8 @@ object Stats {
       col("dev") * col("dev") / col("den"), "t6")
     tot.crossJoin(broadcast(q)).crossJoin(broadcast(dims))
       .select(col("n").cast("long").as("n"),
-        ((col("r") - 1) * (col("k") - 1)).cast("long").as("dof"),
+        (greatest(col("r") - 1, lit(0L)) * greatest(col("k") - 1, lit(0L)))
+          .cast("long").as("dof"),
         q6Value.as("chi2"),
         when(col("n") > 0 && least(col("r"), col("k")) > 1,
           sqrt(q6Value /

@@ -39,6 +39,23 @@ object TextOps {
         i => array_join(slice(toks, i, lit(n)), " ")))
       .otherwise(array().cast("array<string>"))
 
+  /** The n-gram occurrence table: `cols` plus one `out` row per n-gram
+    * occurrence of `textCol` (the [[shingles]] of its [[tokens]]).
+    */
+  private def grams(df: DataFrame, textCol: String, n: Int, out: String,
+                    cols: Column*): DataFrame =
+    Par.spread(df).select(
+      cols :+ explode(shingles(tokens(col(textCol)), n)).as(out): _*)
+
+  /** The most frequent adjacent token pair of `textCol` as one
+    * (pair, c) row, ties to the lexicographically smallest pair; no row
+    * when no doc has two tokens.
+    */
+  private def topPair(df: DataFrame, textCol: String): DataFrame =
+    grams(df, textCol, 2, "pair")
+      .groupBy("pair").agg(count(lit(1)).as("c"))
+      .orderBy(col("c").desc, col("pair")).limit(1)
+
   /** Count of tokens contained in a fixed vocabulary. */
   def vocabCount(toks: Column, vocab: Seq[String]): Column =
     size(filter(toks, t => t.isin(vocab.map(x => x: Any): _*)))
@@ -195,10 +212,7 @@ object TextOps {
     */
   def bpeMergeRound(df: DataFrame, idCol: String,
                     textCol: String): DataFrame = {
-    val pairs = Par.spread(df)
-      .select(explode(shingles(tokens(col(textCol)), 2)).as("pair"))
-    val best = pairs.groupBy("pair").agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("pair")).limit(1)
+    val best = topPair(df, textCol)
       .select(col("pair"), translate(col("pair"), " ", "_").as("merged"))
     df.crossJoin(broadcast(best))
       .withColumn("best_pair", col("pair"))
@@ -239,11 +253,7 @@ object TextOps {
       .empty[(Long, String, String, Long)]
     var exhausted = false
     for (r <- 1 to rounds if !exhausted) {
-      val best = Par.spread(cur)
-        .select(explode(shingles(tokens(col("__txt")), 2)).as("pair"))
-        .groupBy("pair").agg(count(lit(1)).as("c"))
-        .orderBy(col("c").desc, col("pair")).limit(1)
-        .collect()
+      val best = topPair(cur, "__txt").collect()
       if (best.isEmpty) exhausted = true
       else {
         val pair = best(0).getString(0)
@@ -366,11 +376,10 @@ object TextOps {
     */
   def dupNgramStats(df: DataFrame, idCol: String, textCol: String,
                     n: Int): DataFrame = {
-    val grams = Par.spread(df)
-      .select(col(idCol), explode(shingles(tokens(col(textCol)), n)).as("g"))
+    val perDoc = grams(df, textCol, n, "g", col(idCol))
       .groupBy(idCol, "g").agg(count(lit(1)).as("c"))
-    val dfreq = grams.groupBy("g").agg(count(lit(1)).as("df"))
-    grams.join(dfreq, "g")
+    val dfreq = perDoc.groupBy("g").agg(count(lit(1)).as("df"))
+    perDoc.join(dfreq, "g")
       .groupBy(idCol)
       .agg(sum("c").as("n_grams"),
         sum(when(col("df") >= 2, col("c")).otherwise(0L)).as("n_dup"))
@@ -398,11 +407,9 @@ object TextOps {
     */
   def noveltyStats(df: DataFrame, idCol: String, textCol: String,
                    n: Int): DataFrame = {
-    val grams = Par.spread(df)
-      .select(col(idCol), explode(shingles(tokens(col(textCol)), n)).as("g"))
-      .distinct()
-    val first = grams.groupBy("g").agg(min(col(idCol)).as("__first"))
-    grams.join(first, "g")
+    val distinctGrams = grams(df, textCol, n, "g", col(idCol)).distinct()
+    val first = distinctGrams.groupBy("g").agg(min(col(idCol)).as("__first"))
+    distinctGrams.join(first, "g")
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_distinct"),
         sum(when(col(idCol) === col("__first"), 1L).otherwise(0L))
@@ -437,28 +444,33 @@ object TextOps {
                        scopeCols: Seq[String] = Nil): DataFrame = {
     require(segWords > 0, "segWords must be positive")
     require(minDf > 1, "minDf must be at least 2")
+    val scope = scopeCols.map(col)
+    val (segs, tot) = wordSegments(df, idCol, textCol, segWords, scope)
+    val dfreq = segs.groupBy(scope :+ col("seg"): _*)
+      .agg(countDistinct(col(idCol)).as("__df"))
+    val kept = segs.join(dfreq, scopeCols :+ "seg")
+      .filter(col("__df") < minDf)
+    Dedup.reassemble(tot, kept, idCol, "n_seg", "pos", "seg")
+  }
+
+  /** Fixed `segWords`-word segments of each doc: the (idCol, scope…, pos,
+    * seg) rows, pos 0-based, and the per-doc (idCol, n_seg) count.
+    */
+  private[graft] def wordSegments(df: DataFrame, idCol: String,
+                                  textCol: String, segWords: Int,
+                                  scope: Seq[Column]): (DataFrame, DataFrame) = {
     val toks = tokens(col(textCol))
     val nseg = ceil(size(toks).cast("double") / segWords).cast("int")
-    val scope = scopeCols.map(col)
     val segs = Par.spread(df)
       .select(col(idCol) +: scope :+
         posexplode(transform(sequence(lit(0), nseg - 1),
           i => array_join(slice(toks, i * segWords + 1, lit(segWords)), " ")))
           .as(Seq("pos", "seg")): _*)
-    val dfreq = segs.groupBy(scope :+ col("seg"): _*)
-      .agg(countDistinct(col(idCol)).as("__df"))
-    val kept = segs.join(dfreq, scopeCols :+ "seg")
-      .filter(col("__df") < minDf)
-    val tot = df.select(col(idCol), nseg.cast("long").as("n_seg"))
-    val reb = kept.groupBy(idCol).agg(
-      count(lit(1)).cast("long").as("n_kept"),
-      concat_ws(" ",
-        transform(array_sort(collect_list(struct(col("pos"), col("seg")))),
-          x => x.getItem("seg"))).as("text_kept"))
-    tot.join(reb, Seq(idCol), "left")
-      .select(col(idCol), col("n_seg"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("text_kept"), lit("")).as("text_kept"))
+    // n_seg is a pure function of the token count — computing it from the
+    // exploded segments would re-run the whole explode branch (a second
+    // full corpus pass) for a per-doc scalar. Plain narrow projection (no
+    // spread: splitting one text per row is not CPU-heavy work).
+    (segs, df.select(col(idCol), nseg.cast("long").as("n_seg")))
   }
 
   /** Corpus-frequency quality signals (the CCNet-style "does this document
@@ -586,8 +598,7 @@ object TextOps {
     * contract for fragments, as in [[repetitionStats]]).
     */
   def bigramLmScore(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val bg = Par.spread(df).select(col(idCol),
-      explode(shingles(tokens(col(textCol)), 2)).as("bg"))
+    val bg = grams(df, textCol, 2, "bg", col(idCol))
     val c2 = bg.groupBy("bg").agg(count(lit(1)).as("c2"))
       .withColumn("w1", split(col("bg"), " ").getItem(0))
     val c1 = c2.groupBy("w1").agg(sum("c2").as("c1"))
@@ -849,9 +860,9 @@ object TextOps {
     // buys nothing: DSIR's published setup uses 10^4-10^5 hash buckets).
     require(hexDigits >= 1 && hexDigits <= 5, "hexDigits in [1,5]")
     val b = math.pow(16, hexDigits).toLong
-    def buckets(df: DataFrame, cols: Column*) = Par.spread(df)
-      .select(cols :+ explode(shingles(tokens(col(textCol)), 2)).as("__bg"): _*)
-      .select(cols :+ substring(md5(col("__bg")), 1, hexDigits).as("bucket"): _*)
+    def buckets(df: DataFrame, cols: Column*) =
+      grams(df, textCol, 2, "__bg", cols: _*)
+        .select(cols :+ substring(md5(col("__bg")), 1, hexDigits).as("bucket"): _*)
     val rawB = buckets(raw, col(idCol))
     val rc = rawB.groupBy("bucket").agg(count(lit(1)).as("rc"))
     val tc = buckets(target).groupBy("bucket").agg(count(lit(1)).as("tc"))
@@ -896,24 +907,37 @@ object TextOps {
                  textCol: String, sourceCol: String,
                  keepFrac: Double, hexDigits: Int = 2): DataFrame = {
     require(keepFrac > 0 && keepFrac <= 1, "keepFrac in (0,1]")
-    import org.apache.spark.sql.expressions.Window
-    val scored = dsirScores(raw, target, idCol, textCol, hexDigits)
-      .withColumn("rn", row_number().over(
-        Window.orderBy(desc("score"), col(idCol))))
-    val kept = scored
-      .withColumn("n", count(lit(1)).over(
-        Window.rowsBetween(Window.unboundedPreceding,
-          Window.unboundedFollowing)))
+    val kept = ranked(dsirScores(raw, target, idCol, textCol, hexDigits),
+        "score", idCol, "n")
       .filter(col("rn") <= floor(col("n") * lit(keepFrac)))
-      .select(col(idCol), lit(1L).as("__keep"))
+    sourceReport(raw, kept, idCol, sourceCol)
+  }
+
+  /** `rn`, the row number under (scoreCol desc, idCol), and `countCol`,
+    * the row count, both within `groupCols` (the whole table when none):
+    * the ranked cut the DSIR selections and the LM-bucket cuts read.
+    */
+  private def ranked(df: DataFrame, scoreCol: String, idCol: String,
+                     countCol: String, groupCols: String*): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val part = Window.partitionBy(groupCols.map(col): _*)
+    df.withColumn("rn",
+        row_number().over(part.orderBy(desc(scoreCol), col(idCol))))
+      .withColumn(countCol, count(lit(1)).over(part))
+  }
+
+  /** The DSIR selection report: per source of `raw`, (source, n_docs,
+    * n_kept, keep_frac), where a doc is kept iff its id is in `kept`.
+    */
+  private def sourceReport(raw: DataFrame, kept: DataFrame, idCol: String,
+                           sourceCol: String): DataFrame =
     raw.select(col(idCol), col(sourceCol).as("source"))
-      .join(kept, Seq(idCol), "left")
+      .join(kept.select(col(idCol), lit(1L).as("__keep")), Seq(idCol), "left")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum("__keep"), lit(0L)).as("n_kept"))
       .withColumn("keep_frac",
         col("n_kept").cast("double") / col("n_docs").cast("double"))
-  }
 
   /** The 100 TB form of [[dsirSelect]]: selection by a score THRESHOLD
     * estimated from a deterministic hash-sample, never a global rank.
@@ -948,7 +972,6 @@ object TextOps {
                           keepFrac: Double, hexDigits: Int = 2,
                           sampleHexCeil: String = "40"): DataFrame = {
     require(keepFrac > 0 && keepFrac <= 1, "keepFrac in (0,1]")
-    import org.apache.spark.sql.expressions.Window
     // The scored subtree is consumed by the sampled-quantile threshold
     // AND the corpus keep-filter, but deliberately NOT persisted
     // (contrast lmScoreBucketsThreshold, where persisting the scored
@@ -967,19 +990,25 @@ object TextOps {
     // stage-pin experiment rejected (OPTIMIZATION_r14 §3.1). The
     // rc/model and keep branches share the unfiltered rawB exchange via
     // ReuseExchange (stage-probe data in PLANS.md round-10).
-    val scored = dsirScores(raw, target, idCol, textCol, hexDigits)
+    selectByThreshold(raw, dsirScores(raw, target, idCol, textCol, hexDigits),
+      idCol, sourceCol, keepFrac, sampleHexCeil)
+  }
+
+  /** [[dsirSelectThreshold]] after scoring: the sampled-quantile cut over
+    * `scored` (its (idCol, n_feats, score) table, persisted or not) and
+    * the per-source report over `raw`.
+    */
+  private[graft] def selectByThreshold(raw: DataFrame, scored: DataFrame,
+                                       idCol: String, sourceCol: String,
+                                       keepFrac: Double,
+                                       sampleHexCeil: String): DataFrame = {
     val samp = scored.filter(Sample.bernoulliPortable(idCol, sampleHexCeil))
     // Quantile by exact rank WITHIN THE SAMPLE (sample-sized sort): the
     // threshold is the score at rank ⌊m·keepFrac⌋ under (score desc, id).
     // One aggregate row ALWAYS exists (threshold null when unplaceable),
     // so the same broadcast row feeds both the corpus-scan compare and
     // the report's observability columns — the ranked subtree runs once.
-    val thr = samp
-      .withColumn("rn", row_number().over(
-        Window.orderBy(desc("score"), col(idCol))))
-      .withColumn("m", count(lit(1)).over(
-        Window.rowsBetween(Window.unboundedPreceding,
-          Window.unboundedFollowing)))
+    val thr = ranked(samp, "score", idCol, "m")
       .agg(max(when(col("rn") === floor(col("m") * lit(keepFrac)),
           col("score"))).as("__thr"),
         count(lit(1)).as("n_sample"))
@@ -987,14 +1016,7 @@ object TextOps {
       // score >= NULL is never true: an unplaceable threshold keeps
       // nothing, per the conservative contract above.
       .filter(col("score") >= col("__thr"))
-      .select(col(idCol), lit(1L).as("__keep"))
-    raw.select(col(idCol), col(sourceCol).as("source"))
-      .join(kept, Seq(idCol), "left")
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"),
-        coalesce(sum("__keep"), lit(0L)).as("n_kept"))
-      .withColumn("keep_frac",
-        col("n_kept").cast("double") / col("n_docs").cast("double"))
+    sourceReport(raw, kept, idCol, sourceCol)
       .crossJoin(broadcast(thr))
       .withColumn("has_threshold", col("__thr").isNotNull)
       .drop("__thr")
@@ -1029,11 +1051,10 @@ object TextOps {
     */
   def backoffLmScore(corpus: DataFrame, ref: DataFrame, idCol: String,
                      textCol: String): DataFrame = {
-    def grams(df: DataFrame, n: Int, out: String, cols: Column*) =
-      Par.spread(df).select(
-        cols :+ explode(shingles(tokens(col(textCol)), n)).as(out): _*)
-    val tri = grams(ref, 3, "tg").groupBy("tg").agg(count(lit(1)).as("c123"))
-    val bi = grams(ref, 2, "bg").groupBy("bg").agg(count(lit(1)).as("cb"))
+    val tri = grams(ref, textCol, 3, "tg")
+      .groupBy("tg").agg(count(lit(1)).as("c123"))
+    val bi = grams(ref, textCol, 2, "bg")
+      .groupBy("bg").agg(count(lit(1)).as("cb"))
     // N rides the unigram table as an unpartitioned window (vocab-sized,
     // one partition) — a fresh agg would re-run the reference token pass,
     // and it is only consumed on the unigram-backoff branch anyway, where
@@ -1044,7 +1065,7 @@ object TextOps {
     val uni = ref.select(explode(tokens(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cu"))
       .withColumn("__N", sum("cu").over(uniW))
-    val occ = grams(corpus, 3, "tg", col(idCol))
+    val occ = grams(corpus, textCol, 3, "tg", col(idCol))
       .withColumn("__p", split(col("tg"), " "))
       .select(col(idCol), col("tg"),
         concat_ws(" ", col("__p").getItem(0), col("__p").getItem(1)).as("bg12"),
@@ -1090,16 +1111,28 @@ object TextOps {
                      groupCol: String, buckets: Int = 3): DataFrame = {
     require(buckets >= 2, "buckets must be >= 2")
     import org.apache.spark.sql.expressions.Window
-    val scored = bigramLmScore(df, idCol, textCol)
-      .join(df.select(col(idCol), col(groupCol)), idCol)
     val w = Window.partitionBy(groupCol)
       .orderBy(desc("avg_p"), col(idCol))
-    scored.withColumn("bucket", ntile(buckets).over(w).cast("long"))
-      .groupBy(groupCol, "bucket")
+    bucketReport(lmScored(df, idCol, textCol, groupCol)
+      .withColumn("bucket", ntile(buckets).over(w).cast("long")), groupCol)
+  }
+
+  /** [[bigramLmScore]]'s (idCol, n_bigrams, avg_p) with each doc's
+    * `groupCol` joined on.
+    */
+  private def lmScored(df: DataFrame, idCol: String, textCol: String,
+                       groupCol: String): DataFrame =
+    bigramLmScore(df, idCol, textCol)
+      .join(df.select(col(idCol), col(groupCol)), idCol)
+
+  /** The LM-bucket report over a bucketed [[lmScored]] table:
+    * (groupCol, bucket, n_docs, sum_bigrams, min_p, max_p).
+    */
+  private def bucketReport(bucketed: DataFrame, groupCol: String): DataFrame =
+    bucketed.groupBy(groupCol, "bucket")
       .agg(count(lit(1)).as("n_docs"),
         sum("n_bigrams").as("sum_bigrams"),
         min("avg_p").as("min_p"), max("avg_p").as("max_p"))
-  }
 
   /** The 100 TB form of [[lmScoreBuckets]]: bucket boundaries estimated
     * per group from a deterministic hash-sample, assignment by scalar
@@ -1132,18 +1165,15 @@ object TextOps {
                               groupCol: String, buckets: Int = 3,
                               sampleHexCeil: String = "80"): DataFrame = {
     require(buckets >= 2, "buckets must be >= 2")
-    import org.apache.spark.sql.expressions.Window
     // Score once, select twice: the cut estimation AND the bucketing
     // pass both consume the scored table; unpersisted, each re-runs the
     // LM model build + corpus scoring join (measured 8.1 -> 4.3-5.3 s at
     // sf1, PLANS.md round-10).
-    val scored = bigramLmScore(df, idCol, textCol)
-      .join(df.select(col(idCol), col(groupCol)), idCol)
+    val scored = lmScored(df, idCol, textCol, groupCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val samp = scored.filter(Sample.bernoulliPortable(idCol, sampleHexCeil))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(groupCol).orderBy(desc("avg_p"), col(idCol))))
-      .withColumn("m", count(lit(1)).over(Window.partitionBy(groupCol)))
+    val samp = ranked(
+      scored.filter(Sample.bernoulliPortable(idCol, sampleHexCeil)),
+      "avg_p", idCol, "m", groupCol)
     // One row per group carrying its cut scores: c_b = the sampled score
     // at rank floor(m*b/buckets), absent (null) when the sample cannot
     // place it. min() over the at-most-one matching row is just
@@ -1159,9 +1189,6 @@ object TextOps {
         (1 until buckets).foldLeft(lit(1L)) { (acc, b) =>
           acc + when(col("avg_p") < col(s"__c$b"), 1L).otherwise(0L)
         })
-    bucketed.groupBy(groupCol, "bucket")
-      .agg(count(lit(1)).as("n_docs"),
-        sum("n_bigrams").as("sum_bigrams"),
-        min("avg_p").as("min_p"), max("avg_p").as("max_p"))
+    bucketReport(bucketed, groupCol)
   }
 }

@@ -1,11 +1,10 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Bench, Sessions, SparkEntry}
 import graft.model.Tables
-import graft.operators.{Dedup, Integrity, Sample, TextOps}
+import graft.operators.{Dedup, Integrity, TextOps}
 
 /** Interleaved A/B timing of two ways to compute the same result, in one
   * JVM so both arms run in the same machine weather:
@@ -45,8 +44,9 @@ object AB {
           threshold = 0.8, prefixFilter = prefix)))
       (arm("full", prefix = false), arm("prefix", prefix = true))
     },
-    // dsirSelectThreshold's scored subtree not persisted (shipped) vs
-    // persisted: the answer moves with the sample rate.
+    // dsirSelectThreshold on the x6_dsir_select_t shape, its scored
+    // subtree not persisted (shipped) vs persisted: the answer moves with
+    // the sample rate.
     "dsir_persist" -> (
       Arm("shipped", Nil, (s, dir) => {
         val d = docs(s, dir)
@@ -54,7 +54,14 @@ object AB {
           "doc_id", "text", "source", keepFrac = 0.25, hexDigits = 2,
           sampleHexCeil = "40"))
       }),
-      Arm("persisted", Nil, (s, dir) => Seq(dsirPersisted(docs(s, dir))))),
+      Arm("persisted", Nil, (s, dir) => {
+        val d = docs(s, dir)
+        val scored = TextOps.dsirScores(d, d.filter(col("source") === "src0"),
+            "doc_id", "text", hexDigits = 2)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Seq(TextOps.selectByThreshold(d, scored, "doc_id", "source",
+          keepFrac = 0.25, sampleHexCeil = "40"))
+      })),
     // AQE coalescing toward max parallelism (the default) vs toward the
     // 128 MB advisory size, on the dedup family + curation capstone.
     "coalesce" -> {
@@ -64,37 +71,6 @@ object AB {
         (s, dir) => gates.map(g => SparkEntry.queries(g)(s, dir)))
       (arm("true"), arm("false"))
     })
-
-  /** dsirSelectThreshold on the x6_dsir_select_t shape with the scored
-    * table persisted — otherwise the operator's body verbatim.
-    */
-  private def dsirPersisted(raw: DataFrame): DataFrame = {
-    val scored = TextOps.dsirScores(raw, raw.filter(col("source") === "src0"),
-        "doc_id", "text", 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val thr = scored.filter(Sample.bernoulliPortable("doc_id", "40"))
-      .withColumn("rn", row_number().over(
-        Window.orderBy(desc("score"), col("doc_id"))))
-      .withColumn("m", count(lit(1)).over(
-        Window.rowsBetween(Window.unboundedPreceding,
-          Window.unboundedFollowing)))
-      .agg(max(when(col("rn") === floor(col("m") * lit(0.25)),
-          col("score"))).as("__thr"),
-        count(lit(1)).as("n_sample"))
-    val kept = scored.crossJoin(broadcast(thr))
-      .filter(col("score") >= col("__thr"))
-      .select(col("doc_id"), lit(1L).as("__keep"))
-    raw.select(col("doc_id"), col("source"))
-      .join(kept, Seq("doc_id"), "left")
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"),
-        coalesce(sum("__keep"), lit(0L)).as("n_kept"))
-      .withColumn("keep_frac",
-        col("n_kept").cast("double") / col("n_docs").cast("double"))
-      .crossJoin(broadcast(thr))
-      .withColumn("has_threshold", col("__thr").isNotNull)
-      .drop("__thr")
-  }
 
   /** Runs the protocol; returns each arm's timed runs in seconds, in run
     * order, and sends the report lines to `out`.

@@ -457,6 +457,23 @@ class TextOpsSpec extends SparkSpec {
     assert(re == once)
   }
 
+  test("dupNgramStats: occurrences of grams shared across docs, by hand") {
+    val docs = Seq(
+      (1L, "a b a b"),  // "a b" twice (shared with doc 2), "b a" once
+      (2L, "a b c"),    // "a b" (shared), "b c"
+      (3L, "x y x y"))  // "x y" twice but only here, "y x" once
+      .toDF("doc_id", "text")
+    def stats(d: org.apache.spark.sql.DataFrame) =
+      TextOps.dupNgramStats(d, "doc_id", "text", n = 2)
+        .as[(Long, Long, Long, Double)].collect().toSet
+    // A gram counts by occurrence: doc 1's two "a b" are both duplicates;
+    // a gram repeated inside one doc only is not.
+    val expected = Set((1L, 3L, 2L, 2.0 / 3.0), (2L, 2L, 1L, 0.5),
+      (3L, 3L, 0L, 0.0))
+    assert(stats(docs) == expected)
+    assert(stats(docs.repartition(3)) == expected)
+  }
+
   test("rakeScores: degree rewards phrase length; stopwords segment") {
     // doc 1: "deep learning | rocks" (split by 'the'): deep/learning in
     // a 2-phrase, rocks alone. doc 2: "deep learning models" one

@@ -1,6 +1,8 @@
 package graft.tools
 
 import graft.SparkSpec
+import java.nio.file.{Files, Path}
+import java.util.Comparator
 import scala.collection.mutable
 
 class ABSpec extends SparkSpec {
@@ -46,5 +48,25 @@ class ABSpec extends SparkSpec {
     AB.run(spark, "", confArm("1"), confArm("2"), reps = 1, out = _ => ())
     assert(seen.flatten == Seq("1", "2", "1", "2", "1", "2"))
     assert(spark.conf.getOption(key).isEmpty)
+  }
+
+  test("dsir_persist: the persisted arm reports what dsirSelectThreshold does") {
+    val dir = Files.createTempDirectory("graft-ab-spec")
+    try {
+      spark.read.parquet(sf("documents"))
+        .write.parquet(dir.resolve("documents.parquet").toString)
+      val (a, b) = AB.pairs("dsir_persist")
+      // The shipped arm keeps docs under a placed threshold, so the equal-
+      // output gate below compares a non-empty selection.
+      val report = a.build(spark, dir.toString).head
+        .as[(String, Long, Long, Double, Long, Boolean)].collect()
+      assert(report.nonEmpty && report.forall(_._6))
+      assert(report.map(_._3).sum > 0)
+      val res = AB.run(spark, dir.toString, a, b, reps = 1, out = _ => ())
+      assert(res.map(_._1) == Seq("shipped", "persisted"))
+    } finally {
+      Files.walk(dir).sorted(Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+    }
   }
 }

@@ -17,7 +17,11 @@ CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 # .defaultModuleOptions()) — a partial list fails LOUDLY but LATE: a
 # missing sun.util.calendar open only surfaces when a gate decodes a
 # DATE row on the driver (o11_backfill at sf1, round 10).
-JOPTS="-Xmx16g"
+# Size the JVM to this machine: heap = half of MemTotal clamped to 2-8g
+# (the tier-1 test rule), one Spark core per CPU.
+HEAP="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)"
+CPUS="$(env -u OMP_NUM_THREADS nproc)"
+JOPTS="-Xmx$HEAP"
 for p in java.base/java.lang java.base/java.lang.invoke \
          java.base/java.lang.reflect java.base/java.io java.base/java.net \
          java.base/java.nio java.base/java.util \
@@ -37,7 +41,7 @@ java $JOPTS -cp "$CP" graft.tools.ListGates 2>/dev/null \
   | awk '{print $1}' | grep -v '^x2_sparse_cosine$' \
   > "$OUT_DIR/gates.txt"
 TOTAL=$(wc -l < "$OUT_DIR/gates.txt")
-echo "[sweep] $TOTAL gates, chunk=$CHUNK, sf=$SF_DIR -> $OUT_DIR"
+echo "[sweep] $TOTAL gates, chunk=$CHUNK, heap=$HEAP, cpus=$CPUS, sf=$SF_DIR -> $OUT_DIR"
 
 # Clear ALL prior-run chunk state (review r10 second pass): leftover
 # oracle_sql.chunk*.json would be merged even when this run's chunk died
@@ -56,7 +60,7 @@ for f in "$OUT_DIR"/chunk.*; do
   # (review r10 — the merge would silently drop the dead chunk's gates
   # from the replayed registry).
   rm -f "$OUT_DIR/oracle_sql.json"
-  SPARK_GRAFT_CPUS=16 java $JOPTS -cp "$CP" graft.Verify \
+  SPARK_GRAFT_CPUS="$CPUS" java $JOPTS -cp "$CP" graft.Verify \
     "$SF_DIR" "$OUT_DIR" "$names" 2>"$OUT_DIR/chunk$i.err" \
     || echo "[sweep] chunk $i exited nonzero"
   if [ -f "$OUT_DIR/oracle_sql.json" ]; then
