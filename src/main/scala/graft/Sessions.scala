@@ -164,10 +164,15 @@ object Sessions {
   }
 }
 
-/** Scratch locations — kept inside the repo per the sandbox contract. */
+/** Scratch locations under `target/` of the JVM's working directory —
+  * the checkout root for sbt's forked runs and tests — so every checkout
+  * writes its own warehouse and scratch files and two of them can run
+  * side by side.
+  */
 object Scratch {
-  val scratch = "/root/repo/target/tmp"
-  val warehouse = "/root/repo/target/spark-warehouse"
+  private val target = new java.io.File(sys.props("user.dir"), "target")
+  val scratch = new java.io.File(target, "tmp").getAbsolutePath
+  val warehouse = new java.io.File(target, "spark-warehouse").getAbsolutePath
   def fresh(prefix: String): String = {
     val d = new java.io.File(
       scratch, s"$prefix-${java.util.UUID.randomUUID.toString.take(8)}")

@@ -227,6 +227,29 @@ object Multimodal {
     MediaRow(id, out.toByteArray, MediaMeta("wav", n, ch))
   }
 
+  /** One fixture row per id: the `idCol` ids cast to long, each mapped
+    * through `row` — the typed map every `synthetic*` generator is.
+    */
+  private def perId(df: DataFrame, idCol: String)(
+      row: Long => MediaRow): Dataset[MediaRow] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col(idCol).cast("long")).as[Long].map(row)
+  }
+
+  /** The QUARANTINE mix over an intact generator: odd ids' rows are cut
+    * to their first 16 bytes, format `<format>_trunc` (a header that
+    * stops mid-way, undecodable by construction); even ids' rows stay
+    * intact.
+    */
+  private def oddTruncated(intact: Long => MediaRow)(id: Long): MediaRow = {
+    val row = intact(id)
+    if (Math.floorMod(id, 2L) == 1L)
+      row.copy(content = row.content.take(16),
+        meta = row.meta.copy(format = row.meta.format + "_trunc"))
+    else row
+  }
+
   /** Deterministic stereo WAV fixture generator for the [[WavDecoder]]
     * gates: two INDEPENDENT per-channel sample closed forms —
     * left(i) = ((7i + id) mod 65536) − 32768,
@@ -237,16 +260,14 @@ object Multimodal {
     * statistics an exact oracle even though the RIFF byte stream is
     * writer-specific.
     */
-  def syntheticWavs(df: DataFrame, idCol: String): Dataset[MediaRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long")).as[Long].map { id =>
-      encodeWav(id, { (c, i) =>
-        val raw = if (c == 0) 7L * i + id else 11L * i + 2L * id
-        (Math.floorMod(raw, 65536L) - 32768L).toShort
-      })
-    }
-  }
+  def syntheticWavs(df: DataFrame, idCol: String): Dataset[MediaRow] =
+    perId(df, idCol)(wavRow)
+
+  private def wavRow(id: Long): MediaRow =
+    encodeWav(id, { (c, i) =>
+      val raw = if (c == 0) 7L * i + id else 11L * i + 2L * id
+      (Math.floorMod(raw, 65536L) - 32768L).toShort
+    })
 
   /** Intact/poisoned WAV mix for the audio QUARANTINE gate: odd ids are
     * truncated to the first 16 bytes (RIFF magic + partial fmt — the
@@ -254,20 +275,8 @@ object Multimodal {
     * image gate's truncated IHDR). Even ids always decode; odd ids must
     * quarantine to empty codes without killing the task.
     */
-  def syntheticMixedWavs(df: DataFrame, idCol: String): Dataset[MediaRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long")).as[Long].map { id =>
-      val row = encodeWav(id, { (c, i) =>
-        val raw = if (c == 0) 7L * i + id else 11L * i + 2L * id
-        (Math.floorMod(raw, 65536L) - 32768L).toShort
-      })
-      if (Math.floorMod(id, 2L) == 1L)
-        row.copy(content = row.content.take(16),
-          meta = row.meta.copy(format = "wav_trunc"))
-      else row
-    }
-  }
+  def syntheticMixedWavs(df: DataFrame, idCol: String): Dataset[MediaRow] =
+    perId(df, idCol)(oddTruncated(wavRow))
 
   /** Shared fixture encoder: `(8 + id mod 9) × (8 + 3·id mod 9)` pixels
     * whose per-channel values come from `rgbOf(x, y)`, encoded via the
@@ -314,12 +323,10 @@ object Multimodal {
     * encoder-specific. Runs as a typed map (fixture generation, not a
     * hot path); PNG is lossless so decode(encode(pixels)) == pixels.
     */
-  def syntheticPngs(df: DataFrame, idCol: String): Dataset[MediaRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long")).as[Long]
-      .map(id => encodeImage(id, "png", grayAt(id)))
-  }
+  def syntheticPngs(df: DataFrame, idCol: String): Dataset[MediaRow] =
+    perId(df, idCol)(pngRow)
+
+  private def pngRow(id: Long): MediaRow = encodeImage(id, "png", grayAt(id))
 
   /** Full-color variant of [[syntheticPngs]]: three INDEPENDENT per-pixel
     * closed forms — r = (7x+13y+id), g = (11x+5y+2id), b = (3x+17y+5id),
@@ -327,10 +334,8 @@ object Multimodal {
     * tell the channels apart (a gray fixture has R = G = B and a decoder
     * that read the wrong plane would still pass).
     */
-  def syntheticRgbPngs(df: DataFrame, idCol: String): Dataset[MediaRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long")).as[Long].map { id =>
+  def syntheticRgbPngs(df: DataFrame, idCol: String): Dataset[MediaRow] =
+    perId(df, idCol) { id =>
       encodeImage(id, "png", { (x, y) =>
         val r = Math.floorMod(7L * x + 13L * y + id, 256L).toInt
         val g = Math.floorMod(11L * x + 5L * y + 2 * id, 256L).toInt
@@ -338,7 +343,6 @@ object Multimodal {
         (r << 16) | (g << 8) | b
       })
     }
-  }
 
   /** Deliberately-mixed media fixtures for the QUARANTINE gate: by
     * `id mod 4` the row is an intact PNG (0), a PNG truncated to its
@@ -351,19 +355,11 @@ object Multimodal {
     * JPEG pixel values are codec-dependent and never gated; the
     * decoded-vs-quarantined COUNTS are portable.
     */
-  def syntheticMixed(df: DataFrame, idCol: String): Dataset[MediaRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long")).as[Long].map { id =>
-      val kind = Math.floorMod(id, 4L)
-      val fmt = if (kind >= 2) "jpg" else "png"
-      val row = encodeImage(id, fmt, grayAt(id))
-      if (kind % 2 == 1)
-        row.copy(content = row.content.take(16),
-          meta = row.meta.copy(format = fmt + "_trunc"))
-      else row
-    }
-  }
+  def syntheticMixed(df: DataFrame, idCol: String): Dataset[MediaRow] =
+    perId(df, idCol)(oddTruncated { id =>
+      if (Math.floorMod(id, 4L) >= 2) encodeImage(id, "jpg", grayAt(id))
+      else pngRow(id)
+    })
 
   /** Write media rows as individual `<dir>/doc-<id>.<ext>` files — the
     * landing layout a real deployment's `binaryFile` scans ingest
@@ -493,19 +489,19 @@ object Multimodal {
     * even-padded '00dc' chunks); [[parseAviFrames]] performs a generic
     * RIFF walk and does not depend on this writer's layout choices.
     */
-  def syntheticAvis(df: DataFrame, idCol: String): Dataset[MediaRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long")).as[Long].map { id =>
-      val nf = (2 + Math.floorMod(id, 4L)).toInt
-      val frames = (0 until nf).map { f =>
-        encodeImage(id, "png", { (x, y) =>
-          val g = Math.floorMod(7L * x + 13L * y + id + 19L * f, 256L).toInt
-          (g << 16) | (g << 8) | g
-        }).content
-      }
-      MediaRow(id, encodeAvi(frames), MediaMeta("avi", nf, 0))
+  def syntheticAvis(df: DataFrame, idCol: String): Dataset[MediaRow] =
+    perId(df, idCol)(aviRow)
+
+  /** Frame f is [[grayAt]]`(id + 19f)`: long addition wraps mod 2^64 and
+    * 256 divides 2^64, so its pixels are (7x + 13y + id + 19f) mod 256
+    * for every long id.
+    */
+  private def aviRow(id: Long): MediaRow = {
+    val nf = (2 + Math.floorMod(id, 4L)).toInt
+    val frames = (0 until nf).map { f =>
+      encodeImage(id, "png", grayAt(id + 19L * f)).content
     }
+    MediaRow(id, encodeAvi(frames), MediaMeta("avi", nf, 0))
   }
 
   /** Intact/poisoned AVI mix for the video QUARANTINE gate: odd ids are
@@ -513,40 +509,22 @@ object Multimodal {
     * container walk finds no movi list and must emit zero frames without
     * killing the task).
     */
-  def syntheticMixedAvis(df: DataFrame, idCol: String): Dataset[MediaRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long")).as[Long].map { id =>
-      val nf = (2 + Math.floorMod(id, 4L)).toInt
-      val frames = (0 until nf).map { f =>
-        encodeImage(id, "png", { (x, y) =>
-          val g = Math.floorMod(7L * x + 13L * y + id + 19L * f, 256L).toInt
-          (g << 16) | (g << 8) | g
-        }).content
-      }
-      val row = MediaRow(id, encodeAvi(frames), MediaMeta("avi", nf, 0))
-      if (Math.floorMod(id, 2L) == 1L)
-        row.copy(content = row.content.take(16),
-          meta = row.meta.copy(format = "avi_trunc"))
-      else row
-    }
-  }
+  def syntheticMixedAvis(df: DataFrame, idCol: String): Dataset[MediaRow] =
+    perId(df, idCol)(oddTruncated(aviRow))
 
   private def encodeAvi(frames: Seq[Array[Byte]]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     def tag(s: String): Unit =
       out.write(s.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    def u32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
+    def u32To(to: java.io.ByteArrayOutputStream)(v: Long): Unit = {
+      to.write((v & 0xff).toInt); to.write(((v >> 8) & 0xff).toInt)
+      to.write(((v >> 16) & 0xff).toInt); to.write(((v >> 24) & 0xff).toInt)
     }
+    val u32 = u32To(out) _
     // avih main header: 14 u32 fields (56 bytes) — frame count and stream
     // count filled, the rest zero (readers that only walk movi ignore it).
     val avih = new java.io.ByteArrayOutputStream()
-    val aviu = (v: Long) => {
-      avih.write((v & 0xff).toInt); avih.write(((v >> 8) & 0xff).toInt)
-      avih.write(((v >> 16) & 0xff).toInt); avih.write(((v >> 24) & 0xff).toInt)
-    }
+    val aviu = u32To(avih) _
     aviu(33333L); aviu(0L); aviu(0L); aviu(0L)        // usec/frame, rate...
     aviu(frames.length.toLong); aviu(0L); aviu(1L); aviu(0L) // totalFrames, streams=1
     (0 until 6).foreach(_ => aviu(0L))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.functions._
 
 /** Deterministic sampling for corpus curation. `df.sample()` draws from a
@@ -41,6 +42,15 @@ object Sample {
     }
   }
 
+  /** Each stratum's rows in deterministic hash order — md5(id), the id
+    * breaking ties so the order is total: the draw order every
+    * per-stratum sampler admits rows in.
+    */
+  private def hashOrderWithin(stratumCol: String, idCol: String): WindowSpec =
+    org.apache.spark.sql.expressions.Window
+      .partitionBy(col(stratumCol))
+      .orderBy(md5(col(idCol).cast("string")), col(idCol))
+
   /** Stratified fixed-size sample: the `n` rows of each stratum with the
     * smallest (hash, id) — every stratum contributes exactly
     * min(n, |stratum|) rows, deterministically, in one window shuffle on
@@ -48,14 +58,11 @@ object Sample {
     * makes it total.
     */
   def stratified(df: DataFrame, stratumCol: String, idCol: String,
-                 n: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(stratumCol))
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-    df.withColumn("__rn", row_number().over(w))
+                 n: Int): DataFrame =
+    df.withColumn("__rn",
+        row_number().over(hashOrderWithin(stratumCol, idCol)))
       .filter(col("__rn") <= n)
       .drop("__rn")
-  }
 
   /** Exact-size uniform sample: the `k` rows with the globally smallest
     * (md5(id), id) — the deterministic replacement for reservoir sampling
@@ -159,10 +166,8 @@ object Sample {
     val budgetCol = budgets.toSeq.sortBy(_._1).foldLeft(lit(default)) {
       case (acc, (k, v)) => when(col(stratumCol) === k, lit(v)).otherwise(acc)
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(stratumCol))
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-    df.withColumn("__cum", sum(col(tokenCol)).over(w))
+    df.withColumn("__cum",
+        sum(col(tokenCol)).over(hashOrderWithin(stratumCol, idCol)))
       .filter(col("__cum") - col(tokenCol) < budgetCol)
       .drop("__cum")
   }
@@ -177,10 +182,8 @@ object Sample {
     val nCol = quota.toSeq.sortBy(_._1).foldLeft(lit(default)) {
       case (acc, (k, v)) => when(col(stratumCol) === k, lit(v)).otherwise(acc)
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(stratumCol))
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-    df.withColumn("__rn", row_number().over(w))
+    df.withColumn("__rn",
+        row_number().over(hashOrderWithin(stratumCol, idCol)))
       .filter(col("__rn") <= nCol)
       .drop("__rn")
   }
@@ -225,11 +228,9 @@ object Sample {
       .withColumn("__take",
         expr(s"((__tot * $totalNum) div $totalDen * __q) div __sq"))
       .select(col(stratumCol), col("__take"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(stratumCol))
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
     df.join(broadcast(quota), stratumCol)
-      .withColumn("__rn", row_number().over(w))
+      .withColumn("__rn",
+        row_number().over(hashOrderWithin(stratumCol, idCol)))
       .filter(col("__rn") <= col("__take"))
       .drop("__rn", "__take")
   }

@@ -33,6 +33,17 @@ object Similarity {
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
+  /** The query side of a search: (qid, qv). Callers broadcast it. */
+  private def querySide(queries: DataFrame, idCol: String,
+                        vecCol: String): DataFrame =
+    queries.select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv"))
+
+  /** The corpus side of a search, spread first: (nid, cv). */
+  private def corpusSide(corpus: DataFrame, idCol: String,
+                         vecCol: String): DataFrame =
+    Par.spread(corpus)
+      .select(col(idCol).as("nid"), asDouble(col(vecCol)).as("cv"))
+
   /** Per-query top-k of a scored candidate set: `row_number` over `qid`
     * in (`score`, nid) order, ranks 1..k kept — Catalyst plans the
     * per-partition sort + filter as a partial top-k. `score` carries its
@@ -55,14 +66,19 @@ object Similarity {
     */
   def knnBruteForce(
       corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int): DataFrame = {
-    val q = broadcast(queries.select(
-      col(idCol).as("qid"), asDouble(col(vecCol)).as("qv")))
-    val c = Par.spread(corpus)
-      .select(col(idCol).as("nid"), asDouble(col(vecCol)).as("cv"))
-    val scored = c.crossJoin(q)
-      .withColumn("sim", cosine(col("qv"), col("cv")))
-    topKPerQuery(scored, col("sim").desc, k, "sim")
+      idCol: String, vecCol: String, k: Int): DataFrame =
+    bruteForce(corpus, queries, idCol, vecCol, k, cosine, "sim")
+
+  /** Every query against every corpus row, scored by `score(qv, cv)`
+    * into column `out`, highest first. Output: (qid, rank, nid, out).
+    */
+  private def bruteForce(
+      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+      k: Int, score: (Column, Column) => Column, out: String): DataFrame = {
+    val q = broadcast(querySide(queries, idCol, vecCol))
+    val scored = corpusSide(corpus, idCol, vecCol).crossJoin(q)
+      .withColumn(out, score(col("qv"), col("cv")))
+    topKPerQuery(scored, col(out).desc, k, out)
   }
 
   /** Maximum inner-product search (MIPS), brute force: top-k by RAW dot
@@ -84,16 +100,8 @@ object Similarity {
     */
   def mipsBruteForce(
       corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int): DataFrame = {
-    val q = broadcast(queries.select(
-      col(idCol).as("qid"), asDouble(col(vecCol)).as("qv")))
-    val c = Par.spread(corpus)
-      .select(col(idCol).as("nid"), asDouble(col(vecCol)).as("cv"))
-    val scored = c.crossJoin(q)
-      .withColumn("score",
-        org.apache.spark.sql.graft.VectorFunctions.vecDot(col("qv"), col("cv")))
-    topKPerQuery(scored, col("score").desc, k, "score")
-  }
+      idCol: String, vecCol: String, k: Int): DataFrame =
+    bruteForce(corpus, queries, idCol, vecCol, k, dot, "score")
 
   /** The plane vectors, collected once and ordered by plane id — they are
     * small by contract (an LSH table is ≤64 planes of embedding width), so
@@ -167,10 +175,7 @@ object Similarity {
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
                     centroids: DataFrame, centIdCol: String,
                     centVecCol: String, threshold: Double): DataFrame = {
-    val cents = centroids
-      .select(col(centIdCol).cast("long"), asDouble(col(centVecCol)))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
-    require(cents.nonEmpty, "semanticDedup needs at least one centroid")
+    val cents = collectCents(centroids, centIdCol, centVecCol, "semanticDedup")
     val v = Par.spread(df).select(col(idCol).cast("long").as("id"),
         asDouble(col(vecCol)).as("v"))
       .withColumn("cell", cellExpr(col("v"), cents))
@@ -244,14 +249,12 @@ object Similarity {
       k: Int, probe1: Boolean = false): DataFrame = {
     require(planeTables.nonEmpty, "need at least one plane table")
     val tables = planeTables.map(collectPlanes(_, planeId, planeVec))
-    val c0 = Par.spread(corpus)
-      .select(col(idCol).as("nid"), asDouble(col(vecCol)).as("cv"))
     // All L bucket ids in one projection over one corpus scan.
-    val cb = c0.select(Seq(col("nid"), col("cv")) ++
-      tables.zipWithIndex.map { case (pv, i) =>
-        bucketExpr(col("cv"), pv).as(s"b$i") }: _*)
-    val qb = queries
-      .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv"))
+    val cb = corpusSide(corpus, idCol, vecCol)
+      .select(Seq(col("nid"), col("cv")) ++
+        tables.zipWithIndex.map { case (pv, i) =>
+          bucketExpr(col("cv"), pv).as(s"b$i") }: _*)
+    val qb = querySide(queries, idCol, vecCol)
       .select(Seq(col("qid"), col("qv")) ++
         tables.zipWithIndex.map { case (pv, i) =>
           bucketExpr(col("qv"), pv).as(s"b$i") }: _*)
@@ -330,7 +333,7 @@ object Similarity {
       val sums = assigned
         .select(col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
         .groupBy("cell", "dim")
-        .agg(sum(floor(col("x") * lit(1e10)).cast("decimal(38,0)")).as("s"),
+        .agg(sum(Exact.dec(floor(col("x") * lit(1e10)))).as("s"),
           count(lit(1)).as("n"))
         .collect()
       val next = cents.map(_.toArray.clone())
@@ -428,8 +431,7 @@ object Similarity {
         codebooks.zipWithIndex.map { case (cb, j) =>
           codeExpr(slice(asDouble(col(vecCol)), j * sub + 1, sub), cb)
             .as(s"c$j") }: _*)
-    val qb = broadcast(queries
-      .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv")))
+    val qb = broadcast(querySide(queries, idCol, vecCol))
     // est_d2 = Σ_j d2(qsub_j, codebook_j[c_j]) — fixed left-to-right sum.
     val est = codebooks.zipWithIndex.map { case (cb, j) =>
       val qsub = slice(col("qv"), j * sub + 1, sub)
@@ -463,8 +465,7 @@ object Similarity {
   def knnSq8(corpus: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, k: Int): DataFrame = {
     val sc = (col("__mx") - col("__mn")) / lit(255.0)
-    val c = Par.spread(corpus)
-      .select(col(idCol).as("nid"), asDouble(col(vecCol)).as("cv"))
+    val c = corpusSide(corpus, idCol, vecCol)
       .withColumn("__mn", array_min(col("cv")))
       .withColumn("__mx", array_max(col("cv")))
       .withColumn("__codes", transform(col("cv"), x =>
@@ -473,8 +474,7 @@ object Similarity {
           lit(0)), lit(255))))
       .withColumn("__rv", transform(col("__codes"), cd =>
         col("__mn") + cd.cast("double") * sc))
-    val qb = broadcast(queries
-      .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv")))
+    val qb = broadcast(querySide(queries, idCol, vecCol))
     val scored = c.crossJoin(qb)
       .withColumn("sim", cosine(col("qv"), col("__rv")))
     topKPerQuery(scored, col("sim").desc, k, "sim")
@@ -540,16 +540,22 @@ object Similarity {
       .select("qid", "pos_id", "pos_sim", "neg_rank", "neg_id")
   }
 
-  /** Centroid list collected to the driver — the coarse quantizer is
-    * config-sized by contract (it broadcasts into every cell/probe
-    * projection), exactly like LSH planes and PQ codebooks.
+  /** Centroid list collected to the driver in centroid-id order — the
+    * coarse quantizer is config-sized by contract (it broadcasts into
+    * every cell/probe projection), exactly like LSH planes and PQ
+    * codebooks. An empty list fails here, naming the operator `op`.
     */
   private def collectCents(centroids: DataFrame, cidCol: String,
-                           cvecCol: String): Array[(Long, Seq[Double])] =
-    centroids.select(col(cidCol).cast("long"), asDouble(col(cvecCol)))
+                           cvecCol: String,
+                           op: String): Array[(Long, Seq[Double])] = {
+    val cents = centroids
+      .select(col(cidCol).cast("long"), asDouble(col(cvecCol)))
       .orderBy(col(cidCol))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
+    require(cents.nonEmpty, s"$op needs at least one centroid")
+    cents
+  }
 
   /** The assigned cell's centroid vector: one literal map lookup
     * (GetMapValue is codegen and O(k) over a k-entry literal — the former
@@ -561,6 +567,15 @@ object Similarity {
       map(cents.toIndexedSeq.flatMap { case (cid, cv) =>
         Seq(lit(cid), typedLit(cv)) }: _*),
       cell)
+
+  /** `v` minus the centroid of the `cell` column — set by [[cellExpr]]
+    * over the same `v` on the corpus side, by [[probeSide]] on the query
+    * side. Native vec_sub, exact IEEE.
+    */
+  private def residualExpr(v: Column,
+                           cents: Array[(Long, Seq[Double])]): Column =
+    org.apache.spark.sql.graft.VectorFunctions.vecSub(v,
+      centroidVecExpr(col("cell"), cents))
 
   /** RESIDUAL frame for composite indexes: each vector minus its assigned
     * coarse-cell centroid, carried under the original `vecCol` name so the
@@ -575,14 +590,12 @@ object Similarity {
   def residuals(df: DataFrame, idCol: String, vecCol: String,
                 centroids: DataFrame, cidCol: String,
                 cvecCol: String): DataFrame = {
-    val cents = collectCents(centroids, cidCol, cvecCol)
-    require(cents.nonEmpty, "residuals needs at least one centroid")
+    val cents = collectCents(centroids, cidCol, cvecCol, "residuals")
     Par.spread(df)
       .select(col(idCol), asDouble(col(vecCol)).as("__v"))
       .withColumn("cell", cellExpr(col("__v"), cents))
       .select(col(idCol), col("cell"),
-        org.apache.spark.sql.graft.VectorFunctions.vecSub(col("__v"),
-          centroidVecExpr(col("cell"), cents)).as(vecCol))
+        residualExpr(col("__v"), cents).as(vecCol))
   }
 
   /** IVF-PQ composite index (the FAISS-style index layout): the coarse
@@ -614,28 +627,21 @@ object Similarity {
       codebooks: Seq[Array[Seq[Double]]], k: Int, nprobe: Int): DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
     require(codebooks.nonEmpty, "need at least one codebook")
-    val cents = collectCents(centroids, cidCol, cvecCol)
-    require(cents.nonEmpty, "knnIvfPq needs at least one centroid")
+    val cents = collectCents(centroids, cidCol, cvecCol, "knnIvfPq")
     val m = codebooks.length
     val sub = codebooks.head.head.length
     val coded = {
       val cv = Par.spread(corpus)
         .select(col(idCol).as("nid"), asDouble(col(vecCol)).as("__v"))
         .withColumn("cell", cellExpr(col("__v"), cents))
-        .withColumn("__rv",
-          org.apache.spark.sql.graft.VectorFunctions.vecSub(col("__v"),
-            centroidVecExpr(col("cell"), cents)))
+        .withColumn("__rv", residualExpr(col("__v"), cents))
       cv.select(Seq(col("nid"), col("cell")) ++
         codebooks.zipWithIndex.map { case (cb, j) =>
           codeExpr(slice(col("__rv"), j * sub + 1, sub), cb).as(s"c$j")
         }: _*)
     }
-    val qb = broadcast(queries
-      .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("cell", explode(probeCellsExpr(col("qv"), cents, nprobe)))
-      .withColumn("qrv",
-        org.apache.spark.sql.graft.VectorFunctions.vecSub(col("qv"),
-          centroidVecExpr(col("cell"), cents))))
+    val qb = broadcast(probeSide(queries, idCol, vecCol, cents, nprobe)
+      .withColumn("qrv", residualExpr(col("qv"), cents)))
     // ADC: the code column INDEXES the codebook literal directly
     // (element_at on an array-of-arrays literal) — no per-code CASE
     // branches, so the whole estimate stays one small codegen projection.
@@ -693,24 +699,38 @@ object Similarity {
   def knnIvf(
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, cidCol: String, cvecCol: String,
-      k: Int, nprobe: Int): DataFrame = {
+      k: Int, nprobe: Int): DataFrame =
+    topKPerQuery(ivfCandidates(corpus, queries, idCol, vecCol, centroids,
+      cidCol, cvecCol, nprobe, "knnIvf"), col("sim").desc, k, "sim")
+
+  /** Each query with its `nprobe` nearest cells, one row per probed cell:
+    * (qid, qv, cell). The IVF operators broadcast it.
+    */
+  private def probeSide(queries: DataFrame, idCol: String, vecCol: String,
+                        cents: Array[(Long, Seq[Double])],
+                        nprobe: Int): DataFrame =
+    querySide(queries, idCol, vecCol)
+      .withColumn("cell", explode(probeCellsExpr(col("qv"), cents, nprobe)))
+
+  /** The IVF-flat candidate stage shared by [[knnIvf]] and [[radiusIvf]]:
+    * the corpus assigned to its cell, equijoined on cell with the
+    * broadcast probe side, scored by cosine. A corpus vector lives in
+    * exactly one cell and a query's probe cells are distinct, so (qid,
+    * nid) pairs are already unique — no dedup. `op` names the operator
+    * in the empty-centroid error.
+    *
+    * Output: (cell, nid, cv, qid, qv, sim).
+    */
+  private def ivfCandidates(
+      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+      centroids: DataFrame, cidCol: String, cvecCol: String,
+      nprobe: Int, op: String): DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
-    val cents: Array[(Long, Seq[Double])] = centroids
-      .select(col(cidCol).cast("long"), asDouble(col(cvecCol)))
-      .orderBy(col(cidCol))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val cb = Par.spread(corpus)
-      .select(col(idCol).as("nid"), asDouble(col(vecCol)).as("cv"))
+    val cents = collectCents(centroids, cidCol, cvecCol, op)
+    val cb = corpusSide(corpus, idCol, vecCol)
       .withColumn("cell", cellExpr(col("cv"), cents))
-    val qb = broadcast(queries
-      .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("cell", explode(probeCellsExpr(col("qv"), cents, nprobe))))
-    // A corpus vector lives in exactly one cell and a query's probe cells
-    // are distinct, so (qid, nid) pairs are already unique — no dedup.
-    val scored = cb.join(qb, "cell")
-      .withColumn("sim", cosine(col("qv"), col("cv")))
-    topKPerQuery(scored, col("sim").desc, k, "sim")
+    val qb = broadcast(probeSide(queries, idCol, vecCol, cents, nprobe))
+    cb.join(qb, "cell").withColumn("sim", cosine(col("qv"), col("cv")))
   }
 
   /** RADIUS similarity search — every corpus vector with cosine >= `tau`
@@ -730,24 +750,11 @@ object Similarity {
   def radiusIvf(
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, cidCol: String, cvecCol: String,
-      tau: Double, nprobe: Int): DataFrame = {
-    require(nprobe >= 1, "nprobe must be >= 1")
-    val cents: Array[(Long, Seq[Double])] = centroids
-      .select(col(cidCol).cast("long"), asDouble(col(cvecCol)))
-      .orderBy(col(cidCol))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val cb = Par.spread(corpus)
-      .select(col(idCol).as("nid"), asDouble(col(vecCol)).as("cv"))
-      .withColumn("cell", cellExpr(col("cv"), cents))
-    val qb = broadcast(queries
-      .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("cell", explode(probeCellsExpr(col("qv"), cents, nprobe))))
-    cb.join(qb, "cell")
-      .withColumn("sim", cosine(col("qv"), col("cv")))
+      tau: Double, nprobe: Int): DataFrame =
+    ivfCandidates(corpus, queries, idCol, vecCol, centroids, cidCol,
+        cvecCol, nprobe, "radiusIvf")
       .filter(col("sim") >= tau)
       .select("qid", "nid", "sim")
-  }
 
   /** Recall@k scorecard of an approximate neighbor ranking against the
     * exact one — the acceptance number every ANN index ships with ("IVF
@@ -799,25 +806,24 @@ object Similarity {
       corpus: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, cidCol: String, cvecCol: String,
       scale: Double): DataFrame = {
-    val cents: Array[(Long, Seq[Double])] = centroids
-      .select(col(cidCol).cast("long"), asDouble(col(cvecCol)))
-      .orderBy(col(cidCol))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val cmap = map(cents.toIndexedSeq.flatMap { case (id, v) =>
-      Seq(lit(id), typedLit(v)) }: _*)
-    def g(c: Column): Column =
-      transform(c, x => floor(x * lit(scale)).cast("long"))
+    val cents = collectCents(centroids, cidCol, cvecCol, "cellInertia")
     val resid = aggregate(
-      zip_with(g(col("__v")), g(col("__cv")), (a, b) => (a - b) * (a - b)),
+      zip_with(gridVec(col("__v"), scale), gridVec(col("__cv"), scale),
+        (a, b) => (a - b) * (a - b)),
       lit(0L), (acc, x) => acc + x)
     Par.spread(corpus)
       .select(col(idCol), asDouble(col(vecCol)).as("__v"))
       .withColumn("cell", cellExpr(col("__v"), cents))
-      .withColumn("__cv", element_at(cmap, col("cell")))
+      .withColumn("__cv", centroidVecExpr(col("cell"), cents))
       .groupBy("cell")
       .agg(count(lit(1)).as("n"), sum(resid).as("inertia"))
   }
+
+  /** Each element of `v` on the 1/`scale` lattice: `floor(x·scale)` as a
+    * long, so sums of products are exact integers.
+    */
+  private def gridVec(v: Column, scale: Double): Column =
+    transform(v, x => floor(x * lit(scale)).cast("long"))
 
   /** Exact distributed Gram matrix (upper triangle of Σ xᵢ·xᵢᵀ over the
     * corpus) — the one-pass sufficient statistic behind PCA, whitening,
@@ -840,8 +846,7 @@ object Similarity {
     */
   def gramMatrix(df: DataFrame, vecCol: String, d: Int,
                  scale: Double): DataFrame = {
-    val g = transform(asDouble(col(vecCol)),
-      x => floor(x * lit(scale)).cast("long"))
+    val g = gridVec(asDouble(col(vecCol)), scale)
     // per-row upper triangle, row-major: products x_i * x_j for j >= i
     val tri = flatten(transform(g, (xi, i) =>
       transform(slice(g, i + 1, lit(d) - i), xj => xi * xj)))

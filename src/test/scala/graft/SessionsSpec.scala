@@ -46,6 +46,14 @@ class SessionsSpec extends AnyFunSuite {
     assert(opts.get("spark.sql.adaptive.enabled").contains("true"))
   }
 
+  test("scratch and warehouse roots lie under the JVM's working directory") {
+    val cwd = java.nio.file.Paths.get(sys.props("user.dir"))
+      .toAbsolutePath.normalize
+    Seq(Scratch.scratch, Scratch.warehouse).foreach { d =>
+      assert(java.nio.file.Paths.get(d).normalize.startsWith(cwd), d)
+    }
+  }
+
   test("withConf restores a changed key and unsets a previously unset one") {
     val s = SparkSpec.session
     val changed = "spark.sql.shuffle.partitions"

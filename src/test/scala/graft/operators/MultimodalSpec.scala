@@ -422,4 +422,46 @@ class MultimodalSpec extends SparkSpec {
     assert(media.collect().filter(_.id % 2 == 1)
       .forall(_.content.length == 16))
   }
+
+  test("mixed generators: intact rows equal their intact twin byte for " +
+      "byte; poisoned rows are its first 16 bytes, format <fmt>_trunc") {
+    val ids = (-64L to 255L).toDF("doc_id")
+    def byId(ds: org.apache.spark.sql.Dataset[Multimodal.MediaRow]) =
+      ds.collect().map(r => r.id -> r).toMap
+    def same(a: Multimodal.MediaRow, b: Multimodal.MediaRow): Boolean =
+      a.id == b.id && a.meta == b.meta && a.content.sameElements(b.content)
+    def cut(r: Multimodal.MediaRow): Multimodal.MediaRow =
+      r.copy(content = r.content.take(16),
+        meta = r.meta.copy(format = r.meta.format + "_trunc"))
+    val pairs = Seq(
+      ("png", Multimodal.syntheticMixed(ids, "doc_id"),
+        Multimodal.syntheticPngs(ids, "doc_id")),
+      ("wav", Multimodal.syntheticMixedWavs(ids, "doc_id"),
+        Multimodal.syntheticWavs(ids, "doc_id")),
+      ("avi", Multimodal.syntheticMixedAvis(ids, "doc_id"),
+        Multimodal.syntheticAvis(ids, "doc_id")))
+    pairs.foreach { case (fmt, mixedDs, intactDs) =>
+      val mixed = byId(mixedDs)
+      val intact = byId(intactDs)
+      assert(mixed.keySet == (-64L to 255L).toSet, fmt)
+      // syntheticMixed interleaves png (id mod 4 in {0, 1}) with jpg
+      // (id mod 4 in {2, 3}); the wav and avi mixes are all one format.
+      val twinIds = mixed.keys.filter(id =>
+        fmt != "png" || Math.floorMod(id, 4L) < 2)
+      twinIds.foreach { id =>
+        val want = if (Math.floorMod(id, 2L) == 0L) intact(id) else cut(intact(id))
+        assert(same(mixed(id), want), s"$fmt id $id")
+      }
+    }
+    // The jpg rows have no intact generator: the poisoned ones are still
+    // 16-byte JPEG heads (SOI marker) of the id's dimensions.
+    Multimodal.syntheticMixed(ids, "doc_id").collect()
+      .filter(r => Math.floorMod(r.id, 4L) == 3L).foreach { r =>
+        assert(r.content.length == 16 &&
+          (r.content(0) & 0xff) == 0xff && (r.content(1) & 0xff) == 0xd8)
+        assert(r.meta == Multimodal.MediaMeta("jpg_trunc",
+          (8 + Math.floorMod(r.id, 9L)).toInt,
+          (8 + Math.floorMod(3 * r.id, 9L)).toInt), s"id ${r.id}")
+      }
+  }
 }

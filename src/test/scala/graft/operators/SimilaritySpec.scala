@@ -445,4 +445,30 @@ class SimilaritySpec extends SparkSpec {
       .orderBy("rank").as[(Long, Int, Long, Double)].collect().toSeq
     assert(augCos.map(_._3) == mips.map(_._3)) // rank order restored
   }
+
+  test("every centroid operator rejects an empty centroid frame by name") {
+    val corpus = Seq((0L, Seq(1.0f, 0.0f)), (1L, Seq(0.0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    val none = corpus.filter(lit(false))
+    val codebooks = Seq(Array(Seq(1.0, 0.0)))
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "knnIvf" -> (() => Similarity.knnIvf(corpus, corpus, "vec_id",
+        "embedding", none, "vec_id", "embedding", k = 1, nprobe = 1)),
+      "radiusIvf" -> (() => Similarity.radiusIvf(corpus, corpus, "vec_id",
+        "embedding", none, "vec_id", "embedding", tau = 0.5, nprobe = 1)),
+      "cellInertia" -> (() => Similarity.cellInertia(corpus, "vec_id",
+        "embedding", none, "vec_id", "embedding", scale = 10.0)),
+      "residuals" -> (() => Similarity.residuals(corpus, "vec_id",
+        "embedding", none, "vec_id", "embedding")),
+      "semanticDedup" -> (() => Similarity.semanticDedup(corpus, "vec_id",
+        "embedding", none, "vec_id", "embedding", threshold = 0.5)),
+      "knnIvfPq" -> (() => Similarity.knnIvfPq(corpus, corpus, "vec_id",
+        "embedding", none, "vec_id", "embedding", codebooks, k = 1,
+        nprobe = 1)))
+    ops.foreach { case (op, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage ==
+        s"requirement failed: $op needs at least one centroid", op)
+    }
+  }
 }
