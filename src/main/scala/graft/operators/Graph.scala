@@ -15,13 +15,15 @@ object Graph {
 
   /** Row bound under which an iterative operator's per-round frontier (or
     * settled set) is broadcast instead of shuffle-joined against the
-    * pre-partitioned edge list. 4M rows of 1-3 longs ≈ 32-100 MB as a
+    * src-partitioned edge list. 4M rows of 1-3 longs ≈ 32-100 MB as a
     * built hash relation — comfortably inside any realistic executor and
     * far under Spark's 8 GB / 512M-row broadcast cap, while covering the
     * frontier sizes bounded-hop traversals actually see (frontiers track
     * the reached set, not the edge list). Above the bound the plan falls
     * back to the shuffle join the operators always used; semantics are
-    * identical either way — only the join strategy moves.
+    * identical either way — only the join strategy moves. The loops take
+    * it as a parameter so specs can force the shuffle branch on small
+    * graphs.
     */
   private val frontierBroadcastMaxRows = 1L << 22
 
@@ -47,71 +49,101 @@ object Graph {
     *         unreached within `maxHops` are absent
     */
   def bfsHops(edges: DataFrame, sources: DataFrame, maxHops: Int)
-      : DataFrame = frontierHops(edges,
-    sources.select(col("id").cast("long").as("id"), lit(0L).as("hop"))
-      .distinct(), Nil, maxHops)
+      : DataFrame = frontierHops(edges, sources, Nil, maxHops)
 
-  /** The frontier loop [[bfsHops]] and [[landmarkHops]] share: `seeds` is
-    * the hop-0 settled set (id, labels..., hop), and a node is settled
-    * once per distinct label tuple — `Nil` for plain BFS, `Seq("lm")` for
-    * the landmark sweep.
+  /** The frontier loop [[bfsHops]] and [[landmarkHops]] share: every
+    * distinct `sources` id is a hop-0 seed carrying itself in each of
+    * `labels`, and a node is settled once per distinct label tuple —
+    * `Nil` for plain BFS, `Seq("lm")` for the landmark sweep. A labeled
+    * frontier is (node × label)-bounded, still far under the edge list.
     */
-  private def frontierHops(edges: DataFrame, seeds: DataFrame,
-                           labels: Seq[String], maxHops: Int): DataFrame =
+  private[operators] def frontierHops(edges: DataFrame, sources: DataFrame,
+      labels: Seq[String], maxHops: Int,
+      bound: Long = frontierBroadcastMaxRows): DataFrame =
       FreshCheckpoint.rounds { r =>
     require(maxHops >= 0, "maxHops must be >= 0")
-    val e = edgeOperand(r, edges)
-    var dist = r.persist(seeds)
-    var frontier = dist
-    // Frontiers are usually TINY next to the edge list (seeds, then the
-    // reached set), but the frontier join planned as a sort-merge join
-    // re-SORTS the full persisted edge partitions every round — a
-    // per-round cost proportional to the graph, not the frontier.
-    // Counting the (persisted) frontier is one node-sized job per round
-    // and buys two things: a BroadcastHashJoin under the row bound (the
-    // edge side is then never sorted or shuffled — it streams out of the
-    // cache probing the frontier hash table), and an early exit when the
-    // frontier empties (remaining rounds are no-ops by construction).
-    // Above the bound the pre-partitioned shuffle join stands unchanged.
-    // The settled set rides the same bound on the anti-join side. A
-    // labeled frontier is (node × label)-bounded, still far under the
-    // edge list.
-    var frontierRows = frontier.count()
-    var distRows = frontierRows
-    var h = 1
-    while (h <= maxHops && frontierRows > 0) {
-      val reached = e.join(broadcastUnder(frontierRows,
-          frontier.withColumnRenamed("id", "src").select("src", labels: _*)),
+    val e = edgeOperand(r, edges, bound)
+    val seeds = sources.select(col("id").cast("long").as("id")).distinct()
+      .select(col("id") +: labels.map(col("id").as(_)) :+ lit(0L).as("hop"): _*)
+    frontierLoop(r, seeds, maxHops) { (h, frontier, dist, distRows) =>
+      val reached = e(frontier.rows).join(broadcastUnder(frontier.rows, bound,
+          frontier.df.withColumnRenamed("id", "src").select("src", labels: _*)),
           "src")
         .select(col("dst").as("id") +: labels.map(col): _*).distinct()
-      val next = r.persist(reached
-        .join(broadcastUnder(distRows, dist.select("id", labels: _*)),
+      // The settled set rides the same bound on the anti-join side.
+      reached
+        .join(broadcastUnder(distRows, bound, dist.select("id", labels: _*)),
           "id" +: labels, "left_anti")
-        .select(col("id") +: labels.map(col) :+ lit(h.toLong).as("hop"): _*))
-      dist = r.persist(dist.unionByName(next))
-      frontier = next
-      frontierRows = next.count()
-      distRows += frontierRows
-      h += 1
-    }
-    r.pin(dist)
+        .select(col("id") +: labels.map(col) :+ lit(h.toLong).as("hop"): _*)
+    }(_.unionByName(_))
   }
 
-  /** Loop-invariant edge operand of the frontier loops: long-cast,
+  /** The round driver of the frontier loops ([[frontierHops]],
+    * [[ssspRounds]]). `seeds` is round 0's frontier and settled table;
+    * `next(h, frontier, settled, seen)` is round h's frontier, lazy, from
+    * the previous round's pinned frontier, the settled table and `seen`
+    * (the rows of every frontier so far — the settled table's size when
+    * frontiers are disjoint, as in BFS); `settle` folds a frontier into
+    * the settled table.
+    *
+    * Frontiers are usually TINY next to the edge list (seeds, then the
+    * reached set), but a frontier join planned as a sort-merge join
+    * re-sorts the edge partitions every round — a per-round cost
+    * proportional to the graph, not the frontier. So each round's join
+    * strategy is chosen from a row count the loop already holds: every
+    * round but the last PINS its frontier, and the pin's forcing count is
+    * the next round's frontier size. That buys a broadcast hash join
+    * under the bound (the edge side then streams out of the cache probing
+    * the frontier hash table, never sorted or shuffled) and an early exit
+    * when a frontier comes back empty (later rounds are no-ops by
+    * construction). Nothing reads the last round's size, so its frontier
+    * stays lazy and only the settled table is pinned: `rounds` rounds
+    * cost at most `rounds` + 1 pins and no count job. In durable mode
+    * (`graft.checkpoint.dir`) each pinned frontier is one node-sized
+    * checkpoint write.
+    */
+  private def frontierLoop(r: FreshCheckpoint.Rounds, seeds: DataFrame,
+      rounds: Int)(next: (Int, FreshCheckpoint.Pinned, DataFrame, Long) =>
+      DataFrame)(settle: (DataFrame, DataFrame) => DataFrame)
+      : FreshCheckpoint.Pinned = {
+    var frontier = r.pin(seeds)
+    var settled = frontier.df
+    var seen = frontier.rows
+    var h = 1
+    while (h < rounds && frontier.rows > 0) {
+      frontier = r.pin(next(h, frontier, settled, seen))
+      settled = r.persist(settle(settled, frontier.df))
+      seen += frontier.rows
+      h += 1
+    }
+    r.pin(if (h <= rounds && frontier.rows > 0)
+      settle(settled, next(h, frontier, settled, seen)) else settled)
+  }
+
+  /** Loop-invariant edge operand of the frontier loops, long-cast and
     * persisted (the caller's edge derivation — often a co-purchase
-    * self-join — must not re-run per round) and PRE-PARTITIONED on src,
-    * the per-round join key, so the cached partitioning satisfies the
-    * edge-side Exchange in every round and only the frontier shuffles.
+    * self-join — must not re-run per round). The result maps a round's
+    * frontier size to the edge table it joins: the plain list when the
+    * frontier is broadcast (under `bound`), else a copy PRE-PARTITIONED on
+    * src, the join key, whose cached partitioning satisfies the edge-side
+    * Exchange of every shuffle round so only the frontier shuffles. The
+    * copy is built on the first shuffle round — a loop whose frontiers
+    * all stay under the bound never shuffles the edge list.
     */
   private def edgeOperand(r: FreshCheckpoint.Rounds, edges: DataFrame,
-                          extra: String*): DataFrame =
-    r.persist(longEdges(edges, extra: _*).repartition(col("src")))
+                          bound: Long, extra: String*): Long => DataFrame = {
+    val plain = r.persist(longEdges(edges, extra: _*))
+    lazy val bySrc = r.persist(plain.repartition(col("src")))
+    rows => if (rows <= bound) plain else bySrc
+  }
 
-  /** `df` with a broadcast hint when its `rows` are under
-    * [[frontierBroadcastMaxRows]]; above it, the shuffle join stands.
+  /** `df` with a broadcast hint when its `rows` are under `bound`
+    * ([[frontierBroadcastMaxRows]] outside specs); above it, the shuffle
+    * join stands.
     */
-  private def broadcastUnder(rows: Long, df: DataFrame): DataFrame =
-    if (rows <= frontierBroadcastMaxRows) broadcast(df) else df
+  private def broadcastUnder(rows: Long, bound: Long,
+                             df: DataFrame): DataFrame =
+    if (rows <= bound) broadcast(df) else df
 
   /** (src, dst, extra...) with every column cast to long. */
   private def longEdges(edges: DataFrame, extra: String*): DataFrame =
@@ -142,10 +174,7 @@ object Graph {
     */
   def landmarkHops(edges: DataFrame, landmarks: DataFrame,
                    maxHops: Int): DataFrame =
-    frontierHops(edges,
-      landmarks.select(col("id").cast("long").as("id")).distinct()
-        .select(col("id"), col("id").as("lm"), lit(0L).as("hop")),
-      Seq("lm"), maxHops)
+    frontierHops(edges, landmarks, Seq("lm"), maxHops)
 
   /** Bounded-radius closeness centrality against a landmark set: per
     * node, how many landmarks reach it within `maxHops` and at what total
@@ -194,37 +223,34 @@ object Graph {
     * @return (id, dist) — nodes unreached within `rounds` are absent
     */
   def ssspRounds(edges: DataFrame, sources: DataFrame,
-                 rounds: Int): DataFrame = FreshCheckpoint.rounds { rs =>
+                 rounds: Int): DataFrame =
+    ssspRounds(edges, sources, rounds, frontierBroadcastMaxRows)
+
+  /** [[ssspRounds]] with the frontier broadcast bound as a parameter. */
+  private[operators] def ssspRounds(edges: DataFrame, sources: DataFrame,
+      rounds: Int, bound: Long): DataFrame = FreshCheckpoint.rounds { rs =>
     require(rounds >= 0, "rounds must be >= 0")
-    val e = edgeOperand(rs, edges, "w")
-    var dist = rs.persist(sources.select(col("id").cast("long").as("id"),
-      lit(0L).as("dist")).distinct())
-    var frontier = dist
-    // Same frontier-broadcast / early-exit round shape as frontierHops:
-    // the improved-last-round frontier SHRINKS as distances settle, so the
-    // relaxation join should never pay a per-round sort of the full
-    // edge list for it. Only the edge join branches; the keep-if-better
-    // and full-outer merge joins are node-sized on both sides and keep
-    // their shuffle plans.
-    var frontierRows = frontier.count()
-    var r = 1
-    while (r <= rounds && frontierRows > 0) {
-      val cand = e.join(broadcastUnder(frontierRows,
-          frontier.withColumnRenamed("id", "src")), "src")
+    val e = edgeOperand(rs, edges, bound, "w")
+    val seeds = sources.select(col("id").cast("long").as("id"),
+      lit(0L).as("dist")).distinct()
+    // Same round driver as frontierHops: the improved-last-round frontier
+    // SHRINKS as distances settle, so the relaxation join should never pay
+    // a per-round sort of the full edge list for it. Only the edge join
+    // branches; the keep-if-better and full-outer merge joins are
+    // node-sized on both sides and keep their shuffle plans.
+    frontierLoop(rs, seeds, rounds) { (_, frontier, dist, _) =>
+      e(frontier.rows).join(broadcastUnder(frontier.rows, bound,
+          frontier.df.withColumnRenamed("id", "src")), "src")
         .groupBy(col("dst").as("id"))
         .agg(min(col("dist") + col("w")).as("cand"))
-      val improved = rs.persist(cand.join(dist, Seq("id"), "left_outer")
+        .join(dist, Seq("id"), "left_outer")
         .filter(col("dist").isNull || col("cand") < col("dist"))
-        .select(col("id"), col("cand").as("dist")))
-      dist = rs.persist(
-        dist.join(improved.select(col("id"), col("dist").as("nd")),
-            Seq("id"), "full_outer")
-          .select(col("id"), coalesce(col("nd"), col("dist")).as("dist")))
-      frontier = improved
-      frontierRows = improved.count()
-      r += 1
+        .select(col("id"), col("cand").as("dist"))
+    } { (dist, improved) =>
+      dist.join(improved.select(col("id"), col("dist").as("nd")),
+          Seq("id"), "full_outer")
+        .select(col("id"), coalesce(col("nd"), col("dist")).as("dist"))
     }
-    rs.pin(dist)
   }
 
   /** Hash-driven "random" walks — the DeepWalk/node2vec corpus primitive,
@@ -365,7 +391,7 @@ object Graph {
     * equal integral share of the drained mass, so total mass is conserved
     * up to floor-division remainders and the statistic still hash-gates.
     *
-    * Scale posture: the sink set is a node-sized anti-join computed once;
+    * Scale posture: the sinks are the node table's out-degree-0 rows;
     * per iteration S is a ONE-ROW aggregate crossed in as a broadcast —
     * no driver-side collect, no extra data-sized shuffle. Overflow
     * envelope: S ≤ n·scale, so longs hold to n ≈ 9e9 nodes at the default
@@ -373,20 +399,22 @@ object Graph {
     */
   def pageRankInt(edges: DataFrame, iters: Int,
                   scale: Long = 1000000000L,
-                  dangling: Boolean = false): DataFrame = {
+                  dangling: Boolean = false): DataFrame =
+    pageRankInt(edges, iters, scale, dangling, frontierBroadcastMaxRows)
+
+  /** [[pageRankInt]] with the rank broadcast bound as a parameter. */
+  private[operators] def pageRankInt(edges: DataFrame, iters: Int,
+      scale: Long, dangling: Boolean, bound: Long): DataFrame = {
     val base = (3L * scale) / 20L
     if (!dangling)
-      rankRecurrence(edges, iters, identity, lit(scale), lit(base))
+      rankRecurrence(edges, iters, identity, lit(scale), lit(base), bound)
     else FreshCheckpoint.rounds { r =>
       require(iters >= 1, "iters must be >= 1")
       val e = longEdges(edges)
-      val (outdeg, ew) = rankOperand(r, e)
-      val nodes = r.persist(nodesOf(e))
       // n is needed only as a literal divisor for the dangling share; the
-      // count is one job over the (already persisted) node table.
-      val nNodes = nodes.count()
-      val sinks = r.persist(nodes.join(outdeg.select(col("src").as("id")),
-        Seq("id"), "left_anti"))
+      // node table's pin counts it.
+      val nodes = r.pin(outDegrees(e))
+      val inflow = rankFlow(r, e, nodes, bound)
       // Each iteration's ranks are read TWICE (inflow + sink sum): left
       // lazy, the plan tree would double per iteration — pin each round
       // eagerly and retire its predecessor, so one round stays live.
@@ -395,16 +423,16 @@ object Graph {
       // loop that reads its own checkpoint twice per iteration grows the
       // stat multiplicatively — see FreshCheckpoint's scaladoc for the
       // measured pointer-jump blowup this prevents.
-      var ranks = nodes.withColumn("rnk", lit(scale))
+      var ranks = nodes.df.withColumn("rnk", lit(scale))
       var live: FreshCheckpoint.Pinned = null
       for (_ <- 1 to iters) {
-        val sRow = ranks.join(sinks, "id")
+        val sRow = ranks.filter(col("outdeg") === 0L)
           .agg(coalesce(sum("rnk"), lit(0L)).as("__s"))
-        val next = r.pin(nodes.join(inflow(ew, ranks), Seq("id"), "left")
+        val next = r.pin(nodes.df.join(inflow(ranks), Seq("id"), "left")
           .crossJoin(broadcast(sRow))
-          .select(col("id"),
+          .select(col("id"), col("outdeg"),
             (lit(base) + expr("(17 * (coalesce(inflow, 0) " +
-              s"+ __s div CAST($nNodes AS BIGINT))) div 20")).as("rnk")))
+              s"+ __s div CAST(${nodes.rows} AS BIGINT))) div 20")).as("rnk")))
         if (live != null) r.release(live)
         live = next
         ranks = next.df
@@ -413,45 +441,60 @@ object Graph {
     }
   }.select(col("id"), col("rnk").as("rank"))
 
-  /** Loop-invariant operands of the integer rank recurrence: out-degree
-    * per source, and the edge list with out-degree attached — persisted
-    * and pre-partitioned on src (each iteration's rank join key) so only
-    * the rank table shuffles per iteration.
+  /** Every node on an edge of `e` once, with its out-degree (0 for a
+    * sink) — one aggregate.
     */
-  private def rankOperand(r: FreshCheckpoint.Rounds, e: DataFrame)
-      : (DataFrame, DataFrame) = {
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    (outdeg, r.persist(e.join(outdeg, "src").repartition(col("src"))))
+  private def outDegrees(e: DataFrame): DataFrame =
+    e.select(explode(array(
+        struct(col("src").as("id"), lit(1L).as("o")),
+        struct(col("dst").as("id"), lit(0L).as("o")))).as("__n"))
+      .groupBy(col("__n.id").as("id")).agg(sum(col("__n.o")).as("outdeg"))
+
+  /** The rank recurrence's per-iteration step over the pinned node table
+    * `nodes` ([[outDegrees]] plus any columns the caller added):
+    * `inflow(ranks)` is, per node, Σ over in-edges u→v of rank(u) div
+    * outdeg(u), for a rank table (id, outdeg, rnk) over `nodes`. The rank
+    * and inflow tables are node-sized, so under `bound` both are
+    * broadcast and the edge list — persisted, since every iteration reads
+    * it — streams through the rank join without a shuffle. Above it the
+    * persisted edges are PRE-PARTITIONED on src (the rank join key) so
+    * only the rank table shuffles per iteration. `rnk` internally: `rank`
+    * is a window-function name to the SQL parser inside expr(), and `div`
+    * has no Column-API operator.
+    */
+  private def rankFlow(r: FreshCheckpoint.Rounds, e: DataFrame,
+                       nodes: FreshCheckpoint.Pinned,
+                       bound: Long): DataFrame => DataFrame = {
+    def under(df: DataFrame) = broadcastUnder(nodes.rows, bound, df)
+    val ew = r.persist(
+      if (nodes.rows <= bound) e else e.repartition(col("src")))
+    ranks => under(ew.join(under(ranks.select(col("id").as("src"),
+        col("outdeg"), col("rnk"))), "src")
+      .select(col("dst").as("id"), expr("rnk div outdeg").as("c"))
+      .groupBy("id").agg(sum("c").as("inflow")))
   }
 
-  /** Per node, Σ over in-edges u→v of rank(u) div outdeg(u). `rnk`
-    * internally: `rank` is a window-function name to the SQL parser
-    * inside expr(), and `div` has no Column-API operator.
-    */
-  private def inflow(ew: DataFrame, ranks: DataFrame): DataFrame =
-    ew.join(ranks.select(col("id").as("src"), col("rnk")), "src")
-      .select(col("dst").as("id"), expr("rnk div outdeg").as("c"))
-      .groupBy("id").agg(sum("c").as("inflow"))
-
   /** The drain-mode recurrence [[pageRankInt]] and
-    * [[personalizedPageRankInt]] share. `nodeTable` turns the node set
-    * into the table the ranks ride; `init` (the starting rank) and
-    * `teleport` (each iteration's `teleport + (17 · inflow) div 20`) may
-    * read its extra columns. Output: (id, rnk).
+    * [[personalizedPageRankInt]] share. `nodeTable` adds the columns the
+    * ranks ride to the (id, outdeg) node table; `init` (the starting
+    * rank) and `teleport` (each iteration's `teleport + (17 · inflow) div
+    * 20`) may read them. The node table is pinned, not persisted: its
+    * forcing count sizes the rank joins. Output: (id, rnk).
     */
   private def rankRecurrence(edges: DataFrame, iters: Int,
                              nodeTable: DataFrame => DataFrame,
-                             init: Column, teleport: Column): DataFrame =
+                             init: Column, teleport: Column,
+                             bound: Long): DataFrame =
       FreshCheckpoint.rounds { r =>
     require(iters >= 1, "iters must be >= 1")
     val e = longEdges(edges)
-    val (_, ew) = rankOperand(r, e)
-    val nodes = r.persist(nodeTable(nodesOf(e)))
+    val nodes = r.pin(nodeTable(outDegrees(e)))
+    val inflow = rankFlow(r, e, nodes, bound)
     val rnk = (teleport + expr("(17 * coalesce(inflow, 0)) div 20")).as("rnk")
-    var ranks = nodes.withColumn("rnk", init)
+    var ranks = nodes.df.withColumn("rnk", init)
     for (_ <- 1 to iters)
-      ranks = nodes.join(inflow(ew, ranks), Seq("id"), "left")
-        .select(nodes.columns.toSeq.map(col) :+ rnk: _*)
+      ranks = nodes.df.join(inflow(ranks), Seq("id"), "left")
+        .select(nodes.df.columns.toSeq.map(col) :+ rnk: _*)
     r.pin(ranks.select("id", "rnk"))
   }
 
@@ -467,16 +510,25 @@ object Graph {
     * hash-gates like the global variant.
     *
     * Scale posture: identical to pageRankInt — per iteration one edge/rank
-    * equijoin + one aggregation, edge-with-outdeg table persisted across
-    * iterations; the seed flag rides the node table, nothing driver-side.
+    * equijoin + one aggregation, edge list persisted across iterations;
+    * out-degree and the seed flag ride the node table, nothing
+    * driver-side.
     */
   def personalizedPageRankInt(edges: DataFrame, seeds: DataFrame, iters: Int,
                               scale: Long = 1000000000L): DataFrame =
+    personalizedPageRankInt(edges, seeds, iters, scale,
+      frontierBroadcastMaxRows)
+
+  /** [[personalizedPageRankInt]] with the rank broadcast bound as a
+    * parameter.
+    */
+  private[operators] def personalizedPageRankInt(edges: DataFrame,
+      seeds: DataFrame, iters: Int, scale: Long, bound: Long): DataFrame =
     rankRecurrence(edges, iters,
       _.join(seeds.select(col("id").cast("long").as("id"))
           .distinct().withColumn("is_seed", lit(1L)), Seq("id"), "left")
-        .select(col("id"), coalesce(col("is_seed"), lit(0L)).as("is_seed")),
-      col("is_seed") * scale, col("is_seed") * ((3L * scale) / 20L))
+        .withColumn("is_seed", coalesce(col("is_seed"), lit(0L))),
+      col("is_seed") * scale, col("is_seed") * ((3L * scale) / 20L), bound)
       .select(col("id"), col("rnk").as("rank"))
 
   /** Synchronous label propagation (community detection): every node
@@ -844,7 +896,13 @@ object Graph {
     *         tested
     */
   def kTrussPeel(edges: DataFrame, k: Long, rounds: Int): DataFrame =
-      FreshCheckpoint.rounds { r =>
+    kTrussPeel(edges, k, rounds, frontierBroadcastMaxRows)
+
+  /** [[kTrussPeel]] with the support joins' broadcast bound as a
+    * parameter.
+    */
+  private[operators] def kTrussPeel(edges: DataFrame, k: Long, rounds: Int,
+      bound: Long): DataFrame = FreshCheckpoint.rounds { r =>
     require(k >= 3, "truss needs k >= 3")
     require(rounds >= 1, "needs at least one round")
     // Broadcast bound for the removed set on the delta path: 2 longs per
@@ -863,18 +921,17 @@ object Graph {
     // paying a second materialization pass, and it lives only until e0
     // is pinned (no loop self-join ever sees its stats).
     val simpleC = r.persist(simple)
-    val degBase = simpleC
-      .select(explode(array(col("u"), col("v"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("d"))
     // Orient each edge toward the (degree, id)-larger endpoint — ties
     // break on id so the order is total. The degree table is node-sized;
     // when it is broadcastable the two orientation joins become
-    // map-side (the edge list never shuffles for orientation). Counting
-    // it to decide is one aggregate over the checkpointed edges; the
-    // count gates the hint because checkpoint-era tables plan with
-    // default stats and would otherwise sort-merge.
-    val deg =
-      if (degBase.count() <= 8000000L) broadcast(degBase) else degBase
+    // map-side (the edge list never shuffles for orientation). Pinning
+    // it computes it once and its forcing count decides; the count gates
+    // the hint because pinned tables plan with default stats and would
+    // otherwise sort-merge.
+    val degP = r.pin(simpleC
+      .select(explode(array(col("u"), col("v"))).as("id"))
+      .groupBy("id").agg(count(lit(1)).as("d")))
+    val deg = if (degP.rows <= 8000000L) broadcast(degP.df) else degP.df
     val e0P = r.pin(simpleC
       .join(deg.select(col("id").as("u"), col("d").as("du")), "u")
       .join(deg.select(col("id").as("v"), col("d").as("dv")), "v")
@@ -886,6 +943,7 @@ object Graph {
           .as("__o"))
       .select(col("__o.s").as("s"), col("__o.t").as("t")))
     r.release(simpleC)   // e0 is checkpointed; inputs done
+    r.release(degP)
     // Ordered-triple enumeration with a caller-chosen relation in each
     // of the three edge positions; inner-join order follows the
     // syntactic order, so passing the small set first keeps the chain
@@ -915,7 +973,10 @@ object Graph {
     // come from the node-degree table (two cheap aggregates) and the
     // smaller enumeration runs. Exactness: the Bloom pre-filter only
     // DISCARDS non-edges; every kept candidate is re-checked by the
-    // join, so the support counts are exact regardless of fpp.
+    // join, so the support counts are exact regardless of fpp. Under
+    // `bound` the edge set is broadcast into the wedge and closure joins,
+    // so the edge list streams through both without an exchange; above
+    // it both stay shuffle joins.
     def supportOf(e: DataFrame, eRows: Long): DataFrame = {
       import org.apache.spark.sql.graft.BloomOps
       import graft.pipeline.AsyncJob
@@ -947,14 +1008,15 @@ object Graph {
       def dec(i: Int): BigInt = Option(w.getDecimal(i))
         .map(d => BigInt(d.toBigInteger)).getOrElse(BigInt(0))
       val sourcePivot = dec(1) < dec(0)
+      val eb = broadcastUnder(eRows, bound, e)
       val wedges =
         if (sourcePivot)
-          e.as("e1").join(e.as("e2"),
+          e.as("e1").join(eb.as("e2"),
               col("e1.s") === col("e2.s") && col("e1.t") =!= col("e2.t"))
             .select(col("e1.s").as("a"), col("e1.t").as("b"),
               col("e2.t").as("c"))
         else
-          e.as("e1").join(e.as("e2"), col("e1.t") === col("e2.s"))
+          e.as("e1").join(eb.as("e2"), col("e1.t") === col("e2.s"))
             .select(col("e1.s").as("a"), col("e1.t").as("b"),
               col("e2.t").as("c"))
       // The wedge's missing edge: (b,c) under a source pivot (e1/e2
@@ -962,7 +1024,7 @@ object Graph {
       val (ms, mt) = if (sourcePivot) ("b", "c") else ("a", "c")
       val tri = wedges
         .filter(BloomOps.mightContain(lit(sketch), struct(col(ms), col(mt))))
-        .join(e.as("e3"),
+        .join(eb.as("e3"),
           col(ms) === col("e3.s") && col(mt) === col("e3.t"))
         .select(col("a"), col("b"), col("c"))
       tri.select(explode(array(

@@ -404,15 +404,28 @@ object Similarity {
     org.apache.spark.sql.graft.VectorFunctions.vecArgminL2(subVec,
       typedLit(codebook.toSeq))
 
+  /** The ADC estimate Σ_j d2(q_j, codebook_j[c_j]) of query vector `q`
+    * (subvectors of width `sub`) against the code columns `c0`, `c1`, …,
+    * as a fixed left-to-right sum. Each code INDEXES its codebook literal
+    * (element_at on an array-of-arrays literal) — no per-code CASE
+    * branches, so the whole estimate stays one small codegen projection.
+    */
+  private def adcEstimate(q: Column, codebooks: Seq[Array[Seq[Double]]],
+                          sub: Int): Column =
+    codebooks.zipWithIndex.map { case (cb, j) =>
+      dist2(slice(q, j * sub + 1, sub),
+        element_at(typedLit(cb.toSeq), col(s"c$j") + 1))
+    }.reduce(_ + _)
+
   /** PQ-compressed ANN (asymmetric distance computation): the corpus is
     * reduced to m small integer codes per vector — at production scale the
     * scan reads m bytes instead of dim floats, a 10-100× I/O compression,
     * which is the whole point of PQ — and each query scores candidates by
     * summing per-subspace distances to the CODEBOOK entry the code names
     * (never decompressing the corpus vector). The query side is broadcast;
-    * per-(query, code) distances are codegen'd CASE chains over codebook
-    * literals, so the corpus pass stays a single projection + top-k
-    * window, no shuffle beyond the partial top-k.
+    * the estimate is [[adcEstimate]], so the corpus pass stays a single
+    * small codegen projection + top-k window, no shuffle beyond the
+    * partial top-k.
     *
     * Recall < 1 by construction (quantization error); rank by estimated
     * distance with nid tiebreak keeps the output total-ordered and exact
@@ -432,15 +445,8 @@ object Similarity {
           codeExpr(slice(asDouble(col(vecCol)), j * sub + 1, sub), cb)
             .as(s"c$j") }: _*)
     val qb = broadcast(querySide(queries, idCol, vecCol))
-    // est_d2 = Σ_j d2(qsub_j, codebook_j[c_j]) — fixed left-to-right sum.
-    val est = codebooks.zipWithIndex.map { case (cb, j) =>
-      val qsub = slice(col("qv"), j * sub + 1, sub)
-      cb.indices.foldRight(lit(null).cast("double")) {
-        case (c, els) =>
-          when(col(s"c$j") === c, dist2(qsub, typedLit(cb(c)))).otherwise(els)
-      }
-    }.reduce(_ + _)
-    val scored = coded.crossJoin(qb).withColumn("est_d2", est)
+    val scored = coded.crossJoin(qb)
+      .withColumn("est_d2", adcEstimate(col("qv"), codebooks, sub))
     topKPerQuery(scored, col("est_d2"), k, "est_d2")
   }
 
@@ -642,14 +648,8 @@ object Similarity {
     }
     val qb = broadcast(probeSide(queries, idCol, vecCol, cents, nprobe)
       .withColumn("qrv", residualExpr(col("qv"), cents)))
-    // ADC: the code column INDEXES the codebook literal directly
-    // (element_at on an array-of-arrays literal) — no per-code CASE
-    // branches, so the whole estimate stays one small codegen projection.
-    val est = codebooks.zipWithIndex.map { case (cb, j) =>
-      val qsub = slice(col("qrv"), j * sub + 1, sub)
-      dist2(qsub, element_at(typedLit(cb.toSeq), col(s"c$j") + 1))
-    }.reduce(_ + _)
-    val scored = coded.join(qb, "cell").withColumn("est_d2", est)
+    val scored = coded.join(qb, "cell")
+      .withColumn("est_d2", adcEstimate(col("qrv"), codebooks, sub))
     topKPerQuery(scored, col("est_d2"), k, "est_d2")
   }
 

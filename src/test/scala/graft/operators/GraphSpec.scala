@@ -5,6 +5,35 @@ import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSpec {
   import spark.implicits._
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+  private def groupOf(j: SparkListenerJobStart): String =
+    String.valueOf(j.properties.getProperty("spark.jobGroup.id"))
+
+  /** Every job that starts while `body` runs under job group `g`, in
+    * start order — including jobs a pooled thread runs in another group.
+    * A fence job closes the window: job starts reach the listener in
+    * order, so once the fence's start arrives every earlier one has.
+    */
+  private def jobsOf(g: String)(body: => Unit): Seq[SparkListenerJobStart] = {
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.LinkedBlockingQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = starts.put(j)
+    }
+    def inGroup(group: String)(run: => Unit): Unit = {
+      sc.setJobGroup(group, group)
+      try run finally sc.clearJobGroup()
+    }
+    val fence = s"$g-fence"
+    sc.addSparkListener(listener)
+    try {
+      inGroup(g)(body)
+      inGroup(fence)(sc.parallelize(Seq(1)).count())
+      Iterator.continually(starts.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(j => j != null && groupOf(j) != fence).toSeq
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("pageRankInt: hand-computed recurrence on a 2-node chain") {
     // 1 -> 2, directed. outdeg(1)=1; node 2 dangles (mass dropped).
@@ -111,10 +140,10 @@ class GraphSpec extends SparkSpec {
   }
 
   test("bfsHops/ssspRounds: empty frontier — early exit equals full rounds") {
-    // r15 frontier change: rounds stop once the frontier empties (and the
-    // per-round count drives the broadcast branch). A disconnected pair
-    // graph settles in 1 hop; maxHops far past convergence must return
-    // the identical settled table the fixed-round form produced.
+    // Rounds stop once a pinned frontier comes back empty (the pin's
+    // forcing count also sizes the next round's joins). A disconnected
+    // pair graph settles in 1 hop; maxHops far past convergence must
+    // return the identical settled table the fixed-round form produced.
     val und = Seq((1L, 2L), (3L, 4L))
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
     val hops = Graph.bfsHops(edges, Seq(1L).toDF("id"), maxHops = 9)
@@ -488,34 +517,76 @@ class GraphSpec extends SparkSpec {
     // supportOf runs two driver jobs on pooled threads. A pooled thread
     // must not keep the job group of the call that created it: every job
     // of the second call carries the second call's group.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
     val e = (for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b))
       .toDF("src", "dst")
-    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        groups.put(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+    jobsOf("g1")(Graph.kTrussPeel(e, k = 4L, rounds = 2).collect())
+    val second = jobsOf("g2")(Graph.kTrussPeel(e, k = 4L, rounds = 2).collect())
+      .map(groupOf)
+    assert(second.nonEmpty && second.forall(_ == "g2"), second)
+  }
+
+  test("job budget: one-round calls size their joins from pins, not counts") {
+    // Each round's broadcast choice reads the row count of a pin the loop
+    // already forces; a Dataset.count() would add a job (an extra
+    // aggregate stage under AQE) per decision. Bounds, not exact counts:
+    // AQE groups its map-stage jobs differently from run to run. The
+    // budgets sit between the 7 / 8 / 7 / 15 jobs these calls run on this
+    // graph at local[4] and the 14 / 15 / 10 / 21 that a count per
+    // decision plus an edge shuffle per call costs.
+    val und = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L),
+      (4L, 6L), (5L, 6L), (6L, 7L), (7L, 8L))
+    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
+    val seeds = Seq(1L, 8L).toDF("id")
+    val calls = Seq[(String, Int, () => org.apache.spark.sql.DataFrame)](
+      ("bfsHops", 9, () => Graph.bfsHops(edges, seeds, 1)),
+      ("ssspRounds", 10, () => Graph.ssspRounds(
+        edges.withColumn("w", $"src" + $"dst"), seeds, 1)),
+      ("pageRankInt", 8, () => Graph.pageRankInt(edges, 1)),
+      ("kTrussPeel", 17, () => Graph.kTrussPeel(
+        edges.filter($"src" < $"dst"), 3L, 1)))
+    val ran = calls.map { case (name, budget, call) =>
+      val jobs = jobsOf(name)(call())
+      info(s"$name: ${jobs.size} jobs (budget $budget)")
+      (name, budget, jobs.size, jobs.flatMap(_.stageInfos.map(_.name)))
     }
-    def inGroup(g: String)(body: => Unit): Unit = {
-      sc.setJobGroup(g, g)
-      try body finally sc.clearJobGroup()
+    for ((name, budget, n, sites) <- ran) {
+      assert(n <= budget, s"$name ran $n jobs: $sites")
+      assert(!sites.exists(_.startsWith("count at Graph.scala")),
+        s"$name counted a Dataset: $sites")
     }
-    // Job starts reach the listener in order, so once a fence job's start
-    // arrives every earlier job's start has arrived too.
-    def drainTo(fence: String): Seq[String] = {
-      inGroup(fence)(sc.parallelize(Seq(1)).count())
-      Iterator.continually(groups.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-        .takeWhile(g => g != null && g != fence).toSeq
+  }
+
+  test("bound 0 (every round takes the shuffle join) matches the default") {
+    // The shuffle branch — including frontierHops' lazily src-partitioned
+    // edge copy — only runs above 4M frontier/node rows, which no spec
+    // reaches; bound 0 forces it on every round.
+    val rnd = new scala.util.Random(5)
+    val und = Seq.fill(70)((rnd.nextInt(24).toLong, rnd.nextInt(24).toLong))
+      .filter { case (a, b) => a != b }
+    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
+    val w = edges.withColumn("w", lit(1L) + ($"src" + $"dst") % 5)
+    val seeds = Seq(0L, 7L, 19L).toDF("id")
+    def same(name: String)(default: => org.apache.spark.sql.DataFrame,
+                           shuffled: => org.apache.spark.sql.DataFrame) = {
+      val a = default.collect().toSet
+      assert(a.nonEmpty, name)
+      assert(shuffled.collect().toSet == a, name)
     }
-    sc.addSparkListener(listener)
-    try {
-      inGroup("g1")(Graph.kTrussPeel(e, k = 4L, rounds = 2).collect())
-      drainTo("fence1")
-      inGroup("g2")(Graph.kTrussPeel(e, k = 4L, rounds = 2).collect())
-      val second = drainTo("fence2")
-      assert(second.nonEmpty && second.forall(_ == "g2"), second)
-    } finally sc.removeSparkListener(listener)
+    same("bfs")(Graph.bfsHops(edges, seeds, 4),
+      Graph.frontierHops(edges, seeds, Nil, 4, bound = 0L))
+    same("landmark")(Graph.landmarkHops(edges, seeds, 4),
+      Graph.frontierHops(edges, seeds, Seq("lm"), 4, bound = 0L))
+    same("sssp")(Graph.ssspRounds(w, seeds, 4),
+      Graph.ssspRounds(w, seeds, 4, 0L))
+    same("pagerank")(Graph.pageRankInt(edges, 3),
+      Graph.pageRankInt(edges, 3, 1000000000L, false, 0L))
+    same("pagerank dangling")(Graph.pageRankInt(und.toDF("src", "dst"), 3,
+        dangling = true),
+      Graph.pageRankInt(und.toDF("src", "dst"), 3, 1000000000L, true, 0L))
+    same("ppr")(Graph.personalizedPageRankInt(edges, seeds, 3),
+      Graph.personalizedPageRankInt(edges, seeds, 3, 1000000000L, 0L))
+    same("ktruss")(Graph.kTrussPeel(edges, 3L, 3),
+      Graph.kTrussPeel(edges, 3L, 3, 0L))
   }
 
   test("degreeHistogram: star graph — hub degree n, leaves degree 1") {

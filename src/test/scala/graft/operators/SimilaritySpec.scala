@@ -312,6 +312,22 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("knnPq: the 16x8 ADC estimate runs as generated code") {
+    // One CASE branch per code would pass 64 KB of generated code at 16
+    // subspaces x 8 codes; with codegen fallback off, that stage fails
+    // instead of running interpreted.
+    val cbs = Similarity.pqTrain(emb, "vec_id", "embedding",
+      m = 16, k = 8, iters = 1)
+    val queries = emb.filter($"vec_id" < 10)
+    val out = graft.Sessions.withConf(spark)(
+        "spark.sql.codegen.fallback" -> "false") {
+      Similarity.knnPq(emb.filter($"vec_id" >= 10), queries, "vec_id",
+        "embedding", cbs, k = 3).select("qid", "nid").as[(Long, Long)]
+        .collect()
+    }
+    assert(out.length == 3 * queries.count())
+  }
+
   test("pqTrain rejects m not dividing the dimension") {
     intercept[IllegalArgumentException] {
       Similarity.pqTrain(emb, "vec_id", "embedding", m = 7, k = 2, iters = 0)
